@@ -5,6 +5,13 @@ no row-at-a-time ``F.udf``. Everything relational (hashing, suffix tests,
 regex filters) stays JVM-side via built-in functions; these UDFs cover only
 what Spark lacks natively (urlparse-exact canonicalization, urljoin, and
 the HTML/PDF span parser).
+
+Every Python pass has a fixed cost (worker start, Arrow round trip) that
+dwarfs the work on a small batch, so a ``CrawlEngine`` step calls none of
+the single-column URL helpers below. ``parse_documents`` emits the
+fragment-stripped forms the step needs (``url_nofrag`` of the page,
+``internal_nofrag`` aligned with ``internal_links``) in the parse pass
+itself; host derivation rides on the policy pass (frontier.py).
 """
 
 from __future__ import annotations
@@ -59,11 +66,14 @@ PARSED_SCHEMA = T.StructType(
     [
         T.StructField("source_url", T.StringType(), False),
         T.StructField("url", T.StringType(), False),
+        T.StructField("url_nofrag", T.StringType(), False),
         T.StructField("host", T.StringType(), False),
         T.StructField("seq", T.LongType(), False),
         T.StructField("ok", T.BooleanType(), False),
         T.StructField("markdown", T.StringType(), False),
         T.StructField("internal_links", T.ArrayType(T.StringType()), False),
+        # strip_fragment of each internal link, position-aligned
+        T.StructField("internal_nofrag", T.ArrayType(T.StringType()), False),
         T.StructField("external_links", T.ArrayType(T.StringType()), False),
         T.StructField("file_links", T.ArrayType(T.StringType()), False),
         T.StructField(
@@ -127,11 +137,15 @@ def parse_documents(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             {
                 "source_url": pdf["source_url"].values,
                 "url": pdf["url"].values,
+                "url_nofrag": [strip_fragment(u) for u in pdf["url"]],
                 "host": pdf["host"].values,
                 "seq": pdf["seq"].values,
                 "ok": [p["ok"] for p in parsed],
                 "markdown": [p["markdown"] for p in parsed],
                 "internal_links": [p["internal_links"] for p in parsed],
+                "internal_nofrag": [
+                    [strip_fragment(u) for u in p["internal_links"]] for p in parsed
+                ],
                 "external_links": [p["external_links"] for p in parsed],
                 "file_links": [p["file_links"] for p in parsed],
                 "spans": [p["spans"] for p in parsed],

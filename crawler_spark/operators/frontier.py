@@ -40,6 +40,24 @@ is a single Arrow ``mapInPandas`` pass; the per-source head-pick and the
 policy step are windows/groupBy over the (tiny) per-source state, NOT
 driver loops. The high-volume scale path (top-K per host, Bloom prefilter,
 salting) lives in ``operators/scheduler.py``.
+
+Where Python runs in a step. Each Python pass costs a worker start and an
+Arrow round trip — on a fixture-sized batch far more than its work — so a
+step has exactly three, each doing work only Python can:
+
+1. parse (``parse_documents``): markdown, spans, classified links, and the
+   fragment-stripped ``url_nofrag`` / ``internal_nofrag`` the seen and
+   candidate tables key on;
+2. the next-link policy (``_next_link_udf``): the oracle's policy plus the
+   chosen link's host;
+3. page-job rows (``jobs.build_page_jobs``).
+
+A robots table, when given, adds its trie walk. Everything else is JVM
+built-ins; seed hosts come from ``host_of`` on the driver, and seed rows
+travel as an Arrow ``LocalRelation``. Empty frames never come from Python:
+an absent table reads as ``state.empty_frame`` (zero partitions, folded
+away by the optimizer), and the store records an empty delta without
+writing it.
 """
 
 from __future__ import annotations
@@ -52,9 +70,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import schemas
-from ..functions.udfs import PARSED_SCHEMA, host_udf, parse_documents, strip_fragment_udf
+from ..functions.udfs import PARSED_SCHEMA, parse_documents
+from ..functions.urlnorm import host_of
 from ..oracle import make_policy
-from ..state import SnapshotParquetStore
+from ..state import SnapshotParquetStore, empty_frame
 
 __all__ = ["CrawlEngine"]
 
@@ -63,19 +82,33 @@ _DELTA_TABLES = (
 )
 
 
+_SEEDS = T.StructType(
+    [
+        T.StructField("source_url", T.StringType()),
+        T.StructField("max_pages", T.IntegerType()),
+        T.StructField("host", T.StringType()),
+    ]
+)
+
+
 def _next_link_udf(policy_name: str):
     """Vectorized policy evaluation: (current_url, ordered candidates) ->
-    next link. The SAME pure function the oracle uses (oracle.make_policy),
-    so engine/oracle equality is by construction."""
+    (next_link, next_host). The SAME pure function the oracle uses
+    (oracle.make_policy), so engine/oracle equality is by construction;
+    the enqueued link's host is derived in the same Python pass."""
 
-    @F.pandas_udf(T.StringType())
-    def next_link(current_url: pd.Series, candidates: pd.Series) -> pd.Series:
+    @F.pandas_udf("next_link string, next_host string")
+    def next_link(current_url: pd.Series, candidates: pd.Series) -> pd.DataFrame:
         policy = make_policy(policy_name)
-        return pd.Series(
-            [
-                policy(u, list(c) if c is not None else [])
-                for u, c in zip(current_url, candidates)
-            ]
+        links = [
+            policy(u, list(c) if c is not None else [])
+            for u, c in zip(current_url, candidates)
+        ]
+        return pd.DataFrame(
+            {
+                "next_link": links,
+                "next_host": [host_of(u) if u is not None else None for u in links],
+            }
         )
 
     return next_link
@@ -121,6 +154,21 @@ class CrawlEngine:
 
     # -- state bootstrap ------------------------------------------------------
 
+    def _seed_frame(self, seeds: list[tuple[str, int]]) -> DataFrame:
+        """(source_url, max_pages, host) seed rows. Hosts come from
+        ``host_of`` on the driver, and a pandas frame becomes an Arrow
+        ``LocalRelation`` — scanning it starts no Python worker."""
+        if not seeds:
+            return empty_frame(self.spark, _SEEDS)
+        pdf = pd.DataFrame(
+            {
+                "source_url": [u for u, _ in seeds],
+                "max_pages": [int(mp) for _, mp in seeds],
+                "host": [host_of(u) for u, _ in seeds],
+            }
+        )
+        return self.spark.createDataFrame(pdf, _SEEDS)
+
     def _seed_rows(self, seed_df: DataFrame) -> tuple[DataFrame, DataFrame]:
         """(frontier_rows, source_state_rows) for fresh seed sources —
         the ONE definition of the seed-row shape, shared by init_state
@@ -136,7 +184,7 @@ class CrawlEngine:
                 F.col("source_url"),
                 F.col("source_url").alias("url"),
                 F.xxhash64("source_url").alias("url_hash"),
-                host_udf("source_url").alias("host"),
+                "host",
                 F.lit(0).alias("priority"),
                 F.lit(0).cast("long").alias("seq"),
                 F.lit(0).alias("attempt"),
@@ -146,7 +194,7 @@ class CrawlEngine:
             seed_df.join(frontier_rows.select("source_url"), "source_url", "left_semi")
             .select(
                 "source_url",
-                host_udf("source_url").alias("host"),
+                "host",
                 "max_pages",
                 F.lit(0).alias("pages_crawled"),
                 F.lit(1).cast("long").alias("total_pages_found"),
@@ -162,13 +210,10 @@ class CrawlEngine:
         silently proceed against stale state; use add_sources to merge."""
         if self.store.head() is not None:
             raise ValueError("state already initialized; use add_sources() to merge seeds")
-        spark = self.spark
-        seed_df = spark.createDataFrame(
-            [(u, int(mp)) for u, mp in seeds], "source_url string, max_pages int"
-        )
-        frontier, source_state = self._seed_rows(seed_df)
+        frontier, source_state = self._seed_rows(self._seed_frame(seeds))
+        # recorded in the manifest without a write (is_empty_plan)
         empty = {
-            name: spark.createDataFrame([], getattr(schemas, name.upper()))
+            name: empty_frame(self.spark, getattr(schemas, name.upper()))
             for name in _DELTA_TABLES
         }
         self.store.commit(
@@ -191,11 +236,8 @@ class CrawlEngine:
         if head is None:
             self.init_state(seeds)
             return self.store.read("source_state").count()
-        spark = self.spark
         batch_id = head.batch_id + 1
-        seed_df = spark.createDataFrame(
-            [(u, int(mp)) for u, mp in seeds], "source_url string, max_pages int"
-        )
+        seed_df = self._seed_frame(seeds)
         state = self.store.read("source_state")
         new = seed_df.join(state.select("source_url"), "source_url", "left_anti").persist()
         state_new = None
@@ -224,14 +266,13 @@ class CrawlEngine:
     def _read_or_empty(self, table: str) -> DataFrame:
         df = self.store.read(table)
         if df is None:
-            df = self.spark.createDataFrame([], getattr(schemas, table.upper()))
+            df = empty_frame(self.spark, getattr(schemas, table.upper()))
         return df
 
     # -- one micro-batch ------------------------------------------------------
 
     def step(self, batch_id: int) -> int:
         """Advance every active source by one pop. Returns #popped (0 = done)."""
-        spark = self.spark
         store = self.store
         t0 = time.monotonic()
 
@@ -276,26 +317,10 @@ class CrawlEngine:
         self, batch_id, t0, n_popped, heads, frontier, source_state,
         url_seen, candidates, active, persisted,
     ) -> int:
-        spark = self.spark
         # pop: remove heads from the frontier
         frontier2 = frontier.join(
             heads.select("source_url", "seq"), ["source_url", "seq"], "left_anti"
         )
-
-        # mark processed at pop time (entities.py:158-159), incl. failures;
-        # the seen table is exact — new (source,url) pairs only.
-        seen_new = (
-            heads.select(
-                "source_url",
-                "url",
-                strip_fragment_udf("url").alias("url_nofrag"),
-                F.col("url_hash"),
-                F.col("pop_seq").alias("first_seq"),
-                F.lit(batch_id).cast("long").alias("batch_id"),
-            )
-            .join(url_seen.select("source_url", "url"), ["source_url", "url"], "left_anti")
-        )
-        url_seen2 = url_seen.unionByName(seen_new)
 
         # fetch (join vs web_graph — the sandbox's network) + Arrow parse
         web = self.web_graph
@@ -307,12 +332,38 @@ class CrawlEngine:
         parsed = fetched.mapInPandas(parse_documents, PARSED_SCHEMA).persist()
         persisted.append(parsed)
 
+        # mark processed at pop time (entities.py:158-159), incl. failures
+        # (parse emits a row per pop, ok or not); the seen table is exact —
+        # new (source,url) pairs only. url_hash is xxhash64(url), as in
+        # every frontier row (_seed_rows, enqueue). Persisted: the policy
+        # pass below and the commit's write both read it.
+        seen_new = (
+            parsed.select(
+                "source_url",
+                "url",
+                "url_nofrag",
+                F.xxhash64("url").alias("url_hash"),
+                F.col("seq").alias("first_seq"),
+                F.lit(batch_id).cast("long").alias("batch_id"),
+            )
+            .join(url_seen.select("source_url", "url"), ["source_url", "url"], "left_anti")
+            .persist()
+        )
+        persisted.append(seen_new)
+        url_seen2 = url_seen.unionByName(seen_new)
+
         ok = parsed.filter("ok")
 
         # merge new internal links into per-source candidate lists
         # (append-if-absent, order-preserving: entities.py:176-179)
         exploded = ok.select(
-            "source_url", F.posexplode("internal_links").alias("pos", "link")
+            "source_url",
+            F.posexplode(F.arrays_zip("internal_links", "internal_nofrag")).alias("pos", "z"),
+        ).select(
+            "source_url",
+            "pos",
+            F.col("z.internal_links").alias("link"),
+            F.col("z.internal_nofrag").alias("link_nofrag"),
         )
         w_first = Window.partitionBy("source_url", "link").orderBy("pos")
         page_new = (
@@ -333,7 +384,7 @@ class CrawlEngine:
             .select(
                 "source_url",
                 F.col("link").alias("url"),
-                strip_fragment_udf("link").alias("url_nofrag"),
+                F.col("link_nofrag").alias("url_nofrag"),
                 (F.coalesce(F.col("max_seq"), F.lit(-1)) + F.col("rank")).alias("cand_seq"),
                 F.lit(batch_id).cast("long").alias("batch_id"),
             )
@@ -368,17 +419,19 @@ class CrawlEngine:
             ).alias("cand_list")
         )
 
-        # policy: pick next link per successfully-scraped page
-        # (at most ONE enqueue per page, entities.py:196-201)
+        # policy: pick next link (and its host) per successfully-scraped
+        # page (at most ONE enqueue per page, entities.py:196-201)
         chosen = (
             ok.select("source_url", "url", "seq")
             .join(cand_lists, "source_url", "left")
             .withColumn(
-                "next_link",
+                "pick",
                 _next_link_udf(self.policy_name)(
                     "url", F.coalesce("cand_list", F.array().cast("array<string>"))
                 ),
             )
+            .withColumn("next_link", F.col("pick.next_link"))
+            .withColumn("next_host", F.col("pick.next_host"))
             # oracle guard (oracle.py: `next_link and next_link in
             # filtered`): a policy returning '' or a URL outside its
             # candidate list — legal under the NextLinkPolicy contract
@@ -395,7 +448,7 @@ class CrawlEngine:
                     F.col("next_link"),
                 ),
             )
-            .select("source_url", "seq", "next_link")
+            .select("source_url", "seq", "next_link", "next_host")
             .persist()
         )
         persisted.append(chosen)
@@ -409,7 +462,7 @@ class CrawlEngine:
                 "source_url",
                 F.col("next_link").alias("url"),
                 F.xxhash64("next_link").alias("url_hash"),
-                host_udf("next_link").alias("host"),
+                F.col("next_host").alias("host"),
                 F.lit(0).alias("priority"),
                 F.col("next_enqueue_seq").alias("seq"),
                 F.lit(0).alias("attempt"),
@@ -504,12 +557,12 @@ class CrawlEngine:
         # read back by metrics(); two fewer Spark jobs per batch.
         # batch_sec must cover the batch's real work: the metrics dict is
         # evaluated BEFORE commit runs the writes, so force the persisted
-        # fetch+parse and candidate stages first (they are cached — the
-        # commit's writes then reuse the blocks, no duplicate compute).
-        # Parquet write time itself is visible in the store's commit
-        # latency (tools/lifecycle_smoke.py), not here.
-        parsed.count()
-        cand_delta.count()
+        # stages first. chosen sits downstream of parsed, seen_new and
+        # cand_delta, so one barrier fills all four caches — the commit's
+        # writes then reuse the blocks, no duplicate compute. Parquet
+        # write time itself is visible in the store's commit latency
+        # (tools/lifecycle_smoke.py), not here.
+        chosen.count()
         self.store.commit(
             batch_id=batch_id,
             full_tables={"frontier": frontier3, "source_state": source_state2},

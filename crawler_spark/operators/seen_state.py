@@ -28,8 +28,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..state import Manifest, SnapshotParquetStore
+from ..state import Manifest, SnapshotParquetStore, empty_frame
 from .bloom import BITS_PER_KEY, bloom_fill, build_bloom, update_bloom
 from .cuckoo import (
     BUCKET_SLOTS,
@@ -132,7 +133,7 @@ class SeenState:
         # headroom occupancy, power-of-two buckets per partition
         nb_need = max(256, expected_keys // max(n_parts, 1) // (BUCKET_SLOTS * 2) * 3)
         self._initial_buckets = 1 << (nb_need - 1).bit_length()
-        self._empty = spark.createDataFrame([], f"{url_col} string")
+        self._empty = empty_frame(spark, T.StructType([T.StructField(url_col, T.StringType())]))
 
     @staticmethod
     def _part_expr(url_col: str, modulus: int):
@@ -337,6 +338,7 @@ class SeenState:
         if self.bucketed_parts is None:
             raise ValueError("anti_join: store is not bucketed")
         url_col = url_col or self.url_col
+        store_col = self.url_col  # the committed files' column, whatever the caller's
         fmap = self.bucket_files()
         if not fmap:
             return candidates
@@ -389,12 +391,12 @@ class SeenState:
                     if not files:
                         cache[b] = None
                     else:
-                        vals = pq.read_table(files, columns=[url_col]).column(url_col)
+                        vals = pq.read_table(files, columns=[store_col]).column(store_col)
                         dels = del_files.get(b)
                         if dels:
                             # tombstoned urls are re-crawlable: NOT seen
-                            gone = pq.read_table(dels, columns=[url_col]).column(
-                                url_col
+                            gone = pq.read_table(dels, columns=[store_col]).column(
+                                store_col
                             )
                             vals = pc.filter(
                                 vals, pc.invert(pc.is_in(vals, value_set=gone.combine_chunks()))

@@ -39,6 +39,7 @@ from dataclasses import dataclass, field
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def _fsync_dir(path: str) -> None:
@@ -116,7 +117,27 @@ def _dir_meta(path: str) -> tuple[int, dict]:
         stats.pop(name, None)
     return rows, stats
 
-__all__ = ["SnapshotParquetStore", "Manifest"]
+
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """A zero-row frame of ``schema`` that never starts Python: an empty
+    JVM ``LocalRelation`` scans as a zero-partition ``EmptyRDD``, and the
+    optimizer folds it out of joins and unions. ``spark.createDataFrame([],
+    schema)`` instead parallelizes a ``PythonRDD``, so every scan of the
+    "empty" table launches Python tasks."""
+    js = spark._jsparkSession
+    jdf = js.createDataFrame(spark._jvm.java.util.ArrayList(), js.parseDataType(schema.json()))
+    return DataFrame(jdf, spark)
+
+
+def is_empty_plan(df: DataFrame) -> bool:
+    """True when ``df``'s plan alone bounds it to zero rows (e.g. an
+    ``empty_frame``, or a projection of one). Reads the analyzed plan's
+    row bound — no Spark job."""
+    bound = df._jdf.queryExecution().analyzed().maxRows()
+    return bool(bound.isDefined()) and bound.get() == 0
+
+
+__all__ = ["SnapshotParquetStore", "Manifest", "empty_frame", "is_empty_plan"]
 
 
 @dataclass
@@ -211,6 +232,9 @@ class SnapshotParquetStore:
         parent's layout when the arg is omitted, and ``read`` unions
         per-directory reads (Spark refuses one multi-root partitioned
         read: CONFLICTING_DIRECTORY_STRUCTURES).
+
+        A delta table whose plan is provably empty (``is_empty_plan``,
+        e.g. an ``empty_frame``) is recorded without a Spark write.
         """
         head = self.head()
         if head is not None and batch_id <= head.batch_id:
@@ -261,11 +285,14 @@ class SnapshotParquetStore:
                 # partitioned and flat directories under one table would
                 # break both the union read and the bucket-wise reader
                 cols = pcols.get(tname) or parent_entry.get("partition_cols")
-                if cols:
-                    df.write.partitionBy(*cols).mode("overwrite").parquet(path)
+                if is_empty_plan(df):
+                    # provably empty: the manifest entry a 0-row write
+                    # would produce, without the write or its directory
+                    rows, dstats = 0, {}
                 else:
-                    df.write.mode("overwrite").parquet(path)
-                rows, dstats = _dir_meta(path)
+                    writer = df.write.partitionBy(*cols) if cols else df.write
+                    writer.mode("overwrite").parquet(path)
+                    rows, dstats = _dir_meta(path)
                 files = list(parent_entry["files"])
                 stats = dict(parent_entry.get("stats", {}))
                 if rows > 0:

@@ -198,6 +198,23 @@ def test_bucketed_anti_join_matches_flat_anti_join(spark, root):
     assert st.anti_join(cands).schema == cands.schema
 
 
+def test_bucketed_anti_join_with_renamed_candidate_column(spark, root):
+    # the store's files carry the state's url column; the caller's column
+    # name applies to the candidate side only
+    st = _bucketed(spark, root)
+    st.commit_batch(_urls(spark, 0, 700))
+    cands = _frontier_of(_urls(spark, 500, 1200)).withColumnRenamed("url", "link")
+    got = {r.link for r in st.anti_join(cands, url_col="link").collect()}
+    assert got == {f"https://s{i % 9}.example.org/p/{i}" for i in range(700, 1200)}
+
+
+def test_empty_seen_state_reads_are_zero_partition(spark, root):
+    st = _bucketed(spark, root)
+    for df in (st.seen(), st.deleted()):
+        assert df.schema.fieldNames() == ["url"]
+        assert df.rdd.getNumPartitions() == 0
+
+
 def test_bucketed_schedule_batch_equals_flat_schedule(spark, root):
     st = _bucketed(spark, root)
     st.commit_batch(_urls(spark, 0, 400))

@@ -41,6 +41,44 @@ def test_strip_fragment_reference_cases():
     assert strip_fragment("https://a.org/p") == "https://a.org/p"
 
 
+def test_parse_documents_emits_fragment_stripped_urls():
+    """parse_documents carries the page's url_nofrag and an internal_nofrag
+    array aligned with internal_links — the step keys its seen and
+    candidate tables on them, so each must be exactly strip_fragment."""
+    import pandas as pd
+
+    from crawler_spark.functions.udfs import PARSED_SCHEMA, parse_documents
+
+    html = (
+        '<a href="https://h/p?#x">a</a> <a href="#top">b</a> '
+        '<a href="/q#y">c</a> <a href="https://h/r?k=1#z">d</a> <a href="/s">e</a>'
+    ).encode()
+    pages = pd.DataFrame(
+        {
+            "source_url": ["https://h", "https://h", "https://h"],
+            "url": ["https://h/p?#x", "https://[::1/p#frag", "https://h/missing#m"],
+            "host": ["h", "[::1", "h"],
+            "seq": [0, 1, 2],
+            "kind": ["html", "html", None],
+            "payload": [html, b"<p>no links</p>", None],
+            "status": [200, 200, None],
+        }
+    )
+    (out,) = list(parse_documents(iter([pages])))
+    assert list(out.columns) == PARSED_SCHEMA.fieldNames()
+    # urlunparse drops the empty query; the IPv6-bracket garbage is
+    # unparseable and falls back to the plain '#' split
+    assert list(out["url_nofrag"]) == ["https://h/p", "https://[::1/p", "https://h/missing"]
+    assert list(out["url_nofrag"]) == [strip_fragment(u) for u in out["url"]]
+    links = list(out["internal_links"][0])
+    # the fragment-only href is skipped, so the arrays stay aligned
+    assert not any(u.startswith("#") for u in links) and len(links) == 4
+    for got_links, got_nofrag in zip(out["internal_links"], out["internal_nofrag"]):
+        assert list(got_nofrag) == [strip_fragment(u) for u in got_links]
+    assert "https://h/p" in list(out["internal_nofrag"][0])
+    assert list(out["ok"]) == [True, True, False]
+
+
 def test_canonicalize_rfc3986():
     assert canonicalize_rfc3986("https://A.ORG/p") == "https://a.org/p"
     assert canonicalize_rfc3986("https://a.org:443/p") == "https://a.org/p"
