@@ -30,7 +30,6 @@ __all__ = [
     "add_bloom_keys",
     "build_bloom",
     "update_bloom",
-    "advance_bloom",
     "bloom_fill",
     "bloom_prefilter",
     "K_PROBES",
@@ -126,7 +125,9 @@ def update_bloom(
     on ``build_bloom``; BITS_PER_KEY=16 per expected key keeps fpp ~0.05%)
     and watch saturation with ``bloom_fill``: past ~50% bit-fill, rebuild
     wider from the seen table (one O(|seen|) job per *doubling*, amortized
-    O(1) per batch — the classic dynamic-array argument).
+    O(1) per batch — the classic dynamic-array argument;
+    ``SeenState.commit_batch`` runs exactly this update -> fill-check ->
+    rebuild cycle).
 
     m_bits_per_part=None infers the width from the widest existing blob
     (one tiny 64-row agg); pass it explicitly to skip that job in a
@@ -173,73 +174,6 @@ def update_bloom(
         .cogroup(keyed.groupBy("bloom_part"))
         .applyInPandas(_upd, "bloom_part int, blob binary")
     )
-
-
-def advance_bloom(
-    bloom: DataFrame,
-    new_seen: DataFrame,
-    full_seen: DataFrame,
-    url_col: str = "url",
-    n_parts: int = 64,
-    m_bits_per_part: int | None = None,
-    rebuild_fill: float = 0.5,
-) -> tuple[DataFrame, dict]:
-    """One drain-batch advance of the seen-filter state: OR the batch's
-    newly-seen URLs in (update_bloom), then check saturation and rebuild
-    wider from the full seen table when max per-partition fill crosses
-    ``rebuild_fill`` — the executable form of the capacity contract.
-
-    Width doubles on rebuild (and re-derives from the actual seen count
-    if that asks for more), so rebuilds happen once per doubling of the
-    seen set: amortized O(1) per batch, never O(|seen|) per batch. At
-    fill 0.5 and k=5 probes fpp is ~3% — still safe (the exact anti-join
-    resolves every maybe-seen), but the maybe slice starts to cost real
-    join work, which is the right moment to spend one rebuild.
-
-    Returns ``(bloom', info)``; info carries fill_max and, when a
-    rebuild fired, the old/new widths. The returned blobs are
-    local-checkpointed (materialized, lineage cut): the fill check below
-    must not evaluate the un-materialized update cogroup once for the
-    popcount and leave the caller's materialization to evaluate it a
-    second time — the same double-evaluation cost SeenState.commit_batch
-    measured and removed via its commit-then-fill-check ordering. State
-    tables outlive the batch either way; a caller that commits the
-    result to a store re-cuts lineage at the committed files.
-
-    Checkpoint lifetime: localCheckpoint blocks are released when the
-    returned DataFrame is garbage-collected (ContextCleaner), not by
-    unpersist() — a long multi-batch loop holding many returned handles
-    accumulates superseded blob copies until GC. Loop-grade drains
-    should use SeenState (per-batch committed tables, deterministic
-    file lifecycle) rather than chaining advance_bloom returns.
-    """
-    if m_bits_per_part is None:
-        widest = bloom.agg(F.max(F.length("blob"))).first()[0]
-        if not widest:
-            raise ValueError(
-                "advance_bloom: cannot infer bitmap width from an empty bloom "
-                "table — pass m_bits_per_part explicitly"
-            )
-        m_bits_per_part = int(widest) * 8
-    out = update_bloom(
-        bloom, new_seen, url_col=url_col, n_parts=n_parts, m_bits_per_part=m_bits_per_part
-    ).localCheckpoint()
-    fill_max = bloom_fill(out).agg(F.max("fill")).first()[0] or 0.0
-    info = {"fill_max": float(fill_max), "rebuilt": False, "m_bits_per_part": m_bits_per_part}
-    if fill_max > rebuild_fill:
-        n_keys = full_seen.count()
-        need = max(m_bits_per_part * 2, (n_keys * BITS_PER_KEY) // max(n_parts, 1))
-        new_m = 1 << (need - 1).bit_length()
-        # same checkpoint contract as the update path: the rebuild is the
-        # drain's most expensive batch — a caller evaluating the result
-        # twice must not pay the O(|seen|) build twice
-        out = build_bloom(
-            full_seen.select(F.col(url_col).alias("url")),
-            n_parts=n_parts,
-            m_bits_per_part=new_m,
-        ).localCheckpoint()
-        info.update(rebuilt=True, m_bits_per_part=new_m, m_bits_before=m_bits_per_part)
-    return out, info
 
 
 def bloom_fill(bloom: DataFrame) -> DataFrame:

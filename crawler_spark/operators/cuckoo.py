@@ -40,12 +40,20 @@ __all__ = [
     "cuckoo_load",
     "delete_from_cuckoo",
     "BUCKET_SLOTS",
+    "CuckooOverflowError",
 ]
 
 BUCKET_SLOTS = 4
 _FP_MOD = 65535  # fingerprints 1..65535, 0 = empty slot
 MAX_KICKS = 500
 LOAD_FACTOR = 0.8
+
+
+class CuckooOverflowError(ValueError):
+    """A key found no free slot within MAX_KICKS: the partition's table
+    is too small for its keys. Raised inside a Python worker, it reaches
+    the driver wrapped in Spark's ``PythonException``, whose text carries
+    this class's name."""
 
 
 def add_cuckoo_keys(df: DataFrame, url_col: str = "url", n_parts: int = 64) -> DataFrame:
@@ -122,7 +130,7 @@ def _place_keys(
             f, table[i, j] = row[j], f
             i = int(i ^ _alt_offset(np.array([f]), n_buckets)[0])
         else:
-            raise ValueError(
+            raise CuckooOverflowError(
                 "cuckoo partition over capacity — raise slots_per_part "
                 f"(n_buckets={n_buckets}, keys~{len(h)})"
             )

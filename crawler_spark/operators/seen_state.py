@@ -19,6 +19,15 @@ at every batch boundary (the cached-chain recompute failure measured in
 the 10^9 run cannot occur, because each batch reads the previous batch's
 blobs from committed files).
 
+A store opens only with the settings it was written with. Every commit
+SeenState writes records the layout (``n_parts``, ``bucketed_parts``,
+``filter_kind``, ``url_col``) next to the logical batch id, and the
+constructor compares HEAD's record with its own settings once, raising
+:class:`SeenStateMismatch` on any difference. A mismatched open would
+probe the wrong filter partitions or bucket directories, tag
+already-seen URLs definitely-new and re-schedule them — the one error the
+two-tier check cannot absorb.
+
 Reference contrast: the reference's URL-seen is a per-crawl in-memory
 ``set`` lost on crash (/root/reference/backend/domain/entities.py:153);
 this is its 10^10-frontier replacement.
@@ -34,13 +43,19 @@ from ..state import Manifest, SnapshotParquetStore, empty_frame
 from .bloom import BITS_PER_KEY, bloom_fill, build_bloom, update_bloom
 from .cuckoo import (
     BUCKET_SLOTS,
+    CuckooOverflowError,
     build_cuckoo,
     cuckoo_load,
     delete_from_cuckoo,
     insert_into_cuckoo,
 )
 
-__all__ = ["SeenState"]
+__all__ = ["SeenState", "SeenStateMismatch"]
+
+
+class SeenStateMismatch(ValueError):
+    """A store was opened with settings other than the ones it was
+    written with (or its HEAD carries no layout record)."""
 
 
 class SeenState:
@@ -50,6 +65,9 @@ class SeenState:
     TABLE_DELETED = "url_deleted"
 
     BUCKET_COL = "seen_bucket"
+
+    METRIC_LOGICAL = "seen_logical_batch"
+    METRIC_LAYOUT = "seen_layout"
 
     def __init__(
         self,
@@ -62,13 +80,12 @@ class SeenState:
         bucketed_parts: int | None = None,
         write_tasks: int = 64,
         filter_kind: str = "bloom",
-        stagger_parts: int | None = None,
     ):
         """``expected_keys`` sizes the initial Bloom (BITS_PER_KEY bits per
-        expected seen URL); undersizing is safe — advance_bloom rebuilds
-        wider when fill crosses ``rebuild_fill``. On resume the width is
-        inferred from the committed blobs, so the parameter only matters
-        for a fresh store.
+        expected seen URL); undersizing is safe — ``commit_batch``
+        rebuilds wider when fill crosses ``rebuild_fill``. On resume the
+        width is inferred from the committed blobs, so the parameter only
+        matters for a fresh store.
 
         ``bucketed_parts`` (B) turns on the hash-bucketed url_seen
         layout: rows land under ``seen_bucket=<pmod(xxhash64(url,2),B)>``
@@ -80,9 +97,8 @@ class SeenState:
         the flat anti-join reshuffles ~4 GB of seen rows per batch at
         10^8 seen and grows linearly to 10^10. B must be a multiple of
         ``n_parts`` and the bucket hash is the Bloom's partition hash
-        (seed 2), so bucket % n_parts == bloom_part — a per-part Bloom
-        rebuild can read exactly the B/n_parts matching bucket dirs
-        instead of the whole table. ``write_tasks`` caps the writer
+        (seed 2), so bucket % n_parts == bloom_part: bucket dirs refine
+        the filter partitioning. ``write_tasks`` caps the writer
         fan-out: new rows are hash-clustered so each bucket's files come
         from one task (~B files per commit, not tasks*B).
 
@@ -99,18 +115,12 @@ class SeenState:
         load above it — cuckoo inserts fail their kick walks near
         LOAD_FACTOR instead of degrading like Bloom fpp does).
 
-        ``stagger_parts`` (Bloom only) bounds the saturation rebuild to
-        at most that many worst-fill partitions per batch instead of all
-        ``n_parts`` at once: the amortized-doubling cost stays O(1) per
-        batch either way, but no single batch pays the whole doubling
-        (at 10^10 seen a full rebuild is a full-table scan + global
-        rebuild inside one commit window — a maintenance PAUSE; the
-        staggered form spreads it over ~n_parts/stagger_parts batches
-        while saturation degrades only fpp, never correctness, since the
-        exact tier resolves every maybe). With the bucketed layout the
-        per-part rebuild reads exactly the B/n_parts bucket directories
-        whose rows hash to the rebuilt partitions (bucket % n_parts ==
-        bloom_part), not the whole seen table."""
+        ``n_parts``, ``bucketed_parts``, ``filter_kind`` and ``url_col``
+        fix the store's layout: reopening a committed store with any of
+        them changed raises :class:`SeenStateMismatch` here, before any
+        read or write. ``expected_keys``, ``rebuild_fill`` and
+        ``write_tasks`` only tune a fresh store or future commits and may
+        differ between opens."""
         self.spark = spark
         self.store = SnapshotParquetStore(spark, root)
         self.n_parts = n_parts
@@ -126,7 +136,6 @@ class SeenState:
         if filter_kind not in ("bloom", "cuckoo"):
             raise ValueError(f"filter_kind must be 'bloom' or 'cuckoo', got {filter_kind!r}")
         self.filter_kind = filter_kind
-        self.stagger_parts = stagger_parts
         need = max(1 << 13, expected_keys * BITS_PER_KEY // max(n_parts, 1))
         self._initial_m_bits = 1 << (need - 1).bit_length()
         # cuckoo geometry: slots for expected_keys at ~LOAD_FACTOR-with-
@@ -134,6 +143,28 @@ class SeenState:
         nb_need = max(256, expected_keys // max(n_parts, 1) // (BUCKET_SLOTS * 2) * 3)
         self._initial_buckets = 1 << (nb_need - 1).bit_length()
         self._empty = empty_frame(spark, T.StructType([T.StructField(url_col, T.StringType())]))
+        self._layout = {
+            "n_parts": n_parts,
+            "bucketed_parts": bucketed_parts,
+            "filter_kind": filter_kind,
+            "url_col": url_col,
+        }
+        head = self.store.head()
+        if head is not None and head.tables:
+            got = head.metrics.get(self.METRIC_LAYOUT)
+            if got != self._layout:
+                raise SeenStateMismatch(
+                    f"store at {root!r} was written with layout {got} but is "
+                    f"opened with {self._layout}; open it with the settings "
+                    "it was written with"
+                )
+
+    def _stamp(self, bid: int, metrics: dict | None = None) -> dict:
+        """Commit metrics carrying the logical batch id and the layout
+        record — every commit SeenState writes goes through here, so
+        HEAD always holds both (see ``last_logical`` and the open-time
+        check in ``__init__``)."""
+        return {**(metrics or {}), self.METRIC_LOGICAL: bid, self.METRIC_LAYOUT: self._layout}
 
     @staticmethod
     def _part_expr(url_col: str, modulus: int):
@@ -149,8 +180,6 @@ class SeenState:
         return self._part_expr(self.url_col, self.bucketed_parts)
 
     # -- reads ----------------------------------------------------------------
-
-    METRIC_LOGICAL = "seen_logical_batch"
 
     def batch_id(self) -> int:
         head = self.store.head()
@@ -168,36 +197,11 @@ class SeenState:
         rebuild/compaction silently classified as redelivered (its URLs
         never entering the seen state, re-scheduled forever). Every
         commit SeenState writes therefore carries the current logical id
-        in its metrics, so the newest kept manifest always records it
-        even after ``expire(keep_last=2)`` drops the data commit that
-        introduced it. HEAD is checked first — every commit this code
-        writes carries the metric, so the full-history walk (one JSON
-        read per kept manifest) only runs for stores written by older
-        code; without the head fast-path a never-expiring drain would
-        pay O(batches) driver-side file reads per commit, O(batches^2)
-        over the run. Legacy fallbacks, in order: the drain loop's
-        ``loop_batch`` journal (+1 — it records the completed window
-        index) and only then the store batch_id; the store counter also
-        counts internal rebuild/compact commits, so using it where a
-        loop journal exists would classify the first post-resume
-        windows as redelivered and silently drop their URLs."""
+        in its metrics (``_stamp``), so HEAD always records it, even after
+        ``expire(keep_last=2)`` drops the data commit that introduced it
+        — one manifest read, O(1) per commit."""
         head = self.store.head()
-        if head is None:
-            return 0
-        lb = (head.metrics or {}).get(self.METRIC_LOGICAL)
-        if lb is not None:
-            return int(lb)
-        hist = self.store.history()
-        legacy_loop = None
-        for man in reversed(hist):
-            m = man.metrics or {}
-            if self.METRIC_LOGICAL in m:
-                return int(m[self.METRIC_LOGICAL])
-            if legacy_loop is None and "loop_batch" in m:
-                legacy_loop = int(m["loop_batch"]) + 1
-        if legacy_loop is not None:
-            return legacy_loop
-        return head.batch_id
+        return int(head.metrics.get(self.METRIC_LOGICAL, 0)) if head else 0
 
     @property
     def filter_table(self) -> str:
@@ -226,35 +230,10 @@ class SeenState:
         """Committed prefilter blobs of the configured ``filter_kind``
         (empty DataFrame before the first commit — the prefilter treats
         a missing blob as maybe_seen=false, and the exact anti-join side
-        is equally empty, so batch 0 just works). Resuming a store that
-        was committed with the OTHER filter kind refuses loudly: a
-        silently-empty prefilter would tag every previously seen URL
-        definitely-new, and the definitely-new branch bypasses the exact
-        anti-join entirely — the one error class the two-tier design
-        cannot absorb. Migrate with ``rebuild_filter()`` instead."""
-        head = self.store.head()
+        is equally empty, so batch 0 just works)."""
         df = self.store.read(self.filter_table)
         if df is not None:
-            if head is not None and not head.tables.get(
-                self.filter_table, {}
-            ).get("rows", 0) and head.tables.get(self.TABLE_SEEN, {}).get("rows", 0):
-                raise ValueError(
-                    f"blobs: {self.filter_table} is EMPTY while url_seen has "
-                    "rows (a cleared filter after a kind migration?) — call "
-                    "rebuild_filter() before scheduling against this state"
-                )
             return df
-        other = (
-            self.TABLE_BLOOM if self.filter_kind == "cuckoo" else self.TABLE_CUCKOO
-        )
-        if head is not None and head.tables.get(other, {}).get("rows", 0):
-            raise ValueError(
-                f"blobs: store was committed with filter_kind="
-                f"{'bloom' if other == self.TABLE_BLOOM else 'cuckoo'!r} but "
-                f"this SeenState is {self.filter_kind!r} — an empty "
-                f"{self.filter_table} would re-crawl every seen URL; resume "
-                "with the original kind or migrate via rebuild_filter()"
-            )
         if self.filter_kind == "cuckoo":
             return build_cuckoo(
                 self._empty, n_parts=self.n_parts, n_buckets=self._initial_buckets
@@ -262,12 +241,6 @@ class SeenState:
         return build_bloom(
             self._empty, n_parts=self.n_parts, m_bits_per_part=self._initial_m_bits
         )
-
-    def bloom(self) -> DataFrame:
-        """Back-compat alias of :meth:`blobs` (named when Bloom was the
-        only filter kind; schedule_batch's ``bloom=`` arg carries either
-        family, dispatched by its ``seen_filter``)."""
-        return self.blobs()
 
     def fill(self) -> DataFrame:
         """Saturation report for the configured filter kind — columns
@@ -298,19 +271,7 @@ class SeenState:
         out: dict[int, list[str]] = {}
         if head is None or table not in head.tables:
             return out
-        entry = head.tables[table]
-        if entry.get("rows", 0) and not entry.get("partition_cols"):
-            # a committed FLAT table under a bucketed SeenState would make
-            # the bucket-wise reader silently see an empty map — every
-            # previously-crawled URL re-scheduled, and the next partitioned
-            # delta would wedge the union read on mixed schemas. Refuse.
-            raise ValueError(
-                f"bucket_files: table {table!r} was committed WITHOUT the "
-                "bucketed layout (no partition_cols in the manifest) — a "
-                "flat store cannot be resumed with bucketed_parts; rebuild "
-                "the state or resume without bucketing"
-            )
-        for rel in entry["files"]:
+        for rel in head.tables[table]["files"]:
             base = _os.path.join(self.store.root, "snapshots", rel)
             for d in _glob.glob(_os.path.join(base, f"{self.BUCKET_COL}=*")):
                 b = int(d.rsplit("=", 1)[1])
@@ -459,15 +420,6 @@ class SeenState:
             return head, {"redelivered": True}
         new_urls = new_seen.select(F.col(self.url_col))
         pcols = None
-        if self.bucketed_parts is not None and head is not None:
-            ent = head.tables.get(self.TABLE_SEEN, {})
-            if ent.get("rows", 0) and not ent.get("partition_cols"):
-                raise ValueError(
-                    "commit_batch: store holds a FLAT url_seen table but "
-                    "this SeenState is bucketed — a partitioned delta on "
-                    "flat parents would wedge the union read (mixed "
-                    "schemas); resume without bucketed_parts or rebuild"
-                )
         if self.bucketed_parts is not None:
             # cluster the batch's rows by bucket BEFORE the partitioned
             # write: each bucket's files then come from exactly one task
@@ -516,17 +468,14 @@ class SeenState:
             head.batch_id + 1 if head else 1,
             full_tables={self.TABLE_BLOOM: out, **full_extra},
             delta_tables={self.TABLE_SEEN: new_urls},
-            metrics={**(metrics or {}), self.METRIC_LOGICAL: bid},
+            metrics=self._stamp(bid, metrics),
             partition_cols=pcols,
         )
         fill_max = float(
-            bloom_fill(self.bloom()).agg(F.max("fill")).first()[0] or 0.0
+            bloom_fill(self.blobs()).agg(F.max("fill")).first()[0] or 0.0
         )
         info = {"fill_max": fill_max, "rebuilt": False, "m_bits_per_part": m_bits}
-        if fill_max > self.rebuild_fill and self.stagger_parts:
-            man, rinfo = self._stagger_rebuild(man, bid)
-            info.update(rinfo)
-        elif fill_max > self.rebuild_fill:
+        if fill_max > self.rebuild_fill:
             full_seen = self.seen()
             n_keys = full_seen.count()
             need = max(m_bits * 2, (n_keys * BITS_PER_KEY) // max(self.n_parts, 1))
@@ -539,85 +488,18 @@ class SeenState:
             man = self.store.commit(
                 man.batch_id + 1,
                 full_tables={self.TABLE_BLOOM: rebuilt},
-                metrics={
-                    "event": "bloom_rebuild",
-                    "fill_max": fill_max,
-                    "m_bits_before": m_bits,
-                    "m_bits_per_part": new_m,
-                    self.METRIC_LOGICAL: bid,
-                },
+                metrics=self._stamp(
+                    bid,
+                    {
+                        "event": "bloom_rebuild",
+                        "fill_max": fill_max,
+                        "m_bits_before": m_bits,
+                        "m_bits_per_part": new_m,
+                    },
+                ),
             )
             info.update(rebuilt=True, m_bits_before=m_bits, m_bits_per_part=new_m)
         return man, info
-
-    def _stagger_rebuild(self, man: Manifest, bid: int) -> tuple[Manifest, dict]:
-        """Rebuild at most ``stagger_parts`` worst-fill Bloom partitions
-        at double their width (per-part amortized doubling). Mixed blob
-        widths are first-class across the filter code — every probe and
-        update derives the width from its own blob's length — so the
-        filter stays fully usable mid-doubling. With the bucketed
-        layout the rebuild rows come from exactly the bucket dirs whose
-        bucket % n_parts lands in the rebuilt partitions (pyarrow-listed
-        files, no full-table scan); otherwise from a filtered full
-        scan."""
-        fills = bloom_fill(self.blobs()).collect()  # n_parts rows
-        worst = sorted(
-            (r for r in fills if r.fill > self.rebuild_fill),
-            key=lambda r: -r.fill,
-        )[: self.stagger_parts]
-        if not worst:
-            return man, {}
-        parts = sorted(int(r.bloom_part) for r in worst)
-        new_m = 2 * max(int(r.m_bits) for r in worst)
-        if self.bucketed_parts is not None:
-            files = [
-                f
-                for b, fs in self.bucket_files().items()
-                if b % self.n_parts in set(parts)
-                for f in fs
-            ]
-            if files:
-                rows = self.spark.read.parquet(*files).select(
-                    F.col(self.url_col).alias("url")
-                )
-                head = self.store.head()
-                if head and head.tables.get(self.TABLE_DELETED, {}).get("rows", 0):
-                    rows = rows.join(
-                        self.deleted().select(F.col(self.url_col).alias("url")),
-                        "url",
-                        "left_anti",
-                    )
-            else:
-                # the saturated parts' rows were all purged (bits stay
-                # set — Bloom bits are never unset): rebuild them empty
-                # at the new width; build_bloom emits no blob for an
-                # empty part and a missing blob probes definitely-new,
-                # which is correct for a part with no seen rows
-                rows = self._empty.select(F.col(self.url_col).alias("url"))
-        else:
-            rows = self.seen().select(F.col(self.url_col).alias("url"))
-            rows = rows.filter(self._part_expr("url", self.n_parts).isin(parts))
-        rebuilt = build_bloom(rows, n_parts=self.n_parts, m_bits_per_part=new_m)
-        merged = self.blobs().filter(~F.col("bloom_part").isin(parts)).unionByName(
-            rebuilt
-        )
-        man = self.store.commit(
-            man.batch_id + 1,
-            full_tables={self.TABLE_BLOOM: merged},
-            metrics={
-                "event": "bloom_rebuild_partial",
-                "parts": ",".join(map(str, parts)),
-                "m_bits_per_part": new_m,
-                self.METRIC_LOGICAL: bid,
-            },
-            partition_cols=None,
-        )
-        return man, {
-            "rebuilt": True,
-            "staggered": True,
-            "parts_rebuilt": parts,
-            "m_bits_per_part": new_m,
-        }
 
     def _commit_cuckoo(
         self,
@@ -673,7 +555,7 @@ class SeenState:
                 head.batch_id + 1 if head else 1,
                 full_tables={self.TABLE_CUCKOO: out, **full_extra},
                 delta_tables={self.TABLE_SEEN: new_urls},
-                metrics={**(metrics or {}), self.METRIC_LOGICAL: bid},
+                metrics=self._stamp(bid, metrics),
                 partition_cols=pcols,
             )
         except Exception as e:
@@ -683,8 +565,10 @@ class SeenState:
             # still fail its kick walk. store.commit staged to a tmp dir
             # and cleaned up, so nothing was written — rebuild sized for
             # seen+batch and retry once. This keeps the constructor's
-            # "undersizing is safe" contract true for cuckoo too.
-            if "over capacity" not in str(e):
+            # "undersizing is safe" contract true for cuckoo too. The
+            # overflow raised in a Python worker arrives wrapped in
+            # Spark's PythonException, whose text names the class.
+            if CuckooOverflowError.__name__ not in str(e):
                 raise
             all_keys = self.seen().select(
                 F.col(self.url_col).alias("url")
@@ -697,11 +581,9 @@ class SeenState:
                 head.batch_id + 1 if head else 1,
                 full_tables={self.TABLE_CUCKOO: out, **full_extra},
                 delta_tables={self.TABLE_SEEN: new_urls},
-                metrics={
-                    **(metrics or {}),
-                    "event": "cuckoo_overflow_rebuild",
-                    self.METRIC_LOGICAL: bid,
-                },
+                metrics=self._stamp(
+                    bid, {**(metrics or {}), "event": "cuckoo_overflow_rebuild"}
+                ),
                 partition_cols=pcols,
             )
             info.update(rebuilt=True, n_buckets=nb, overflow_recovered=True)
@@ -763,11 +645,9 @@ class SeenState:
             head.batch_id + 1,
             full_tables=full_tables,
             delta_tables={self.TABLE_DELETED: dels},
-            metrics={
-                **(metrics or {}),
-                "event": "delete_urls",
-                self.METRIC_LOGICAL: self.last_logical(),
-            },
+            metrics=self._stamp(
+                self.last_logical(), {**(metrics or {}), "event": "delete_urls"}
+            ),
             partition_cols=pcols,
         )
         return man, {"filter_evicted": self.filter_kind == "cuckoo"}
@@ -801,54 +681,8 @@ class SeenState:
                 self.TABLE_SEEN: seen,
                 self.TABLE_DELETED: self.deleted().limit(0),
             },
-            metrics={
-                "event": "apply_deletes",
-                self.METRIC_LOGICAL: self.last_logical(),
-            },
+            metrics=self._stamp(self.last_logical(), {"event": "apply_deletes"}),
             partition_cols=pcols,
-        )
-
-    def rebuild_filter(self) -> Manifest:
-        """(Re)build the configured filter kind from the full seen set
-        and commit it, clearing the OTHER kind's blob table — the
-        explicit migration path between filter kinds (bloom <-> cuckoo)
-        and the recovery path blobs() directs to. Internal commit (does
-        not advance the logical batch id)."""
-        head = self.store.head()
-        if head is None:
-            raise ValueError("rebuild_filter: nothing committed yet")
-        seen = self.seen().select(F.col(self.url_col).alias("url"))
-        n_keys = seen.count()
-        if self.filter_kind == "cuckoo":
-            need = max(
-                self._initial_buckets,
-                n_keys // max(self.n_parts, 1) // BUCKET_SLOTS * 2,
-            )
-            blobs = build_cuckoo(
-                seen, n_parts=self.n_parts, n_buckets=1 << (max(need, 1) - 1).bit_length()
-            )
-        else:
-            need = max(
-                self._initial_m_bits,
-                (n_keys * BITS_PER_KEY) // max(self.n_parts, 1),
-            )
-            blobs = build_bloom(
-                seen, n_parts=self.n_parts, m_bits_per_part=1 << (need - 1).bit_length()
-            )
-        other = (
-            self.TABLE_BLOOM if self.filter_kind == "cuckoo" else self.TABLE_CUCKOO
-        )
-        full: dict[str, DataFrame] = {self.filter_table: blobs}
-        if head.tables.get(other, {}).get("rows", 0):
-            full[other] = self.store.read(other).limit(0)
-        return self.store.commit(
-            head.batch_id + 1,
-            full_tables=full,
-            metrics={
-                "event": "filter_rebuild",
-                "filter_kind": self.filter_kind,
-                self.METRIC_LOGICAL: self.last_logical(),
-            },
         )
 
     def expire(self, keep_last: int = 2) -> dict:
@@ -872,5 +706,5 @@ class SeenState:
         return self.store.compact(
             self.TABLE_SEEN,
             n_files=n_files,
-            extra_metrics={self.METRIC_LOGICAL: self.last_logical()},
+            extra_metrics=self._stamp(self.last_logical()),
         )

@@ -6,6 +6,7 @@ import pytest
 
 from crawler_spark.operators.cuckoo import (
     BUCKET_SLOTS,
+    CuckooOverflowError,
     _build_table,
     _delete_from_table,
     _probe_table,
@@ -42,8 +43,21 @@ def test_core_no_false_negatives_and_low_fpp():
 
 def test_core_overflow_raises():
     h, fp = _keys(3000, 3)
-    with pytest.raises(ValueError, match="over capacity"):
+    with pytest.raises(CuckooOverflowError):
         _build_table(h, fp, 256)  # load ~2.9: must refuse, not corrupt
+
+
+def test_place_keys_on_full_table_raises_overflow_error():
+    """A full table cannot take one more key: the kick walk runs out and
+    raises the dedicated class the SeenState commit path recovers from."""
+    from crawler_spark.operators.cuckoo import _place_keys
+
+    nb = 64
+    table = np.full((nb, BUCKET_SLOTS), 7, dtype=np.uint16)
+    occ = np.full(nb, BUCKET_SLOTS, dtype=np.int64)
+    h, fp = _keys(1, 13)
+    with pytest.raises(CuckooOverflowError):
+        _place_keys(table, occ, h, fp, nb)
 
 
 def test_core_delete_removes_without_harming_others():

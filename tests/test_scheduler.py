@@ -546,72 +546,3 @@ def test_bloom_fill_reports_saturation(spark):
     )
     sat = update_bloom(bloom, many, n_parts=4)
     assert all(r.fill > 0.5 for r in bloom_fill(sat).collect())
-
-
-def test_advance_bloom_rebuilds_wider_on_saturation(spark):
-    """The amortized capacity contract, executable: advances below the
-    fill threshold are plain OR-ins at constant width; the advance that
-    crosses it rebuilds from the full seen table at >= double the width,
-    and the rebuilt filter still has no false negatives."""
-    from crawler_spark.operators.bloom import advance_bloom, bloom_prefilter, build_bloom
-
-    def urls(a, b):
-        return [(f"https://adv{i}.org/p/{i}",) for i in range(a, b)]
-
-    m0 = 1 << 13  # deliberately small: ~100 keys saturate it
-    seen0 = spark.createDataFrame(urls(0, 50), "url string")
-    bloom = build_bloom(seen0, n_parts=4, m_bits_per_part=m0)
-
-    # small advance: no rebuild, width unchanged
-    b1 = spark.createDataFrame(urls(50, 80), "url string")
-    full1 = seen0.unionByName(b1)
-    bloom, info1 = advance_bloom(bloom, b1, full1, n_parts=4, m_bits_per_part=m0)
-    assert not info1["rebuilt"] and info1["m_bits_per_part"] == m0
-
-    # saturating advance: rebuild fires, width at least doubles
-    b2 = spark.createDataFrame(urls(80, 5000), "url string")
-    full2 = full1.unionByName(b2)
-    bloom, info2 = advance_bloom(bloom, b2, full2, n_parts=4, m_bits_per_part=m0)
-    assert info2["rebuilt"] and info2["m_bits_per_part"] >= 2 * m0
-    assert info2["m_bits_before"] == m0
-
-    # no false negatives across the whole history after the rebuild
-    tagged = bloom_prefilter(full2, bloom, n_parts=4, mode="cogroup")
-    assert all(r.maybe_seen for r in tagged.collect())
-
-
-def test_advance_bloom_evaluates_update_cogroup_once(spark, tmp_path):
-    """ADVICE r4: advance_bloom used to fill-check the un-materialized
-    update plan and hand the caller the same un-materialized plan — the
-    caller's materialization then re-ran the whole cogroup. The returned
-    blobs are now local-checkpointed, so the batch's keys are hashed
-    exactly once no matter how often the result is evaluated."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StringType
-
-    from crawler_spark.operators.bloom import advance_bloom, build_bloom
-
-    marker = tmp_path / "evals"
-    marker.mkdir()
-
-    def _tag(s):
-        import os
-        import uuid
-
-        # one file per udf batch: counts plan evaluations, not rows
-        open(os.path.join(str(marker), uuid.uuid4().hex), "w").close()
-        return s
-
-    tag = F.udf(_tag, StringType())
-    base = spark.createDataFrame([(f"https://a.org/{i}",) for i in range(50)], "url string")
-    bloom = build_bloom(base, n_parts=2, m_bits_per_part=1 << 13).localCheckpoint()
-    new = spark.range(64).select(
-        tag(F.concat(F.lit("https://b.org/"), F.col("id"))).alias("url")
-    ).coalesce(1)
-
-    out, info = advance_bloom(bloom, new, base, n_parts=2, m_bits_per_part=1 << 13)
-    n_after_advance = len(list(marker.iterdir()))
-    assert n_after_advance >= 1
-    out.count()
-    out.count()  # caller-side materializations must not re-run the cogroup
-    assert len(list(marker.iterdir())) == n_after_advance

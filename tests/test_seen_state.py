@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from crawler_spark.operators.bloom import bloom_prefilter
 from crawler_spark.operators.scheduler import release_barrier, schedule_batch
-from crawler_spark.operators.seen_state import SeenState
+from crawler_spark.operators.seen_state import SeenState, SeenStateMismatch
 
 
 def _urls(spark, lo, hi):
@@ -43,7 +43,7 @@ def test_commit_batches_filter_previously_scheduled(spark, root):
 
     # scheduling batch 1's frontier against the state drops the overlap
     sched, bar = schedule_batch(
-        _frontier_of(b1), seen=st.seen(), bloom=st.bloom(), default_k=10_000,
+        _frontier_of(b1), seen=st.seen(), bloom=st.blobs(), default_k=10_000,
         n_bloom_parts=8,
     )
     got = {r.url for r in sched.collect()}
@@ -53,7 +53,7 @@ def test_commit_batches_filter_previously_scheduled(spark, root):
     st.commit_batch(_urls(spark, 300, 500))
     assert st.seen().count() == 500
     # everything committed probes maybe_seen (no false negatives via state)
-    tagged = bloom_prefilter(_urls(spark, 0, 500), st.bloom(), n_parts=8)
+    tagged = bloom_prefilter(_urls(spark, 0, 500), st.blobs(), n_parts=8)
     assert all(r.maybe_seen for r in tagged.collect())
 
 
@@ -66,7 +66,7 @@ def test_resume_from_head_and_idempotent_redelivery(spark, root):
     # a FRESH SeenState on the same root sees the committed state
     st2 = SeenState(spark, root, n_parts=8, expected_keys=10_000)
     assert st2.batch_id() == 2 and st2.seen().count() == 400
-    tagged = bloom_prefilter(_urls(spark, 0, 400), st2.bloom(), n_parts=8)
+    tagged = bloom_prefilter(_urls(spark, 0, 400), st2.blobs(), n_parts=8)
     assert all(r.maybe_seen for r in tagged.collect())
 
     # redelivering batch 2 is a no-op: no new snapshot, no double-append
@@ -85,7 +85,7 @@ def test_saturation_rebuild_persists_wider_width(spark, root):
     # the NEXT batch infers the committed (wider) width, not the config
     _, info2 = st.commit_batch(_urls(spark, 12000, 12050))
     assert info2["m_bits_per_part"] >= info["m_bits_per_part"]
-    tagged = bloom_prefilter(_urls(spark, 0, 12050), st.bloom(), n_parts=4)
+    tagged = bloom_prefilter(_urls(spark, 0, 12050), st.blobs(), n_parts=4)
     assert all(r.maybe_seen for r in tagged.collect())
 
 
@@ -97,7 +97,7 @@ def test_expire_bounds_blob_history(spark, root):
     assert len(st.store.history()) <= 2
     # state is intact after expiry
     assert st.seen().count() == 200
-    tagged = bloom_prefilter(_urls(spark, 0, 200), st.bloom(), n_parts=4)
+    tagged = bloom_prefilter(_urls(spark, 0, 200), st.blobs(), n_parts=4)
     assert all(r.maybe_seen for r in tagged.collect())
 
 
@@ -220,11 +220,11 @@ def test_bucketed_schedule_batch_equals_flat_schedule(spark, root):
     st.commit_batch(_urls(spark, 0, 400))
     frontier = _frontier_of(_urls(spark, 300, 800))
     flat, b1 = schedule_batch(
-        frontier, seen=st.seen().select("url"), bloom=st.bloom(),
+        frontier, seen=st.seen().select("url"), bloom=st.blobs(),
         default_k=10_000, n_bloom_parts=8,
     )
     bucketed, b2 = schedule_batch(
-        frontier, seen=None, bloom=st.bloom(), exact_anti_join=st.anti_join,
+        frontier, seen=None, bloom=st.blobs(), exact_anti_join=st.anti_join,
         default_k=10_000, n_bloom_parts=8,
     )
     assert {r.url for r in flat.collect()} == {r.url for r in bucketed.collect()}
@@ -371,49 +371,6 @@ def test_bloom_mode_delete_tombstones_without_eviction(spark, root):
     release_barrier(bar)
 
 
-def test_staggered_rebuild_bounds_per_batch_work(spark, root):
-    """Watch-item r4: stagger_parts rebuilds at most K worst-fill
-    partitions per batch (per-part width doubling) instead of the whole
-    filter in one commit window. Mixed widths stay correct: probes and
-    updates derive the width from each blob's own length."""
-    st = SeenState(
-        spark, root, n_parts=8, expected_keys=10, rebuild_fill=0.5,
-        stagger_parts=2, bucketed_parts=32, write_tasks=4,
-    )
-    _, info = st.commit_batch(_urls(spark, 0, 12000), batch_id=1)
-    assert info["rebuilt"] and info.get("staggered")
-    assert 1 <= len(info["parts_rebuilt"]) <= 2
-    widths = {
-        (r.bloom_part, r.m_bits) for r in st.fill().collect()
-    }
-    ms = {m for _, m in widths}
-    assert len(ms) == 2  # rebuilt parts doubled, others not — mixed widths
-    # no false negatives across the mixed-width filter
-    tagged = bloom_prefilter(_urls(spark, 0, 12000), st.blobs(), n_parts=8)
-    assert all(r.maybe_seen for r in tagged.collect())
-
-    # further batches keep rebuilding the next-worst parts
-    _, info2 = st.commit_batch(_urls(spark, 12000, 13000), batch_id=2)
-    if info2.get("staggered"):
-        assert set(info2["parts_rebuilt"]).isdisjoint(info["parts_rebuilt"]) or True
-    tagged2 = bloom_prefilter(_urls(spark, 0, 13000), st.blobs(), n_parts=8)
-    assert all(r.maybe_seen for r in tagged2.collect())
-
-
-def test_bucketed_resume_over_flat_store_refuses(spark, root):
-    """Review r5: resuming a FLAT store with bucketed_parts must refuse
-    loudly — an empty bucket map would silently disable the exact seen
-    check (every crawled URL re-scheduled) and the next partitioned
-    delta would wedge the union read on mixed schemas."""
-    flat = SeenState(spark, root, n_parts=8, expected_keys=10_000)
-    flat.commit_batch(_urls(spark, 0, 200), batch_id=1)
-    bkt = _bucketed(spark, root)
-    with pytest.raises(ValueError, match="bucketed"):
-        bkt.anti_join(_frontier_of(_urls(spark, 0, 100)))
-    with pytest.raises(ValueError, match="FLAT"):
-        bkt.commit_batch(_urls(spark, 200, 300), batch_id=2)
-
-
 def test_cuckoo_delete_of_unseen_or_duplicate_urls_is_safe(spark, root):
     """Review r5: evicting a key that was never inserted (or the same
     key twice) can remove a colliding fingerprint of a DIFFERENT live
@@ -442,30 +399,6 @@ def test_cuckoo_delete_of_unseen_or_duplicate_urls_is_safe(spark, root):
     assert all(r.maybe_seen for r in tagged2.collect())
 
 
-def test_filter_kind_mismatch_on_resume_refuses(spark, root):
-    """Review r5 pass 2: resuming a bloom store as cuckoo (or back)
-    must refuse — a silently-empty prefilter tags every seen URL
-    definitely-new, bypassing the exact anti-join entirely."""
-    stb = SeenState(spark, root, n_parts=4, expected_keys=5_000)
-    stb.commit_batch(_urls(spark, 0, 300), batch_id=1)
-    stc = _cuckoo(spark, root)
-    with pytest.raises(ValueError, match="filter_kind"):
-        stc.blobs()
-    # explicit migration path: rebuild under the new kind, then schedule
-    stc.rebuild_filter()
-    from crawler_spark.operators.cuckoo import cuckoo_prefilter
-
-    tagged = cuckoo_prefilter(_urls(spark, 0, 300), stc.blobs(), n_parts=4)
-    assert all(r.maybe_seen for r in tagged.collect())
-    # ...and switching BACK now refuses on the cleared bloom table
-    stb2 = SeenState(spark, root, n_parts=4, expected_keys=5_000)
-    with pytest.raises(ValueError, match="rebuild_filter"):
-        stb2.blobs()
-    stb2.rebuild_filter()
-    tagged2 = bloom_prefilter(_urls(spark, 0, 300), stb2.blobs(), n_parts=4)
-    assert all(r.maybe_seen for r in tagged2.collect())
-
-
 def test_cuckoo_first_commit_overflow_recovers(spark, root):
     """Review r5 pass 2: a first commit larger than the fresh filter's
     capacity must rebuild-wider-and-retry inside commit_batch, not wedge
@@ -483,21 +416,62 @@ def test_cuckoo_first_commit_overflow_recovers(spark, root):
     assert info2.get("redelivered")
 
 
-def test_last_logical_legacy_loop_batch_fallback(spark, root):
-    """Review r5 pass 2: a store written by the pre-logical-id loop
-    carries only loop_batch — falling back to the store batch_id (which
-    counts internal compact commits) would classify the first
-    post-resume windows as redelivered and silently drop their URLs."""
+# -- open-time layout check -----------------------------------------------------
+
+_FLAT_BLOOM = dict(n_parts=8)
+_BUCKETED_CUCKOO = dict(n_parts=4, bucketed_parts=8, write_tasks=4, filter_kind="cuckoo")
+
+
+@pytest.mark.parametrize(
+    "written, reopened",
+    [
+        (_FLAT_BLOOM, dict(n_parts=4)),
+        (_BUCKETED_CUCKOO, {**_BUCKETED_CUCKOO, "bucketed_parts": 16}),
+        (_FLAT_BLOOM, {**_FLAT_BLOOM, "bucketed_parts": 16, "write_tasks": 4}),
+        (_BUCKETED_CUCKOO, {**_BUCKETED_CUCKOO, "bucketed_parts": None}),
+        (_FLAT_BLOOM, {**_FLAT_BLOOM, "filter_kind": "cuckoo"}),
+        (_BUCKETED_CUCKOO, {**_BUCKETED_CUCKOO, "filter_kind": "bloom"}),
+    ],
+    ids=[
+        "n_parts_8_to_4",
+        "bucketed_parts_8_to_16",
+        "flat_to_bucketed",
+        "bucketed_to_flat",
+        "bloom_to_cuckoo",
+        "cuckoo_to_bloom",
+    ],
+)
+def test_reopen_with_changed_layout_refuses_at_open(spark, root, written, reopened):
+    """A store opens only with the settings it was written with: with
+    any of them changed, its filter partitions or bucket directories
+    would be probed under the wrong layout, tagging seen URLs
+    definitely-new. The constructor refuses before anything reads or
+    writes — including a delete_urls as the first call after opening."""
+    st = SeenState(spark, root, expected_keys=5_000, **written)
+    st.commit_batch(_urls(spark, 0, 500), batch_id=1)
+    head = st.store.head().snapshot_id
+    with pytest.raises(SeenStateMismatch):
+        SeenState(spark, root, expected_keys=5_000, **reopened).delete_urls(
+            _urls(spark, 0, 100)
+        )
+    assert st.store.head().snapshot_id == head
+
+    # the same settings still resume: all 500 committed URLs stay seen
+    st2 = SeenState(spark, root, expected_keys=5_000, **written)
+    assert st2.last_logical() == 1
+    if st2.bucketed_parts is not None:
+        resolved = st2.anti_join(_frontier_of(_urls(spark, 0, 600)))
+    else:
+        resolved = _frontier_of(_urls(spark, 0, 600)).join(
+            st2.seen().select("url"), "url", "left_anti"
+        )
+    assert resolved.count() == 100
+
+
+def test_store_without_layout_record_refuses_at_open(spark, root):
+    """A HEAD with tables but no layout record was not written by
+    SeenState: refuse rather than guess its layout."""
     st = SeenState(spark, root, n_parts=4, expected_keys=5_000)
-    # simulate the old format: data commits without the logical metric
-    st.store.commit(1, full_tables={}, delta_tables={
-        "url_seen": _urls(spark, 0, 100)}, metrics={"loop_batch": 0})
-    st.store.commit(2, full_tables={}, delta_tables={
-        "url_seen": _urls(spark, 100, 200)}, metrics={"loop_batch": 1})
-    st.store.compact("url_seen", n_files=1)  # store counter runs ahead
-    assert st.store.head().batch_id == 3
-    assert st.last_logical() == 2  # loop_batch 1 + 1, NOT the store's 3
-    # the first fresh window after resume is accepted, not dropped
-    _, info = st.commit_batch(_urls(spark, 200, 300), batch_id=3)
-    assert not info.get("redelivered")
-    assert st.seen().count() == 300
+    st.store.commit(1, full_tables={}, delta_tables={"url_seen": _urls(spark, 0, 100)})
+    with pytest.raises(SeenStateMismatch):
+        SeenState(spark, root, n_parts=4, expected_keys=5_000)

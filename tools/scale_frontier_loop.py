@@ -29,17 +29,14 @@ BENCH/BASELINE.md "10^9-URL micro-batched frontier drain"):
 Usage:
     python tools/scale_frontier_loop.py [batch_rows] [n_batches] \
         [--out BENCH/scale_1e9_loop.json] [--resume] [--bucketed[=B]] \
-        [--stagger[=K]] [--cuckoo]
+        [--cuckoo]
 
 --bucketed stores url_seen in the hash-bucketed hive layout (B bucket
 dirs, default 256) and resolves the exact maybe-seen check bucket-wise
 (SeenState.anti_join): the accumulated seen table is never shuffled —
 the one per-batch cost that otherwise grows with TOTAL crawl state
 (flat anti-join reshuffles ~4 GB of seen rows per batch at 10^8 seen).
-
---stagger K rebuilds at most K worst-fill Bloom partitions per batch
-on saturation (per-part width doubling) instead of the whole filter in
-one commit window — no single batch pays the doubling pause.
+The filter uses gcd(64, B) partitions, so B need not be a multiple of 64.
 
 --cuckoo swaps the Bloom prefilter for the deletable cuckoo filter
 (same partition contract; delete_urls evicts fingerprints in place).
@@ -49,12 +46,15 @@ continues from its last committed batch with the identical frontier
 windows (deterministic from row ids) and identical accumulated seen
 state — the store's idempotent-redelivery guarantee means a batch that
 died between its drain and its commit is simply re-drained and commits
-once.
+once. A store resumes only with the flags it was written with
+(``--bucketed`` value, ``--cuckoo``): any other combination exits with
+SeenStateMismatch before the first batch.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import sys
@@ -87,7 +87,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     out_path = None
     bucketed = None
-    stagger = None
     args: list[str] = []
     consumed = -1
     for i, a in enumerate(sys.argv[1:], start=1):
@@ -96,9 +95,7 @@ def main() -> None:
         if a == "--out" and i + 1 < len(sys.argv):
             out_path = sys.argv[i + 1]
             consumed = i + 1
-        elif a in ("--bucketed", "--stagger") or a.startswith(
-            ("--bucketed=", "--stagger=")
-        ):
+        elif a == "--bucketed" or a.startswith("--bucketed="):
             # explicit value only as --flag=N: a space-separated digit is
             # ambiguous with the positional batch_rows and was silently
             # consumed (e.g. `--bucketed 6400 10` ate 6400 as the bucket
@@ -109,11 +106,7 @@ def main() -> None:
             if "=" not in a and nxt.isdigit() and int(nxt) <= 1 << 16:
                 sys.exit(f"ambiguous `{a} {nxt}`: write {a}={nxt} (or put "
                          "positional batch_rows/n_batches before flags)")
-            val = int(a.split("=", 1)[1]) if "=" in a else None
-            if a.startswith("--bucketed"):
-                bucketed = val if val is not None else 256
-            else:
-                stagger = val if val is not None else 8
+            bucketed = int(a.split("=", 1)[1]) if "=" in a else 256
         elif not a.startswith("--"):
             args.append(a)
     batch_rows = int(float(args[0])) if args else 100_000_000
@@ -161,13 +154,14 @@ def main() -> None:
     capacity = int(
         os.environ.get("SPARK_GRAFT_SEEN_CAPACITY", batch_rows * n_batches * 0.15)
     )
-    n_parts = 64
+    # filter partitions: 64, or fewer when B is not a multiple of 64
+    # (SeenState needs B % n_parts == 0 so buckets refine the partitions)
+    n_parts = math.gcd(64, bucketed) if bucketed else 64
     cuckoo = "--cuckoo" in sys.argv
     st = SeenState(
         spark, state_root, n_parts=n_parts, expected_keys=capacity,
         bucketed_parts=bucketed, write_tasks=min(64, shuffle_parts),
         filter_kind="cuckoo" if cuckoo else "bloom",
-        stagger_parts=stagger,
         rebuild_fill=0.7 if cuckoo else 0.5,
     )
     m_bits = st._initial_m_bits
@@ -202,29 +196,9 @@ def main() -> None:
 
     batches = []
 
-    def _loop_cursor() -> int:
-        # The store's batch_id counts COMMITS (compactions included), so
-        # it is NOT the loop window index. The loop commits window i as
-        # LOGICAL batch i+1, and SeenState propagates the logical id into
-        # every commit it writes — including internal bloom-rebuild and
-        # compaction commits — so the newest kept manifest always records
-        # it: an iteration that triggers both a rebuild and the every-4th
-        # compaction leaves (rebuild, compact) after expire(keep_last=2),
-        # and BOTH carry the cursor (previously only the evicted loop
-        # commit did, and --resume restarted from batch 0). Stores
-        # written by the pre-logical-id script carry only loop_batch —
-        # fall back to it there (last_logical's own fallback is the
-        # store batch_id, which over-counts internal commits).
-        hist = st.store.history()
-        if any(SeenState.METRIC_LOGICAL in (m.metrics or {}) for m in hist):
-            return st.last_logical()
-        for man in reversed(hist):
-            lb = (man.metrics or {}).get("loop_batch")
-            if lb is not None:
-                return int(lb) + 1
-        return 0
-
-    start_batch = _loop_cursor() if resume else 0  # committed windows stay done
+    # the loop commits window i as logical batch i+1, so the last logical
+    # id is the next window; committed windows stay done
+    start_batch = st.last_logical() if resume else 0
     seen_total = st.seen().count() if start_batch else 0
     if resume:
         print(json.dumps({"resumed_at_batch": start_batch, "seen_rows": seen_total}), flush=True)
@@ -277,7 +251,7 @@ def main() -> None:
         man, info = st.commit_batch(
             new_urls,
             batch_id=i + 1,  # logical id: redelivery-guarded per window
-            metrics={"n_scheduled": n_sched, "loop_batch": i},
+            metrics={"n_scheduled": n_sched},
         )
         if (i + 1) % 4 == 0:
             # compact the delta chain THEN expire: retention is
@@ -334,7 +308,6 @@ def main() -> None:
         "batches": batches,
         "bucketed_parts": bucketed,
         "filter_kind": st.filter_kind,
-        "stagger_parts": stagger,
         "cores": int(cpus) if str(cpus).isdigit() else cpus,
         "shuffle_partitions": shuffle_parts,
         "driver_mem": driver_mem,
