@@ -23,6 +23,13 @@ semantics the engine needs, offline:
   no-op returning that batch's manifest (maps the reference's acks_late
   redelivery + idempotence guard, /root/reference/backend/tasks/crawl.py:7,
   backend/service/services.py:291-292).
+- **concurrent table writes**: a commit writes all of its tables at the
+  same time, one thread per table, all into the staging dir; the commit
+  waits for every write before it decides, so atomicity is unchanged.
+- **schema-free reads**: a read passes Spark the schema of each snapshot
+  directory from the store's in-memory map (filled at commit from the
+  written frame), so it runs no schema-inference job. The map is not
+  persisted: the first read of a directory by a reopened store infers.
 
 A real-cluster deployment swaps in an Iceberg-backed impl of the same
 interface (``MERGE``/append + snapshot metadata) via ``--packages``.
@@ -30,16 +37,19 @@ interface (``MERGE``/append + snapshot metadata) via ``--packages``.
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
 import shutil
+import threading
 import uuid
 from dataclasses import dataclass, field
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 
 def _fsync_dir(path: str) -> None:
@@ -118,6 +128,30 @@ def _dir_meta(path: str) -> tuple[int, dict]:
     return rows, stats
 
 
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, array element and map value nullable —
+    the form a parquet read returns, whatever the written frame said."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _file_schema(schema: T.StructType, partition_cols: list[str] | None) -> T.StructType:
+    """The schema of a directory's parquet files: ``schema`` made
+    nullable, without the hive partition columns. A read given it still
+    appends the partition columns, typed by Spark's partition discovery
+    (a file listing, no job) exactly as an inferring read types them — a
+    ``long`` written by ``partitionBy`` reads back as ``int``."""
+    skip = set(partition_cols or ())
+    return _nullable(T.StructType([f for f in schema.fields if f.name not in skip]))
+
+
 def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
     """A zero-row frame of ``schema`` that never starts Python: an empty
     JVM ``LocalRelation`` scans as a zero-partition ``EmptyRDD``, and the
@@ -172,6 +206,10 @@ class SnapshotParquetStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        # snapshot dir (relative, as in a manifest's file list) -> the
+        # ``_file_schema`` a read of it passes Spark; per instance and in
+        # memory only, so the manifest (and state size) does not grow
+        self._schemas: dict[str, T.StructType] = {}
         os.makedirs(os.path.join(root, "snapshots"), exist_ok=True)
 
     # -- snapshot bookkeeping -------------------------------------------------
@@ -235,6 +273,12 @@ class SnapshotParquetStore:
 
         A delta table whose plan is provably empty (``is_empty_plan``,
         e.g. an ``empty_frame``) is recorded without a Spark write.
+
+        The tables are written at the same time, one thread per table,
+        into the staging dir. The commit waits for every write; if any
+        failed it re-raises the first failing table's exception unchanged
+        (in ``full_tables`` then ``delta_tables`` order) and removes the
+        staging dir — atomicity is the same as for one write at a time.
         """
         head = self.head()
         if head is not None and batch_id <= head.batch_id:
@@ -242,6 +286,7 @@ class SnapshotParquetStore:
             while m is not None and m.batch_id > batch_id:
                 m = self.manifest(m.parent_id) if m.parent_id is not None else None
             return m if (m is not None and m.batch_id == batch_id) else head
+        delta_tables = delta_tables or {}
         snap_id = (head.snapshot_id + 1) if head else 1
         name = f"v{snap_id:06d}"
         tmp = os.path.join(self.root, "snapshots", f"_tmp_{uuid.uuid4().hex[:8]}")
@@ -255,15 +300,27 @@ class SnapshotParquetStore:
         os.makedirs(tmp)
         tables: dict[str, dict] = {}
         pcols = partition_cols or {}
+        parents = {
+            tname: (head.tables.get(tname) if head else None) or {"files": [], "rows": 0}
+            for tname in delta_tables
+        }
+        # a delta append inherits the parent's layout: mixing partitioned
+        # and flat directories under one table would break both the union
+        # read and the bucket-wise reader
+        cols_of = {tname: pcols.get(tname) for tname in full_tables}
+        for tname in delta_tables:
+            cols_of[tname] = pcols.get(tname) or parents[tname].get("partition_cols")
         try:
-            for tname, df in full_tables.items():
-                path = os.path.join(tmp, tname)
-                cols = pcols.get(tname)
-                if cols:
-                    df.write.partitionBy(*cols).mode("overwrite").parquet(path)
-                else:
-                    df.write.mode("overwrite").parquet(path)
-                rows, dstats = _dir_meta(path)
+            writes = {tname: (df, cols_of[tname]) for tname, df in full_tables.items()}
+            for tname, df in delta_tables.items():
+                # a provably empty delta gets the manifest entry a 0-row
+                # write would produce, without the write or its directory
+                if not is_empty_plan(df):
+                    writes[tname] = (df, cols_of[tname])
+            meta = self._write_tables(tmp, writes)
+            for tname in full_tables:
+                cols = cols_of[tname]
+                rows, dstats = meta[tname]
                 rel = os.path.join(name, tname)
                 # an empty PARTITIONED write leaves no parquet files at
                 # all (no bucket dirs to hold them) — record no files so
@@ -278,21 +335,10 @@ class SnapshotParquetStore:
                 }
                 if cols:
                     tables[tname]["partition_cols"] = list(cols)
-            for tname, df in (delta_tables or {}).items():
-                parent_entry = (head.tables.get(tname) if head else None) or {"files": [], "rows": 0}
-                path = os.path.join(tmp, tname)
-                # a delta append inherits the parent's layout: mixing
-                # partitioned and flat directories under one table would
-                # break both the union read and the bucket-wise reader
-                cols = pcols.get(tname) or parent_entry.get("partition_cols")
-                if is_empty_plan(df):
-                    # provably empty: the manifest entry a 0-row write
-                    # would produce, without the write or its directory
-                    rows, dstats = 0, {}
-                else:
-                    writer = df.write.partitionBy(*cols) if cols else df.write
-                    writer.mode("overwrite").parquet(path)
-                    rows, dstats = _dir_meta(path)
+            for tname in delta_tables:
+                parent_entry = parents[tname]
+                cols = cols_of[tname]
+                rows, dstats = meta.get(tname, (0, {}))
                 files = list(parent_entry["files"])
                 stats = dict(parent_entry.get("stats", {}))
                 if rows > 0:
@@ -324,8 +370,57 @@ class SnapshotParquetStore:
         except BaseException:
             shutil.rmtree(tmp, ignore_errors=True)
             raise
+        for tname, (df, cols) in writes.items():
+            self._schemas[os.path.join(name, tname)] = _file_schema(df.schema, cols)
         _atomic_write(self._head_path(), name)
         return man
+
+    def _write_tables(
+        self, tmp: str, writes: dict[str, tuple[DataFrame, list[str] | None]]
+    ) -> dict[str, tuple[int, dict]]:
+        """Write each ``table -> (frame, partition cols)`` to
+        ``tmp/<table>`` at the same time, one thread per table; returns
+        ``table -> (rows, zone-map stats)``. Every write finishes before
+        this returns or raises, so the caller's cleanup of ``tmp`` never
+        races a writer; if any failed, the first failing table's own
+        exception (in ``writes`` order) is re-raised unchanged."""
+        results: dict[str, object] = {}
+
+        def write(tname: str, df: DataFrame, cols: list[str] | None) -> None:
+            try:
+                path = os.path.join(tmp, tname)
+                writer = df.write.partitionBy(*cols) if cols else df.write
+                writer.mode("overwrite").parquet(path)
+                results[tname] = _dir_meta(path)
+            except BaseException as e:
+                results[tname] = e
+
+        # one wrapper per thread: each captures its own copy of the
+        # caller's local properties (job group, description), which Spark
+        # then mutates per thread while it runs that thread's write
+        threads = [
+            threading.Thread(
+                target=inheritable_thread_target(self.spark)(write),
+                args=(tname, df, cols),
+                name=f"commit-{tname}",
+            )
+            for tname, (df, cols) in writes.items()
+        ]
+        for th in threads:
+            th.start()
+        try:
+            for th in threads:
+                th.join()
+        except BaseException:
+            # interrupted while waiting: let the writes land before the
+            # caller removes the staging dir under them
+            for th in threads:
+                th.join()
+            raise
+        for tname in writes:
+            if isinstance(results[tname], BaseException):
+                raise results[tname]
+        return results
 
     # -- compaction -----------------------------------------------------------
 
@@ -374,17 +469,30 @@ class SnapshotParquetStore:
         entry = man.tables[table]
         if not entry["files"]:
             return None
-        paths = [os.path.join(self.root, "snapshots", p) for p in entry["files"]]
-        if entry.get("partition_cols") and len(paths) > 1:
+        return self._scan(entry, entry["files"])
+
+    def _scan(self, entry: dict, rels: list[str]) -> DataFrame:
+        """One frame over the snapshot dirs ``rels`` of the table whose
+        manifest entry is ``entry``. Spark gets the file schema from the
+        in-memory map, so the read runs no job; on a miss (a dir this
+        instance did not commit) Spark infers it once and the map keeps
+        it."""
+        cols = entry.get("partition_cols")
+        if cols and len(rels) > 1:
             # Spark refuses one read over multiple partitioned roots
             # (CONFLICTING_DIRECTORY_STRUCTURES); union per-dir reads —
             # each dir's hive layout discovers the partition column
-            dfs = [self.spark.read.parquet(p) for p in paths]
-            out = dfs[0]
-            for d in dfs[1:]:
-                out = out.unionByName(d)
-            return out
-        return self.spark.read.parquet(*paths)
+            return functools.reduce(
+                DataFrame.unionByName, [self._scan(entry, [rel]) for rel in rels]
+            )
+        paths = [os.path.join(self.root, "snapshots", rel) for rel in rels]
+        schema = self._schemas.get(rels[0])
+        if schema is not None:
+            return self.spark.read.schema(schema).parquet(*paths)
+        df = self.spark.read.parquet(*paths)
+        for rel in rels:
+            self._schemas.setdefault(rel, _file_schema(df.schema, cols))
+        return df
 
     def expire_snapshots(self, keep_last: int = 10) -> dict:
         """Iceberg-style snapshot retention: keep the most recent
@@ -502,19 +610,8 @@ class SnapshotParquetStore:
         rels = self.pruned_files(table, col, lo, hi, snapshot_id)
         if not rels:
             return None
-        paths = [os.path.join(self.root, "snapshots", p) for p in rels]
         man = self.head() if snapshot_id is None else self.manifest(snapshot_id)
-        if man.tables[table].get("partition_cols") and len(paths) > 1:
-            # same multi-root-partitioned-read refusal as read(): union
-            # per-directory so each dir's hive layout discovers its
-            # partition column independently
-            dfs = [self.spark.read.parquet(p) for p in paths]
-            df = dfs[0]
-            for d in dfs[1:]:
-                df = df.unionByName(d)
-        else:
-            df = self.spark.read.parquet(*paths)
-        return df.filter(F.col(col).between(lo, hi))
+        return self._scan(man.tables[table], rels).filter(F.col(col).between(lo, hi))
 
     def destroy(self) -> None:
         shutil.rmtree(self.root, ignore_errors=True)

@@ -26,7 +26,9 @@ def test_init_state_writes_only_the_full_tables(spark, tmp_path):
         eng.init_state(g.seeds)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+    # >= 2: the two full-table writes run on commit threads and must
+    # still carry the caller's job group
+    assert 2 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
 
     head = eng.store.head()
     snap = os.path.join(eng.store.root, "snapshots", f"v{head.snapshot_id:06d}")

@@ -3,6 +3,9 @@ reference's acks_late redelivery + idempotence guard,
 /root/reference/backend/tasks/crawl.py:7, backend/service/services.py:291-292).
 """
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from crawler_spark.fixtures import make_web_graph, web_graph_rows
@@ -79,20 +82,49 @@ def test_time_travel_reads_parent_snapshot(spark, tmp_path):
     assert hist[-1].metrics.get("event") == "finalize_jobs"
 
 
-def test_crash_during_commit_leaves_head_intact(spark, tmp_path):
-    """A commit that fails mid-write must not move HEAD (atomicity)."""
+def _failing(web_df, tag):
+    """A frame whose write fails with an error naming ``tag``."""
+    return web_df.select(
+        F.col("url").alias("boom"), F.expr(f"assert_true(false, '{tag}')").alias("x")
+    )
+
+
+_THREE = ("frontier", "source_state", "web_urls")
+
+
+@pytest.mark.parametrize(
+    "tables, failing",
+    [
+        (("frontier",), ("frontier",)),
+        (_THREE, ("source_state",)),
+        (_THREE, ("source_state", "web_urls")),
+    ],
+    ids=["one_table", "one_of_three", "two_of_three"],
+)
+def test_crash_during_commit_leaves_head_intact(spark, tmp_path, tables, failing):
+    """A commit that fails mid-write must not move HEAD (atomicity). The
+    tables are written concurrently; the commit raises the first failing
+    table's own error and leaves no staging dir behind."""
     g = make_web_graph(n_hosts=1, pages_per_host=6, seed=4, max_pages=2)
     web_df = spark.createDataFrame(web_graph_rows(g), WEB_GRAPH)
     eng = CrawlEngine(spark, web_df, str(tmp_path / "cr"), policy="lexmin")
     eng.init_state(g.seeds)
     head = eng.store.head()
-    bad = web_df.select(F.col("url").alias("boom"), F.expr("assert_true(false)").alias("x"))
-    try:
-        eng.store.commit(batch_id=99, full_tables={"frontier": bad})
-        raise AssertionError("commit should have failed")
-    except Exception:
-        pass
+    good = {
+        "frontier": eng.store.read("frontier"),
+        "source_state": eng.store.read("source_state"),
+        "web_urls": web_df.select("url"),  # a non-empty delta append
+    }
+    frames = {t: _failing(web_df, f"fail-{t}") if t in failing else good[t] for t in tables}
+    full = {t: df for t, df in frames.items() if t != "web_urls"}
+    delta = {t: df for t, df in frames.items() if t == "web_urls"}
+    with pytest.raises(Exception) as err:
+        eng.store.commit(batch_id=99, full_tables=full, delta_tables=delta)
+    assert f"fail-{failing[0]}" in str(err.value)
+    assert all(f"fail-{t}" not in str(err.value) for t in failing[1:])
     assert eng.store.head().snapshot_id == head.snapshot_id
+    snaps = os.listdir(os.path.join(eng.store.root, "snapshots"))
+    assert not [d for d in snaps if d.startswith("_tmp_")]
     # and the engine still resumes cleanly
     eng2 = CrawlEngine(spark, web_df, str(tmp_path / "cr"), policy="lexmin")
     assert eng2.run() >= 1
@@ -125,8 +157,6 @@ def test_orphan_snapshot_dir_from_crashed_commit_is_recovered(spark, tmp_path):
     """A crash BETWEEN the snapshot-dir rename and the HEAD update leaves
     an orphan vNNNNNN dir at the next snap id; the next commit must
     reclaim it instead of wedging on ENOTEMPTY forever."""
-    import os
-
     g = make_web_graph(n_hosts=1, pages_per_host=6, seed=2, max_pages=2)
     web_df = spark.createDataFrame(web_graph_rows(g), WEB_GRAPH)
     eng = CrawlEngine(spark, web_df, str(tmp_path / "or"), policy="lexmin")
