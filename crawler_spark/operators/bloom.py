@@ -1,13 +1,21 @@
-"""Partitioned Bloom URL-seen prefilter (SURVEY.md §4.2 item 1).
+"""Partitioned Bloom URL-seen prefilter for a static seen table
+(SURVEY.md §4.2 item 1).
 
-The reference's URL-seen is an exact in-memory ``set``
-(/root/reference/backend/domain/entities.py:153); at 10^10-frontier scale
-the engine splits membership into (a) this Bloom prefilter — per-partition
-bit-array blobs stored as a state table, co-partitioned with the frontier
-by ``pmod(xxhash64(url), P)`` — and (b) an exact anti-join against the
-seen table for the maybe-seen fraction only. Bloom has no false negatives,
-so rows it clears are *definitely new* and skip the exact join entirely;
+The reference's URL-seen is an exact in-memory ``set`` (the reference's
+backend/domain/entities.py:153); at 10^10-frontier scale the engine
+splits membership into (a) a prefilter — per-partition blobs keyed by
+``pmod(xxhash64(url), P)`` — and (b) an exact anti-join against the seen
+table for the maybe-seen fraction only. Bloom has no false negatives, so
+rows it clears are *definitely new* and skip the exact join entirely;
 URL-seen membership stays exact, as the north rule requires.
+
+This module builds and probes a Bloom filter over a seen table that does
+not change during the run: the stateless frontier-drain benchmark
+(``bench.run_frontier_drain``) and ``schedule_batch``'s default
+``seen_filter``. The long-running drain loop's state (``SeenState``)
+uses the deletable cuckoo filter in operators/cuckoo.py instead — a
+Bloom bit is shared by unknown other keys and can never be unset, so a
+deleted source's URLs would keep probing maybe-seen.
 
 Hashing is JVM-side (``F.xxhash64`` twice with different seed columns);
 Python only ORs numpy bitmaps inside Arrow batches — no per-row Python.
@@ -29,8 +37,6 @@ from pyspark.sql import functions as F
 __all__ = [
     "add_bloom_keys",
     "build_bloom",
-    "update_bloom",
-    "bloom_fill",
     "bloom_prefilter",
     "K_PROBES",
 ]
@@ -76,9 +82,8 @@ BITS_PER_KEY = 16  # ~0.05% fpp at k=5
 def build_bloom(
     seen: DataFrame, n_parts: int = 64, m_bits_per_part: int | None = None
 ) -> DataFrame:
-    """Build per-partition Bloom blobs from the seen table.
-    Returns (bloom_part:int, blob:binary). Stored as a state table and
-    rebuilt incrementally by OR-ing each batch's new URLs into its blob.
+    """Build per-partition Bloom blobs from a static seen table.
+    Returns (bloom_part:int, blob:binary).
 
     m_bits_per_part=None sizes the bitmap from the actual key count
     (BITS_PER_KEY bits per key, rounded up to a power of two, >= 2^13) —
@@ -99,100 +104,6 @@ def build_bloom(
         keyed.select("bloom_part", "h1", "h2")
         .groupBy("bloom_part")
         .applyInPandas(_build, "bloom_part int, blob binary")
-    )
-
-
-def update_bloom(
-    bloom: DataFrame,
-    new_seen: DataFrame,
-    url_col: str = "url",
-    n_parts: int = 64,
-    m_bits_per_part: int | None = None,
-) -> DataFrame:
-    """OR one batch's newly-seen URLs into an existing partitioned Bloom
-    filter — the incremental path of a long-running drain loop. Rebuilding
-    from the full seen table is O(|seen|) *per batch* (quadratic over a
-    crawl); this touches only the batch's keys plus the 64-row blob table,
-    so per-batch cost tracks the batch, as the 10^10 design point needs.
-
-    Exactness: ``set_bits`` is a deterministic bitwise OR, so for a fixed
-    bitmap width ``update_bloom(build_bloom(A, m), B)`` is blob-for-blob
-    IDENTICAL to ``build_bloom(A | B, m)`` (pinned by test) — incremental
-    maintenance loses nothing vs a rebuild at the same width.
-
-    Capacity contract: a Bloom bitmap cannot grow in place — size the
-    initial build for the crawl's expected seen count (``m_bits_per_part``
-    on ``build_bloom``; BITS_PER_KEY=16 per expected key keeps fpp ~0.05%)
-    and watch saturation with ``bloom_fill``: past ~50% bit-fill, rebuild
-    wider from the seen table (one O(|seen|) job per *doubling*, amortized
-    O(1) per batch — the classic dynamic-array argument;
-    ``SeenState.commit_batch`` runs exactly this update -> fill-check ->
-    rebuild cycle).
-
-    m_bits_per_part=None infers the width from the widest existing blob
-    (one tiny 64-row agg); pass it explicitly to skip that job in a
-    per-batch loop, or when ``bloom`` may have no rows yet (an empty
-    DataFrame carries no width to inherit — inferring raises ValueError).
-
-    Partitions with new keys but no existing blob (build_bloom emits no
-    row for a partition whose seen-slice was empty) get a fresh bitmap;
-    partitions with no new keys pass their blob through untouched.
-
-    Lifecycle note: in a multi-batch loop, commit each update to a state
-    table (parquet/snapshot-store write, read back) rather than chaining
-    ``persist()`` handles — a cached chain keeps every prior batch's
-    cogroup in its lineage, and one evicted block silently recomputes the
-    whole history (tools/scale_frontier_loop.py documents the measured
-    failure). State tables cut lineage at the batch boundary, which is
-    how the engine's SnapshotParquetStore treats all its tables.
-    """
-    if m_bits_per_part is None:
-        widest = bloom.agg(F.max(F.length("blob"))).first()[0]
-        if not widest:
-            raise ValueError(
-                "update_bloom: cannot infer bitmap width from an empty bloom "
-                "table — pass m_bits_per_part explicitly"
-            )
-        m_bits_per_part = int(widest) * 8
-    m_bits = int(m_bits_per_part)
-    keyed = add_bloom_keys(new_seen, url_col=url_col, n_parts=n_parts).select(
-        "bloom_part", "h1", "h2"
-    )
-
-    def _upd(blobs: pd.DataFrame, keys: pd.DataFrame) -> pd.DataFrame:
-        part = int(blobs["bloom_part"].iloc[0] if len(blobs) else keys["bloom_part"].iloc[0])
-        if len(blobs):
-            bits = np.frombuffer(blobs["blob"].iloc[0], dtype=np.uint8).copy()
-        else:
-            bits = np.zeros(m_bits // 8, dtype=np.uint8)
-        if len(keys):
-            set_bits(bits, keys["h1"].to_numpy(), keys["h2"].to_numpy(), len(bits) * 8)
-        return pd.DataFrame({"bloom_part": [part], "blob": [bits.tobytes()]})
-
-    return (
-        bloom.groupBy("bloom_part")
-        .cogroup(keyed.groupBy("bloom_part"))
-        .applyInPandas(_upd, "bloom_part int, blob binary")
-    )
-
-
-def bloom_fill(bloom: DataFrame) -> DataFrame:
-    """Per-partition saturation report: (bloom_part, m_bits, bits_set,
-    fill). fill is the fraction of set bits — the drain loop's rebuild
-    trigger (fpp ≈ fill^k; at fill 0.5 and k=5 that is ~3%, time to
-    rebuild wider). One pandas popcount over the 64-row blob table."""
-
-    def _fill(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for _, r in pdf.iterrows():
-            bits = np.frombuffer(r["blob"], dtype=np.uint8)
-            ones = int(np.unpackbits(bits).sum())
-            out.append((int(r["bloom_part"]), len(bits) * 8, ones, ones / (len(bits) * 8)))
-        return pd.DataFrame(out, columns=["bloom_part", "m_bits", "bits_set", "fill"])
-
-    return bloom.mapInPandas(
-        lambda it: (_fill(pdf) for pdf in it),
-        "bloom_part int, m_bits bigint, bits_set bigint, fill double",
     )
 
 

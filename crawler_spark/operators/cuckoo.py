@@ -1,15 +1,16 @@
-"""Partitioned cuckoo-filter URL-seen prefilter — the deletable sibling of
-the Bloom prefilter (north star: "partitioned Bloom/cuckoo URL-seen
-filter"; reference's exact set: /root/reference/backend/domain/entities.py:153).
+"""Partitioned cuckoo-filter URL-seen prefilter — the filter of the drain
+loop's URL-seen state (``SeenState``, operators/seen_state.py; north
+star: "partitioned Bloom/cuckoo URL-seen filter"; the reference's exact
+set is its backend/domain/entities.py:153).
 
-Same delivery contract as operators/bloom.py: per-partition blobs keyed by
-``pmod(xxhash64(url), P)``, stored as a state table, probed either via a
-cogrouped shuffle (10^10 scale — each task touches one blob) or a
-broadcast when the whole filter fits an executor. What cuckoo adds over
-Bloom is DELETION: ``delete_from_cuckoo`` evicts a key's fingerprint, so
+Per-partition blobs keyed by ``pmod(xxhash64(url, 2), P)`` are stored as a
+state table and probed through a cogrouped shuffle (10^10 scale — each
+task touches one blob). ``insert_into_cuckoo`` adds a batch's keys in
+place, and ``delete_from_cuckoo`` evicts a key's fingerprint, so
 ``delete_source`` (jobs.py) can remove a source's URLs from the seen
-prefilter instead of rebuilding it — a Bloom bit can never be unset
-because it is shared by unknown other keys.
+prefilter instead of rebuilding it. That is what the static Bloom filter
+in operators/bloom.py cannot do: a Bloom bit is shared by unknown other
+keys and can never be unset.
 
 Layout per partition: ``n_buckets x 4`` slots of 16-bit fingerprints
 (uint16, 0 = empty; fp in [1, 65535] so empty is unambiguous). Lookup
@@ -214,9 +215,8 @@ def build_cuckoo(seen: DataFrame, n_parts: int = 64, n_buckets: int | None = Non
 
 def cuckoo_prefilter(candidates: DataFrame, cuckoo: DataFrame, n_parts: int = 64) -> DataFrame:
     """Tag candidates with ``maybe_seen`` via a cogrouped per-partition
-    probe (the 10^10-scale delivery; broadcast delivery works exactly as
-    in bloom.bloom_prefilter and shares its size threshold). No false
-    negatives for inserted-and-not-deleted keys."""
+    probe (the 10^10-scale delivery). No false negatives for
+    inserted-and-not-deleted keys."""
     keyed = add_cuckoo_keys(candidates, n_parts=n_parts)
 
     def _probe(cands: pd.DataFrame, blobs: pd.DataFrame) -> pd.DataFrame:
@@ -250,17 +250,15 @@ def insert_into_cuckoo(
     n_buckets: int | None = None,
 ) -> DataFrame:
     """Insert one batch's newly-seen URLs into an existing cuckoo filter —
-    the incremental sibling of bloom.update_bloom, and with
-    delete_from_cuckoo the full add/remove lifecycle a mutable seen
+    with delete_from_cuckoo the full add/remove lifecycle a mutable seen
     prefilter needs. Cogrouped: each task compacts + places into ONE
     partition's table; partitions with no new keys pass through untouched.
 
-    Capacity contract mirrors the Bloom one: tables are fixed-size, so
-    size the build for the crawl's expected seen count (LOAD_FACTOR 0.8
-    headroom) and watch cuckoo_load; a partition that cannot place a key
-    within MAX_KICKS raises (deterministically), telling the caller to
-    rebuild wider from the seen table — once per doubling, amortized O(1)
-    per batch.
+    Capacity contract: tables are fixed-size, so size the build for the
+    crawl's expected seen count (LOAD_FACTOR 0.8 headroom) and watch
+    cuckoo_load; a partition that cannot place a key within MAX_KICKS
+    raises (deterministically), telling the caller to rebuild wider from
+    the seen table — once per doubling, amortized O(1) per batch.
 
     n_buckets=None infers the geometry from the widest existing blob (one
     64-row agg); pass it explicitly to skip that job per batch, or when
@@ -304,8 +302,8 @@ def insert_into_cuckoo(
 def cuckoo_load(cuckoo: DataFrame) -> DataFrame:
     """Per-partition occupancy report: (cuckoo_part, n_buckets, slots_used,
     load). Past LOAD_FACTOR, inserts start failing their kick walks —
-    rebuild wider from the seen table (the same amortized-doubling rule
-    as bloom_fill's 0.5 threshold)."""
+    rebuild wider from the seen table (amortized doubling, as
+    ``SeenState.commit_batch`` does past its ``rebuild_fill``)."""
 
     def _load(pdf: pd.DataFrame) -> pd.DataFrame:
         out = []

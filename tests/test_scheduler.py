@@ -468,81 +468,3 @@ def test_two_sources_one_host_single_politeness_stream(spark):
         per_group.setdefault(r.salt, []).append(r.fetch_order)
     for fos in per_group.values():
         assert fos == sorted(fos) and len(set(fos)) == len(fos)
-
-
-def test_update_bloom_equals_rebuild_at_same_width(spark):
-    """Incremental OR-in is LOSSLESS vs a full rebuild: for a fixed bitmap
-    width, update_bloom(build_bloom(A), B) must be blob-for-blob identical
-    to build_bloom(A | B) — set_bits is a deterministic bitwise OR, so
-    the order keys arrive in cannot matter."""
-    from crawler_spark.operators.bloom import update_bloom
-
-    a = spark.createDataFrame(
-        [(f"https://h{i % 5}.org/p/{i}",) for i in range(0, 900, 3)], "url string"
-    )
-    b = spark.createDataFrame(
-        [(f"https://h{i % 5}.org/p/{i}",) for i in range(1, 900, 3)], "url string"
-    )
-    m = 1 << 14
-    incr = update_bloom(build_bloom(a, n_parts=8, m_bits_per_part=m), b, n_parts=8)
-    full = build_bloom(a.unionByName(b), n_parts=8, m_bits_per_part=m)
-    got = {r.bloom_part: bytes(r.blob) for r in incr.collect()}
-    want = {r.bloom_part: bytes(r.blob) for r in full.collect()}
-    assert got == want and got
-
-
-def test_update_bloom_handles_empty_parts_and_empty_batch(spark):
-    """A partition with new keys but no existing blob row (build_bloom
-    emits nothing for an empty seen-slice) gets a fresh bitmap; an empty
-    update batch passes every blob through unchanged; an empty bloom
-    with no explicit width raises."""
-    import pytest
-
-    from crawler_spark.operators.bloom import bloom_prefilter, update_bloom
-
-    # one seen URL -> most of the 8 parts have NO blob row
-    a = spark.createDataFrame([("https://h0.org/p/0",)], "url string")
-    bloom = build_bloom(a, n_parts=8, m_bits_per_part=1 << 13)
-    assert bloom.count() == 1
-    b = spark.createDataFrame(
-        [(f"https://h{i % 5}.org/p/{i}",) for i in range(1, 40)], "url string"
-    )
-    upd = update_bloom(bloom, b, n_parts=8)
-    # every key of a|b now probes maybe_seen=True (no false negatives)
-    tagged = bloom_prefilter(a.unionByName(b), upd, n_parts=8, mode="cogroup")
-    assert all(r.maybe_seen for r in tagged.collect())
-
-    empty = b.limit(0)
-    same = update_bloom(upd, empty, n_parts=8)
-    assert {r.bloom_part: bytes(r.blob) for r in same.collect()} == {
-        r.bloom_part: bytes(r.blob) for r in upd.collect()
-    }
-
-    no_rows = bloom.limit(0)
-    with pytest.raises(ValueError, match="empty bloom"):
-        update_bloom(no_rows, b, n_parts=8)
-
-
-def test_bloom_fill_reports_saturation(spark):
-    """bloom_fill counts set bits exactly: k probes per key with double
-    hashing set at most K_PROBES distinct bits per key, and a crammed
-    filter reports fill high enough to trigger the rebuild rule."""
-    from crawler_spark.operators.bloom import K_PROBES, bloom_fill, update_bloom
-
-    a = spark.createDataFrame(
-        [(f"https://h{i}.org/p/{i}",) for i in range(100)], "url string"
-    )
-    m = 1 << 13
-    bloom = build_bloom(a, n_parts=4, m_bits_per_part=m)
-    rep = {r.bloom_part: r for r in bloom_fill(bloom).collect()}
-    total_set = sum(r.bits_set for r in rep.values())
-    assert 0 < total_set <= 100 * K_PROBES
-    for r in rep.values():
-        assert r.m_bits == m and abs(r.fill - r.bits_set / m) < 1e-12
-
-    # saturate: 20k keys into the same small filter -> fill must cross 0.5
-    many = spark.createDataFrame(
-        [(f"https://sat{i}.org/x/{i}",) for i in range(20000)], "url string"
-    )
-    sat = update_bloom(bloom, many, n_parts=4)
-    assert all(r.fill > 0.5 for r in bloom_fill(sat).collect())

@@ -1,14 +1,18 @@
 """SeenState: the drain loop's URL-seen state as snapshot-store tables —
 membership across batches, resume from HEAD, idempotent redelivery,
-saturation rebuild. (The 10^9-scale behavior of the same discipline is
-recorded in BENCH/scale_1e9_loop.json.)"""
+saturation rebuild, deletes. (The 10^9-scale behavior of the same
+discipline is recorded in BENCH/scale_1e9_loop.json.)"""
 
+import gc
 import shutil
+from collections import Counter
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
-from crawler_spark.operators.bloom import bloom_prefilter
+from crawler_spark.operators.bloom import build_bloom
+from crawler_spark.operators.cuckoo import cuckoo_prefilter
 from crawler_spark.operators.scheduler import release_barrier, schedule_batch
 from crawler_spark.operators.seen_state import SeenState, SeenStateMismatch
 
@@ -28,6 +32,12 @@ def _frontier_of(df):
     )
 
 
+def _all_maybe_seen(st, urls) -> bool:
+    """No prefilter false negative: every url in ``urls`` probes maybe_seen."""
+    tagged = cuckoo_prefilter(urls, st.blobs(), n_parts=st.n_parts)
+    return all(r.maybe_seen for r in tagged.collect())
+
+
 @pytest.fixture()
 def root(tmp_path):
     p = str(tmp_path / "seen_state")
@@ -37,14 +47,15 @@ def root(tmp_path):
 
 def test_commit_batches_filter_previously_scheduled(spark, root):
     st = SeenState(spark, root, n_parts=8, expected_keys=10_000)
+    assert st.bucketed_parts == 8  # bucketed_parts=None means B = n_parts
     b0, b1 = _urls(spark, 0, 300), _urls(spark, 200, 500)  # 100 overlap
     st.commit_batch(b0)
     assert st.batch_id() == 1 and st.seen().count() == 300
 
     # scheduling batch 1's frontier against the state drops the overlap
     sched, bar = schedule_batch(
-        _frontier_of(b1), seen=st.seen(), bloom=st.blobs(), default_k=10_000,
-        n_bloom_parts=8,
+        _frontier_of(b1), exact_anti_join=st.anti_join, bloom=st.blobs(),
+        seen_filter=st.filter_kind, default_k=10_000, n_bloom_parts=8,
     )
     got = {r.url for r in sched.collect()}
     release_barrier(bar)
@@ -53,8 +64,7 @@ def test_commit_batches_filter_previously_scheduled(spark, root):
     st.commit_batch(_urls(spark, 300, 500))
     assert st.seen().count() == 500
     # everything committed probes maybe_seen (no false negatives via state)
-    tagged = bloom_prefilter(_urls(spark, 0, 500), st.blobs(), n_parts=8)
-    assert all(r.maybe_seen for r in tagged.collect())
+    assert _all_maybe_seen(st, _urls(spark, 0, 500))
 
 
 def test_resume_from_head_and_idempotent_redelivery(spark, root):
@@ -66,8 +76,7 @@ def test_resume_from_head_and_idempotent_redelivery(spark, root):
     # a FRESH SeenState on the same root sees the committed state
     st2 = SeenState(spark, root, n_parts=8, expected_keys=10_000)
     assert st2.batch_id() == 2 and st2.seen().count() == 400
-    tagged = bloom_prefilter(_urls(spark, 0, 400), st2.blobs(), n_parts=8)
-    assert all(r.maybe_seen for r in tagged.collect())
+    assert _all_maybe_seen(st2, _urls(spark, 0, 400))
 
     # redelivering batch 2 is a no-op: no new snapshot, no double-append
     _, info = st2.commit_batch(_urls(spark, 200, 400), batch_id=2)
@@ -78,15 +87,15 @@ def test_resume_from_head_and_idempotent_redelivery(spark, root):
 
 def test_saturation_rebuild_persists_wider_width(spark, root):
     st = SeenState(spark, root, n_parts=4, expected_keys=10, rebuild_fill=0.5)
-    m0 = st._initial_m_bits
-    _, info = st.commit_batch(_urls(spark, 0, 12000))  # cram a tiny filter
-    assert info["rebuilt"] and info["m_bits_per_part"] >= 2 * m0
+    nb0 = st._initial_buckets
+    st.commit_batch(_urls(spark, 0, 3000))  # load ~0.73: past rebuild_fill
+    _, info = st.commit_batch(_urls(spark, 3000, 3050))
+    assert info["rebuilt"] and info["n_buckets"] >= 2 * nb0
 
-    # the NEXT batch infers the committed (wider) width, not the config
-    _, info2 = st.commit_batch(_urls(spark, 12000, 12050))
-    assert info2["m_bits_per_part"] >= info["m_bits_per_part"]
-    tagged = bloom_prefilter(_urls(spark, 0, 12050), st.blobs(), n_parts=4)
-    assert all(r.maybe_seen for r in tagged.collect())
+    # the NEXT batch reads the committed (wider) geometry, not the config
+    _, info2 = st.commit_batch(_urls(spark, 3050, 3100))
+    assert not info2["rebuilt"] and info2["n_buckets"] == info["n_buckets"]
+    assert _all_maybe_seen(st, _urls(spark, 0, 3100))
 
 
 def test_expire_bounds_blob_history(spark, root):
@@ -97,52 +106,56 @@ def test_expire_bounds_blob_history(spark, root):
     assert len(st.store.history()) <= 2
     # state is intact after expiry
     assert st.seen().count() == 200
-    tagged = bloom_prefilter(_urls(spark, 0, 200), st.blobs(), n_parts=4)
-    assert all(r.maybe_seen for r in tagged.collect())
+    assert _all_maybe_seen(st, _urls(spark, 0, 200))
 
 
 def test_explicit_batch_ids_survive_internal_rebuild_commits(spark, root):
-    """Logical-vs-store batch-id namespaces (ADVICE r4): a bloom rebuild
-    commits internally at the store's next batch_id, so a caller using
-    its own sequential batch_ids must NOT have its next fresh batch
-    classified as redelivered — the guard runs on the logical counter
-    carried in manifest metrics, not the store's commit counter."""
-    st = SeenState(spark, root, n_parts=4, expected_keys=10, rebuild_fill=0.5)
-    _, info = st.commit_batch(_urls(spark, 0, 12000), batch_id=1)
-    assert info["rebuilt"]  # tiny filter => rebuild => extra store commit
-    assert st.batch_id() > 1  # store counter ran ahead of the logical id
+    """Logical-vs-store batch-id namespaces (ADVICE r4): SeenState commits
+    internally at the store's next batch_id (``delete_urls``, the
+    ``apply_deletes`` rewrite of url_seen, ``compact``; a cuckoo rebuild
+    rides the data commit), so a caller using its own sequential
+    batch_ids must NOT have its next fresh batch classified as
+    redelivered — the guard runs on the logical counter carried in
+    manifest metrics, not the store's commit counter."""
+    st = SeenState(spark, root, n_parts=4, expected_keys=1_000)
+    st.commit_batch(_urls(spark, 0, 300), batch_id=1)
+    st.delete_urls(_urls(spark, 0, 50))
+    st.apply_deletes(n_files=2)
+    st.compact(n_files=2)
+    assert st.batch_id() == 4  # store counter ran ahead of the logical id
 
-    # the first fresh batch after the rebuild must land, not no-op
-    _, info2 = st.commit_batch(_urls(spark, 12000, 12100), batch_id=2)
+    # the first fresh batch after the internal commits must land, not no-op
+    _, info2 = st.commit_batch(_urls(spark, 300, 400), batch_id=2)
     assert not info2.get("redelivered")
-    assert st.seen().count() == 12100
+    assert st.seen().count() == 350
 
     # true redelivery of batch 2 is still a no-op
-    _, info3 = st.commit_batch(_urls(spark, 12000, 12100), batch_id=2)
+    _, info3 = st.commit_batch(_urls(spark, 300, 400), batch_id=2)
     assert info3.get("redelivered") is True
-    assert st.seen().count() == 12100
+    assert st.seen().count() == 350
 
     # and a fresh SeenState on the same root agrees on the cursor
-    st2 = SeenState(spark, root, n_parts=4, expected_keys=10)
+    st2 = SeenState(spark, root, n_parts=4, expected_keys=1_000)
     assert st2.last_logical() == 2
 
 
 def test_logical_cursor_survives_rebuild_plus_compact_plus_expire(spark, root):
-    """ADVICE r4 (loop cursor): when one iteration triggers both a bloom
-    rebuild and a compaction, expire(keep_last=2) keeps only (rebuild,
-    compact) — both internal commits — and the logical cursor must still
-    be readable from their metrics (previously --resume restarted at 0)."""
-    st = SeenState(spark, root, n_parts=4, expected_keys=10, rebuild_fill=0.5)
-    _, info = st.commit_batch(_urls(spark, 0, 12000), batch_id=1)
-    assert info["rebuilt"]
+    """ADVICE r4 (loop cursor): when expire(keep_last=2) keeps only
+    internal commits — here a delete's ``apply_deletes`` rewrite of
+    url_seen and a compaction — the logical cursor must still be
+    readable from their metrics (previously --resume restarted at 0)."""
+    st = SeenState(spark, root, n_parts=4, expected_keys=1_000)
+    st.commit_batch(_urls(spark, 0, 300), batch_id=1)
+    st.delete_urls(_urls(spark, 0, 50))
+    st.apply_deletes(n_files=2)
     st.compact(n_files=2)
     st.expire(keep_last=2)
     hist = st.store.history()
     assert len(hist) == 2
     # neither kept manifest is the original data commit...
-    assert all((m.metrics or {}).get("event") in ("bloom_rebuild", "compact") for m in hist)
+    assert all((m.metrics or {}).get("event") in ("apply_deletes", "compact") for m in hist)
     # ...yet the cursor survives
-    assert SeenState(spark, root, n_parts=4, expected_keys=10).last_logical() == 1
+    assert SeenState(spark, root, n_parts=4, expected_keys=1_000).last_logical() == 1
 
 
 # -- bucketed url_seen layout (round-5: seen-side shuffle elimination) ---------
@@ -171,14 +184,12 @@ def test_bucketed_layout_writes_bucket_dirs_and_reads_back(spark, root):
 
     total = sum(pq.read_table(fs, columns=["url"]).num_rows for fs in fmap.values())
     assert total == 900
-    # bucket refines the bloom partitioning: bucket % n_parts == bloom_part
-    from pyspark.sql import functions as F
-
-    from crawler_spark.operators.bloom import add_bloom_keys
+    # bucket refines the filter partitioning: bucket % n_parts == cuckoo_part
+    from crawler_spark.operators.cuckoo import add_cuckoo_keys
 
     bad = (
-        add_bloom_keys(seen, n_parts=8)
-        .filter(F.pmod("seen_bucket", F.lit(8)) != F.col("bloom_part"))
+        add_cuckoo_keys(seen, n_parts=8)
+        .filter(F.pmod("seen_bucket", F.lit(8)) != F.col("cuckoo_part"))
         .count()
     )
     assert bad == 0
@@ -221,11 +232,11 @@ def test_bucketed_schedule_batch_equals_flat_schedule(spark, root):
     frontier = _frontier_of(_urls(spark, 300, 800))
     flat, b1 = schedule_batch(
         frontier, seen=st.seen().select("url"), bloom=st.blobs(),
-        default_k=10_000, n_bloom_parts=8,
+        seen_filter=st.filter_kind, default_k=10_000, n_bloom_parts=8,
     )
     bucketed, b2 = schedule_batch(
         frontier, seen=None, bloom=st.blobs(), exact_anti_join=st.anti_join,
-        default_k=10_000, n_bloom_parts=8,
+        seen_filter=st.filter_kind, default_k=10_000, n_bloom_parts=8,
     )
     assert {r.url for r in flat.collect()} == {r.url for r in bucketed.collect()}
     release_barrier(b1)
@@ -259,31 +270,109 @@ def test_bucketed_resume_from_fresh_state(spark, root):
     assert st2.anti_join(_frontier_of(_urls(spark, 200, 400))).count() == 100
 
 
-# -- cuckoo-backed deletable SeenState (round-5: delete without rebuild) -------
+def test_anti_join_task_reads_each_bucket_once_and_holds_one(spark, root, monkeypatch):
+    """ADVICE #4: anti_join sorts each task's candidates by bucket, so the
+    per-task function meets every bucket in one run — it reads each
+    bucket's seen files once and holds one bucket's URL array at a time,
+    not one per bucket it has seen."""
+    st = _bucketed(spark, root, n_parts=2, bucketed_parts=8)
+    st.commit_batch(_urls(spark, 0, 400))
+    cands = _frontier_of(_urls(spark, 0, 1))
+    captured = []
+    frame_cls = type(cands)
+    map_in_arrow = frame_cls.mapInArrow
+    monkeypatch.setattr(
+        frame_cls,
+        "mapInArrow",
+        lambda self, fn, schema, *a, **kw: captured.append(fn) or map_in_arrow(
+            self, fn, schema, *a, **kw
+        ),
+    )
+    st.anti_join(cands)
+    (task,) = captured
+
+    # every bucket's seen slice is 20k synthetic urls, built per read
+    import pyarrow.parquet as pq
+
+    n_seen = 20_000
+    reads: Counter = Counter()
+
+    def fake_read(files, columns=None):
+        b = int(files[0].split("seen_bucket=")[1].split("/")[0])
+        reads[b] += 1
+        urls = [f"https://b{b}.example.org/{i:07d}/{'x' * 40}" for i in range(n_seen)]
+        return pa.table({"url": pa.array(urls)})
+
+    monkeypatch.setattr(pq, "read_table", fake_read)
+    one_bucket = pa.array(
+        [f"https://b0.example.org/{i:07d}/{'x' * 40}" for i in range(n_seen)]
+    ).nbytes
+
+    # one task's input: buckets 0..7 in order, two buckets per Arrow
+    # batch, so a bucket's run straddles batch boundaries; per bucket one
+    # seen url (dropped) and one new url (kept)
+    buckets = sorted(st.bucket_files())
+    assert len(buckets) == 8
+    names = cands.columns
+    rows = []
+    for b in buckets:
+        for u in (f"https://b{b}.example.org/{7:07d}/{'x' * 40}", f"https://b{b}.example.org/new"):
+            rows.append({"url": u, "host": "h", "priority": 0, "seq": len(rows),
+                         "url_hash": 0, "_sb": b})
+    batches = [
+        pa.RecordBatch.from_pylist(rows[i:i + 3], schema=pa.schema(
+            [(n, pa.string() if n in ("url", "host") else pa.int64()) for n in names]
+            + [("_sb", pa.int32())]
+        ))
+        for i in range(0, len(rows), 3)
+    ]
+    base = pa.total_allocated_bytes()
+    held_max = 0
+    kept = []
+    for out in task(iter(batches)):
+        kept += out.column("url").to_pylist()
+        del out
+        gc.collect()
+        held_max = max(held_max, pa.total_allocated_bytes() - base)
+    assert kept == [f"https://b{b}.example.org/new" for b in buckets]
+    assert reads == {b: 1 for b in buckets}
+    assert held_max < 2 * one_bucket, (held_max, one_bucket)
+
+
+def test_anti_join_plan_sorts_candidates_by_bucket(spark, root):
+    st = _bucketed(spark, root)
+    st.commit_batch(_urls(spark, 0, 100))
+    plan = st.anti_join(_frontier_of(_urls(spark, 0, 10)))._jdf.queryExecution().executedPlan()
+    assert "Sort [_sb" in plan.toString()
+
+
+# -- deletes, rebuilds, overflow -------------------------------------------------
 
 
 def _cuckoo(spark, root, **kw):
     kw.setdefault("n_parts", 4)
     kw.setdefault("expected_keys", 5_000)
-    kw.setdefault("filter_kind", "cuckoo")
     return SeenState(spark, root, **kw)
 
 
-def test_cuckoo_seen_state_schedules_like_bloom(spark, root, tmp_path):
-    stc = _cuckoo(spark, root)
-    stc.commit_batch(_urls(spark, 0, 400))
-    stb = SeenState(spark, str(tmp_path / "bl"), n_parts=4, expected_keys=5_000)
-    stb.commit_batch(_urls(spark, 0, 400))
+def test_cuckoo_seen_state_schedules_like_bloom(spark, root):
+    """The state's schedule is exactly frontier minus seen — and equal to
+    a stateless Bloom-prefiltered schedule over the same seen table."""
+    st = _cuckoo(spark, root)
+    st.commit_batch(_urls(spark, 0, 400))
     frontier = _frontier_of(_urls(spark, 300, 800))
-    got_c, b1 = schedule_batch(
-        frontier, seen=stc.seen(), bloom=stc.blobs(), seen_filter="cuckoo",
+    got, b1 = schedule_batch(
+        frontier, exact_anti_join=st.anti_join, bloom=st.blobs(),
+        seen_filter=st.filter_kind, default_k=10_000, n_bloom_parts=4,
+    )
+    seen = st.seen().select("url")
+    via_bloom, b2 = schedule_batch(
+        frontier, seen=seen, bloom=build_bloom(seen, n_parts=4),
         default_k=10_000, n_bloom_parts=4,
     )
-    got_b, b2 = schedule_batch(
-        frontier, seen=stb.seen(), bloom=stb.blobs(),
-        default_k=10_000, n_bloom_parts=4,
-    )
-    assert {r.url for r in got_c.collect()} == {r.url for r in got_b.collect()}
+    want = {r.url for r in _urls(spark, 400, 800).collect()}
+    assert {r.url for r in got.collect()} == want
+    assert {r.url for r in via_bloom.collect()} == want
     release_barrier(b1)
     release_barrier(b2)
 
@@ -305,13 +394,10 @@ def test_cuckoo_delete_urls_makes_them_recrawlable(spark, root):
 
     # cuckoo eviction keeps the prefilter truthful: deleted urls probe
     # definitely-new again (no rebuild happened)
-    from crawler_spark.operators.cuckoo import cuckoo_prefilter
-
     tagged = cuckoo_prefilter(_urls(spark, 100, 200), st.blobs(), n_parts=4)
     assert not any(r.maybe_seen for r in tagged.collect())
     # and the kept urls still probe maybe_seen (no false negatives)
-    tagged2 = cuckoo_prefilter(_urls(spark, 200, 300), st.blobs(), n_parts=4)
-    assert all(r.maybe_seen for r in tagged2.collect())
+    assert _all_maybe_seen(st, _urls(spark, 200, 300))
 
 
 def test_recrawl_after_delete_clears_tombstones(spark, root):
@@ -350,25 +436,7 @@ def test_cuckoo_rebuilds_wider_before_saturating_insert(spark, root):
     st.commit_batch(_urls(spark, 0, 3000), batch_id=1)
     _, info = st.commit_batch(_urls(spark, 3000, 6000), batch_id=2)
     assert info["rebuilt"] and info["n_buckets"] >= 2 * st._initial_buckets
-    from crawler_spark.operators.cuckoo import cuckoo_prefilter
-
-    tagged = cuckoo_prefilter(_urls(spark, 0, 6000), st.blobs(), n_parts=4)
-    assert all(r.maybe_seen for r in tagged.collect())
-
-
-def test_bloom_mode_delete_tombstones_without_eviction(spark, root):
-    st = SeenState(spark, root, n_parts=4, expected_keys=5_000)  # bloom kind
-    st.commit_batch(_urls(spark, 0, 300), batch_id=1)
-    st.delete_urls(_urls(spark, 0, 100))
-    assert st.seen().count() == 200
-    # flat exact tier re-offers deleted urls even though the bloom still
-    # probes maybe_seen for them (shared bits cannot be unset)
-    sched, bar = schedule_batch(
-        _frontier_of(_urls(spark, 0, 300)), seen=st.seen(), bloom=st.blobs(),
-        default_k=10_000, n_bloom_parts=4,
-    )
-    assert sched.count() == 100
-    release_barrier(bar)
+    assert _all_maybe_seen(st, _urls(spark, 0, 6000))
 
 
 def test_cuckoo_delete_of_unseen_or_duplicate_urls_is_safe(spark, root):
@@ -377,8 +445,6 @@ def test_cuckoo_delete_of_unseen_or_duplicate_urls_is_safe(spark, root):
     url — a prefilter false negative that would bypass the exact tier
     entirely. delete_urls therefore dedupes and semi-joins deletions
     against the current seen set; live urls keep probing maybe_seen."""
-    from crawler_spark.operators.cuckoo import cuckoo_prefilter
-
     st = _cuckoo(spark, root)
     st.commit_batch(_urls(spark, 0, 400), batch_id=1)
     # deletions: 100 seen urls, each listed TWICE, plus 200 never-seen
@@ -391,12 +457,10 @@ def test_cuckoo_delete_of_unseen_or_duplicate_urls_is_safe(spark, root):
     assert st.deleted().count() == 100  # deduped + seen-restricted
     assert st.seen().count() == 300
     # NO false negatives among the 300 live urls
-    tagged = cuckoo_prefilter(_urls(spark, 100, 400), st.blobs(), n_parts=4)
-    assert all(r.maybe_seen for r in tagged.collect())
+    assert _all_maybe_seen(st, _urls(spark, 100, 400))
     # a second identical delete is a no-op for the filter's live keys
     st.delete_urls(dels)
-    tagged2 = cuckoo_prefilter(_urls(spark, 100, 400), st.blobs(), n_parts=4)
-    assert all(r.maybe_seen for r in tagged2.collect())
+    assert _all_maybe_seen(st, _urls(spark, 100, 400))
 
 
 def test_cuckoo_first_commit_overflow_recovers(spark, root):
@@ -407,10 +471,7 @@ def test_cuckoo_first_commit_overflow_recovers(spark, root):
     man, info = st.commit_batch(_urls(spark, 0, 5000), batch_id=1)
     assert st.seen().count() == 5000
     assert info["rebuilt"]
-    from crawler_spark.operators.cuckoo import cuckoo_prefilter
-
-    tagged = cuckoo_prefilter(_urls(spark, 0, 5000), st.blobs(), n_parts=4)
-    assert all(r.maybe_seen for r in tagged.collect())
+    assert _all_maybe_seen(st, _urls(spark, 0, 5000))
     # idempotent retry of the same batch id stays a no-op
     _, info2 = st.commit_batch(_urls(spark, 0, 5000), batch_id=1)
     assert info2.get("redelivered")
@@ -418,28 +479,17 @@ def test_cuckoo_first_commit_overflow_recovers(spark, root):
 
 # -- open-time layout check -----------------------------------------------------
 
-_FLAT_BLOOM = dict(n_parts=8)
-_BUCKETED_CUCKOO = dict(n_parts=4, bucketed_parts=8, write_tasks=4, filter_kind="cuckoo")
+_DEFAULT = dict(n_parts=8)
+_BUCKETED = dict(n_parts=4, bucketed_parts=8, write_tasks=4)
 
 
 @pytest.mark.parametrize(
     "written, reopened",
     [
-        (_FLAT_BLOOM, dict(n_parts=4)),
-        (_BUCKETED_CUCKOO, {**_BUCKETED_CUCKOO, "bucketed_parts": 16}),
-        (_FLAT_BLOOM, {**_FLAT_BLOOM, "bucketed_parts": 16, "write_tasks": 4}),
-        (_BUCKETED_CUCKOO, {**_BUCKETED_CUCKOO, "bucketed_parts": None}),
-        (_FLAT_BLOOM, {**_FLAT_BLOOM, "filter_kind": "cuckoo"}),
-        (_BUCKETED_CUCKOO, {**_BUCKETED_CUCKOO, "filter_kind": "bloom"}),
+        (_DEFAULT, dict(n_parts=4)),
+        (_BUCKETED, {**_BUCKETED, "bucketed_parts": 16}),
     ],
-    ids=[
-        "n_parts_8_to_4",
-        "bucketed_parts_8_to_16",
-        "flat_to_bucketed",
-        "bucketed_to_flat",
-        "bloom_to_cuckoo",
-        "cuckoo_to_bloom",
-    ],
+    ids=["n_parts_8_to_4", "bucketed_parts_8_to_16"],
 )
 def test_reopen_with_changed_layout_refuses_at_open(spark, root, written, reopened):
     """A store opens only with the settings it was written with: with
@@ -459,13 +509,41 @@ def test_reopen_with_changed_layout_refuses_at_open(spark, root, written, reopen
     # the same settings still resume: all 500 committed URLs stay seen
     st2 = SeenState(spark, root, expected_keys=5_000, **written)
     assert st2.last_logical() == 1
-    if st2.bucketed_parts is not None:
-        resolved = st2.anti_join(_frontier_of(_urls(spark, 0, 600)))
-    else:
-        resolved = _frontier_of(_urls(spark, 0, 600)).join(
-            st2.seen().select("url"), "url", "left_anti"
-        )
-    assert resolved.count() == 100
+    assert st2.anti_join(_frontier_of(_urls(spark, 0, 600))).count() == 100
+
+
+@pytest.mark.parametrize(
+    "layout",
+    [
+        dict(bucketed_parts=None, filter_kind="bloom"),
+        dict(bucketed_parts=None, filter_kind="cuckoo"),
+        dict(bucketed_parts=4, filter_kind="bloom"),
+    ],
+    ids=["flat_bloom", "flat_cuckoo", "bucketed_bloom"],
+)
+def test_store_stamped_with_a_removed_layout_refuses_at_open(spark, root, layout):
+    """Stores written before SeenState had one configuration carry a
+    layout record with a flat url_seen (``bucketed_parts: None``) or a
+    Bloom filter. Opening one refuses, and leaves its HEAD as it was."""
+    st = SeenState(spark, root, n_parts=4, expected_keys=5_000)
+    record = {"n_parts": 4, "url_col": "url", **layout}
+    st.store.commit(
+        1,
+        full_tables={},
+        delta_tables={"url_seen": _urls(spark, 0, 100)},
+        metrics={SeenState.METRIC_LOGICAL: 1, SeenState.METRIC_LAYOUT: record},
+    )
+    head = st.store.head()
+    with pytest.raises(SeenStateMismatch):
+        SeenState(spark, root, n_parts=4, expected_keys=5_000)
+    assert st.store.head().snapshot_id == head.snapshot_id
+    assert st.store.head().metrics[SeenState.METRIC_LAYOUT] == record
+
+
+def test_filter_kind_other_than_cuckoo_raises(spark, root):
+    with pytest.raises(ValueError, match="filter_kind"):
+        SeenState(spark, root, n_parts=4, filter_kind="bloom")
+    assert SeenState(spark, root, n_parts=4).store.head() is None
 
 
 def test_store_without_layout_record_refuses_at_open(spark, root):

@@ -75,7 +75,7 @@ def test_bucketed_seen_state_reads_without_a_job_after_maintenance(spark, tmp_pa
     # one more batch: url_seen is two partitioned dirs, read as a union
     st.commit_batch(urls(500, 600), batch_id=3)
     checked = _check_reads(spark, st.store, compare_rows=(SeenState.TABLE_SEEN,))
-    assert SeenState.TABLE_SEEN in checked and st.filter_table in checked
+    assert {SeenState.TABLE_SEEN, SeenState.TABLE_CUCKOO} <= set(checked)
     seen_entry = st.store.head().tables[SeenState.TABLE_SEEN]
     assert seen_entry["partition_cols"] == ["seen_bucket"] and len(seen_entry["files"]) == 2
 

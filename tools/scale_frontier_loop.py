@@ -7,13 +7,13 @@ frontier (bench.make_frontier with dup_back=B: every 5th row
 re-discovers a batch-0-family URL, so the accumulated seen state faces
 persistent nav-link-like re-discovery pressure). After a batch, its
 scheduled URLs are committed through SeenState (operators/seen_state.py):
-an append to the snapshot store's url_seen delta table plus an
-incremental update_bloom OR-in of the seen_bloom full table — per-batch
+an append to the snapshot store's bucketed url_seen delta table plus an
+incremental insert into the seen_cuckoo full table — per-batch
 state-maintenance cost tracks the BATCH, not the total seen count, which
 is exactly what a 10^10 frontier needs (a per-batch full rebuild would
 be quadratic).
 
-Peak memory is one batch's caches + the (fixed-width) Bloom blobs; the
+Peak memory is one batch's caches + the (fixed-size) cuckoo blobs; the
 frontier is never materialized whole. Per-batch throughput flat across
 batches = the scale evidence.
 
@@ -28,27 +28,24 @@ BENCH/BASELINE.md "10^9-URL micro-batched frontier drain"):
 
 Usage:
     python tools/scale_frontier_loop.py [batch_rows] [n_batches] \
-        [--out BENCH/scale_1e9_loop.json] [--resume] [--bucketed[=B]] \
-        [--cuckoo]
+        [--out BENCH/scale_1e9_loop.json] [--resume] [--buckets=B]
 
---bucketed stores url_seen in the hash-bucketed hive layout (B bucket
-dirs, default 256) and resolves the exact maybe-seen check bucket-wise
-(SeenState.anti_join): the accumulated seen table is never shuffled —
-the one per-batch cost that otherwise grows with TOTAL crawl state
-(flat anti-join reshuffles ~4 GB of seen rows per batch at 10^8 seen).
-The filter uses gcd(64, B) partitions, so B need not be a multiple of 64.
-
---cuckoo swaps the Bloom prefilter for the deletable cuckoo filter
-(same partition contract; delete_urls evicts fingerprints in place).
+--buckets=B sets the number of url_seen bucket directories (default
+256). The exact maybe-seen check resolves bucket-wise
+(SeenState.anti_join), so the accumulated seen table is never shuffled —
+the one per-batch cost that would otherwise grow with TOTAL crawl state
+(a flat anti-join reshuffles ~4 GB of seen rows per batch at 10^8 seen).
+The cuckoo filter uses gcd(64, B) partitions, so B need not be a
+multiple of 64. Any other flag is refused.
 
 --resume picks the loop up from the state's HEAD batch: a killed run
 continues from its last committed batch with the identical frontier
 windows (deterministic from row ids) and identical accumulated seen
 state — the store's idempotent-redelivery guarantee means a batch that
 died between its drain and its commit is simply re-drained and commits
-once. A store resumes only with the flags it was written with
-(``--bucketed`` value, ``--cuckoo``): any other combination exits with
-SeenStateMismatch before the first batch.
+once. A store resumes only with the ``--buckets`` value it was written
+with: any other value exits with SeenStateMismatch before the first
+batch.
 """
 
 from __future__ import annotations
@@ -65,7 +62,7 @@ import urllib.request
 def _shuffle_metrics(spark) -> dict:
     """Cumulative completed-stage shuffle bytes from the UI REST API
     (same instrument as tools/pipeline_bench.py). Per-batch DELTAS of
-    this are the structural evidence the bucketed layout claims: the
+    this are the structural evidence the bucketed layout claims: a
     flat anti-join's shuffle grows with the ACCUMULATED seen table,
     the bucket-wise probe's only with the batch's maybe slice."""
     try:
@@ -86,7 +83,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     out_path = None
-    bucketed = None
+    buckets = 256
     args: list[str] = []
     consumed = -1
     for i, a in enumerate(sys.argv[1:], start=1):
@@ -95,19 +92,13 @@ def main() -> None:
         if a == "--out" and i + 1 < len(sys.argv):
             out_path = sys.argv[i + 1]
             consumed = i + 1
-        elif a == "--bucketed" or a.startswith("--bucketed="):
-            # explicit value only as --flag=N: a space-separated digit is
-            # ambiguous with the positional batch_rows and was silently
-            # consumed (e.g. `--bucketed 6400 10` ate 6400 as the bucket
-            # count and drained 10 rows). A trailing digit that LOOKS like
-            # an attempted space-form value aborts loudly instead of
-            # silently becoming batch_rows.
-            nxt = sys.argv[i + 1] if i + 1 < len(sys.argv) else ""
-            if "=" not in a and nxt.isdigit() and int(nxt) <= 1 << 16:
-                sys.exit(f"ambiguous `{a} {nxt}`: write {a}={nxt} (or put "
-                         "positional batch_rows/n_batches before flags)")
-            bucketed = int(a.split("=", 1)[1]) if "=" in a else 256
-        elif not a.startswith("--"):
+        elif a.startswith("--buckets="):
+            buckets = int(a.split("=", 1)[1])
+        elif a == "--resume":
+            pass
+        elif a.startswith("--"):
+            sys.exit(f"unknown flag {a!r}: use --out PATH, --resume or --buckets=B")
+        else:
             args.append(a)
     batch_rows = int(float(args[0])) if args else 100_000_000
     n_batches = int(args[1]) if len(args) > 1 else 10
@@ -117,6 +108,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     import bench
+    from crawler_spark.operators.cuckoo import BUCKET_SLOTS
     from crawler_spark.operators.politeness import broadcast_robots, host_quotas
     from crawler_spark.operators.scheduler import (
         drain_ordered,
@@ -144,27 +136,21 @@ def main() -> None:
     if not resume:
         shutil.rmtree(state_root, ignore_errors=True)
 
-    # Bloom sized ONCE for the whole run's expected seen count (~10% of
-    # the frontier gets scheduled -> seen): capacity_keys * BITS_PER_KEY
-    # bits, power-of-two per part. 2^26 bits/part * 64 parts = 537 MB —
-    # past the broadcast ceiling, so the prefilter runs the cogroup path,
-    # the only one that exists at 10^10 (total filter ~15 GiB there).
-    # Undersizing is safe: SeenState.commit_batch rebuilds wider past
-    # fill 0.5 (amortized doubling).
+    # cuckoo filter sized ONCE for the whole run's expected seen count
+    # (~10% of the frontier gets scheduled -> seen). Undersizing is safe:
+    # SeenState.commit_batch rebuilds wider past load 0.7 (amortized
+    # doubling).
     capacity = int(
         os.environ.get("SPARK_GRAFT_SEEN_CAPACITY", batch_rows * n_batches * 0.15)
     )
     # filter partitions: 64, or fewer when B is not a multiple of 64
     # (SeenState needs B % n_parts == 0 so buckets refine the partitions)
-    n_parts = math.gcd(64, bucketed) if bucketed else 64
-    cuckoo = "--cuckoo" in sys.argv
+    n_parts = math.gcd(64, buckets)
     st = SeenState(
         spark, state_root, n_parts=n_parts, expected_keys=capacity,
-        bucketed_parts=bucketed, write_tasks=min(64, shuffle_parts),
-        filter_kind="cuckoo" if cuckoo else "bloom",
-        rebuild_fill=0.7 if cuckoo else 0.5,
+        bucketed_parts=buckets, write_tasks=min(64, shuffle_parts),
+        rebuild_fill=0.7,
     )
-    m_bits = st._initial_m_bits
 
     robots_rows = [
         (f"h{i}.example.org", ["/private", "/login"], 100 if i % 2 else 0)
@@ -182,10 +168,8 @@ def main() -> None:
     ws, wb = schedule_batch(
         warm,
         # same seen-resolution path as the measured loop: a flat join here
-        # would reshuffle the whole accumulated seen table on --resume —
-        # the exact cost bucketed mode exists to avoid
-        seen=None if bucketed else st.seen(),
-        exact_anti_join=st.anti_join if bucketed else None,
+        # would reshuffle the whole accumulated seen table on --resume
+        exact_anti_join=st.anti_join,
         bloom=st.blobs(), robots_bcast=robots_b, quotas=quotas,
         default_k=1000, salt_span=250, max_quota=1000, n_bloom_parts=n_parts,
         seen_filter=st.filter_kind,
@@ -217,10 +201,9 @@ def main() -> None:
         t0 = time.monotonic()
         scheduled, barrier = schedule_batch(
             frontier,
-            # bucketed: the seen table is never shuffled — the bucket-wise
-            # resolver reads each bucket's committed files directly
-            seen=None if bucketed else st.seen(),
-            exact_anti_join=st.anti_join if bucketed else None,
+            # the seen table is never shuffled — the bucket-wise resolver
+            # reads each bucket's committed files directly
+            exact_anti_join=st.anti_join,
             bloom=st.blobs(),
             robots_bcast=robots_b,
             quotas=quotas,
@@ -238,18 +221,15 @@ def main() -> None:
         t_drain = time.monotonic() - t0
 
         # frontier cache is dead weight once the batch is materialized;
-        # free it BEFORE state maintenance so the bloom cogroup never
+        # free it BEFORE state maintenance so the filter cogroup never
         # competes with 10+ GB of spent cache
         frontier.unpersist()
 
         # state maintenance — the incremental path whose cost must track
         # the batch, not the accumulated total
         t1 = time.monotonic()
-        new_urls = drained.select("url")
-        if not bucketed:
-            new_urls = new_urls.coalesce(32)  # bucketed mode re-clusters itself
         man, info = st.commit_batch(
-            new_urls,
+            drained.select("url"),  # commit_batch clusters rows by bucket
             batch_id=i + 1,  # logical id: redelivery-guarded per window
             metrics={"n_scheduled": n_sched},
         )
@@ -272,7 +252,7 @@ def main() -> None:
             "drain_sec": round(t_drain, 2),
             "state_sec": round(t_state, 2),
             "urls_per_sec": round(batch_rows / t_drain, 1),
-            "bloom_rebuilt": bool(info.get("rebuilt")),
+            "filter_rebuilt": bool(info.get("rebuilt")),
             "shuffle_write_gb": round(
                 (sm1["shuffle_write_b"] - sm0["shuffle_write_b"]) / 2**30, 2
             ),
@@ -285,7 +265,11 @@ def main() -> None:
         print(json.dumps({"note": "nothing to do: state already at target batch"}))
         spark.stop()
         return
-    fill = st.fill().agg(F.avg("fill").alias("avg"), F.max("fill").alias("max")).first()
+    fill = st.fill().agg(
+        F.max("n_buckets").alias("n_buckets"),
+        F.avg("fill").alias("avg"),
+        F.max("fill").alias("max"),
+    ).first()
     total_rows = batch_rows * len(batches)  # rows drained by THIS run
     drain_total = sum(b["drain_sec"] for b in batches)
     out = {
@@ -294,11 +278,11 @@ def main() -> None:
         "batch_rows": batch_rows,
         "n_batches": n_batches,
         "seen_rows_final": seen_total,
-        "bloom_m_bits_per_part": m_bits,
-        "bloom_parts": n_parts,
-        "bloom_total_mb": round(m_bits * n_parts / 8 / 2**20, 1),
-        "bloom_fill_avg": round(fill["avg"], 4),
-        "bloom_fill_max": round(fill["max"], 4),
+        "filter_buckets_per_part": fill["n_buckets"],
+        "filter_parts": n_parts,
+        "filter_total_mb": round(fill["n_buckets"] * BUCKET_SLOTS * 2 * n_parts / 2**20, 1),
+        "filter_load_avg": round(fill["avg"], 4),
+        "filter_load_max": round(fill["max"], 4),
         "drain_sec_total": round(drain_total, 1),
         "urls_per_sec_overall": round(total_rows / drain_total, 1),
         "loop_wall_sec": round(wall, 1),
@@ -306,7 +290,7 @@ def main() -> None:
         "first_batch_urls_per_sec": batches[0]["urls_per_sec"],
         "last_batch_urls_per_sec": batches[-1]["urls_per_sec"],
         "batches": batches,
-        "bucketed_parts": bucketed,
+        "bucketed_parts": buckets,
         "filter_kind": st.filter_kind,
         "cores": int(cpus) if str(cpus).isdigit() else cpus,
         "shuffle_partitions": shuffle_parts,
@@ -314,8 +298,8 @@ def main() -> None:
         "date": time.strftime("%Y-%m-%d"),
         "note": (
             "micro-batched drain with accumulating seen state, committed "
-            "per batch through SeenState (snapshot-store url_seen delta + "
-            "incremental seen_bloom full table); throughput flat across "
+            "per batch through SeenState (snapshot-store bucketed url_seen "
+            "delta + incremental seen_cuckoo full table); throughput flat across "
             "batches = the 10^10 bounded-memory shape"
         ),
     }
