@@ -4,13 +4,13 @@ star: "partitioned Bloom/cuckoo URL-seen filter"; the reference's exact
 set is its backend/domain/entities.py:153).
 
 Per-partition blobs keyed by ``pmod(xxhash64(url, 2), P)`` are stored as a
-state table and probed through a cogrouped shuffle (10^10 scale — each
-task touches one blob). ``insert_into_cuckoo`` adds a batch's keys in
-place, and ``delete_from_cuckoo`` evicts a key's fingerprint, so
-``delete_source`` (jobs.py) can remove a source's URLs from the seen
-prefilter instead of rebuilding it. That is what the static Bloom filter
-in operators/bloom.py cannot do: a Bloom bit is shared by unknown other
-keys and can never be unset.
+state table; ``SeenState.anti_join`` probes them bucket-wise, one blob per
+task at a time (``cuckoo_prefilter`` is the cogrouped probe).
+``insert_into_cuckoo`` adds a batch's keys in place, and
+``delete_from_cuckoo`` evicts a key's fingerprint, so ``delete_source``
+(jobs.py) can remove a source's URLs from the seen prefilter instead of
+rebuilding it — what the static Bloom filter in operators/bloom.py cannot
+do: a Bloom bit is shared by unknown other keys and can never be unset.
 
 Layout per partition: ``n_buckets x 4`` slots of 16-bit fingerprints
 (uint16, 0 = empty; fp in [1, 65535] so empty is unambiguous). Lookup
@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "add_cuckoo_keys",
+    "cuckoo_hash_fp",
     "build_cuckoo",
     "cuckoo_prefilter",
     "insert_into_cuckoo",
@@ -57,12 +58,20 @@ class CuckooOverflowError(ValueError):
     this class's name."""
 
 
+def cuckoo_hash_fp(url_col: str = "url"):
+    """The (raw 64-bit hash, 16-bit nonzero fingerprint) columns every
+    build, insert, probe and delete keys on."""
+    fp = F.pmod(F.xxhash64(url_col, F.lit(7)), F.lit(_FP_MOD)) + 1
+    return F.xxhash64(url_col), fp.cast("int")
+
+
 def add_cuckoo_keys(df: DataFrame, url_col: str = "url", n_parts: int = 64) -> DataFrame:
     """JVM-side keys: partition id, raw 64-bit hash (bucket source) and a
     16-bit nonzero fingerprint from an independent seed."""
+    ch, cfp = cuckoo_hash_fp(url_col)
     return (
-        df.withColumn("ch", F.xxhash64(url_col))
-        .withColumn("cfp", (F.pmod(F.xxhash64(url_col, F.lit(7)), F.lit(_FP_MOD)) + 1).cast("int"))
+        df.withColumn("ch", ch)
+        .withColumn("cfp", cfp)
         .withColumn(
             "cuckoo_part", F.pmod(F.xxhash64(url_col, F.lit(2)), F.lit(n_parts)).cast("int")
         )

@@ -8,8 +8,11 @@ Zipf-skewed frontier.
 Pipeline per micro-batch:
 1. politeness — robots disallow (broadcast trie UDF) + per-host crawl-delay
    quotas (broadcast-joined tiny table);
-2. dedup — partitioned Bloom prefilter (no false negatives) routes only the
-   maybe-seen fraction through the exact ``left_anti`` vs the seen table;
+2. dedup — with a resolver (``SeenState.anti_join``), one bucket-ordered
+   pass probes each bucket's cuckoo filter part and checks only the
+   maybe-seen rows against that bucket's seen files; the stateless path
+   routes the maybe-seen fraction of a Bloom prefilter through the exact
+   ``left_anti`` vs the seen table;
 3. priority drain — ``row_number`` over (host ordered by priority, seq)
    capped at the host's quota: the single most load-bearing window;
 4. hot-host salting — a drained host's rows are split into seq-contiguous
@@ -20,11 +23,10 @@ Pipeline per micro-batch:
    (priority, seq) inside the group and emits ``fetch_order``: Spark
    guarantees the whole group in one pane; order is enforced inside.
 
-Shuffle accounting (design point at 1000 executors): steps 1-2 are
-narrow + one co-partitioned cogroup; step 3 is ONE shuffle on host; the
-salted repartition reuses the same key family so AQE can coalesce. The
-seen table and bloom blobs are both partitioned by ``xxhash64(url)``
-families, so batch-over-batch the exact anti-join is co-located.
+Shuffle accounting (design point at 1000 executors): step 1 is narrow,
+step 2 shuffles only the candidates (by seen bucket); step 3 is ONE
+shuffle on host; the salted repartition reuses the same key family so
+AQE can coalesce.
 """
 
 from __future__ import annotations
@@ -93,15 +95,14 @@ def schedule_batch(
     Either way the exact anti-join resolves maybe-seens, so the scheduled
     set is identical (test_schedule_with_cuckoo_filter_matches_bloom).
 
-    exact_anti_join, when given, replaces the flat ``maybe LEFT ANTI
-    JOIN seen`` with a caller-supplied resolver — a callable
-    DataFrame -> DataFrame returning the not-seen subset with the same
-    schema. The engine passes ``SeenState.anti_join`` here for the
-    bucketed url_seen layout: the flat join reshuffles the entire
-    accumulated seen table every batch (the one per-batch cost that
-    grows with TOTAL crawl state, ~4 GB shuffled at 10^8 seen); the
-    bucket-wise resolver shuffles only the maybe-seen slice and reads
-    each bucket's committed files directly. ``seen`` may then be None.
+    exact_anti_join, when given, resolves seen for ALL candidates — a
+    callable DataFrame -> DataFrame returning the not-seen subset with
+    the same schema. The resolver owns its prefilter
+    (``SeenState.anti_join`` probes the cuckoo filter bucket by bucket
+    and reads each bucket's committed files directly, so neither the
+    seen nor the filter table is shuffled), so ``seen``, ``bloom``,
+    ``seen_filter`` and ``n_bloom_parts`` are then ignored and the
+    barrier is None.
     """
     cand = frontier
     if canonicalize:
@@ -137,23 +138,24 @@ def schedule_batch(
     if robots_bcast is not None:
         cand = robots_filter(cand, robots_bcast, host_col="host")
 
-    # 2. dedup: bloom prefilter -> exact anti-join on the maybe-seen slice.
-    # The union FORKS the plan on `tagged`; without a materialization
-    # barrier Spark would recompute the prefilter (and everything upstream)
-    # once per branch — persist+count pins it, exactly like the state
-    # tables would already be materialized in the engine's batch loop.
-    # The cached blocks are released by release_barrier(barrier) — call it
+    # 2. dedup: the resolver, or prefilter -> exact anti-join on the
+    # maybe-seen slice. The union FORKS the plan on `tagged`; without a
+    # materialization barrier Spark would recompute the prefilter (and
+    # everything upstream) once per branch — persist+count pins it. The
+    # cached blocks are released by release_barrier(barrier) — call it
     # once the batch's downstream action has completed, or a long
     # multi-batch drain accumulates one leaked cache per batch.
     barrier = None
-    if bloom is not None and seen is None and exact_anti_join is None:
+    if exact_anti_join is not None:
+        cand = exact_anti_join(cand)
+    elif bloom is not None and seen is None:
         # the prefilter only TAGS maybe-seens; without the exact anti-join
         # side it would silently schedule every already-crawled URL again
         raise ValueError(
             "schedule_batch: bloom/cuckoo prefilter requires `seen` (or "
             "`exact_anti_join`) for the exact anti-join"
         )
-    if bloom is not None:
+    elif bloom is not None:
         if seen_filter == "cuckoo":  # deletable variant, same blob contract
             from .cuckoo import cuckoo_prefilter as _prefilter
         else:
@@ -162,13 +164,7 @@ def schedule_batch(
         tagged.count()
         definitely_new = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
         maybe = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-        if exact_anti_join is not None:
-            confirmed_new = exact_anti_join(maybe)
-        else:
-            confirmed_new = maybe.join(seen.select("url"), "url", "left_anti")
-        cand = definitely_new.unionByName(confirmed_new)
-    elif exact_anti_join is not None:
-        cand = exact_anti_join(cand)
+        cand = definitely_new.unionByName(maybe.join(seen.select("url"), "url", "left_anti"))
     elif seen is not None:
         cand = cand.join(seen.select("url"), "url", "left_anti")
 

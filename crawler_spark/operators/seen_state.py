@@ -5,12 +5,14 @@ One `SeenState` owns three tables in a SnapshotParquetStore:
 
 - ``url_seen`` (delta): append-only URL rows, hash-bucketed into
   ``seen_bucket=<b>`` hive directories — the exact side of the membership
-  check. :meth:`anti_join` resolves a candidate slice bucket-wise, so the
-  accumulated seen table is never shuffled.
+  check.
 - ``seen_cuckoo`` (full): the partitioned cuckoo-filter blobs
-  (operators/cuckoo.py), the prefilter side. Each batch's URLs are
-  inserted incrementally; a load check before the insert rebuilds the
-  filter wider from the seen table (amortized O(1) per batch), and
+  (operators/cuckoo.py), the prefilter side. :meth:`anti_join` resolves
+  all candidates in one bucket-ordered pass: it probes each bucket's
+  filter part and opens the bucket's files only for maybe-seen rows, so
+  neither table is shuffled. Each batch's URLs are inserted
+  incrementally; a load check before the insert rebuilds the filter
+  wider from the seen table (amortized O(1) per batch), and
   :meth:`delete_urls` evicts fingerprints, so a deleted source's URLs
   stop probing maybe-seen without a rebuild.
 - ``url_deleted`` (delta, bucketed like ``url_seen``): tombstones,
@@ -43,6 +45,9 @@ this is its 10^10-frontier replacement.
 
 from __future__ import annotations
 
+import glob
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -51,7 +56,9 @@ from ..state import Manifest, SnapshotParquetStore, empty_frame
 from .cuckoo import (
     BUCKET_SLOTS,
     CuckooOverflowError,
+    _probe_table,
     build_cuckoo,
+    cuckoo_hash_fp,
     cuckoo_load,
     delete_from_cuckoo,
     insert_into_cuckoo,
@@ -243,37 +250,33 @@ class SeenState:
         directory listing over the manifest's file list — no Spark job).
         After a ``compact`` the list is one directory; between
         compactions it is one per batch."""
-        import glob as _glob
-        import os as _os
-
         table = table or self.TABLE_SEEN
         head = self.store.head()
         out: dict[int, list[str]] = {}
         if head is None or table not in head.tables:
             return out
         for rel in head.tables[table]["files"]:
-            base = _os.path.join(self.store.root, "snapshots", rel)
-            for d in _glob.glob(_os.path.join(base, f"{self.BUCKET_COL}=*")):
+            base = os.path.join(self.store.root, "snapshots", rel)
+            for d in glob.glob(os.path.join(base, f"{self.BUCKET_COL}=*")):
                 b = int(d.rsplit("=", 1)[1])
-                out.setdefault(b, []).extend(
-                    _glob.glob(_os.path.join(d, "*.parquet"))
-                )
+                out.setdefault(b, []).extend(glob.glob(os.path.join(d, "*.parquet")))
         return out
 
     def anti_join(self, candidates: DataFrame, url_col: str | None = None) -> DataFrame:
-        """Exact ``candidates LEFT ANTI JOIN url_seen ON url`` without
-        shuffling the seen table — the bucket-wise join the 10^10 design
-        point needs (a flat anti-join reshuffles the ENTIRE accumulated
-        seen table every batch; this shuffles only the candidate slice,
-        which after the cuckoo prefilter is the maybe-seen fraction).
+        """Exact ``candidates LEFT ANTI JOIN url_seen ON url`` in one Arrow
+        pass that owns its cuckoo prefilter: only the candidates are
+        shuffled, never the seen or the filter table.
 
-        Candidates are hash-clustered by the layout's bucket key and
-        sorted by it within each task; a task then opens ONLY its
-        buckets' committed parquet files (pyarrow, url column, ~|seen|/B
-        rows), one bucket at a time, and drops candidates whose url
-        appears — membership compares full URLs, so the result is exact,
-        not fingerprint-approximate. Buckets with no candidates are never
-        read. The reference analog is the in-memory ``set`` lookup (the
+        Each candidate's bucket (``_part_expr``) and filter hash and
+        fingerprint (``cuckoo_hash_fp``) are computed once on the JVM.
+        Candidates are hash-clustered by bucket and sorted by (filter
+        part, bucket) within each task. Per bucket run, the task probes
+        its part's filter table, read from the committed ``seen_cuckoo``
+        files; only maybe-seen rows open the bucket's seen and tombstone
+        files (pyarrow, ~|seen|/B rows) for one exact ``is_in`` on full
+        URLs. A task holds one filter table and one bucket at a time;
+        buckets whose candidates all probe definitely-new are never read.
+        The reference analog is the in-memory ``set`` lookup (the
         reference's backend/domain/entities.py:153,158-159); a real
         cluster swaps this for an Iceberg bucket-partitioned
         storage-partitioned join, same layout contract."""
@@ -282,56 +285,57 @@ class SeenState:
         fmap = self.bucket_files()
         if not fmap:
             return candidates
-        dmap = self.bucket_files(self.TABLE_DELETED)
         # one live broadcast per snapshot epoch: a drain loop calls this
         # every batch, and an un-released broadcast per batch pins the
-        # full path map on driver+executors for the run's lifetime (the
-        # same leak class schedule_batch's barrier contract documents).
+        # path lists in every JVM of the application for the run's lifetime
         head = self.store.head()
-        epoch = head.snapshot_id if head else -1
         cached = getattr(self, "_aj_bcast", None)
-        if cached is not None and cached[0] == epoch:
-            bc = cached[1]
-        else:
+        if cached is None or cached[0] != head.snapshot_id:
             if cached is not None:
-                # unpersist (not destroy): frees the executor copies while a
-                # not-yet-evaluated plan from the previous epoch can still
-                # re-fetch from the driver; the driver holds at most ONE
-                # superseded value, not one per batch
+                # unpersist (not destroy): a not-yet-evaluated plan from
+                # the previous epoch can still fetch the value again
                 try:
                     cached[1].unpersist()
                 except Exception:
                     pass
-            bc = self.spark.sparkContext.broadcast((fmap, dmap))
-            self._aj_bcast = (epoch, bc)
+            (crel,) = head.tables[self.TABLE_CUCKOO]["files"]  # a full table: one dir
+            cdir = os.path.join(self.store.root, "snapshots", crel)
+            paths = (fmap, self.bucket_files(self.TABLE_DELETED), cdir)
+            cached = self._aj_bcast = (head.snapshot_id, self.spark.sparkContext.broadcast(paths))
+        bc = cached[1]
         out_schema = candidates.schema
-        # sorted on the bucket within each task, so a task meets each of
-        # its buckets in one run and holds one bucket's seen slice at a time
+        names = [f.name for f in out_schema.fields]
+        n_parts = self.n_parts
+        ch, fp = cuckoo_hash_fp(url_col)
         keyed = (
             candidates.withColumn("_sb", self._part_expr(url_col, self.bucketed_parts))
+            .withColumn("_ch", ch)
+            .withColumn("_fp", fp)
             .repartition(self.bucketed_parts, F.col("_sb"))
-            .sortWithinPartitions("_sb")
+            .sortWithinPartitions(F.pmod("_sb", F.lit(n_parts)), "_sb")
         )
-        names = [f.name for f in out_schema.fields]
 
         def _aj(batches):
             # mapInArrow, not applyInPandas: candidate strings stay Arrow
             # buffers end to end (pandas object materialization anti-
-            # scales on allocator contention — same finding as
-            # bloom_prefilter's broadcast probe).
+            # scales on allocator contention)
             import numpy as np
             import pyarrow as pa
             import pyarrow.compute as pc
             import pyarrow.parquet as pq
 
-            seen_files, del_files = bc.value
-            held: tuple[int, object] | None = None  # (bucket, its live urls)
+            seen_files, del_files, cdir = bc.value
+            table: tuple = (-1, None)  # (filter part, its table; None = no blob, all new)
+            held: tuple = (-1, None)  # (bucket, its live urls)
+
+            def _filter_table(p: int):
+                blob = pq.read_table(cdir, columns=["blob"], filters=[("cuckoo_part", "=", p)])
+                if not blob.num_rows:
+                    return None
+                return np.frombuffer(blob.column(0)[0].as_py(), np.uint16).reshape(-1, BUCKET_SLOTS)
 
             def _bucket_set(b: int):
-                files = seen_files.get(b)
-                if not files:
-                    return None
-                vals = pq.read_table(files, columns=[store_col]).column(store_col)
+                vals = pq.read_table(seen_files[b], columns=[store_col]).column(store_col)
                 dels = del_files.get(b)
                 if dels:
                     # tombstoned urls are re-crawlable: NOT seen
@@ -342,30 +346,31 @@ class SeenState:
                 return vals.combine_chunks()
 
             for rb in batches:
-                parts = rb.column("_sb").to_numpy()
-                keep = [rb.column(n) for n in names]
-                if not len(parts):
-                    yield pa.record_batch(keep, names=names)
-                    continue
-                cand = rb.column(url_col)
-                seen_mask = np.zeros(len(parts), dtype=bool)
-                for b in np.unique(parts):
-                    if held is None or held[0] != b:
-                        held = None  # release the previous bucket before reading
-                        held = (int(b), _bucket_set(int(b)))
-                    vset = held[1]
-                    if vset is None:
+                sb = rb.column("_sb").to_numpy()
+                hs, fps = rb.column("_ch").to_numpy(), rb.column("_fp").to_numpy()
+                seen_mask = np.zeros(len(sb), dtype=bool)
+                starts = np.flatnonzero(np.diff(sb, prepend=-1))  # bucket runs
+                for lo, hi in zip(starts, np.r_[starts[1:], len(sb)]):
+                    b = int(sb[lo])
+                    if not seen_files.get(b):
+                        continue  # nothing committed in this bucket
+                    if table[0] != b % n_parts:
+                        table = None  # release the previous table before reading
+                        table = (b % n_parts, _filter_table(b % n_parts))
+                    if table[1] is None:
                         continue
-                    sel = parts == b
-                    sub = pc.is_in(
-                        cand.take(pa.array(np.flatnonzero(sel))),
-                        value_set=vset,
+                    maybe = lo + np.flatnonzero(_probe_table(table[1], hs[lo:hi], fps[lo:hi]))
+                    if not len(maybe):
+                        continue  # all definitely new: the bucket stays unread
+                    if held[0] != b:
+                        held = None  # release the previous bucket before reading
+                        held = (b, _bucket_set(b))
+                    seen_mask[maybe] = pc.is_in(
+                        rb.column(url_col).take(pa.array(maybe)), value_set=held[1]
                     ).to_numpy(zero_copy_only=False)
-                    seen_mask[sel] = sub
-                tbl = pa.table(keep, names=names)
-                yield from pa.table(
-                    [c.filter(pa.array(~seen_mask)) for c in tbl.columns], names=names
-                ).to_batches()
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column(n) for n in names], names=names
+                ).filter(pa.array(~seen_mask))
 
         return keyed.mapInArrow(_aj, out_schema)
 
@@ -424,8 +429,8 @@ class SeenState:
         nb = self._initial_buckets
         info: dict = {"rebuilt": False, "n_buckets": nb}
         if has_blobs:
-            nb = int(blobs.agg(F.max(F.length("blob"))).first()[0]) // 2 // BUCKET_SLOTS
-            load_max = float(cuckoo_load(blobs).agg(F.max("load")).first()[0] or 0.0)
+            width, load = cuckoo_load(blobs).agg(F.max("n_buckets"), F.max("load")).first()
+            nb, load_max = int(width), float(load or 0.0)
             info.update(n_buckets=nb, load_max_before=load_max)
             if load_max > self.rebuild_fill:
                 nb = self._wider(nb, self.seen().count())

@@ -4,9 +4,11 @@ saturation rebuild, deletes. (The 10^9-scale behavior of the same
 discipline is recorded in BENCH/scale_1e9_loop.json.)"""
 
 import gc
+import re
 import shutil
 from collections import Counter
 
+import numpy as np
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
@@ -270,14 +272,8 @@ def test_bucketed_resume_from_fresh_state(spark, root):
     assert st2.anti_join(_frontier_of(_urls(spark, 200, 400))).count() == 100
 
 
-def test_anti_join_task_reads_each_bucket_once_and_holds_one(spark, root, monkeypatch):
-    """ADVICE #4: anti_join sorts each task's candidates by bucket, so the
-    per-task function meets every bucket in one run — it reads each
-    bucket's seen files once and holds one bucket's URL array at a time,
-    not one per bucket it has seen."""
-    st = _bucketed(spark, root, n_parts=2, bucketed_parts=8)
-    st.commit_batch(_urls(spark, 0, 400))
-    cands = _frontier_of(_urls(spark, 0, 1))
+def _anti_join_task(st, cands, monkeypatch):
+    """The per-task function ``st.anti_join(cands)`` hands to mapInArrow."""
     captured = []
     frame_cls = type(cands)
     map_in_arrow = frame_cls.mapInArrow
@@ -290,15 +286,35 @@ def test_anti_join_task_reads_each_bucket_once_and_holds_one(spark, root, monkey
     )
     st.anti_join(cands)
     (task,) = captured
+    return task
 
-    # every bucket's seen slice is 20k synthetic urls, built per read
+
+def test_anti_join_task_reads_each_bucket_once_and_holds_one(spark, root, monkeypatch):
+    """anti_join sorts each task's candidates by (filter part, bucket), so
+    the per-task function meets every part and every bucket in one run —
+    it reads each filter table and each bucket's seen files once, holds
+    one bucket's URL array at a time, not one per bucket it has seen, and
+    never opens a bucket whose candidates all probe definitely-new."""
+    st = _bucketed(spark, root, n_parts=2, bucketed_parts=8)
+    st.commit_batch(_urls(spark, 0, 400))
+    cands = _frontier_of(_urls(spark, 0, 1))
+    task = _anti_join_task(st, cands, monkeypatch)
+
+    # every filter part is a 4-bucket table holding only fingerprint 1, so
+    # _fp=1 probes maybe-seen and _fp=2 definitely-new; every bucket's
+    # seen slice is 20k synthetic urls, built per read
     import pyarrow.parquet as pq
 
     n_seen = 20_000
     reads: Counter = Counter()
+    filter_reads: Counter = Counter()
+    blob = np.full((4, 4), 1, dtype=np.uint16).tobytes()
 
-    def fake_read(files, columns=None):
-        b = int(files[0].split("seen_bucket=")[1].split("/")[0])
+    def fake_read(source, columns=None, filters=None):
+        if filters is not None:  # the filter table of part filters[0][2]
+            filter_reads[filters[0][2]] += 1
+            return pa.table({"blob": pa.array([blob], pa.binary())})
+        b = int(source[0].split("seen_bucket=")[1].split("/")[0])
         reads[b] += 1
         urls = [f"https://b{b}.example.org/{i:07d}/{'x' * 40}" for i in range(n_seen)]
         return pa.table({"url": pa.array(urls)})
@@ -308,21 +324,25 @@ def test_anti_join_task_reads_each_bucket_once_and_holds_one(spark, root, monkey
         [f"https://b0.example.org/{i:07d}/{'x' * 40}" for i in range(n_seen)]
     ).nbytes
 
-    # one task's input: buckets 0..7 in order, two buckets per Arrow
+    # one task's input in (part, bucket) order, three rows per Arrow
     # batch, so a bucket's run straddles batch boundaries; per bucket one
-    # seen url (dropped) and one new url (kept)
+    # seen url (dropped) and one new url (kept), both probing maybe-seen,
+    # except the quiet bucket: one new url probing definitely-new
     buckets = sorted(st.bucket_files())
     assert len(buckets) == 8
+    order = sorted(buckets, key=lambda b: (b % 2, b))
+    quiet = 3
     names = cands.columns
     rows = []
-    for b in buckets:
-        for u in (f"https://b{b}.example.org/{7:07d}/{'x' * 40}", f"https://b{b}.example.org/new"):
-            rows.append({"url": u, "host": "h", "priority": 0, "seq": len(rows),
-                         "url_hash": 0, "_sb": b})
+    for b in order:
+        urls = [f"https://b{b}.example.org/{7:07d}/{'x' * 40}", f"https://b{b}.example.org/new"]
+        for u in urls[1:] if b == quiet else urls:
+            rows.append({"url": u, "host": "h", "priority": 0, "seq": len(rows), "url_hash": 0,
+                         "_sb": b, "_ch": len(rows), "_fp": 2 if b == quiet else 1})
     batches = [
         pa.RecordBatch.from_pylist(rows[i:i + 3], schema=pa.schema(
             [(n, pa.string() if n in ("url", "host") else pa.int64()) for n in names]
-            + [("_sb", pa.int32())]
+            + [("_sb", pa.int32()), ("_ch", pa.int64()), ("_fp", pa.int32())]
         ))
         for i in range(0, len(rows), 3)
     ]
@@ -334,8 +354,9 @@ def test_anti_join_task_reads_each_bucket_once_and_holds_one(spark, root, monkey
         del out
         gc.collect()
         held_max = max(held_max, pa.total_allocated_bytes() - base)
-    assert kept == [f"https://b{b}.example.org/new" for b in buckets]
-    assert reads == {b: 1 for b in buckets}
+    assert kept == [f"https://b{b}.example.org/new" for b in order]
+    assert reads == {b: 1 for b in buckets if b != quiet}
+    assert filter_reads == {0: 1, 1: 1}
     assert held_max < 2 * one_bucket, (held_max, one_bucket)
 
 
@@ -343,7 +364,11 @@ def test_anti_join_plan_sorts_candidates_by_bucket(spark, root):
     st = _bucketed(spark, root)
     st.commit_batch(_urls(spark, 0, 100))
     plan = st.anti_join(_frontier_of(_urls(spark, 0, 10)))._jdf.queryExecution().executedPlan()
-    assert "Sort [_sb" in plan.toString()
+    # hash-clustered by bucket (no range-sample job), then sorted by
+    # (filter part, bucket) so a task meets each part and bucket once
+    plan = plan.toString()
+    assert re.search(r"Sort \[pmod\(_sb#\d+, 8\) ASC NULLS FIRST, _sb#\d+ ASC", plan), plan
+    assert "hashpartitioning(_sb" in plan and "rangepartitioning" not in plan
 
 
 # -- deletes, rebuilds, overflow -------------------------------------------------
@@ -375,6 +400,70 @@ def test_cuckoo_seen_state_schedules_like_bloom(spark, root):
     assert {r.url for r in via_bloom.collect()} == want
     release_barrier(b1)
     release_barrier(b2)
+
+
+def test_resolver_schedule_has_no_prefilter_and_matches_bloom_across_deletes(spark, root):
+    """With a resolver, schedule_batch hands it every candidate: no
+    cogroup prefilter, no barrier — and the scheduled set equals the
+    stateless flat-seen + Bloom schedule with tombstones pending and
+    after they are purged."""
+    st = _cuckoo(spark, root, bucketed_parts=8, write_tasks=4)
+    st.commit_batch(_urls(spark, 0, 400), batch_id=1)
+    frontier = _frontier_of(_urls(spark, 0, 600))
+
+    def both():
+        got, barrier = schedule_batch(
+            frontier, exact_anti_join=st.anti_join, bloom=st.blobs(),
+            seen_filter=st.filter_kind, default_k=10_000, n_bloom_parts=4,
+        )
+        seen = st.seen().select("url")
+        flat, b2 = schedule_batch(
+            frontier, seen=seen, bloom=build_bloom(seen, n_parts=4),
+            default_k=10_000, n_bloom_parts=4,
+        )
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        urls = {r.url for r in got.collect()}, {r.url for r in flat.collect()}
+        release_barrier(b2)
+        return barrier, plan, urls
+
+    barrier, plan, (got, flat) = both()
+    assert barrier is None
+    assert "FlatMapCoGroupsInPandas" not in plan and "MapInArrow" in plan
+    assert got == flat == {r.url for r in _urls(spark, 400, 600).collect()}
+
+    st.delete_urls(_urls(spark, 100, 200))  # tombstones pending
+    _, _, (got, flat) = both()
+    recrawlable = _urls(spark, 100, 200).union(_urls(spark, 400, 600))
+    assert got == flat == {r.url for r in recrawlable.collect()}
+    st.apply_deletes(n_files=2)  # tombstones purged
+    _, _, (got_purged, flat) = both()
+    assert got_purged == flat == got
+
+
+def test_anti_join_task_keeps_tombstoned_urls_that_probe_maybe_seen(spark, root, monkeypatch):
+    """A deleted url whose fingerprint still probes maybe-seen (a filter
+    collision) is kept: the bucket read subtracts the tombstones."""
+    from crawler_spark.operators import seen_state
+    from crawler_spark.operators.cuckoo import cuckoo_hash_fp
+
+    st = _cuckoo(spark, root, bucketed_parts=8, write_tasks=4)
+    st.commit_batch(_urls(spark, 0, 300), batch_id=1)
+    st.delete_urls(_urls(spark, 0, 100))
+    cands = _frontier_of(_urls(spark, 0, 300))
+    task = _anti_join_task(st, cands, monkeypatch)
+    ch, fp = cuckoo_hash_fp("url")
+    keyed = (
+        cands.withColumn("_sb", SeenState._part_expr("url", 8))
+        .withColumn("_ch", ch)
+        .withColumn("_fp", fp)
+        .orderBy(F.pmod("_sb", F.lit(4)), "_sb")
+        .toPandas()
+    )
+    # every candidate probes maybe-seen, so every bucket is read
+    monkeypatch.setattr(seen_state, "_probe_table", lambda t, h, f: np.ones(len(h), dtype=bool))
+    batch = pa.RecordBatch.from_pandas(keyed, preserve_index=False)
+    kept = {u for out in task(iter([batch])) for u in out.column("url").to_pylist()}
+    assert kept == {r.url for r in _urls(spark, 0, 100).collect()}
 
 
 def test_cuckoo_delete_urls_makes_them_recrawlable(spark, root):

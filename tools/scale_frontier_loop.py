@@ -31,8 +31,9 @@ Usage:
         [--out BENCH/scale_1e9_loop.json] [--resume] [--buckets=B]
 
 --buckets=B sets the number of url_seen bucket directories (default
-256). The exact maybe-seen check resolves bucket-wise
-(SeenState.anti_join), so the accumulated seen table is never shuffled —
+256). Seen resolves bucket-wise in one pass that probes the cuckoo
+filter first (SeenState.anti_join), so neither the accumulated seen
+table nor the filter is shuffled —
 the one per-batch cost that would otherwise grow with TOTAL crawl state
 (a flat anti-join reshuffles ~4 GB of seen rows per batch at 10^8 seen).
 The cuckoo filter uses gcd(64, B) partitions, so B need not be a
@@ -110,11 +111,7 @@ def main() -> None:
     import bench
     from crawler_spark.operators.cuckoo import BUCKET_SLOTS
     from crawler_spark.operators.politeness import broadcast_robots, host_quotas
-    from crawler_spark.operators.scheduler import (
-        drain_ordered,
-        release_barrier,
-        schedule_batch,
-    )
+    from crawler_spark.operators.scheduler import drain_ordered, schedule_batch
     from crawler_spark.operators.seen_state import SeenState
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -165,17 +162,14 @@ def main() -> None:
     # untimed warm-up (JIT + python worker pool), tiny and state-free
     warm = bench.make_frontier(spark, 100_000).persist()
     warm.count()
-    ws, wb = schedule_batch(
+    ws, _ = schedule_batch(
         warm,
         # same seen-resolution path as the measured loop: a flat join here
         # would reshuffle the whole accumulated seen table on --resume
-        exact_anti_join=st.anti_join,
-        bloom=st.blobs(), robots_bcast=robots_b, quotas=quotas,
-        default_k=1000, salt_span=250, max_quota=1000, n_bloom_parts=n_parts,
-        seen_filter=st.filter_kind,
+        exact_anti_join=st.anti_join, robots_bcast=robots_b, quotas=quotas,
+        default_k=1000, salt_span=250, max_quota=1000,
     )
     drain_ordered(ws, n_buckets=sc.defaultParallelism * 4).count()
-    release_barrier(wb)
     warm.unpersist()
 
     batches = []
@@ -199,25 +193,21 @@ def main() -> None:
 
         sm0 = _shuffle_metrics(spark)
         t0 = time.monotonic()
-        scheduled, barrier = schedule_batch(
+        scheduled, _ = schedule_batch(
             frontier,
-            # the seen table is never shuffled — the bucket-wise resolver
-            # reads each bucket's committed files directly
+            # neither the seen table nor the filter is shuffled — the
+            # resolver probes the filter and reads each bucket's files
             exact_anti_join=st.anti_join,
-            bloom=st.blobs(),
             robots_bcast=robots_b,
             quotas=quotas,
             default_k=1000,
             salt_span=250,
             max_quota=1000,
-            n_bloom_parts=n_parts,
-            seen_filter=st.filter_kind,
         )
         drained = drain_ordered(
             scheduled, n_buckets=sc.defaultParallelism * 4
         ).persist(StorageLevel.DISK_ONLY)
         n_sched = drained.count()
-        release_barrier(barrier)
         t_drain = time.monotonic() - t0
 
         # frontier cache is dead weight once the batch is materialized;
