@@ -114,64 +114,56 @@ def bloom_prefilter(
     candidates: DataFrame,
     bloom: DataFrame,
     n_parts: int = 64,
-    mode: str = "auto",
 ) -> DataFrame:
     """Tag candidates with ``maybe_seen``. The bitmap width is carried by
     the blob itself (m_bits = 8 * len(blob)); maybe_seen=false is
     authoritative (no false negatives). n_parts MUST match the build.
 
-    Delivery of the blobs to the probe tasks:
-    - ``cogroup``: shuffle candidates by bloom_part; each task probes
-      exactly one blob. The only option at 10^10 scale (total filter ~15
-      GiB — never driver- or executor-resident in full).
-    - ``broadcast``: ship ALL blobs to every executor, probe inside
-      mapInPandas in the same stage as the scan — zero shuffle. Right
-      whenever the filter fits comfortably in an executor (<~128 MiB).
-    - ``auto`` (default): broadcast when the total blob size is under
-      BROADCAST_BLOOM_MAX_BYTES, else cogroup — the same auto-threshold
-      logic Spark applies to broadcast joins."""
+    How the blobs reach the probe tasks depends on the filter's size
+    (one blob's size times ``n_parts``), the same threshold logic Spark
+    applies to broadcast joins:
+    - under BROADCAST_BLOOM_MAX_BYTES: ship ALL blobs to every executor
+      and probe inside mapInArrow in the same stage as the scan — zero
+      shuffle;
+    - otherwise: cogroup — shuffle candidates by bloom_part, so each
+      task probes exactly one blob. The only option at 10^10 scale
+      (total filter ~15 GiB — never driver- or executor-resident in
+      full)."""
     keyed = add_bloom_keys(candidates, n_parts=n_parts)
 
-    if mode == "auto" or mode == "broadcast":
-        blobs = {int(r.bloom_part): bytes(r.blob) for r in bloom.collect()} if (
-            mode == "broadcast"
-        ) else None
-        if blobs is None:
-            # peek at size cheaply: one blob * n_parts upper bound
-            first = bloom.select("blob").head(1)
-            est = (len(first[0].blob) if first else 0) * n_parts
-            if est <= BROADCAST_BLOOM_MAX_BYTES:
-                blobs = {int(r.bloom_part): bytes(r.blob) for r in bloom.collect()}
-        if blobs is not None:
-            import pyarrow as pa
+    # peek at size cheaply: one blob * n_parts upper bound
+    first = bloom.select("blob").head(1)
+    if (len(first[0].blob) if first else 0) * n_parts <= BROADCAST_BLOOM_MAX_BYTES:
+        import pyarrow as pa
 
-            bcast = candidates.sparkSession.sparkContext.broadcast(blobs)
-            names = [f.name for f in candidates.schema.fields] + ["maybe_seen"]
+        blobs = {int(r.bloom_part): bytes(r.blob) for r in bloom.collect()}
+        bcast = candidates.sparkSession.sparkContext.broadcast(blobs)
+        names = [f.name for f in candidates.schema.fields] + ["maybe_seen"]
 
-            def _probe_bcast(it):
-                # mapInArrow: the candidate string columns pass through as
-                # Arrow buffers — no pandas object materialization (which
-                # anti-scales past ~8 workers on allocator contention).
-                local = bcast.value
-                for b in it:
-                    parts = b.column("bloom_part").to_numpy()
-                    h1 = b.column("h1").to_numpy()
-                    h2 = b.column("h2").to_numpy()
-                    maybe = np.zeros(len(parts), dtype=bool)
-                    for part in np.unique(parts):
-                        blob = local.get(int(part))
-                        if blob is None:
-                            continue
-                        sel = parts == part
-                        bits = np.frombuffer(blob, dtype=np.uint8)
-                        maybe[sel] = probe_bits(bits, h1[sel], h2[sel], len(bits) * 8)
-                    keep = [b.column(n) for n in names[:-1]]
-                    yield pa.record_batch(keep + [pa.array(maybe)], names=names)
+        def _probe_bcast(it):
+            # mapInArrow: the candidate string columns pass through as
+            # Arrow buffers — no pandas object materialization (which
+            # anti-scales past ~8 workers on allocator contention).
+            local = bcast.value
+            for b in it:
+                parts = b.column("bloom_part").to_numpy()
+                h1 = b.column("h1").to_numpy()
+                h2 = b.column("h2").to_numpy()
+                maybe = np.zeros(len(parts), dtype=bool)
+                for part in np.unique(parts):
+                    blob = local.get(int(part))
+                    if blob is None:
+                        continue
+                    sel = parts == part
+                    bits = np.frombuffer(blob, dtype=np.uint8)
+                    maybe[sel] = probe_bits(bits, h1[sel], h2[sel], len(bits) * 8)
+                keep = [b.column(n) for n in names[:-1]]
+                yield pa.record_batch(keep + [pa.array(maybe)], names=names)
 
-            out_schema = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
-            ) + ", maybe_seen boolean"
-            return keyed.mapInArrow(_probe_bcast, out_schema)
+        out_schema = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
+        ) + ", maybe_seen boolean"
+        return keyed.mapInArrow(_probe_bcast, out_schema)
 
     def _probe(cands: pd.DataFrame, blobs: pd.DataFrame) -> pd.DataFrame:
         out = cands.drop(columns=["h1", "h2"])

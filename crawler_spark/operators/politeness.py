@@ -151,15 +151,16 @@ def broadcast_robots(spark: SparkSession, robots: DataFrame):
 
 
 # Broadcast cap, in hosts-with-rules. ~100k compiled tries is tens of MB on
-# the driver and per executor — comfortably under the same ceiling the Bloom
-# auto-mode uses (bloom.BROADCAST_BLOOM_MAX_BYTES); past it the rules stay a
-# host-partitioned DataFrame and evaluation becomes a co-partitioned join.
+# the driver and per executor — comfortably under the ceiling the Bloom
+# prefilter broadcasts under (bloom.BROADCAST_BLOOM_MAX_BYTES); past it the
+# rules stay a host-partitioned DataFrame and evaluation becomes a
+# co-partitioned join.
 BROADCAST_ROBOTS_MAX_HOSTS = 100_000
 
 
 class RobotsIndex:
     """Delivery-mode handle for robots rules (mirrors bloom_prefilter's
-    broadcast-vs-cogroup auto-mode, bloom.py):
+    size-based broadcast-vs-cogroup choice, bloom.py):
 
     - ``broadcast``: compiled tries in a Spark broadcast — the fixture /
       small-crawl fast path (zero shuffle, dict lookup per URL).

@@ -1,11 +1,12 @@
 """URL-seen state for a long-running frontier drain — the product form of
 the state discipline tools/scale_frontier_loop.py measures at 10^9.
 
-One `SeenState` owns three tables in a SnapshotParquetStore:
+One `SeenState` owns two tables in a SnapshotParquetStore:
 
-- ``url_seen`` (delta): append-only URL rows, hash-bucketed into
-  ``seen_bucket=<b>`` hive directories — the exact side of the membership
-  check.
+- ``url_seen`` (delta): URL rows, hash-bucketed into ``seen_bucket=<b>``
+  hive directories — the exact side of the membership check. Batches
+  append to it; :meth:`delete_urls` rewrites it without the deleted
+  URLs.
 - ``seen_cuckoo`` (full): the partitioned cuckoo-filter blobs
   (operators/cuckoo.py), the prefilter side. :meth:`anti_join` resolves
   all candidates in one bucket-ordered pass: it probes each bucket's
@@ -15,9 +16,10 @@ One `SeenState` owns three tables in a SnapshotParquetStore:
   wider from the seen table (amortized O(1) per batch), and
   :meth:`delete_urls` evicts fingerprints, so a deleted source's URLs
   stop probing maybe-seen without a rebuild.
-- ``url_deleted`` (delta, bucketed like ``url_seen``): tombstones,
-  subtracted from every membership read until :meth:`apply_deletes`
-  purges them physically.
+
+A delete changes both tables in the one commit, so no committed state
+has a URL evicted from the filter but still in ``url_seen``, or the
+reverse.
 
 Committing through the store (rather than chaining ``persist()`` handles
 or ad-hoc parquet dirs) buys the drain loop what the crawl engine's
@@ -36,7 +38,10 @@ constructor compares HEAD's record with its own settings once, raising
 by an earlier version with a flat ``url_seen`` or a Bloom filter. A
 mismatched open would probe the wrong filter partitions or bucket
 directories, tag already-seen URLs definitely-new and re-schedule them —
-the one error the two-tier check cannot absorb.
+the one error the two-tier check cannot absorb. A store that an earlier
+version left with deletes pending (rows in its ``url_deleted`` tombstone
+table, not yet purged) refuses too: its filter has already evicted those
+URLs, but ``url_seen`` still holds them.
 
 Reference contrast: the reference's URL-seen is a per-crawl in-memory
 ``set`` lost on crash (the reference's backend/domain/entities.py:153);
@@ -75,7 +80,6 @@ class SeenStateMismatch(ValueError):
 class SeenState:
     TABLE_SEEN = "url_seen"
     TABLE_CUCKOO = "seen_cuckoo"
-    TABLE_DELETED = "url_deleted"
 
     BUCKET_COL = "seen_bucket"
 
@@ -165,6 +169,12 @@ class SeenState:
                     f"opened with {self._layout}; open it with the settings "
                     "it was written with"
                 )
+            if head.tables.get("url_deleted", {}).get("rows", 0):
+                raise SeenStateMismatch(
+                    f"store at {root!r} has deletes pending in 'url_deleted', "
+                    "written by an earlier version; purge them with that "
+                    "version's apply_deletes before opening it here"
+                )
 
     def _stamp(self, bid: int, metrics: dict | None = None) -> dict:
         """Commit metrics carrying the logical batch id and the layout
@@ -197,7 +207,7 @@ class SeenState:
         the caller-facing counter the idempotent-redelivery guard checks.
 
         The store's ``batch_id`` counts COMMITS, and SeenState itself
-        commits internally (a delete, a purge, a compaction), so the two
+        commits internally (a delete, a compaction), so the two
         namespaces diverge: a caller supplying its own sequential
         batch_ids — the exact use case the redelivery contract invites —
         would otherwise have the first fresh batch after any
@@ -211,22 +221,11 @@ class SeenState:
         return int(head.metrics.get(self.METRIC_LOGICAL, 0)) if head else 0
 
     def seen(self) -> DataFrame:
-        """The exact membership side: every committed url MINUS the
-        tombstoned (deleted) ones — a deleted source's URLs are
-        re-crawlable, exactly the reference's delete-pages-with-source
-        semantics. The tombstone anti-join only appears in the plan when
-        deletions exist."""
+        """The exact membership side: every committed url. A deleted
+        source's URLs are gone from it (``delete_urls`` rewrites the
+        table), so they are re-crawlable, exactly the reference's
+        delete-pages-with-source semantics."""
         df = self.store.read(self.TABLE_SEEN)
-        if df is None:
-            return self._empty
-        dels = self.store.read(self.TABLE_DELETED)
-        if dels is not None:
-            df = df.join(dels.select(self.url_col), self.url_col, "left_anti")
-        return df
-
-    def deleted(self) -> DataFrame:
-        """Tombstoned URLs awaiting physical purge (apply_deletes)."""
-        df = self.store.read(self.TABLE_DELETED)
         return df if df is not None else self._empty
 
     def blobs(self) -> DataFrame:
@@ -244,18 +243,17 @@ class SeenState:
         the slot load that ``rebuild_fill`` is compared against."""
         return cuckoo_load(self.blobs()).withColumnRenamed("load", "fill")
 
-    def bucket_files(self, table: str | None = None) -> dict[int, list[str]]:
+    def bucket_files(self) -> dict[int, list[str]]:
         """bucket id -> absolute parquet paths across every committed
-        delta directory of ``table`` (default url_seen; driver-side
-        directory listing over the manifest's file list — no Spark job).
-        After a ``compact`` the list is one directory; between
-        compactions it is one per batch."""
-        table = table or self.TABLE_SEEN
+        directory of url_seen (driver-side directory listing over the
+        manifest's file list — no Spark job). After a ``compact`` or a
+        ``delete_urls`` the list is one directory; between them it is one
+        per batch."""
         head = self.store.head()
         out: dict[int, list[str]] = {}
-        if head is None or table not in head.tables:
+        if head is None or self.TABLE_SEEN not in head.tables:
             return out
-        for rel in head.tables[table]["files"]:
+        for rel in head.tables[self.TABLE_SEEN]["files"]:
             base = os.path.join(self.store.root, "snapshots", rel)
             for d in glob.glob(os.path.join(base, f"{self.BUCKET_COL}=*")):
                 b = int(d.rsplit("=", 1)[1])
@@ -272,8 +270,8 @@ class SeenState:
         Candidates are hash-clustered by bucket and sorted by (filter
         part, bucket) within each task. Per bucket run, the task probes
         its part's filter table, read from the committed ``seen_cuckoo``
-        files; only maybe-seen rows open the bucket's seen and tombstone
-        files (pyarrow, ~|seen|/B rows) for one exact ``is_in`` on full
+        files; only maybe-seen rows open the bucket's seen files
+        (pyarrow, ~|seen|/B rows) for one exact ``is_in`` on full
         URLs. A task holds one filter table and one bucket at a time;
         buckets whose candidates all probe definitely-new are never read.
         The reference analog is the in-memory ``set`` lookup (the
@@ -300,7 +298,7 @@ class SeenState:
                     pass
             (crel,) = head.tables[self.TABLE_CUCKOO]["files"]  # a full table: one dir
             cdir = os.path.join(self.store.root, "snapshots", crel)
-            paths = (fmap, self.bucket_files(self.TABLE_DELETED), cdir)
+            paths = (fmap, cdir)
             cached = self._aj_bcast = (head.snapshot_id, self.spark.sparkContext.broadcast(paths))
         bc = cached[1]
         out_schema = candidates.schema
@@ -324,7 +322,7 @@ class SeenState:
             import pyarrow.compute as pc
             import pyarrow.parquet as pq
 
-            seen_files, del_files, cdir = bc.value
+            seen_files, cdir = bc.value
             table: tuple = (-1, None)  # (filter part, its table; None = no blob, all new)
             held: tuple = (-1, None)  # (bucket, its live urls)
 
@@ -335,15 +333,8 @@ class SeenState:
                 return np.frombuffer(blob.column(0)[0].as_py(), np.uint16).reshape(-1, BUCKET_SLOTS)
 
             def _bucket_set(b: int):
-                vals = pq.read_table(seen_files[b], columns=[store_col]).column(store_col)
-                dels = del_files.get(b)
-                if dels:
-                    # tombstoned urls are re-crawlable: NOT seen
-                    gone = pq.read_table(dels, columns=[store_col]).column(store_col)
-                    vals = pc.filter(
-                        vals, pc.invert(pc.is_in(vals, value_set=gone.combine_chunks()))
-                    )
-                return vals.combine_chunks()
+                urls = pq.read_table(seen_files[b], columns=[store_col]).column(store_col)
+                return urls.combine_chunks()
 
             for rb in batches:
                 sb = rb.column("_sb").to_numpy()
@@ -400,30 +391,15 @@ class SeenState:
         already-seen URL is harmless for membership but inflates the
         seen table. Re-committing an already-committed batch_id is a
         no-op (guarded on the LOGICAL counter, see ``last_logical`` —
-        the store's own batch_id also counts internal delete/purge/compact
+        the store's own batch_id also counts internal delete/compact
         commits, so it cannot be the redelivery namespace)."""
         head = self.store.head()
         last = self.last_logical()
         bid = batch_id if batch_id is not None else last + 1
         if head is not None and bid <= last:
             return head, {"redelivered": True}
-        # cluster the batch's rows by bucket BEFORE the partitioned write:
-        # each bucket's files then come from exactly one task (~B files
-        # per commit instead of tasks*B splinters)
-        new_urls = (
-            new_seen.select(F.col(self.url_col))
-            .withColumn(self.BUCKET_COL, self._bucket_expr())
-            .repartition(self.write_tasks, F.col(self.BUCKET_COL))
-        )
+        new_urls = self._clustered(new_seen)
         new_keys = new_urls.select(F.col(self.url_col).alias("url"))
-        # a re-crawled url leaves the tombstone set (it is seen again);
-        # tombstones are small (a deleted source's pages), so the rewrite
-        # is cheap and only happens while deletions are pending
-        full_tables: dict[str, DataFrame] = {}
-        if head is not None and head.tables.get(self.TABLE_DELETED, {}).get("rows", 0):
-            full_tables[self.TABLE_DELETED] = self.store.read(self.TABLE_DELETED).join(
-                new_urls.select(self.url_col), self.url_col, "left_anti"
-            )
         blobs = self.blobs()
         has_blobs = bool(head and head.tables.get(self.TABLE_CUCKOO, {}).get("rows", 0))
         nb = self._initial_buckets
@@ -436,15 +412,14 @@ class SeenState:
                 nb = self._wider(nb, self.seen().count())
                 blobs = build_cuckoo(self._keys(self.seen()), n_parts=self.n_parts, n_buckets=nb)
                 info.update(rebuilt=True, n_buckets=nb)
-        pcols = {self.TABLE_SEEN: [self.BUCKET_COL], self.TABLE_DELETED: [self.BUCKET_COL]}
 
         def _commit(filt: DataFrame, extra: dict | None = None) -> Manifest:
             return self.store.commit(
                 head.batch_id + 1 if head else 1,
-                full_tables={self.TABLE_CUCKOO: filt, **full_tables},
+                full_tables={self.TABLE_CUCKOO: filt},
                 delta_tables={self.TABLE_SEEN: new_urls},
                 metrics=self._stamp(bid, {**(metrics or {}), **(extra or {})}),
-                partition_cols=pcols,
+                partition_cols={self.TABLE_SEEN: [self.BUCKET_COL]},
             )
 
         try:
@@ -472,6 +447,17 @@ class SeenState:
             info.update(rebuilt=True, n_buckets=nb, overflow_recovered=True)
         return man, info
 
+    def _clustered(self, urls: DataFrame) -> DataFrame:
+        """``urls``' url column plus its bucket, clustered by bucket BEFORE
+        a partitioned write of url_seen: each bucket's files then come
+        from exactly one of ``write_tasks`` tasks (~B files per commit
+        instead of tasks*B splinters)."""
+        return (
+            urls.select(F.col(self.url_col))
+            .withColumn(self.BUCKET_COL, self._bucket_expr())
+            .repartition(self.write_tasks, F.col(self.BUCKET_COL))
+        )
+
     def _keys(self, df: DataFrame) -> DataFrame:
         return df.select(F.col(self.url_col).alias("url"))
 
@@ -486,16 +472,15 @@ class SeenState:
     ) -> tuple[Manifest, dict]:
         """Remove URLs from the seen state (the drain-scale form of the
         reference's delete-source-cascades-to-pages, the reference's
-        backend/service/services.py:317-324): append them to the
-        ``url_deleted`` tombstone table — ``seen()`` and the bucket-wise
-        ``anti_join`` subtract tombstones, so the URLs are immediately
-        re-crawlable — and evict their fingerprints from the cuckoo
-        blobs so the maybe slice stays truthful WITHOUT a rebuild.
+        backend/service/services.py:317-324) in ONE commit: rewrite
+        ``url_seen`` without them, so they are immediately re-crawlable,
+        and evict their fingerprints from the cuckoo blobs, so the maybe
+        slice stays truthful WITHOUT a rebuild.
 
         Eviction safety: deletions are first deduplicated and
         restricted to CURRENTLY-SEEN urls. A cuckoo filter's deletion
         is only safe for keys that were actually inserted — evicting a
-        key that is absent (never committed, tombstoned already, or a
+        key that is absent (never committed, deleted already, or a
         duplicate row in ``urls``) can remove a colliding fingerprint
         belonging to a DIFFERENT live url, and a prefilter false
         negative is the one error class the two-tier design cannot
@@ -503,20 +488,25 @@ class SeenState:
         entirely and would be double-crawled). With the semi-join
         guard, two live urls sharing a (bucket, fingerprint) each own
         one inserted copy, so deleting one leaves the other's copy in
-        place — the standard counting argument. Physical purge of the
-        url_seen rows happens at ``apply_deletes``. This is an internal
-        commit: it advances the store counter but NOT the logical batch
-        id."""
+        place — the standard counting argument.
+
+        Cost: every call rewrites url_seen (O(|seen|), clustered by
+        bucket over ``write_tasks`` tasks, as a batch commit is). A
+        caller that deletes several times between batches pays that
+        rewrite per call; it should gather the URLs into one call. This
+        is an internal commit: it advances the store counter but NOT the
+        logical batch id."""
         head = self.store.head()
         if head is None:
             raise ValueError("delete_urls: nothing committed yet")
+        live = self.seen().select(self.url_col)
         dels = (
             urls.select(F.col(self.url_col))
             .dropDuplicates([self.url_col])
-            .join(self.seen().select(self.url_col), self.url_col, "left_semi")
-            .withColumn(self.BUCKET_COL, self._bucket_expr())
+            .join(live, self.url_col, "left_semi")
         )
-        full_tables: dict[str, DataFrame] = {}
+        kept = live.join(dels, self.url_col, "left_anti")
+        full_tables = {self.TABLE_SEEN: self._clustered(kept)}
         if head.tables.get(self.TABLE_CUCKOO, {}).get("rows", 0):
             full_tables[self.TABLE_CUCKOO] = delete_from_cuckoo(
                 self.blobs(), self._keys(dels), n_parts=self.n_parts
@@ -524,48 +514,27 @@ class SeenState:
         man = self.store.commit(
             head.batch_id + 1,
             full_tables=full_tables,
-            delta_tables={self.TABLE_DELETED: dels},
             metrics=self._stamp(
                 self.last_logical(), {**(metrics or {}), "event": "delete_urls"}
             ),
-            partition_cols={self.TABLE_DELETED: [self.BUCKET_COL]},
+            partition_cols={self.TABLE_SEEN: [self.BUCKET_COL]},
         )
-        return man, {"filter_evicted": bool(full_tables)}
+        return man, {"filter_evicted": self.TABLE_CUCKOO in full_tables}
 
-    def apply_deletes(self, n_files: int = 8) -> Manifest:
-        """Physically purge tombstoned rows: rewrite url_seen as
-        ``seen()`` (already tombstone-subtracted) and clear the
-        tombstone table — the engine's compaction-cadence companion, so
-        steady-state deletes cost an append + blob eviction and the
-        O(|seen|) rewrite is paid on the same schedule as ``compact``."""
-        head = self.store.head()
-        if head is None:
-            raise ValueError("apply_deletes: nothing committed yet")
-        if not head.tables.get(self.TABLE_DELETED, {}).get("rows", 0):
-            return head  # no tombstones pending: nothing to purge
-        # n_files tasks, each writing whole buckets => ~one file per
-        # bucket (same bounding contract as store.compact)
-        return self.store.commit(
-            head.batch_id + 1,
-            full_tables={
-                self.TABLE_SEEN: self.seen().repartition(n_files, F.col(self.BUCKET_COL)),
-                self.TABLE_DELETED: self.deleted().limit(0),
-            },
-            metrics=self._stamp(self.last_logical(), {"event": "apply_deletes"}),
-            partition_cols={
-                self.TABLE_SEEN: [self.BUCKET_COL],
-                self.TABLE_DELETED: [self.BUCKET_COL],
-            },
-        )
+    def apply_deletes(self) -> Manifest | None:
+        """A no-op that returns HEAD: ``delete_urls`` already purges the
+        deleted URLs from url_seen in its own commit. Kept for callers
+        written against the earlier two-step delete-then-purge API."""
+        return self.store.head()
 
     def expire(self, keep_last: int = 2) -> dict:
         """Drop old snapshots' files. Retention is directory-granular and
         every snapshot dir stays referenced through the url_seen delta
         chain, so superseded blob files inside kept-but-old dirs reclaim
-        only after ``compact`` rewrites the delta history into one dir:
-        call ``compact("url_seen")`` every N batches (the engine's own
-        cadence) and expire then — history cost stays ~keep_last blob
-        tables, not one per batch."""
+        only after ``compact`` (or a ``delete_urls``) rewrites url_seen
+        into one dir: call ``compact()`` every N batches (the engine's
+        own cadence) and expire then — history cost stays ~keep_last
+        blob tables, not one per batch."""
         return self.store.expire_snapshots(keep_last=keep_last)
 
     def compact(self, n_files: int = 8) -> Manifest:
@@ -574,8 +543,8 @@ class SeenState:
         including every superseded blob table that shared them). The
         compaction commit carries the current logical batch id forward
         so ``last_logical`` (and any loop cursor) survives even when
-        ``expire(keep_last=2)`` keeps only internal (delete, purge,
-        compact) manifests."""
+        ``expire(keep_last=2)`` keeps only internal (delete, compact)
+        manifests."""
         return self.store.compact(
             self.TABLE_SEEN,
             n_files=n_files,

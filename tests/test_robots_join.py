@@ -2,7 +2,7 @@
 
 broadcast_robots collects every rule to the driver — fine at fixture
 scale, tens of GB at 10^7-10^8 hosts-with-rules. robots_index(mode='auto')
-mirrors bloom_prefilter's auto-mode: broadcast under
+mirrors bloom_prefilter's size-based choice: broadcast under
 BROADCAST_ROBOTS_MAX_HOSTS, else keep the rules a host-partitioned
 DataFrame and evaluate via a co-partitioned left join + per-host trie
 compile inside an Arrow UDF. These tests pin (a) verdict equivalence

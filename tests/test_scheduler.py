@@ -36,6 +36,27 @@ def test_bloom_no_false_negatives(spark):
     assert fp / len(unseen) < 0.05
 
 
+def test_bloom_prefilter_cogroups_a_filter_too_big_to_broadcast(spark, monkeypatch):
+    """Past BROADCAST_BLOOM_MAX_BYTES the blobs reach the probe tasks by a
+    cogroup instead of a broadcast; both deliveries tag alike."""
+    from crawler_spark.operators import bloom as bloom_mod
+
+    def urls(step):
+        return spark.createDataFrame(
+            [(f"https://h{i % 7}.org/p/{i}",) for i in range(0, 900, step)], "url string"
+        )
+
+    bloom = build_bloom(urls(3), n_parts=8, m_bits_per_part=1 << 14)
+    cand = urls(1)
+    broadcast = bloom_prefilter(cand, bloom, n_parts=8)
+    monkeypatch.setattr(bloom_mod, "BROADCAST_BLOOM_MAX_BYTES", 0)
+    cogrouped = bloom_prefilter(cand, bloom, n_parts=8)
+    plan = cogrouped._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInPandas" in plan
+    assert cogrouped.schema == broadcast.schema
+    assert {tuple(r) for r in cogrouped.collect()} == {tuple(r) for r in broadcast.collect()}
+
+
 def test_schedule_matches_naive(spark):
     rows = []
     for h in range(4):

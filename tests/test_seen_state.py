@@ -113,18 +113,16 @@ def test_expire_bounds_blob_history(spark, root):
 
 def test_explicit_batch_ids_survive_internal_rebuild_commits(spark, root):
     """Logical-vs-store batch-id namespaces (ADVICE r4): SeenState commits
-    internally at the store's next batch_id (``delete_urls``, the
-    ``apply_deletes`` rewrite of url_seen, ``compact``; a cuckoo rebuild
-    rides the data commit), so a caller using its own sequential
-    batch_ids must NOT have its next fresh batch classified as
+    internally at the store's next batch_id (``delete_urls``, ``compact``;
+    a cuckoo rebuild rides the data commit), so a caller using its own
+    sequential batch_ids must NOT have its next fresh batch classified as
     redelivered — the guard runs on the logical counter carried in
     manifest metrics, not the store's commit counter."""
     st = SeenState(spark, root, n_parts=4, expected_keys=1_000)
     st.commit_batch(_urls(spark, 0, 300), batch_id=1)
     st.delete_urls(_urls(spark, 0, 50))
-    st.apply_deletes(n_files=2)
     st.compact(n_files=2)
-    assert st.batch_id() == 4  # store counter ran ahead of the logical id
+    assert st.batch_id() == 3  # store counter ran ahead of the logical id
 
     # the first fresh batch after the internal commits must land, not no-op
     _, info2 = st.commit_batch(_urls(spark, 300, 400), batch_id=2)
@@ -143,19 +141,18 @@ def test_explicit_batch_ids_survive_internal_rebuild_commits(spark, root):
 
 def test_logical_cursor_survives_rebuild_plus_compact_plus_expire(spark, root):
     """ADVICE r4 (loop cursor): when expire(keep_last=2) keeps only
-    internal commits — here a delete's ``apply_deletes`` rewrite of
-    url_seen and a compaction — the logical cursor must still be
-    readable from their metrics (previously --resume restarted at 0)."""
+    internal commits — here a ``delete_urls`` and a compaction — the
+    logical cursor must still be readable from their metrics (previously
+    --resume restarted at 0)."""
     st = SeenState(spark, root, n_parts=4, expected_keys=1_000)
     st.commit_batch(_urls(spark, 0, 300), batch_id=1)
     st.delete_urls(_urls(spark, 0, 50))
-    st.apply_deletes(n_files=2)
     st.compact(n_files=2)
     st.expire(keep_last=2)
     hist = st.store.history()
     assert len(hist) == 2
     # neither kept manifest is the original data commit...
-    assert all((m.metrics or {}).get("event") in ("apply_deletes", "compact") for m in hist)
+    assert all((m.metrics or {}).get("event") in ("delete_urls", "compact") for m in hist)
     # ...yet the cursor survives
     assert SeenState(spark, root, n_parts=4, expected_keys=1_000).last_logical() == 1
 
@@ -223,9 +220,9 @@ def test_bucketed_anti_join_with_renamed_candidate_column(spark, root):
 
 def test_empty_seen_state_reads_are_zero_partition(spark, root):
     st = _bucketed(spark, root)
-    for df in (st.seen(), st.deleted()):
-        assert df.schema.fieldNames() == ["url"]
-        assert df.rdd.getNumPartitions() == 0
+    df = st.seen()
+    assert df.schema.fieldNames() == ["url"]
+    assert df.rdd.getNumPartitions() == 0
 
 
 def test_bucketed_schedule_batch_equals_flat_schedule(spark, root):
@@ -405,8 +402,7 @@ def test_cuckoo_seen_state_schedules_like_bloom(spark, root):
 def test_resolver_schedule_has_no_prefilter_and_matches_bloom_across_deletes(spark, root):
     """With a resolver, schedule_batch hands it every candidate: no
     cogroup prefilter, no barrier — and the scheduled set equals the
-    stateless flat-seen + Bloom schedule with tombstones pending and
-    after they are purged."""
+    stateless flat-seen + Bloom schedule before and after a delete."""
     st = _cuckoo(spark, root, bucketed_parts=8, write_tasks=4)
     st.commit_batch(_urls(spark, 0, 400), batch_id=1)
     frontier = _frontier_of(_urls(spark, 0, 600))
@@ -431,39 +427,10 @@ def test_resolver_schedule_has_no_prefilter_and_matches_bloom_across_deletes(spa
     assert "FlatMapCoGroupsInPandas" not in plan and "MapInArrow" in plan
     assert got == flat == {r.url for r in _urls(spark, 400, 600).collect()}
 
-    st.delete_urls(_urls(spark, 100, 200))  # tombstones pending
+    st.delete_urls(_urls(spark, 100, 200))
     _, _, (got, flat) = both()
     recrawlable = _urls(spark, 100, 200).union(_urls(spark, 400, 600))
     assert got == flat == {r.url for r in recrawlable.collect()}
-    st.apply_deletes(n_files=2)  # tombstones purged
-    _, _, (got_purged, flat) = both()
-    assert got_purged == flat == got
-
-
-def test_anti_join_task_keeps_tombstoned_urls_that_probe_maybe_seen(spark, root, monkeypatch):
-    """A deleted url whose fingerprint still probes maybe-seen (a filter
-    collision) is kept: the bucket read subtracts the tombstones."""
-    from crawler_spark.operators import seen_state
-    from crawler_spark.operators.cuckoo import cuckoo_hash_fp
-
-    st = _cuckoo(spark, root, bucketed_parts=8, write_tasks=4)
-    st.commit_batch(_urls(spark, 0, 300), batch_id=1)
-    st.delete_urls(_urls(spark, 0, 100))
-    cands = _frontier_of(_urls(spark, 0, 300))
-    task = _anti_join_task(st, cands, monkeypatch)
-    ch, fp = cuckoo_hash_fp("url")
-    keyed = (
-        cands.withColumn("_sb", SeenState._part_expr("url", 8))
-        .withColumn("_ch", ch)
-        .withColumn("_fp", fp)
-        .orderBy(F.pmod("_sb", F.lit(4)), "_sb")
-        .toPandas()
-    )
-    # every candidate probes maybe-seen, so every bucket is read
-    monkeypatch.setattr(seen_state, "_probe_table", lambda t, h, f: np.ones(len(h), dtype=bool))
-    batch = pa.RecordBatch.from_pandas(keyed, preserve_index=False)
-    kept = {u for out in task(iter([batch])) for u in out.column("url").to_pylist()}
-    assert kept == {r.url for r in _urls(spark, 0, 100).collect()}
 
 
 def test_cuckoo_delete_urls_makes_them_recrawlable(spark, root):
@@ -471,7 +438,7 @@ def test_cuckoo_delete_urls_makes_them_recrawlable(spark, root):
     st.commit_batch(_urls(spark, 0, 500), batch_id=1)
     st.delete_urls(_urls(spark, 100, 200))  # "delete_source" cascade
     assert st.seen().count() == 400
-    assert st.deleted().count() == 100
+    assert st.store.head().tables[SeenState.TABLE_SEEN]["rows"] == 400
     # the internal delete commit does not advance the logical counter
     assert st.last_logical() == 1
 
@@ -489,35 +456,37 @@ def test_cuckoo_delete_urls_makes_them_recrawlable(spark, root):
     assert _all_maybe_seen(st, _urls(spark, 200, 300))
 
 
-def test_recrawl_after_delete_clears_tombstones(spark, root):
+def test_recrawl_after_delete(spark, root):
     st = _cuckoo(spark, root, bucketed_parts=16, write_tasks=4)
     st.commit_batch(_urls(spark, 0, 300), batch_id=1)
     st.delete_urls(_urls(spark, 0, 100))
-    # re-crawl 50 of the deleted urls: they are seen again and leave
-    # the tombstone set; the other 50 stay deleted
+    # re-crawl 50 of the deleted urls: they are seen again; the other 50
+    # stay new
     st.commit_batch(_urls(spark, 0, 50), batch_id=2)
-    assert st.deleted().count() == 50
-    assert st.anti_join(_frontier_of(_urls(spark, 0, 100))).count() == 50
+    assert st.seen().count() == 250
     assert {r.url for r in st.anti_join(_frontier_of(_urls(spark, 0, 100))).collect()} == {
         r.url for r in _urls(spark, 50, 100).collect()
     }
+    assert _all_maybe_seen(st, _urls(spark, 0, 50))
 
 
-def test_apply_deletes_purges_physically(spark, root):
+def test_delete_urls_purges_in_one_commit(spark, root):
     st = _cuckoo(spark, root, bucketed_parts=16, write_tasks=4)
     st.commit_batch(_urls(spark, 0, 400), batch_id=1)
+    before = st.store.head()
     st.delete_urls(_urls(spark, 300, 400))
-    st.apply_deletes(n_files=2)
     head = st.store.head()
+    assert head.snapshot_id == before.snapshot_id + 1  # one commit
     assert head.tables[SeenState.TABLE_SEEN]["rows"] == 300
-    assert head.tables[SeenState.TABLE_DELETED]["rows"] == 0
-    assert st.deleted().count() == 0
+    assert set(head.tables) == {SeenState.TABLE_SEEN, SeenState.TABLE_CUCKOO}
     assert st.seen().count() == 300
-    # bucketed layout survives the purge rewrite
+    # bucketed layout survives the rewrite
     assert head.tables[SeenState.TABLE_SEEN].get("partition_cols") == ["seen_bucket"]
+    assert len(head.tables[SeenState.TABLE_SEEN]["files"]) == 1
     assert st.anti_join(_frontier_of(_urls(spark, 200, 500))).count() == 200
-    # idempotent: nothing pending => no-op
+    # apply_deletes has nothing left to do: HEAD is returned unchanged
     assert st.apply_deletes().snapshot_id == head.snapshot_id
+    assert st.store.head().snapshot_id == head.snapshot_id
 
 
 def test_cuckoo_rebuilds_wider_before_saturating_insert(spark, root):
@@ -543,7 +512,8 @@ def test_cuckoo_delete_of_unseen_or_duplicate_urls_is_safe(spark, root):
         .unionAll(_urls(spark, 10_000, 10_200))
     )
     st.delete_urls(dels)
-    assert st.deleted().count() == 100  # deduped + seen-restricted
+    # deduped + seen-restricted
+    assert st.store.head().tables[SeenState.TABLE_SEEN]["rows"] == 300
     assert st.seen().count() == 300
     # NO false negatives among the 300 live urls
     assert _all_maybe_seen(st, _urls(spark, 100, 400))
@@ -642,3 +612,25 @@ def test_store_without_layout_record_refuses_at_open(spark, root):
     st.store.commit(1, full_tables={}, delta_tables={"url_seen": _urls(spark, 0, 100)})
     with pytest.raises(SeenStateMismatch):
         SeenState(spark, root, n_parts=4, expected_keys=5_000)
+
+
+def test_store_with_pending_tombstones_refuses_at_open(spark, root):
+    """An earlier version deleted in two commits: ``delete_urls`` evicted
+    the filter and appended tombstones to ``url_deleted``, and
+    ``apply_deletes`` later purged url_seen. A store stopped in between
+    holds URLs in url_seen that its filter no longer holds; opening it
+    would give a filter false negative for a seen URL. It refuses, and
+    leaves HEAD as it was."""
+    st = _cuckoo(spark, root)
+    st.commit_batch(_urls(spark, 0, 200), batch_id=1)
+    st.store.commit(
+        st.batch_id() + 1,
+        full_tables={},
+        delta_tables={"url_deleted": _urls(spark, 0, 50)},
+        metrics=st._stamp(st.last_logical(), {"event": "delete_urls"}),
+    )
+    head = st.store.head()
+    assert head.tables["url_deleted"]["rows"] == 50
+    with pytest.raises(SeenStateMismatch):
+        _cuckoo(spark, root)
+    assert st.store.head().snapshot_id == head.snapshot_id

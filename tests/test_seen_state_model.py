@@ -2,17 +2,21 @@
 
 A Hypothesis state machine drives a tiny store (2 filter partitions, 4
 url_seen buckets, a filter sized for a few hundred keys) through commits,
-redeliveries, deletes, purges, compactions, expiries and reopens. After
+redeliveries, deletes, compactions, expiries, reopens and crashes inside
+the store commit of a ``commit_batch`` or a ``delete_urls``. A crash must
+raise and leave HEAD, the staging area and the model as they were. After
 every step the store must agree with the model: ``seen()`` is the model
 set, ``anti_join`` drops exactly the model's URLs, the cuckoo prefilter
 gives no false negative for a live URL, and the logical cursor is the
 last committed batch id. Every run starts through both capacity paths
 of ``commit_batch``: a first batch that overflows the fresh filter (the
 overflow retry), then one that finds the retried filter past
-``rebuild_fill`` (the rebuild before an insert). The run is derandomized,
-so every tier-1 run replays the same steps.
+``rebuild_fill`` (the rebuild before an insert); then through one crash
+inside each call. The run is derandomized, so every tier-1 run replays
+the same steps.
 """
 
+import os
 import tempfile
 
 import pytest
@@ -25,6 +29,7 @@ from hypothesis.stateful import (
     rule,
     run_state_machine_as_test,
 )
+from pyspark.sql import functions as F
 
 from crawler_spark.operators.cuckoo import cuckoo_prefilter
 from crawler_spark.operators.seen_state import SeenState, SeenStateMismatch
@@ -66,6 +71,10 @@ class SeenStateMachine(RuleBasedStateMachine):
         assert self._commit(lo, 2_400).get("overflow_recovered")
         # the retried filter holds them at load ~0.29, past rebuild_fill
         assert self._commit(lo2, 40).get("rebuilt")
+        # a run of a few steps may never draw the crash rule: take it once
+        # per call here, so every run covers both
+        self.crash_inside_commit("commit_batch", lo2)
+        self.crash_inside_commit("delete_urls", lo)
 
     @rule(lo=STARTS, size=hs.sampled_from([40, 400, 1_200]))
     def commit(self, lo, size):
@@ -98,9 +107,26 @@ class SeenStateMachine(RuleBasedStateMachine):
         self.model.difference_update(urls)
         self.touched.update(urls)
 
-    @rule()
-    def apply_deletes(self):
-        self.st.apply_deletes(n_files=2)
+    @rule(call=hs.sampled_from(["commit_batch", "delete_urls"]), lo=STARTS)
+    def crash_inside_commit(self, call, lo):
+        # every row of the input fails when a write evaluates it, so the
+        # call gets as far as store.commit and fails there, as a write
+        # whose executor died does
+        boom = F.expr("CAST(assert_true(url IS NULL, 'injected crash') AS STRING)")
+        urls = self._df([_url(i) for i in range(lo, lo + 40)]).select(
+            F.coalesce(boom, F.col("url")).alias("url")
+        )
+        snap = self.st.store.head().snapshot_id
+        with pytest.raises(Exception) as err:
+            if call == "commit_batch":
+                self.st.commit_batch(urls, batch_id=len(self.batches) + 1)
+            else:
+                self.st.delete_urls(urls)
+        assert "injected crash" in str(err.value)
+        assert self.st.store.head().snapshot_id == snap
+        snaps = os.listdir(os.path.join(self.root, "snapshots"))
+        assert not [d for d in snaps if d.startswith("_tmp_")]
+        # the model is left as it was: the invariant checks the store is too
 
     @rule()
     def compact(self):

@@ -70,7 +70,7 @@ def test_bucketed_seen_state_reads_without_a_job_after_maintenance(spark, tmp_pa
     st.commit_batch(urls(0, 300), batch_id=1)
     st.commit_batch(urls(300, 500), batch_id=2)
     st.delete_urls(urls(100, 150))
-    st.apply_deletes(n_files=2)
+    st.apply_deletes()
     st.compact(n_files=2)
     # one more batch: url_seen is two partitioned dirs, read as a union
     st.commit_batch(urls(500, 600), batch_id=3)
