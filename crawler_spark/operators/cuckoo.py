@@ -52,8 +52,9 @@ LOAD_FACTOR = 0.8
 
 
 class CuckooOverflowError(ValueError):
-    """A key found no free slot within MAX_KICKS: the partition's table
-    is too small for its keys. Raised inside a Python worker, it reaches
+    """A partition's table is too small for its keys: a key found no free
+    slot within MAX_KICKS, or an insert found the table loaded past its
+    ``max_load``. Raised inside a Python worker, it reaches
     the driver wrapped in Spark's ``PythonException``, whose text carries
     this class's name."""
 
@@ -255,31 +256,23 @@ def cuckoo_prefilter(candidates: DataFrame, cuckoo: DataFrame, n_parts: int = 64
 def insert_into_cuckoo(
     cuckoo: DataFrame,
     new_seen: DataFrame,
+    n_buckets: int,
     n_parts: int = 64,
-    n_buckets: int | None = None,
+    max_load: float = 1.0,
 ) -> DataFrame:
     """Insert one batch's newly-seen URLs into an existing cuckoo filter —
     with delete_from_cuckoo the full add/remove lifecycle a mutable seen
     prefilter needs. Cogrouped: each task compacts + places into ONE
     partition's table; partitions with no new keys pass through untouched.
+    ``n_buckets`` is the width of a partition that has no table yet; a
+    partition that has one keeps its own width.
 
-    Capacity contract: tables are fixed-size, so size the build for the
-    crawl's expected seen count (LOAD_FACTOR 0.8 headroom) and watch
-    cuckoo_load; a partition that cannot place a key within MAX_KICKS
-    raises (deterministically), telling the caller to rebuild wider from
-    the seen table — once per doubling, amortized O(1) per batch.
-
-    n_buckets=None infers the geometry from the widest existing blob (one
-    64-row agg); pass it explicitly to skip that job per batch, or when
-    ``cuckoo`` may have no rows yet (nothing to infer from — raises)."""
-    if n_buckets is None:
-        widest = cuckoo.agg(F.max(F.length("blob"))).first()[0]
-        if not widest:
-            raise ValueError(
-                "insert_into_cuckoo: cannot infer table geometry from an "
-                "empty cuckoo table — pass n_buckets explicitly"
-            )
-        n_buckets = int(widest) // 2 // BUCKET_SLOTS
+    Capacity contract: tables are fixed-size, so the insert raises
+    ``CuckooOverflowError`` (deterministically) when a partition's
+    existing table is loaded past ``max_load`` before anything is placed,
+    or when a key finds no slot within MAX_KICKS. Both tell the caller to
+    rebuild wider from the seen table — once per doubling, amortized O(1)
+    per batch (``SeenState.commit_batch`` passes its ``rebuild_fill``)."""
     nb = int(n_buckets)
     keyed = add_cuckoo_keys(new_seen, n_parts=n_parts).select("cuckoo_part", "ch", "cfp")
 
@@ -291,6 +284,12 @@ def insert_into_cuckoo(
                 .reshape(-1, BUCKET_SLOTS)
                 .copy()
             )
+            load = float((table != 0).mean())
+            if load > max_load:
+                raise CuckooOverflowError(
+                    f"cuckoo partition {part} loaded past {max_load} "
+                    f"(load={load:.3f}, n_buckets={table.shape[0]})"
+                )
         else:
             table = np.zeros((nb, BUCKET_SLOTS), dtype=np.uint16)
         if len(keys):

@@ -12,8 +12,9 @@ One `SeenState` owns two tables in a SnapshotParquetStore:
   all candidates in one bucket-ordered pass: it probes each bucket's
   filter part and opens the bucket's files only for maybe-seen rows, so
   neither table is shuffled. Each batch's URLs are inserted
-  incrementally; a load check before the insert rebuilds the filter
-  wider from the seen table (amortized O(1) per batch), and
+  incrementally; an insert into a partition loaded past
+  ``rebuild_fill``, or one that overflows, fails and the commit rebuilds
+  the filter wider from the seen table (amortized O(1) per batch), and
   :meth:`delete_urls` evicts fingerprints, so a deleted source's URLs
   stop probing maybe-seen without a rebuild.
 
@@ -32,11 +33,11 @@ blobs from committed files).
 
 A store opens only with the settings it was written with. Every commit
 SeenState writes records the layout (``n_parts``, ``bucketed_parts``,
-``filter_kind``, ``url_col``) next to the logical batch id, and the
-constructor compares HEAD's record with its own settings once, raising
-:class:`SeenStateMismatch` on any difference — including a store written
-by an earlier version with a flat ``url_seen`` or a Bloom filter. A
-mismatched open would probe the wrong filter partitions or bucket
+``filter_kind``, ``url_col``) and the filter width next to the logical
+batch id, and the constructor compares HEAD's layout record with its own
+settings once, raising :class:`SeenStateMismatch` on any difference —
+including a store written by an earlier version with a flat ``url_seen``
+or a Bloom filter. A mismatched open would probe the wrong filter partitions or bucket
 directories, tag already-seen URLs definitely-new and re-schedule them —
 the one error the two-tier check cannot absorb. A store that an earlier
 version left with deletes pending (rows in its ``url_deleted`` tombstone
@@ -53,6 +54,7 @@ from __future__ import annotations
 import glob
 import os
 
+from pyspark.errors import PythonException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -85,6 +87,7 @@ class SeenState:
 
     METRIC_LOGICAL = "seen_logical_batch"
     METRIC_LAYOUT = "seen_layout"
+    METRIC_WIDTH = "seen_filter_buckets"
 
     def __init__(
         self,
@@ -93,7 +96,6 @@ class SeenState:
         n_parts: int = 64,
         expected_keys: int = 10_000_000,
         rebuild_fill: float = 0.5,
-        url_col: str = "url",
         bucketed_parts: int | None = None,
         write_tasks: int = 64,
         filter_kind: str = "cuckoo",
@@ -101,11 +103,12 @@ class SeenState:
         """``n_parts`` is the number of cuckoo-filter partitions (one blob
         each). ``expected_keys`` sizes a fresh store's filter (slots for
         the expected seen URLs at ~LOAD_FACTOR occupancy with headroom);
-        undersizing is safe — ``commit_batch`` rebuilds wider when the
-        committed slot load exceeds ``rebuild_fill`` before an insert,
-        and rebuilds sized for seen + batch if an insert still overflows.
-        On resume the geometry comes from the committed blobs, so
-        ``expected_keys`` only matters for a fresh store.
+        undersizing is safe — an insert into a partition whose committed
+        slot load exceeds ``rebuild_fill``, or one that overflows, fails,
+        and ``commit_batch`` rebuilds the filter sized for seen + batch.
+        On resume the width comes from HEAD's manifest, so
+        ``expected_keys`` only matters for a fresh store. The url column
+        is ``url``.
 
         ``bucketed_parts`` (B, default ``n_parts``) is the number of
         url_seen bucket directories: rows land under
@@ -126,8 +129,8 @@ class SeenState:
         (reference analog: page rows deleted with their source, the
         reference's backend/service/services.py:317-324).
 
-        ``n_parts``, ``bucketed_parts``, ``filter_kind`` and ``url_col``
-        fix the store's layout: reopening a committed store with any of
+        ``n_parts``, ``bucketed_parts`` and ``filter_kind`` fix the
+        store's layout: reopening a committed store with any of
         them changed raises :class:`SeenStateMismatch` here, before any
         read or write. ``expected_keys``, ``rebuild_fill`` and
         ``write_tasks`` only tune a fresh store or future commits and may
@@ -145,7 +148,6 @@ class SeenState:
         self.store = SnapshotParquetStore(spark, root)
         self.n_parts = n_parts
         self.rebuild_fill = rebuild_fill
-        self.url_col = url_col
         self.bucketed_parts = bucketed_parts
         self.write_tasks = write_tasks
         self.filter_kind = filter_kind
@@ -153,12 +155,12 @@ class SeenState:
         # power-of-two buckets per partition
         nb_need = max(256, expected_keys // max(n_parts, 1) // (BUCKET_SLOTS * 2) * 3)
         self._initial_buckets = 1 << (nb_need - 1).bit_length()
-        self._empty = empty_frame(spark, T.StructType([T.StructField(url_col, T.StringType())]))
+        self._empty = empty_frame(spark, T.StructType([T.StructField("url", T.StringType())]))
         self._layout = {
             "n_parts": n_parts,
             "bucketed_parts": bucketed_parts,
             "filter_kind": filter_kind,
-            "url_col": url_col,
+            "url_col": "url",
         }
         head = self.store.head()
         if head is not None and head.tables:
@@ -176,12 +178,27 @@ class SeenState:
                     "version's apply_deletes before opening it here"
                 )
 
-    def _stamp(self, bid: int, metrics: dict | None = None) -> dict:
-        """Commit metrics carrying the logical batch id and the layout
-        record — every commit SeenState writes goes through here, so
-        HEAD always holds both (see ``last_logical`` and the open-time
-        check in ``__init__``)."""
-        return {**(metrics or {}), self.METRIC_LOGICAL: bid, self.METRIC_LAYOUT: self._layout}
+    def _stamp(self, bid: int, metrics: dict | None = None, width: int | None = None) -> dict:
+        """Commit metrics carrying the logical batch id, the layout record
+        and the filter width (``width``, default HEAD's) — every commit
+        SeenState writes goes through here, so HEAD always holds all
+        three (see ``last_logical``, ``_width`` and the open-time check
+        in ``__init__``)."""
+        return {
+            **(metrics or {}),
+            self.METRIC_LOGICAL: bid,
+            self.METRIC_LAYOUT: self._layout,
+            self.METRIC_WIDTH: self._width() if width is None else width,
+        }
+
+    def _width(self) -> int:
+        """Buckets per filter partition, as HEAD records it. A fresh store,
+        or one written before the width was recorded, gets the initial
+        width: it sizes only a partition that has no table yet, because
+        every insert and probe takes an existing table's own width."""
+        head = self.store.head()
+        width = head.metrics.get(self.METRIC_WIDTH) if head else None
+        return int(width) if width else self._initial_buckets
 
     @staticmethod
     def _part_expr(url_col: str, modulus: int):
@@ -194,7 +211,7 @@ class SeenState:
     def _bucket_expr(self):
         # with B a multiple of n_parts, h mod n_parts == (h mod B) mod
         # n_parts, so bucket dirs refine the filter partitioning
-        return self._part_expr(self.url_col, self.bucketed_parts)
+        return self._part_expr("url", self.bucketed_parts)
 
     # -- reads ----------------------------------------------------------------
 
@@ -260,7 +277,7 @@ class SeenState:
                 out.setdefault(b, []).extend(glob.glob(os.path.join(d, "*.parquet")))
         return out
 
-    def anti_join(self, candidates: DataFrame, url_col: str | None = None) -> DataFrame:
+    def anti_join(self, candidates: DataFrame, url_col: str = "url") -> DataFrame:
         """Exact ``candidates LEFT ANTI JOIN url_seen ON url`` in one Arrow
         pass that owns its cuckoo prefilter: only the candidates are
         shuffled, never the seen or the filter table.
@@ -277,9 +294,8 @@ class SeenState:
         The reference analog is the in-memory ``set`` lookup (the
         reference's backend/domain/entities.py:153,158-159); a real
         cluster swaps this for an Iceberg bucket-partitioned
-        storage-partitioned join, same layout contract."""
-        url_col = url_col or self.url_col
-        store_col = self.url_col  # the committed files' column, whatever the caller's
+        storage-partitioned join, same layout contract. ``url_col`` names
+        the candidates' url column."""
         fmap = self.bucket_files()
         if not fmap:
             return candidates
@@ -333,7 +349,7 @@ class SeenState:
                 return np.frombuffer(blob.column(0)[0].as_py(), np.uint16).reshape(-1, BUCKET_SLOTS)
 
             def _bucket_set(b: int):
-                urls = pq.read_table(seen_files[b], columns=[store_col]).column(store_col)
+                urls = pq.read_table(seen_files[b], columns=["url"]).column("url")
                 return urls.combine_chunks()
 
             for rb in batches:
@@ -375,77 +391,62 @@ class SeenState:
     ) -> tuple[Manifest, dict]:
         """Commit one batch's newly-seen URLs: append them to the bucketed
         ``url_seen`` and insert them into the cuckoo filter, atomically in
-        one commit. Returns (manifest, info) — info reports ``rebuilt``,
-        the filter's ``n_buckets`` and the committed ``load_max_before``.
+        one commit. Returns (manifest, info) — info reports ``rebuilt``
+        and the filter's ``n_buckets``.
 
-        The load check runs BEFORE the insert: a cuckoo insert near
-        LOAD_FACTOR fails its kick walk outright instead of degrading
-        gracefully, so a filter whose committed load exceeds
-        ``rebuild_fill`` is rebuilt wider from the seen table first, and
-        the rebuilt blobs ride the SAME commit as the batch (one snapshot).
-        The check is one agg over the committed blob table.
+        No job runs before the write. The insert takes the width HEAD's
+        manifest records, and each insert task checks its partition's
+        committed load: past ``rebuild_fill``, or when a key fails its
+        kick walk (a cuckoo insert near LOAD_FACTOR fails outright instead
+        of degrading gracefully), it raises ``CuckooOverflowError``, and
+        the store discards the staged commit. The filter is then rebuilt
+        from seen + batch, sized by ``_wider``, and committed once with
+        the batch (one snapshot, ``event: "filter_rebuild"``). The one
+        rebuild path serves an undersized fresh filter and a saturating
+        one alike; a rebuild batch pays for one failed insert.
 
-        ``new_seen`` must carry the state's url column and be
-        deduplicated against the current seen set (schedule_batch output
-        already is — that is what scheduling MEANS); re-appending an
-        already-seen URL is harmless for membership but inflates the
-        seen table. Re-committing an already-committed batch_id is a
-        no-op (guarded on the LOGICAL counter, see ``last_logical`` —
-        the store's own batch_id also counts internal delete/compact
-        commits, so it cannot be the redelivery namespace)."""
+        ``new_seen`` must carry a ``url`` column and be deduplicated
+        against the current seen set (schedule_batch output already is —
+        that is what scheduling MEANS); re-appending an already-seen URL
+        is harmless for membership but inflates the seen table.
+        Re-committing an already-committed batch_id is a no-op (guarded
+        on the LOGICAL counter, see ``last_logical`` — the store's own
+        batch_id also counts internal delete/compact commits, so it
+        cannot be the redelivery namespace)."""
         head = self.store.head()
         last = self.last_logical()
         bid = batch_id if batch_id is not None else last + 1
         if head is not None and bid <= last:
             return head, {"redelivered": True}
         new_urls = self._clustered(new_seen)
-        new_keys = new_urls.select(F.col(self.url_col).alias("url"))
-        blobs = self.blobs()
-        has_blobs = bool(head and head.tables.get(self.TABLE_CUCKOO, {}).get("rows", 0))
-        nb = self._initial_buckets
-        info: dict = {"rebuilt": False, "n_buckets": nb}
-        if has_blobs:
-            width, load = cuckoo_load(blobs).agg(F.max("n_buckets"), F.max("load")).first()
-            nb, load_max = int(width), float(load or 0.0)
-            info.update(n_buckets=nb, load_max_before=load_max)
-            if load_max > self.rebuild_fill:
-                nb = self._wider(nb, self.seen().count())
-                blobs = build_cuckoo(self._keys(self.seen()), n_parts=self.n_parts, n_buckets=nb)
-                info.update(rebuilt=True, n_buckets=nb)
+        new_keys = new_urls.select("url")
+        nb = self._width()
 
-        def _commit(filt: DataFrame, extra: dict | None = None) -> Manifest:
+        def _commit(filt: DataFrame, width: int, extra: dict | None = None) -> Manifest:
             return self.store.commit(
                 head.batch_id + 1 if head else 1,
                 full_tables={self.TABLE_CUCKOO: filt},
                 delta_tables={self.TABLE_SEEN: new_urls},
-                metrics=self._stamp(bid, {**(metrics or {}), **(extra or {})}),
+                metrics=self._stamp(bid, {**(metrics or {}), **(extra or {})}, width),
                 partition_cols={self.TABLE_SEEN: [self.BUCKET_COL]},
             )
 
         try:
-            man = _commit(
-                insert_into_cuckoo(blobs, new_keys, n_parts=self.n_parts, n_buckets=nb)
+            filt = insert_into_cuckoo(
+                self.blobs(), new_keys, nb, n_parts=self.n_parts, max_load=self.rebuild_fill
             )
-        except Exception as e:
-            # the pre-insert load check sees the COMMITTED load, not the
-            # incoming batch: a batch large relative to capacity (or the
-            # very first commit into an undersized fresh filter) can
-            # still fail its kick walk. store.commit staged to a tmp dir
-            # and cleaned up, so nothing was written — rebuild sized for
-            # seen+batch and retry once. This keeps the constructor's
-            # "undersizing is safe" contract. The overflow raised in a
-            # Python worker arrives wrapped in Spark's PythonException,
-            # whose text names the class.
+            return _commit(filt, nb), {"rebuilt": False, "n_buckets": nb}
+        except PythonException as e:
+            # the overflow raised in a Python worker reaches the driver as
+            # Spark's PythonException (the classic and the Connect client
+            # both subclass pyspark.errors.PythonException), whose text
+            # names the worker's exception class; any other error propagates
             if CuckooOverflowError.__name__ not in str(e):
                 raise
-            all_keys = self._keys(self.seen()).unionByName(new_keys)
-            nb = self._wider(nb, all_keys.count())
-            man = _commit(
-                build_cuckoo(all_keys, n_parts=self.n_parts, n_buckets=nb),
-                {"event": "cuckoo_overflow_rebuild"},
-            )
-            info.update(rebuilt=True, n_buckets=nb, overflow_recovered=True)
-        return man, info
+        all_keys = self.seen().select("url").unionByName(new_keys)
+        nb = self._wider(nb, all_keys.count())
+        filt = build_cuckoo(all_keys, n_parts=self.n_parts, n_buckets=nb)
+        return _commit(filt, nb, {"event": "filter_rebuild"}), {"rebuilt": True, "n_buckets": nb}
 
     def _clustered(self, urls: DataFrame) -> DataFrame:
         """``urls``' url column plus its bucket, clustered by bucket BEFORE
@@ -453,13 +454,10 @@ class SeenState:
         from exactly one of ``write_tasks`` tasks (~B files per commit
         instead of tasks*B splinters)."""
         return (
-            urls.select(F.col(self.url_col))
+            urls.select("url")
             .withColumn(self.BUCKET_COL, self._bucket_expr())
             .repartition(self.write_tasks, F.col(self.BUCKET_COL))
         )
-
-    def _keys(self, df: DataFrame) -> DataFrame:
-        return df.select(F.col(self.url_col).alias("url"))
 
     def _wider(self, nb: int, n_keys: int) -> int:
         """Buckets per partition for a rebuild: at least double, and
@@ -499,17 +497,13 @@ class SeenState:
         head = self.store.head()
         if head is None:
             raise ValueError("delete_urls: nothing committed yet")
-        live = self.seen().select(self.url_col)
-        dels = (
-            urls.select(F.col(self.url_col))
-            .dropDuplicates([self.url_col])
-            .join(live, self.url_col, "left_semi")
-        )
-        kept = live.join(dels, self.url_col, "left_anti")
+        live = self.seen().select("url")
+        dels = urls.select("url").dropDuplicates(["url"]).join(live, "url", "left_semi")
+        kept = live.join(dels, "url", "left_anti")
         full_tables = {self.TABLE_SEEN: self._clustered(kept)}
         if head.tables.get(self.TABLE_CUCKOO, {}).get("rows", 0):
             full_tables[self.TABLE_CUCKOO] = delete_from_cuckoo(
-                self.blobs(), self._keys(dels), n_parts=self.n_parts
+                self.blobs(), dels, n_parts=self.n_parts
             )
         man = self.store.commit(
             head.batch_id + 1,

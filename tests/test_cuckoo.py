@@ -176,7 +176,7 @@ def test_insert_into_cuckoo_matches_full_build_membership(spark):
     a = spark.createDataFrame(_urls(0, 1500), "url string")
     b = spark.createDataFrame(_urls(1500, 3000), "url string")
     base = build_cuckoo(a, n_parts=N_PARTS, n_buckets=1024)
-    incr = insert_into_cuckoo(base, b, n_parts=N_PARTS)
+    incr = insert_into_cuckoo(base, b, 1024, n_parts=N_PARTS)
     both = a.unionByName(b)
     tagged = cuckoo_prefilter(both, incr, n_parts=N_PARTS)
     assert all(r.maybe_seen for r in tagged.collect())
@@ -198,9 +198,27 @@ def test_insert_after_delete_reuses_slots(spark):
     used1 = {r.cuckoo_part: r.slots_used for r in cuckoo_load(filt).collect()}
     assert sum(used1.values()) < sum(used0.values())
     newer = spark.createDataFrame(_urls(3000, 4000), "url string")
-    filt = insert_into_cuckoo(filt, newer, n_parts=N_PARTS)
+    filt = insert_into_cuckoo(filt, newer, 1024, n_parts=N_PARTS)
     tagged = cuckoo_prefilter(keep.unionByName(newer), filt, n_parts=N_PARTS)
     assert all(r.maybe_seen for r in tagged.collect())
+
+
+def test_insert_past_max_load_raises_overflow_error(spark):
+    """A partition whose existing table is loaded past ``max_load`` refuses
+    the insert with the overflow class, before placing anything; below the
+    bound the same insert lands."""
+    from pyspark.errors import PythonException
+
+    from crawler_spark.operators.cuckoo import insert_into_cuckoo
+
+    base = build_cuckoo(
+        spark.createDataFrame(_urls(0, 3000), "url string"), n_parts=N_PARTS, n_buckets=256
+    )  # ~375 keys per 1024-slot partition: load ~0.37
+    b = spark.createDataFrame(_urls(3000, 3100), "url string")
+    with pytest.raises(PythonException, match=CuckooOverflowError.__name__):
+        insert_into_cuckoo(base, b, 256, n_parts=N_PARTS, max_load=0.3).collect()
+    filt = insert_into_cuckoo(base, b, 256, n_parts=N_PARTS, max_load=0.5)
+    assert all(r.maybe_seen for r in cuckoo_prefilter(b, filt, n_parts=N_PARTS).collect())
 
 
 def test_insert_into_empty_cuckoo_requires_geometry(spark):
@@ -210,9 +228,7 @@ def test_insert_into_empty_cuckoo_requires_geometry(spark):
         spark.createDataFrame([], "url string"), n_parts=N_PARTS, n_buckets=256
     )
     b = spark.createDataFrame(_urls(0, 100), "url string")
-    with pytest.raises(ValueError, match="empty cuckoo"):
-        insert_into_cuckoo(empty, b, n_parts=N_PARTS)
-    # explicit geometry works on a rows-less table
-    filt = insert_into_cuckoo(empty, b, n_parts=N_PARTS, n_buckets=256)
+    # the given geometry sizes every partition of a rows-less table
+    filt = insert_into_cuckoo(empty, b, 256, n_parts=N_PARTS)
     tagged = cuckoo_prefilter(b, filt, n_parts=N_PARTS)
     assert all(r.maybe_seen for r in tagged.collect())

@@ -536,6 +536,70 @@ def test_cuckoo_first_commit_overflow_recovers(spark, root):
     assert info2.get("redelivered")
 
 
+def test_commit_runs_no_job_before_its_write(spark, root, monkeypatch):
+    """A commit that needs no rebuild goes straight to the store's write:
+    the width comes from HEAD's manifest and the load check runs inside
+    the insert task, so nothing reads the committed filter beforehand."""
+    st = _cuckoo(spark, root)
+    st.commit_batch(_urls(spark, 0, 400), batch_id=1)
+    sc = spark.sparkContext
+    group = "test_seen_state.commit_no_job_before_write"
+    at_entry = []
+    commit = st.store.commit
+
+    def counting_commit(*a, **kw):
+        at_entry.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        return commit(*a, **kw)
+
+    monkeypatch.setattr(st.store, "commit", counting_commit)
+    sc.setJobGroup(group, "commit_batch")
+    try:
+        _, info = st.commit_batch(_urls(spark, 400, 450), batch_id=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not info["rebuilt"]
+    assert at_entry == [0]
+
+
+def test_filter_width_rides_the_manifest(spark, root):
+    """A rebuild commit is marked ``filter_rebuild`` and stamps its width;
+    delete, compact, expire and reopen carry the width forward, so the
+    next commit inserts at the rebuilt width without reading the filter."""
+    st = _cuckoo(spark, root, expected_keys=10, rebuild_fill=0.5)
+    st.commit_batch(_urls(spark, 0, 3000), batch_id=1)  # load ~0.73
+    _, info = st.commit_batch(_urls(spark, 3000, 3050), batch_id=2)
+    head = st.store.head()
+    assert info["rebuilt"] and head.metrics["event"] == "filter_rebuild"
+    width = head.metrics[SeenState.METRIC_WIDTH]
+    assert width == info["n_buckets"] > st._initial_buckets
+
+    st.delete_urls(_urls(spark, 0, 50))
+    st.compact(n_files=2)
+    st.expire(keep_last=2)
+    assert {m.metrics["event"] for m in st.store.history()} == {"delete_urls", "compact"}
+    st2 = _cuckoo(spark, root, expected_keys=10, rebuild_fill=0.5)
+    _, info2 = st2.commit_batch(_urls(spark, 3050, 3100), batch_id=3)
+    assert not info2["rebuilt"] and info2["n_buckets"] == width
+    assert _all_maybe_seen(st2, _urls(spark, 50, 3100))
+
+
+def test_store_without_width_stamp_still_commits(spark, root):
+    """A HEAD written before the width was stamped falls back to the
+    initial width, which sizes only a partition without a table: each
+    committed table keeps its own width."""
+    st = _cuckoo(spark, root)  # 512 buckets per partition
+    st.commit_batch(_urls(spark, 0, 200), batch_id=1)
+    stamp = st._stamp(st.last_logical())
+    del stamp[SeenState.METRIC_WIDTH]
+    st.store.commit(st.batch_id() + 1, full_tables={}, metrics=stamp)
+
+    st2 = _cuckoo(spark, root, expected_keys=100)  # 256 buckets when fresh
+    _, info = st2.commit_batch(_urls(spark, 200, 300), batch_id=2)
+    assert not info["rebuilt"] and info["n_buckets"] == st2._initial_buckets == 256
+    assert {r.n_buckets for r in st2.fill().collect()} == {st._initial_buckets} == {512}
+    assert _all_maybe_seen(st2, _urls(spark, 0, 300))
+
+
 # -- open-time layout check -----------------------------------------------------
 
 _DEFAULT = dict(n_parts=8)

@@ -8,12 +8,18 @@ raise and leave HEAD, the staging area and the model as they were. After
 every step the store must agree with the model: ``seen()`` is the model
 set, ``anti_join`` drops exactly the model's URLs, the cuckoo prefilter
 gives no false negative for a live URL, and the logical cursor is the
-last committed batch id. Every run starts through both capacity paths
-of ``commit_batch``: a first batch that overflows the fresh filter (the
-overflow retry), then one that finds the retried filter past
-``rebuild_fill`` (the rebuild before an insert); then through one crash
-inside each call. The run is derandomized, so every tier-1 run replays
-the same steps.
+last committed batch id. Every run starts through both triggers of
+``commit_batch``'s one rebuild path: a first batch that overflows the
+fresh filter's kick walk, then one that finds the rebuilt filter loaded
+past ``rebuild_fill``; then through one crash inside each call. The run
+is derandomized, so every tier-1 run replays the same steps.
+
+Tier-1 runs 3 examples of 5 steps. A longer profile runs off tier-1:
+
+    pytest tests/test_seen_state_model.py --hypothesis-profile=seen-state-long
+
+(registered in ``tests/conftest.py``; it sets examples and steps, and
+this test keeps the rest of its settings).
 """
 
 import os
@@ -67,9 +73,9 @@ class SeenStateMachine(RuleBasedStateMachine):
 
     @initialize(lo=STARTS.filter(lambda lo: lo <= UNIVERSE - 2_400), lo2=STARTS)
     def first_commits(self, lo, lo2):
-        # ~1200 keys per partition cannot fit 1024 slots
-        assert self._commit(lo, 2_400).get("overflow_recovered")
-        # the retried filter holds them at load ~0.29, past rebuild_fill
+        # ~1200 keys per partition cannot fit 1024 slots: the kick walk fails
+        assert self._commit(lo, 2_400).get("rebuilt")
+        # the rebuilt filter holds them at load ~0.29, past rebuild_fill
         assert self._commit(lo2, 40).get("rebuilt")
         # a run of a few steps may never draw the crash rule: take it once
         # per call here, so every run covers both
@@ -162,14 +168,17 @@ class SeenStateMachine(RuleBasedStateMachine):
             assert not missed, f"prefilter false negatives: {missed[:5]}"
 
 
-def test_seen_state_agrees_with_a_set_model(spark, tmp_path):
+def test_seen_state_agrees_with_a_set_model(spark, tmp_path, request):
     SeenStateMachine.spark = spark
     SeenStateMachine.base = tmp_path
+    if request.config.getoption("hypothesis_profile"):
+        size = settings.default  # the loaded profile's examples and steps
+    else:
+        size = settings(max_examples=3, stateful_step_count=5)
     run_state_machine_as_test(
         SeenStateMachine,
         settings=settings(
-            max_examples=3,
-            stateful_step_count=5,
+            size,
             derandomize=True,
             database=None,
             deadline=None,
