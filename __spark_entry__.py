@@ -234,9 +234,12 @@ def _crawl_e2e_oracle_sql() -> str:
 # below IS the driver-checked set — curated so the flagship (crawl_e2e), the
 # review workflow, every SURVEY-§2 state view, and one representative per
 # operator family carry a driver CORRECTNESS row every round. Everything
-# past position 50 still has an oracle + pytest parity; linear-blocking
-# baselines (dedup_ngram_jaccard, dedup_embedding_cosine) and queries whose
-# plan shape another green row already pins live there on purpose.
+# past position 50 still has an oracle + pytest parity, and each is there
+# for a reason: no driver-checked row's physical-operator set contains its
+# own, or its kernel is library code, or it is the only check of a
+# SURVEY-§2 row, or its pytest pins semantics the oracle hash cannot
+# (tests/test_plan_audit.py enforces this, so a past-cap entry whose plan
+# shape a checked row already pins cannot come back without a reason).
 # tests/test_entry_contract.py pins first-50 == DRIVER_CHECK_ORDER.
 # Measured driver-check cost of this set: see BENCH/driver_check_costs.json.
 DRIVER_CHECK_ORDER: list[str] = [
@@ -287,8 +290,8 @@ DRIVER_CHECK_ORDER: list[str] = [
     # value-hash vs the composed DuckDB oracle — the round-4 flagship
     # composition; tools/pipeline_bench.py measures it at 10^7 docs)
     "curation_pipeline_full",
-    # embedding similarity family (ann_lsh_search past the cap: the
-    # family keeps cosine_topk + ann_ivfpq_search + dedup_embedding_lsh)
+    # embedding similarity family (cosine_topk + ann_ivfpq_search +
+    # dedup_embedding_lsh)
     "cosine_topk",
     "ann_ivfpq_search",
     "dedup_embedding_lsh",

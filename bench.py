@@ -28,24 +28,14 @@ from pyspark.sql import functions as F
 HEADLINE = [
     "spans_parse",
     "link_extract",
-    "dedup_minhash",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
     "dedup_minhash_lsh",
     "dedup_blocks",
     "contamination",
     "dedup_incremental",
-    "quality_filter",
     "cosine_topk",
-    "ann_lsh_buckets",
-    "ann_lsh_search",
-    "ann_ivf_search",
     "dedup_embedding_lsh",
     "sessionize",
     "text_quality",
-    "text_repetition",
-    "text_tokens_bpe",
-    "pii_mask",
     "warc_roundtrip",
     "warc_cdx",
     "sitemap_roundtrip",
@@ -61,56 +51,34 @@ HEADLINE = [
     "trap_detect",
     "recrawl_priority",
     "host_shards",
-    "hll_distinct",
     "anchor_agg",
-    "dedup_components",
-    "mirror_detect",
     "tfidf_topk",
-    "budget_alloc",
     "crawl_rollup",
     "latency_quantiles",
-    "sample_stratified",
     "cms_heavy_hitters",
-    "cocitation",
-    "token_pack",
     "change_detect",
-    "domain_quality",
     "hits_scores",
-    "lm_rarity",
     "wet_export",
     "sitemap_gap",
     "host_graph",
     "semdedup",
     "robots_sitemaps",
-    "seed_ppr",
-    "url_identity",
     "dedup_clusters",
     "registrable_domain",
-    "adaptive_quota",
     "bm25_topk",
-    "crawl_depth",
-    "url_templates",
     "host_similarity",
     "quality_classifier",
     "boilerplate_strip",
     "curation_pipeline",
-    "posting_gaps",
     "phash_neardup",
-    "media_captions",
     "video_neardup",
     "dup_spans",
     "dsir_weights",
     "phrase_search",
-    "collocations",
-    "domain_mix",
     "audio_neardup",
     "ann_ivfpq_search",
     "bpe_merges",
-    "shard_shuffle",
     "ngram_goodturing",
-    "vocab_growth",
-    "token_diversity",
-    "opic_importance",
 ]
 
 N_HOSTS = 10_000

@@ -34,12 +34,12 @@ Every micro-batch is one atomic snapshot commit of
 page_links} (append deltas) with lineage + metrics — a killed run resumes
 exactly (test: tests/test_resume.py).
 
-Scale shape: all joins key on (source_url / url); the fetch-join broadcasts
-``web_graph`` when small and shuffles on ``url`` otherwise; the parse stage
-is a single Arrow ``mapInPandas`` pass; the per-source head-pick and the
-policy step are windows/groupBy over the (tiny) per-source state, NOT
-driver loops. The high-volume scale path (top-K per host, Bloom prefilter,
-salting) lives in ``operators/scheduler.py``.
+Scale shape: all joins key on (source_url / url); the fetch-join always
+broadcasts ``web_graph`` (the engine runs fixture-sized graphs); the
+parse stage is a single Arrow ``mapInPandas`` pass; the per-source
+head-pick and the policy step are windows/groupBy over the (tiny)
+per-source state, NOT driver loops. The high-volume scale path (top-K
+per host, Bloom prefilter, salting) lives in ``operators/scheduler.py``.
 
 Where Python runs in a step. Each Python pass costs a worker start and an
 Arrow round trip — on a fixture-sized batch far more than its work — so a
@@ -123,7 +123,6 @@ class CrawlEngine:
         web_graph: DataFrame,
         state_dir: str,
         policy: str = "lexmin",
-        broadcast_web: bool = True,
         robots: DataFrame | None = None,
     ):
         """robots: optional (host, disallow_prefixes, crawl_delay_ms) rules
@@ -136,7 +135,6 @@ class CrawlEngine:
         self.web_graph = web_graph
         self.store = SnapshotParquetStore(spark, state_dir)
         self.policy_name = policy
-        self.broadcast_web = broadcast_web
         self.robots_bcast = None
         if robots is not None:
             from .politeness import robots_index
@@ -323,11 +321,8 @@ class CrawlEngine:
         )
 
         # fetch (join vs web_graph — the sandbox's network) + Arrow parse
-        web = self.web_graph
-        if self.broadcast_web:
-            web = F.broadcast(web)
         fetched = heads.select("source_url", "url", "host", F.col("pop_seq").alias("seq")).join(
-            web.select("url", "kind", "payload", "status"), "url", "left"
+            F.broadcast(self.web_graph).select("url", "kind", "payload", "status"), "url", "left"
         )
         parsed = fetched.mapInPandas(parse_documents, PARSED_SCHEMA).persist()
         persisted.append(parsed)

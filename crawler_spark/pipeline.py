@@ -12,16 +12,18 @@ and token counts are computed once and reused across stages:
     6. token_pack          per-lang concatenate-and-chunk offsets
     7. shard_shuffle       deterministic hash deal into training shards
 
-Every stage is an operator the engine already proves individually
-(queries.py / queries_search.py / queries_scale.py — each has a DuckDB
-oracle and tests); this module pins the COMPOSITION: stage order (strip
-before dedup so chrome doesn't mask duplicates — the q_curation_pipeline
-ordering argument), which columns flow between stages (text is dropped
-after stage 4; only (doc_id, host, lang, tokens) reach the mix), and the
-barrier placement a real run needs (each stage's output feeds >= 1
-downstream consumer, so the bench persists stage outputs — see
-tools/pipeline_bench.py, which records per-stage wall + shuffle bytes at
-10^7 docs per VERDICT r3 task 6).
+Every stage is built from helpers in queries.py / queries_search.py /
+queries_scale.py that have their own tests. Stages 1 and 3 also run as
+standalone queries with a DuckDB oracle (boilerplate_strip,
+dedup_minhash_lsh); the others are oracle-checked only in composition,
+by curation_pipeline_full. This module pins the COMPOSITION: stage
+order (strip before dedup so chrome doesn't mask duplicates — the
+q_curation_pipeline ordering argument), which columns flow between
+stages (text is dropped after stage 4; only (doc_id, host, lang,
+tokens) reach the mix), and the barrier placement a real run needs
+(each stage's output feeds >= 1 downstream consumer, so the bench
+persists stage outputs — see tools/pipeline_bench.py, which records
+per-stage wall + shuffle bytes at 10^7 docs per VERDICT r3 task 6).
 
 Scale notes (what survives 100x):
 - text leaves the shuffle plan after stage 4 — stages 5-7 move only ids +

@@ -406,90 +406,12 @@ def _with_shingles(docs: DataFrame) -> DataFrame:
     )
 
 
-def q_dedup_minhash(spark: SparkSession, sf: str) -> DataFrame:
-    """MinHash signatures over word-3-gram shingles. 4 hash families =
-    disjoint 8-hex-char slices of ONE md5 per shingle (hashed once, not
-    once per family; see _MINHASH_COLS_DUCK); lexicographic min over
-    equal-length hex — identical in DuckDB."""
-    docs = _with_shingles(load(spark, sf, "documents")).withColumn(
-        "hs", F.expr("transform(sh, s -> md5(s))")
-    )
-    cols = [
-        F.expr(f"array_min(transform(hs, h -> substring(h, {j * 8 + 1}, 8)))").alias(f"mh{j}")
-        for j in range(4)
-    ]
-    return docs.select("doc_id", *cols)
-
-
-def q_dedup_simhash(spark: SparkSession, sf: str) -> DataFrame:
-    """16-bit SimHash over tokens: per-bit majority of md5-derived bits
-    (bit b = parity of hex char b of md5(token))."""
-    docs = load(spark, sf, "documents")
-    # project the digest ONCE per token row; 16 bit expressions then
-    # slice the projected column instead of each re-deriving md5(tok)
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok")).select(
-        "doc_id", F.md5("tok").alias("h")
-    )
-    bit_sums = [
-        F.sum(
-            F.when(F.ascii(F.substring("h", b + 1, 1)) % 2 == 1, 1).otherwise(-1)
-        ).alias(f"s{b}")
-        for b in range(16)
-    ]
-    agg = tok.groupBy("doc_id").agg(*bit_sums)
-    simhash = sum(
-        (F.when(F.col(f"s{b}") > 0, F.lit(1)).otherwise(F.lit(0)) * F.lit(2**b) for b in range(16)),
-        F.lit(0),
-    )
-    return agg.select("doc_id", simhash.cast("long").alias("simhash"))
-
-
-def q_dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
-    """n-gram Jaccard near-dup scoring between consecutive doc pairs
-    (linear blocking; integer-exact milli-Jaccard)."""
-    docs = _with_shingles(load(spark, sf, "documents"))
-    # consumed by both join sides AND the sizes agg — barrier the explode
-    # so shingling runs once, not three times
-    sh = _barrier(docs.select("doc_id", F.explode(F.array_distinct(F.col("sh"))).alias("s")))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.doc_id") + 1 == F.col("b.doc_id")) & (F.col("a.s") == F.col("b.s")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"))
-        .agg(F.count("*").alias("inter_cnt"))
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    pairs = (
-        sizes.alias("x")
-        .join(sizes.alias("y"), F.col("x.doc_id") + 1 == F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("doc_a"),
-            F.col("y.doc_id").alias("doc_b"),
-            F.col("x.n_sh").alias("na"),
-            F.col("y.n_sh").alias("nb"),
-        )
-    )
-    return (
-        pairs.join(inter, "doc_a", "left")
-        .withColumn("inter_cnt", F.coalesce("inter_cnt", F.lit(0)))
-        .select(
-            "doc_a",
-            "doc_b",
-            "inter_cnt",
-            (F.col("na") + F.col("nb") - F.col("inter_cnt")).alias("union_cnt"),
-            F.floor(
-                1000.0 * F.col("inter_cnt") / (F.col("na") + F.col("nb") - F.col("inter_cnt"))
-            ).cast("long").alias("jac_milli"),
-        )
-    )
-
-
 # MinHash-LSH end-to-end near-dup dedup: the blocking shape that survives
 # 100 TB. Signatures -> band buckets -> in-bucket candidate pairs -> exact
 # Jaccard verify -> keep-min per duplicate. Planted near-dups (a mutated
 # copy of every 10th doc at doc_id + _LSH_OFFSET) guarantee the pipeline
-# exercises non-trivially: the planted pairs are NON-consecutive, so the
-# linear blocking of q_dedup_ngram_jaccard cannot find them by design.
+# exercises non-trivially: the planted pairs are NON-consecutive, so
+# blocking on consecutive doc ids cannot find them by design.
 
 _LSH_OFFSET = 1_000_000
 _LSH_BANDS = ((0, 1), (2, 3))  # b=2 bands x r=2 rows over mh0..mh3
@@ -847,59 +769,6 @@ def q_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
     return top.withColumn("rk", F.row_number().over(w))
 
 
-def q_dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
-    """Embedding-cosine near-dup scoring between consecutive vector pairs
-    (linear blocking, integer-exact fixed-point cosine; the full near-dup
-    pass buckets by LSH first — q_ann_lsh_buckets — then scores in-bucket)."""
-    emb = load(spark, sf, "embeddings")
-    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"))
-    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"))
-    pairs = a.join(b, F.col("id_a") + 1 == F.col("id_b"))
-    dot = (
-        "aggregate(zip_with(ea, eb, (x, y) -> "
-        "CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) * CAST(floor(CAST(y AS DOUBLE) * 1000) AS BIGINT)), "
-        "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
-    na = F.expr(_NORM_SQ.format(col="ea"))
-    nb = F.expr(_NORM_SQ.format(col="eb"))
-    cos = (
-        F.when((na == 0) | (nb == 0), F.lit(None))
-        .otherwise(
-            F.floor(
-                1000.0 * F.expr(dot) / F.sqrt(na.cast("double") * nb.cast("double"))
-            )
-        )
-        .cast("long")
-    )
-    return pairs.select(
-        "id_a",
-        "id_b",
-        cos.alias("cos_milli"),
-        (cos >= 300).alias("is_near_dup"),
-    )
-
-
-def q_ann_lsh_buckets(spark: SparkSession, sf: str) -> DataFrame:
-    """LSH bucketing for scalable ANN: 8 random-hyperplane sign bits
-    (integer-exact dots); the scale path buckets then searches in-bucket."""
-    emb = load(spark, sf, "embeddings")
-    bit_exprs = []
-    for j, signs in enumerate(PLANES):
-        arr = ",".join(str(s) for s in signs)
-        dot = (
-            f"aggregate(zip_with(embedding, array({arr}), (x, s) -> "
-            f"CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT) * CAST(s AS BIGINT)), "
-            f"CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        )
-        bit_exprs.append(f"(CASE WHEN ({dot}) > 0 THEN {2 ** j} ELSE 0 END)")
-    bucket = " + ".join(bit_exprs)
-    return (
-        emb.select(F.expr(f"CAST({bucket} AS BIGINT)").alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count("*").alias("n_vecs"))
-    )
-
-
 def _bucket_expr_spark() -> str:
     bits = []
     for j, signs in enumerate(PLANES):
@@ -911,41 +780,6 @@ def _bucket_expr_spark() -> str:
         )
         bits.append(f"(CASE WHEN ({dot}) > 0 THEN {2 ** j} ELSE 0 END)")
     return "CAST(" + " + ".join(bits) + " AS BIGINT)"
-
-
-def q_ann_lsh_search(spark: SparkSession, sf: str) -> DataFrame:
-    """LSH-bucketed ANN search (the scale path): the query vector probes
-    ONLY its own hyperplane bucket, then exact integer-fixed-point cosine
-    top-5 within the bucket. At 10^10 scale the bucket column is a
-    partition key, so a probe touches one partition instead of the corpus."""
-    emb = load(spark, sf, "embeddings").withColumn("bucket", F.expr(_bucket_expr_spark()))
-    q = emb.orderBy("vec_id").limit(1).select(
-        F.col("embedding").alias("qe"), F.col("bucket").alias("qbucket")
-    )
-    in_bucket = emb.join(F.broadcast(q), F.col("bucket") == F.col("qbucket"))
-    scored = in_bucket.select(
-        "vec_id",
-        "bucket",
-        F.expr(_DOT_Q).alias("dot"),
-        F.expr(_NORM_SQ.format(col="embedding")).alias("nv"),
-        F.expr(_NORM_SQ.format(col="qe")).alias("nq"),
-    ).select(
-        "vec_id",
-        "bucket",
-        F.when((F.col("nv") == 0) | (F.col("nq") == 0), F.lit(None))
-        .otherwise(
-            F.floor(
-                1000.0 * F.col("dot") / F.sqrt(F.col("nv").cast("double") * F.col("nq").cast("double"))
-            )
-        )
-        .cast("long")
-        .alias("cos_milli"),
-    )
-    # TakeOrderedAndProject, not a global window: even one bucket of a
-    # 10^10 corpus (~1/256) is far too big for a single-partition sort
-    top = scored.orderBy(F.desc("cos_milli"), F.asc("vec_id")).limit(5)
-    w = Window.orderBy(F.desc("cos_milli"), F.asc("vec_id"))
-    return top.withColumn("rk", F.row_number().over(w))
 
 
 def _cos_milli_col(va: str, vb: str):
@@ -992,7 +826,7 @@ _EMB_LSH_COS_MIN = 900  # milli-cosine verify threshold for near-dup
 
 def q_dedup_embedding_lsh(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding near-dup dedup, LSH-bucketed END-TO-END (the scale path
-    that replaces q_dedup_embedding_cosine's linear blocking): hyperplane
+    that replaces linear blocking on consecutive ids): hyperplane
     sign bucket -> in-bucket candidate pairs -> exact fixed-point cosine
     verify -> keep min(vec_id) per duplicate. Planted dups (every 10th
     vector re-appears at vec_id + 1e6) are NON-consecutive by construction,
@@ -1109,7 +943,7 @@ def _ivf_assign(vectors: DataFrame, cents: DataFrame) -> DataFrame:
     keep the lowest cent_id and a zero-norm vector (all cosines NULL)
     keeps the first centroid — exactly the old desc(cos) NULLS LAST,
     asc(cent_id) contract. The assignment RULE is shared by
-    q_ann_ivf_search and q_semdedup; their centroid SETS differ
+    q_ann_ivfpq_search and q_semdedup; their centroid SETS differ
     (_IVF_NLIST=8 for search, nlist-∝-N for dedup), so cent_id values
     are not comparable across the two queries. Returns (vec_id,
     embedding, cent_id, nv); nv is the vector's _NORM_SQ — free here,
@@ -1147,43 +981,6 @@ def _ivf_assign(vectors: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def q_ann_ivf_search(spark: SparkSession, sf: str) -> DataFrame:
-    """IVF-flat ANN search: deterministic coarse centroids (first nlist
-    vectors by vec_id — a fixed coarse quantizer, the role k-means plays in
-    production IVF), every vector assigned to its max-cosine centroid via a
-    BROADCAST join (map-side, no shuffle), then the query probes ONLY its
-    own inverted list (nprobe=1) and ranks exact fixed-point cosine top-5.
-    At 10^10 scale the list id is the partition key: assignment is one
-    write shuffle, a probe reads one list instead of the corpus."""
-    emb = load(spark, sf, "embeddings").select("vec_id", "embedding")
-    cents = (
-        emb.orderBy("vec_id")
-        .limit(_IVF_NLIST)
-        .select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce"))
-    )
-    assigned = _ivf_assign(emb, cents)
-    q = (
-        assigned.orderBy("vec_id")
-        .limit(1)
-        .select(
-            F.col("embedding").alias("qe"),
-            F.col("cent_id").alias("qcent"),
-            F.col("nv").alias("nq"),
-        )
-    )
-    probe = assigned.join(F.broadcast(q), F.col("cent_id") == F.col("qcent"))
-    scored = probe.select(
-        "vec_id",
-        "cent_id",
-        _cos_milli_pre("embedding", "qe", F.col("nv"), F.col("nq")).alias("cos_milli"),
-    )
-    # TakeOrderedAndProject over the probed inverted list — a 10^10/nlist
-    # list (~40 M rows) must never sort in one task
-    top = scored.orderBy(F.desc("cos_milli"), F.asc("vec_id")).limit(5)
-    w = Window.orderBy(F.desc("cos_milli"), F.asc("vec_id"))
-    return top.withColumn("rk", F.row_number().over(w))
-
-
 # -- IVF-PQ: product quantization over the IVF coarse index ----------------
 
 _PQ_M = 4                     # subspaces (EMB_DIM/_PQ_M dims each)
@@ -1219,7 +1016,7 @@ def q_ann_ivfpq_search(spark: SparkSession, sf: str) -> DataFrame:
     """IVF-PQ ANN search (Jégou et al. 2011, "Product Quantization for
     Nearest Neighbor Search") — the index shape a 10^10-vector corpus
     actually ships: the IVF coarse quantizer routes the query to one
-    inverted list (q_ann_ivf_search), and inside the list every vector is
+    inverted list (_ivf_assign), and inside the list every vector is
     represented by _PQ_M sub-codebook codes (here 4x16; production uses
     8-16x256) instead of its raw floats, so list storage shrinks
     EMB_DIM*4 bytes -> _PQ_M bytes and scoring is _PQ_M table lookups via
@@ -1323,7 +1120,7 @@ def q_semdedup(spark: SparkSession, sf: str) -> DataFrame:
     scale). Clusters reuse the IVF ASSIGNMENT RULE
     (_ivf_assign: broadcast max-cosine) over semdedup's own, finer
     centroid set (first _SEMDEDUP_NLIST vectors — see the nlist note
-    below; cluster_id here is not comparable to ann_ivf_search's
+    below; cluster_id here is not comparable to ann_ivfpq_search's
     cent_id); candidate pairs form inside a cluster only; exact
     fixed-point cosine >= 0.9 verifies; keep = min(vec_id) per dup.
     Planted dups (every 10th vector re-appears at vec_id + 1e6) share
@@ -1331,7 +1128,7 @@ def q_semdedup(spark: SparkSession, sf: str) -> DataFrame:
     is testable. Same keep-min output contract as dedup_embedding_lsh.
 
     Scale shape: assignment is a broadcast join (map-side, no
-    shuffle) shared with q_ann_ivf_search (_ivf_assign); the pair join
+    shuffle) shared with q_ann_ivfpq_search (_ivf_assign); the pair join
     is hash-partitioned on the cluster id, so candidate generation
     never compares across clusters. The in-cluster pair count is
     quadratic in CLUSTER size, which is why production SemDeDup picks
@@ -1806,51 +1603,6 @@ def _audio_stats_sql() -> str:
     )
 
 
-def q_text_stats(spark: SparkSession, sf: str) -> DataFrame:
-    """Token counting + char stats (whitespace tokenizer)."""
-    docs = load(spark, sf, "documents")
-    n_tok = F.size(F.split("text", " "))
-    return docs.select(
-        "doc_id",
-        n_tok.alias("n_tokens"),
-        F.length("text").alias("n_chars_calc"),
-        F.floor(1000.0 * F.length(F.replace(F.col("text"), F.lit(" "), F.lit(""))) / n_tok)
-        .cast("long")
-        .alias("avg_tok_len_milli"),
-    )
-
-
-# BPE-ish pretokenizer: letter runs, single digits (modern BPE vocabs
-# split digit strings per character), and non-alnum-non-space singles —
-# a deterministic approximation of the GPT-2 pretokenize split, limited
-# to syntax valid in BOTH Java regex (Spark) and RE2 (DuckDB): no
-# lookahead (RE2 lacks it), no unicode property classes.
-_BPE_TOKEN_RE = "[A-Za-z]+|[0-9]|[^A-Za-z0-9 ]"
-
-
-def q_text_tokens_bpe(spark: SparkSession, sf: str) -> DataFrame:
-    """Token accounting under a BPE-ish regex pretokenizer (the unit a
-    subword tokenizer would see), next to the whitespace count — the
-    ratio is the subword-fertility signal a training-data pipeline
-    budgets with. All JVM-side (regexp_extract_all + higher-order
-    filter), no UDF; one narrow map pass at any scale."""
-    docs = load(spark, sf, "documents")
-    base = docs.select(
-        "doc_id",
-        F.regexp_extract_all("text", F.lit(_BPE_TOKEN_RE), F.lit(0)).alias("toks"),
-        F.size(F.split("text", " ")).alias("n_ws"),
-    )
-    n_bpe = F.size("toks")
-    n_word = F.size(F.expr("filter(toks, t -> t rlike '^[A-Za-z]')"))
-    return base.select(
-        "doc_id",
-        n_bpe.alias("n_bpe_tokens"),
-        n_word.alias("n_word_tokens"),
-        (n_bpe - n_word).alias("n_other_tokens"),
-        F.floor(1000.0 * n_bpe / F.col("n_ws")).cast("long").alias("fertility_milli"),
-    )
-
-
 def q_text_quality(spark: SparkSession, sf: str) -> DataFrame:
     """Quality scoring: stopword ratio + short-token ratio (length/punct
     heuristics of a training-data filter)."""
@@ -1895,32 +1647,8 @@ def q_text_langid(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def q_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
-    """Document fingerprinting: md5 content fingerprint + size bucket."""
-    docs = load(spark, sf, "documents")
-    norm = F.lower(F.trim(F.regexp_replace("text", " +", " ")))
-    return docs.select(
-        "doc_id",
-        F.md5(norm).alias("fp"),
-        F.substring(F.md5(norm), 1, 2).alias("fp_bucket"),
-        (F.floor(F.length("text") / 100) * 100).cast("long").alias("len_bucket"),
-    )
-
-
-def q_text_repetition(spark: SparkSession, sf: str) -> DataFrame:
-    """Gopher-style repetition signals (training-data quality filter):
-    lexical diversity (distinct-token fraction) and the most-frequent-
-    bigram mass fraction. Fully NARROW: tokens are split once into a
-    named column (CollapseProject keeps multi-referenced non-cheap
-    aliases materialized), and the top-bigram count is a run-length
-    scan over the sorted bigram array via `aggregate` — a per-document
-    statistic needs no explode and no shuffle, so at 100 TB this is an
-    embarrassingly parallel map-only pass."""
-    return repetition_stats(load(spark, sf, "documents"))
-
-
-# One Arrow-batched pass computes every per-document token statistic the
-# repetition and quality-filter queries need. This REPLACED the previous
+# One Arrow-batched pass computes every per-document token statistic
+# repetition_stats and quality_filter need. This REPLACED the previous
 # pure-JVM higher-order-function form (transform/filter/aggregate over a
 # sorted bigram array): Catalyst evaluates lambda higher-order functions
 # INTERPRETED, per element, outside whole-stage codegen — measured 2.85 s
@@ -1929,7 +1657,8 @@ def q_text_repetition(spark: SparkSession, sf: str) -> DataFrame:
 # map-only. The "UDFs are the slow path" rule applies to row-at-a-time
 # Python, not to an Arrow-batched stage whose per-doc work is dict-hash
 # counting at C speed. Semantics are pinned by the pure-Python Counter
-# property test (tests/test_unit_functions.py) and the DuckDB oracles.
+# property test (tests/test_unit_functions.py), the cascade-branch test
+# (tests/test_pipeline_ops.py) and the curation_pipeline_full oracle.
 _TEXT_STAT_SCHEMA = (
     "doc_id long, n_tokens int, distinct_milli long, n_bigrams int, "
     "top_bigram_milli long, stop_cnt int, "
@@ -1988,42 +1717,6 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     tests/test_unit_functions.py."""
     return text_stat_frame(docs).where(F.col("n_bigrams") > 0).select(
         "doc_id", "n_tokens", "distinct_milli", "top_bigram_milli"
-    )
-
-
-# PII patterns restricted to syntax valid in BOTH Java regex (Spark) and
-# RE2 (DuckDB): character classes, bounded repeats, \b word boundaries.
-_PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-_PII_PHONE = r"\b[0-9]{3}-[0-9]{3}-[0-9]{4}\b"
-
-
-def q_pii_mask(spark: SparkSession, sf: str) -> DataFrame:
-    """PII scrubbing (training-data hygiene): count + mask emails and
-    phone numbers, entirely JVM-side (regexp_extract_all /
-    regexp_replace — no UDF, stays inside whole-stage codegen). The
-    corpus carries no PII, so a deterministic doc_id-derived contact
-    line is appended to every 3rd document first; both engine and
-    oracle apply the identical construction."""
-    docs = load(spark, sf, "documents")
-    injected = F.when(
-        F.col("doc_id") % 3 == 0,
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@mail.example.com or 555-"),
-            F.lpad((F.col("doc_id") % 1000).cast("string"), 3, "0"),
-            F.lit("-0199"),
-        ),
-    ).otherwise(F.col("text"))
-    masked = F.regexp_replace(
-        F.regexp_replace(injected, _PII_EMAIL, "<EMAIL>"), _PII_PHONE, "<PHONE>"
-    )
-    return docs.select(
-        "doc_id",
-        F.size(F.regexp_extract_all(injected, F.lit(_PII_EMAIL), F.lit(0))).alias("n_emails"),
-        F.size(F.regexp_extract_all(injected, F.lit(_PII_PHONE), F.lit(0))).alias("n_phones"),
-        F.md5(masked).alias("masked_fp"),
     )
 
 
@@ -2092,83 +1785,6 @@ def _link_rank_sql() -> str:
     last = parts.pop()
     parts.append(last.rstrip(","))
     parts.append(f"SELECT v AS doc_id, r AS rank_micro FROM r{_RANK_ITERS}")
-    return "\n".join(parts)
-
-
-_PPR_ITERS = 4
-_PPR_SEED_MOD = 37  # doc_id % 37 == 0 -> seed (a curated whitelist stand-in)
-
-
-def q_seed_ppr(spark: SparkSession, sf: str) -> DataFrame:
-    """Personalized PageRank from a seed whitelist — the focused-crawl
-    prioritization signal (TrustRank-style: teleport mass restarts at
-    CURATED seeds only, so score measures proximity to trusted pages;
-    pages unreachable from seeds score 0 and a focused crawler skips
-    them). Same derived link graph and fixed-point micro-unit
-    arithmetic as q_link_rank, but the restart term 150000 lands on
-    seeds (doc_id % 37 == 0) instead of every node:
-    r' = is_seed * 150000 + (85 * sum(r_in DIV outdeg)) DIV 100,
-    4 synchronous iterations. Integer sums keep the unrolled-CTE
-    DuckDB oracle hash-exact.
-
-    Scale shape: identical to q_link_rank — each iteration is one
-    hash join (ranks x edges) + one map-side-combined groupBy(dst);
-    edges scanned from the persisted barrier. Lineage stays linear
-    (each iteration references its predecessor once), so no
-    checkpoint is needed."""
-    docs = load(spark, sf, "documents")
-    n = docs.count()
-    edges = _barrier(
-        docs.select(
-            F.col("doc_id").alias("src"),
-            F.explode(
-                F.array(
-                    *[((F.col("doc_id") * 31 + F.lit(k)) % n) for k in range(1, _RANK_OUT_DEG + 1)]
-                )
-            ).alias("dst"),
-        )
-    )
-    nodes = docs.select(
-        F.col("doc_id").alias("v"),
-        (F.col("doc_id") % _PPR_SEED_MOD == 0).cast("long").alias("is_seed"),
-    )
-    ranks = nodes.select("v", (F.col("is_seed") * 1_000_000).cast("long").alias("r"))
-    for _ in range(_PPR_ITERS):
-        contrib = (
-            edges.join(ranks, edges.src == ranks.v)
-            .select("dst", F.expr(f"r DIV {_RANK_OUT_DEG}").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("c"))
-        )
-        ranks = nodes.join(contrib, nodes.v == contrib.dst, "left").select(
-            "v",
-            (F.col("is_seed") * 150_000 + F.expr("(85 * coalesce(c, 0)) DIV 100"))
-            .cast("long")
-            .alias("r"),
-        )
-    return ranks.select(F.col("v").alias("doc_id"), F.col("r").alias("ppr_micro"))
-
-
-def _seed_ppr_sql() -> str:
-    """The q_seed_ppr recurrence unrolled as chained CTEs (DuckDB)."""
-    parts = [
-        "WITH nodes AS (SELECT doc_id AS v,"
-        f" CASE WHEN doc_id % {_PPR_SEED_MOD} = 0 THEN 1 ELSE 0 END AS is_seed FROM documents),",
-        "n_docs AS (SELECT count(*) AS n FROM documents),",
-        "edges AS (SELECT doc_id AS src, (doc_id * 31 + k) % (SELECT n FROM n_docs) AS dst"
-        " FROM documents, (SELECT unnest([1, 2, 3]) AS k) ks),",
-        "r0 AS (SELECT v, CAST(is_seed * 1000000 AS BIGINT) AS r FROM nodes),",
-    ]
-    for i in range(_PPR_ITERS):
-        parts.append(
-            f"r{i + 1} AS (SELECT nodes.v,"
-            f" CAST(nodes.is_seed * 150000 + (85 * COALESCE(s.c, 0)) // 100 AS BIGINT) AS r"
-            f" FROM nodes LEFT JOIN (SELECT e.dst AS v, SUM(r.r // {_RANK_OUT_DEG}) AS c"
-            f" FROM edges e JOIN r{i} r ON r.v = e.src GROUP BY e.dst) s ON s.v = nodes.v),"
-        )
-    last = parts.pop()
-    parts.append(last.rstrip(","))
-    parts.append(f"SELECT v AS doc_id, r AS ppr_micro FROM r{_PPR_ITERS}")
     return "\n".join(parts)
 
 
@@ -2315,20 +1931,15 @@ _QF_MIN_DISTINCT_MILLI = 350
 _QF_MAX_TOP_BIGRAM_MILLI = 200
 
 
-def q_quality_filter(spark: SparkSession, sf: str) -> DataFrame:
-    """Composite training-data quality filter: the accept/reject decision
-    a C4/Gopher-style pipeline makes per document, as ONE deterministic
-    rule cascade (first failing rule names the reject_reason):
-    too_short -> non_english (marker-stopword langid) -> low_stopword ->
-    low_diversity (distinct-token fraction) -> repetitive (top-bigram
-    mass) -> accept. One Arrow-batched stat pass (text_stat_frame) + a
-    JVM when-cascade — map-only, zero shuffles, embarrassingly parallel
-    at 100 TB."""
-    return quality_filter(load(spark, sf, "documents"))
-
-
 def quality_filter(docs: DataFrame) -> DataFrame:
-    """The q_quality_filter cascade over any (doc_id, text) frame."""
+    """Composite training-data quality filter over any (doc_id, text)
+    frame: the accept/reject decision a C4/Gopher-style pipeline makes
+    per document, as ONE deterministic rule cascade (first failing rule
+    names the reject_reason): too_short -> non_english (marker-stopword
+    langid) -> low_stopword -> low_diversity (distinct-token fraction)
+    -> repetitive (top-bigram mass) -> accept. One Arrow-batched stat
+    pass (text_stat_frame) + a JVM when-cascade — map-only, zero
+    shuffles, embarrassingly parallel at 100 TB."""
     scored = text_stat_frame(docs).withColumn(
         "is_en",
         (F.col("en_hits") >= F.col("de_hits"))
@@ -2496,33 +2107,6 @@ _SHINGLES_DUCK = (
 )
 
 
-def _simhash_sql() -> str:
-    bit_sums = ", ".join(
-        f"sum(CASE WHEN ascii(substr(md5(tok), {b + 1}, 1)) % 2 = 1 THEN 1 ELSE -1 END) AS s{b}"
-        for b in range(16)
-    )
-    combine = " + ".join(f"(CASE WHEN s{b} > 0 THEN {2 ** b} ELSE 0 END)" for b in range(16))
-    return f"""
-WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),
-agg AS (SELECT doc_id, {bit_sums} FROM tok GROUP BY doc_id)
-SELECT doc_id, CAST({combine} AS BIGINT) AS simhash FROM agg"""
-
-
-def _lsh_sql() -> str:
-    bits = []
-    for j, signs in enumerate(PLANES):
-        arr = "[" + ",".join(str(s) for s in signs) + "]"
-        dot = (
-            f"list_sum(list_transform(range(1, {EMB_DIM + 1}), "
-            f"i -> CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) * ({arr}::BIGINT[])[i]))"
-        )
-        bits.append(f"(CASE WHEN ({dot}) > 0 THEN {2 ** j} ELSE 0 END)")
-    bucket = " + ".join(bits)
-    return f"""
-SELECT CAST({bucket} AS BIGINT) AS bucket, count(*) AS n_vecs
-FROM embeddings GROUP BY 1"""
-
-
 # 4 hash families from ONE md5 per shingle: disjoint 8-hex-char (32-bit)
 # slices of the digest are independent uniform hashes, so the corpus is
 # hashed once instead of once per family — at 10^10 docs that is 4x less
@@ -2632,10 +2216,6 @@ FROM documents""",
 SELECT md5(array_to_string(string_split(text, ' ')[1:5], ' ')) AS content_key,
        count(*) AS n_copies, min(doc_id) AS keep_doc_id
 FROM documents GROUP BY 1""",
-    "dedup_minhash": f"""
-SELECT doc_id, {_MINHASH_COLS_DUCK}
-FROM documents WHERE len(string_split(text, ' ')) >= 3""",
-    "dedup_simhash": _simhash_sql(),
     "dedup_minhash_lsh": f"""
 WITH corpus AS (
   SELECT doc_id, text FROM documents
@@ -2717,24 +2297,6 @@ scored AS (
 SELECT new_id AS new_doc_id, CAST(min(idx_id) AS BIGINT) AS keep_doc_id,
        CAST(max(jac) AS BIGINT) AS jac_milli
 FROM scored WHERE jac >= {_LSH_JAC_MIN} GROUP BY new_id""",
-    "dedup_ngram_jaccard": f"""
-WITH sh AS (
-  SELECT DISTINCT doc_id, unnest({_SHINGLES_DUCK}) AS s FROM documents
-),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-pairs AS (
-  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, x.n_sh AS na, y.n_sh AS nb
-  FROM sizes x JOIN sizes y ON x.doc_id + 1 = y.doc_id
-),
-inter AS (
-  SELECT a.doc_id AS doc_a, count(*) AS inter_cnt
-  FROM sh a JOIN sh b ON a.doc_id + 1 = b.doc_id AND a.s = b.s
-  GROUP BY 1
-)
-SELECT p.doc_a, p.doc_b, coalesce(i.inter_cnt, 0) AS inter_cnt,
-       p.na + p.nb - coalesce(i.inter_cnt, 0) AS union_cnt,
-       CAST(floor(1000.0 * coalesce(i.inter_cnt, 0) / (p.na + p.nb - coalesce(i.inter_cnt, 0))) AS BIGINT) AS jac_milli
-FROM pairs p LEFT JOIN inter i ON p.doc_a = i.doc_a""",
     "cosine_topk": f"""
 WITH q AS (
   SELECT embedding AS qe FROM embeddings ORDER BY vec_id LIMIT 1
@@ -2755,36 +2317,11 @@ SELECT vec_id,
        CAST(row_number() OVER (ORDER BY CASE WHEN nv = 0 OR nq = 0 THEN NULL
             ELSE floor(1000.0 * dot / sqrt(CAST(nv AS DOUBLE) * CAST(nq AS DOUBLE))) END DESC, vec_id ASC) AS INT) AS rk
 FROM scored QUALIFY rk <= 10""",
-    "dedup_embedding_cosine": f"""
-WITH pairs AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.embedding AS ea, b.embedding AS eb
-  FROM embeddings a JOIN embeddings b ON a.vec_id + 1 = b.vec_id
-),
-parts AS (
-  SELECT id_a, id_b,
-    list_sum(list_transform(range(1, {EMB_DIM + 1}),
-      i -> CAST(floor(CAST(ea[i] AS DOUBLE) * 1000) AS BIGINT) * CAST(floor(CAST(eb[i] AS DOUBLE) * 1000) AS BIGINT))) AS dot,
-    list_sum(list_transform(range(1, {EMB_DIM + 1}),
-      i -> CAST(floor(CAST(ea[i] AS DOUBLE) * 1000) AS BIGINT) * CAST(floor(CAST(ea[i] AS DOUBLE) * 1000) AS BIGINT))) AS na,
-    list_sum(list_transform(range(1, {EMB_DIM + 1}),
-      i -> CAST(floor(CAST(eb[i] AS DOUBLE) * 1000) AS BIGINT) * CAST(floor(CAST(eb[i] AS DOUBLE) * 1000) AS BIGINT))) AS nb
-  FROM pairs
-),
-scored AS (
-  SELECT id_a, id_b,
-    CAST(CASE WHEN na = 0 OR nb = 0 THEN NULL
-         ELSE floor(1000.0 * dot / sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))) END
-         AS BIGINT) AS cos_milli
-  FROM parts
-)
-SELECT id_a, id_b, cos_milli, cos_milli >= 300 AS is_near_dup FROM scored""",
-    "ann_lsh_buckets": _lsh_sql(),
     "image_phash": _image_phash_sql(),
     "video_frames": _video_frames_sql(),
     "audio_stats": _audio_stats_sql(),
     "robots_rules": _robots_rules_sql(),
     "robots_sitemaps": _robots_sitemaps_sql(),
-    "ann_lsh_search": None,  # filled below (needs the bucket expr)
     "sessionize": """
 WITH gapped AS (
   SELECT user_id, event_id, ts, value,
@@ -2803,57 +2340,6 @@ SELECT user_id, session_id, count(*) AS n_events,
        strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
        CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents
 FROM sess GROUP BY user_id, session_id""",
-    "text_repetition": """
-WITH base AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), stats AS (
-  SELECT doc_id, len(toks) AS n_tokens,
-         CAST(floor(1000.0 * len(list_distinct(toks)) / len(toks)) AS BIGINT) AS distinct_milli,
-         list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i + 1]) AS bigrams
-  FROM base
-), bg AS (
-  SELECT doc_id, n_tokens, distinct_milli, unnest(bigrams) AS bg FROM stats
-), per_bg AS (
-  SELECT doc_id, n_tokens, distinct_milli, bg, count(*) AS cnt FROM bg GROUP BY 1, 2, 3, 4
-)
-SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens, distinct_milli,
-       CAST(floor(1000.0 * max(cnt) / sum(cnt)) AS BIGINT) AS top_bigram_milli
-FROM per_bg GROUP BY 1, 2, 3""",
-    "pii_mask": f"""
-WITH inj AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 3 = 0
-              THEN text || ' contact user' || CAST(doc_id AS VARCHAR)
-                   || '@mail.example.com or 555-'
-                   || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-0199'
-              ELSE text END AS t
-  FROM documents
-)
-SELECT doc_id,
-       CAST(len(regexp_extract_all(t, '{_PII_EMAIL}')) AS INT) AS n_emails,
-       CAST(len(regexp_extract_all(t, '{_PII_PHONE}')) AS INT) AS n_phones,
-       md5(regexp_replace(regexp_replace(t, '{_PII_EMAIL}', '<EMAIL>', 'g'),
-                          '{_PII_PHONE}', '<PHONE>', 'g')) AS masked_fp
-FROM inj""",
-    "text_tokens_bpe": f"""
-WITH t AS (
-  SELECT doc_id,
-         regexp_extract_all(text, '{_BPE_TOKEN_RE}') AS toks,
-         len(string_split(text, ' ')) AS n_ws
-  FROM documents
-)
-SELECT doc_id,
-       CAST(len(toks) AS INT) AS n_bpe_tokens,
-       CAST(len(list_filter(toks, t -> regexp_matches(t, '^[A-Za-z]'))) AS INT) AS n_word_tokens,
-       CAST(len(toks) - len(list_filter(toks, t -> regexp_matches(t, '^[A-Za-z]'))) AS INT) AS n_other_tokens,
-       CAST(floor(1000.0 * len(toks) / n_ws) AS BIGINT) AS fertility_milli
-FROM t""",
-    "text_stats": """
-SELECT doc_id,
-       CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
-       CAST(length(text) AS INT) AS n_chars_calc,
-       CAST(floor(1000.0 * length(replace(text, ' ', '')) / len(string_split(text, ' '))) AS BIGINT) AS avg_tok_len_milli
-FROM documents""",
     "text_quality": f"""
 WITH t AS (
   SELECT doc_id, len(string_split(text, ' ')) AS n_tokens,
@@ -2865,43 +2351,6 @@ SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens, CAST(stop_cnt AS INT) AS stop_
        CAST(floor(1000.0 * stop_cnt / n_tokens) AS BIGINT) AS stop_milli,
        CAST(floor(1000.0 * short_cnt / n_tokens) AS BIGINT) AS short_milli
 FROM t""",
-    "quality_filter": f"""
-WITH base AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), s AS (
-  SELECT doc_id, len(toks) AS n_tokens,
-    CAST(floor(1000.0 * len(list_distinct(toks)) / len(toks)) AS BIGINT) AS distinct_milli,
-    len(list_filter(toks, t -> t IN ({_STOP_LIST}))) AS stop_cnt,
-    len(list_filter(toks, t -> t IN ('the', 'a', 'is'))) AS en_hits,
-    len(list_filter(toks, t -> t IN ('der', 'die', 'das'))) AS de_hits,
-    len(list_filter(toks, t -> t IN ('le', 'la', 'et'))) AS fr_hits,
-    len(list_filter(toks, t -> t IN ('el', 'los', 'que'))) AS es_hits,
-    list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i + 1]) AS bigrams
-  FROM base
-), bg AS (
-  SELECT doc_id, unnest(bigrams) AS bg FROM s
-), per AS (
-  SELECT doc_id, bg, count(*) AS c FROM bg GROUP BY 1, 2
-), tb AS (
-  SELECT doc_id, CAST(floor(1000.0 * max(c) / sum(c)) AS BIGINT) AS top_bigram_milli
-  FROM per GROUP BY 1
-), j AS (
-  SELECT s.*, coalesce(tb.top_bigram_milli, 0) AS top_bigram_milli,
-         (en_hits >= de_hits AND en_hits >= fr_hits AND en_hits >= es_hits) AS is_en
-  FROM s LEFT JOIN tb USING (doc_id)
-), r AS (
-  SELECT doc_id, n_tokens,
-    CASE WHEN n_tokens < {_QF_MIN_TOKENS} THEN 'too_short'
-         WHEN NOT is_en THEN 'non_english'
-         WHEN stop_cnt < {_QF_MIN_STOP} THEN 'low_stopword'
-         WHEN distinct_milli < {_QF_MIN_DISTINCT_MILLI} THEN 'low_diversity'
-         WHEN top_bigram_milli > {_QF_MAX_TOP_BIGRAM_MILLI} THEN 'repetitive'
-         ELSE 'accept' END AS reject_reason
-  FROM j
-)
-SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens, reject_reason,
-       reject_reason = 'accept' AS accepted
-FROM r""",
     "dedup_blocks": f"""
 WITH toked AS (
   SELECT doc_id, string_split(text, ' ') AS toks FROM documents
@@ -2943,54 +2392,7 @@ SELECT doc_id, CAST(count(*) AS BIGINT) AS n_probe_hits
 FROM g JOIN probe USING (gram)
 GROUP BY doc_id""",
     "text_langid": _langid_sql(),
-    "fingerprint": """
-SELECT doc_id,
-       md5(lower(trim(regexp_replace(text, ' +', ' ', 'g')))) AS fp,
-       substr(md5(lower(trim(regexp_replace(text, ' +', ' ', 'g')))), 1, 2) AS fp_bucket,
-       CAST(floor(length(text) / 100) * 100 AS BIGINT) AS len_bucket
-FROM documents""",
 }
-
-
-def _lsh_search_sql() -> str:
-    bits = []
-    for j, signs in enumerate(PLANES):
-        arr = "[" + ",".join(str(s) for s in signs) + "]"
-        dot = (
-            f"list_sum(list_transform(range(1, {EMB_DIM + 1}), "
-            f"i -> CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000) AS BIGINT) * ({arr}::BIGINT[])[i]))"
-        )
-        bits.append(f"(CASE WHEN ({dot}) > 0 THEN {2 ** j} ELSE 0 END)")
-    bucket = "CAST(" + " + ".join(bits) + " AS BIGINT)"
-    fixed = "CAST(floor(CAST({v}[i] AS DOUBLE) * 1000) AS BIGINT)"
-    dotq = (
-        f"list_sum(list_transform(range(1, {EMB_DIM + 1}), "
-        f"i -> {fixed.format(v='embedding')} * {fixed.format(v='qe')}))"
-    )
-    nv = (
-        f"list_sum(list_transform(range(1, {EMB_DIM + 1}), "
-        f"i -> {fixed.format(v='embedding')} * {fixed.format(v='embedding')}))"
-    )
-    nq = (
-        f"list_sum(list_transform(range(1, {EMB_DIM + 1}), "
-        f"i -> {fixed.format(v='qe')} * {fixed.format(v='qe')}))"
-    )
-    return f"""
-WITH b AS (SELECT vec_id, embedding, {bucket} AS bucket FROM embeddings),
-q AS (SELECT embedding AS qe, bucket AS qbucket FROM b ORDER BY vec_id LIMIT 1),
-scored AS (
-  SELECT vec_id, bucket,
-    CAST(CASE WHEN ({nv}) = 0 OR ({nq}) = 0 THEN NULL
-         ELSE floor(1000.0 * {dotq} / sqrt(CAST({nv} AS DOUBLE) * CAST({nq} AS DOUBLE))) END
-         AS BIGINT) AS cos_milli
-  FROM b, q WHERE b.bucket = q.qbucket
-)
-SELECT vec_id, bucket, cos_milli,
-       CAST(row_number() OVER (ORDER BY cos_milli DESC, vec_id ASC) AS INT) AS rk
-FROM scored QUALIFY rk <= 5"""
-
-
-ORACLE_SQL["ann_lsh_search"] = _lsh_search_sql()
 
 
 def _cos_milli_duck(va: str, vb: str) -> str:
@@ -3036,29 +2438,6 @@ scored AS (SELECT id_a, id_b, {_cos_milli_duck("ea", "eb")} AS cos_milli FROM pa
 SELECT id_b AS dup_vec_id, CAST(min(id_a) AS BIGINT) AS keep_vec_id,
        CAST(max(cos_milli) AS BIGINT) AS cos_milli
 FROM scored WHERE cos_milli >= {_EMB_LSH_COS_MIN} GROUP BY id_b"""
-
-
-def _ann_ivf_sql() -> str:
-    cosc = _cos_milli_duck("embedding", "ce")
-    cosq = _cos_milli_duck("embedding", "qe")
-    return f"""
-WITH cents AS (
-  SELECT vec_id AS cent_id, embedding AS ce FROM embeddings ORDER BY vec_id LIMIT {_IVF_NLIST}
-),
-assigned AS (
-  SELECT vec_id, embedding, cent_id,
-         row_number() OVER (PARTITION BY vec_id ORDER BY {cosc} DESC, cent_id ASC) AS ark
-  FROM embeddings, cents
-  QUALIFY ark = 1
-),
-q AS (SELECT embedding AS qe, cent_id AS qcent FROM assigned ORDER BY vec_id LIMIT 1),
-scored AS (
-  SELECT a.vec_id, a.cent_id, {cosq} AS cos_milli
-  FROM assigned a, q WHERE a.cent_id = q.qcent
-)
-SELECT vec_id, cent_id, cos_milli,
-       CAST(row_number() OVER (ORDER BY cos_milli DESC, vec_id ASC) AS INT) AS rk
-FROM scored QUALIFY rk <= 5"""
 
 
 def _ann_ivfpq_sql() -> str:
@@ -3142,7 +2521,6 @@ FROM scored WHERE cos_milli >= {_SEMDEDUP_COS_MIN} GROUP BY id_b, cent_id"""
 
 
 ORACLE_SQL["dedup_embedding_lsh"] = _dedup_embedding_lsh_sql()
-ORACLE_SQL["ann_ivf_search"] = _ann_ivf_sql()
 ORACLE_SQL["ann_ivfpq_search"] = _ann_ivfpq_sql()
 ORACLE_SQL["semdedup"] = _semdedup_sql()
 
@@ -3164,30 +2542,17 @@ SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "link_extract": q_link_extract,
     "spans_parse": q_spans_parse,
     "dedup_exact": q_dedup_exact,
-    "dedup_minhash": q_dedup_minhash,
-    "dedup_simhash": q_dedup_simhash,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
     "dedup_minhash_lsh": q_dedup_minhash_lsh,
     "dedup_incremental": q_dedup_incremental,
     "cosine_topk": q_cosine_topk,
-    "dedup_embedding_cosine": q_dedup_embedding_cosine,
-    "ann_lsh_buckets": q_ann_lsh_buckets,
-    "ann_lsh_search": q_ann_lsh_search,
     "dedup_embedding_lsh": q_dedup_embedding_lsh,
-    "ann_ivf_search": q_ann_ivf_search,
     "ann_ivfpq_search": q_ann_ivfpq_search,
     "semdedup": q_semdedup,
     "sessionize": q_sessionize,
-    "text_stats": q_text_stats,
-    "text_tokens_bpe": q_text_tokens_bpe,
     "text_quality": q_text_quality,
-    "text_repetition": q_text_repetition,
-    "pii_mask": q_pii_mask,
     "dedup_blocks": q_dedup_blocks,
     "contamination": q_contamination,
-    "quality_filter": q_quality_filter,
     "text_langid": q_text_langid,
-    "fingerprint": q_fingerprint,
     "image_phash": q_image_phash,
     "video_frames": q_video_frames,
     "audio_stats": q_audio_stats,
@@ -3196,7 +2561,6 @@ SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "warc_roundtrip": q_warc_roundtrip,
     "wet_export": q_wet_export,
     "link_rank": q_link_rank,
-    "seed_ppr": q_seed_ppr,
     "sitemap_roundtrip": q_sitemap_roundtrip,
     "redirect_resolve": q_redirect_resolve,
     "warc_cdx": q_warc_cdx,
@@ -3230,7 +2594,6 @@ SELECT 'h' || CAST(doc_id % 50 AS VARCHAR) || '.example.org' AS host,
 FROM documents"""
 
 ORACLE_SQL["link_rank"] = _link_rank_sql()
-ORACLE_SQL["seed_ppr"] = _seed_ppr_sql()
 ORACLE_SQL["warc_roundtrip"] = """
 SELECT doc_id // 100 AS segment_id,
        'https://corpus.example.org/doc/' || CAST(doc_id AS VARCHAR) AS target_uri,

@@ -11,18 +11,19 @@ URL in flight) has no analog for:
   estimation from fetch history -> staleness-weighted priority;
 - rendezvous (HRW) host sharding: coordination-free assignment of hosts
   to fetcher shards with provably minimal movement when a shard is added;
-- deterministic HyperLogLog: approximate distinct-URL counting whose
-  register math is reproduced bit-for-bit by the DuckDB oracle;
 - anchor-text aggregation: per-target in-degree + dominant anchor text,
   the classic indexing signal extracted from the link graph;
 - connected components: hook/jump label propagation closing near-dup
   pairs into clusters (one survivor per cluster, not per pair);
-- mirror-site detection: content-set signatures instead of a quadratic
-  host x host comparison;
 - tf-idf top-k terms: the posting-list build + term weighting with an
   integer-surrogate idf;
-- largest-remainder budget allocation: per-shard fetch-slot
-  apportionment across hosts, exact (sum == budget) and deterministic.
+- exact nearest-rank latency quantiles, a deterministic count-min
+  sketch and the two-round crawl diff;
+- HITS, host-graph collapse, sitemap coverage audit, registrable-domain
+  extraction, ROLLUP crawl reports and BPE merge induction;
+- the curation pipeline's exact-arithmetic helpers: largest-remainder
+  apportionment (sum == budget, deterministic), integer sqrt, sequence
+  packing and the training-shard deal.
 
 Same determinism rules as queries.py: integer fixed-point only (no raw
 doubles), md5 as the only cross-engine hash, every column aliased
@@ -261,120 +262,6 @@ SELECT host, shard8, shard9, shard8 <> shard9 AS moved FROM agg"""
 
 
 # ---------------------------------------------------------------------------
-# deterministic HyperLogLog distinct-URL counting
-# ---------------------------------------------------------------------------
-
-_HLL_P = 8  # 2^8 = 256 registers
-_HLL_M = 1 << _HLL_P
-# raw-estimator constant for m=256: alpha = 0.7213/(1 + 1.079/256)
-# ~= 0.7183 (Flajolet et al. 2007, table of alpha_m; 0.709 is the m=64
-# constant and would bias every estimate ~1.3% low). Integer fixed-point:
-# E = alpha * m^2 * 2^53 / S  ->  numer // ((S >> 20) * 10000)
-# with numer = 7183 * m^2 * 2^33 ~= 4.0e18, still inside int64.
-_HLL_ALPHA_E4 = 7183
-_HLL_NUMER = _HLL_ALPHA_E4 * _HLL_M * _HLL_M * (1 << 33)
-
-
-def q_hll_distinct(spark: SparkSession, sf: str) -> DataFrame:
-    """Approximate distinct-URL counting via a DETERMINISTIC HyperLogLog
-    (Flajolet et al. 2007) — the sketch a 100 TB crawl uses to answer
-    "how many distinct URLs per shard/host class" without a
-    count(distinct) shuffle of the raw keys. Every step is reproduced
-    bit-for-bit by the DuckDB oracle: the 60-bit hash is the first 15
-    hex chars of md5(key), bucket = low 8 bits, rho = leading-zero rank
-    of the remaining 52 bits via length(bin(w)), and the raw estimator
-    runs in integer fixed-point (alpha=0.7183, the m=256 constant), so even the APPROXIMATE
-    answer hash-matches exactly. Exact distinct + abs error in milli are
-    emitted alongside (accuracy at this size: see test_queries_scale).
-
-    Keys: 20 per document, (doc_id * 7919 + j * 104729) % 2477 — ~2k
-    true distinct per group, well past m=256 so the raw estimator is in
-    its accurate regime.
-
-    Scale shape: the sketch IS the scale story — groupBy(grp, bucket)
-    max(rho) shrinks any input to m rows per group map-side; the exact
-    count(distinct) alongside is the small-scale cross-check only."""
-    docs = load(spark, sf, "documents")
-    rows = docs.select(
-        (F.col("doc_id") % 4).alias("grp"),
-        F.explode(F.expr("sequence(1, 20)")).alias("j"),
-        "doc_id",
-    ).select(
-        "grp",
-        F.concat(
-            F.lit("k"), ((F.col("doc_id") * 7919 + F.col("j") * 104729) % 2477).cast("string")
-        ).alias("key"),
-    )
-    hashed = rows.select(
-        "grp",
-        "key",
-        F.conv(F.substring(F.md5("key"), 1, 15), 16, 10).cast("long").alias("v"),
-    ).select(
-        "grp",
-        "key",
-        (F.col("v") % _HLL_M).alias("bucket"),
-        F.expr(f"v DIV {_HLL_M}").alias("w"),
-    )
-    regs = (
-        hashed.withColumn(
-            "rho",
-            F.when(F.col("w") > 0, F.lit(53) - F.length(F.bin("w"))).otherwise(F.lit(53)),
-        )
-        .groupBy("grp", "bucket")
-        .agg(F.max("rho").alias("reg"))
-    )
-    sketch = regs.groupBy("grp").agg(
-        (
-            F.sum(F.expr("CAST(pow(2, 53 - reg) AS BIGINT)"))
-            + (F.lit(_HLL_M) - F.count("*")) * F.lit(1 << 53)
-        ).alias("s"),
-    )
-    exact = hashed.groupBy("grp").agg(F.countDistinct("key").alias("exact_distinct"))
-    return (
-        sketch.join(exact, "grp")
-        .withColumn("hll_estimate", F.expr(f"{_HLL_NUMER} DIV (greatest(s DIV 1048576, 1) * 10000)"))
-        .select(
-            "grp",
-            "exact_distinct",
-            "hll_estimate",
-            F.expr("(1000 * abs(hll_estimate - exact_distinct)) DIV exact_distinct").alias(
-                "abs_err_milli"
-            ),
-        )
-    )
-
-
-_HLL_SQL = f"""
-WITH rows_in AS (
-  SELECT doc_id % 4 AS grp,
-         'k' || CAST((doc_id * 7919 + j * 104729) % 2477 AS VARCHAR) AS key
-  FROM documents, (SELECT unnest(generate_series(1, 20)) AS j) js
-), hashed AS (
-  SELECT grp, key,
-         CAST(concat('0x', substring(md5(key), 1, 15)) AS BIGINT) AS v
-  FROM rows_in
-), bucketed AS (
-  SELECT grp, key, v % {_HLL_M} AS bucket, v // {_HLL_M} AS w FROM hashed
-), regs AS (
-  SELECT grp, bucket,
-         max(CASE WHEN w > 0 THEN 53 - length(bin(w)) ELSE 53 END) AS reg
-  FROM bucketed GROUP BY grp, bucket
-), sketch AS (
-  SELECT grp,
-         CAST(sum(CAST(pow(2, 53 - reg) AS BIGINT))
-              + ({_HLL_M} - count(*)) * {1 << 53} AS BIGINT) AS s
-  FROM regs GROUP BY grp
-), exact AS (
-  SELECT grp, count(DISTINCT key) AS exact_distinct FROM bucketed GROUP BY grp
-)
-SELECT sketch.grp, exact_distinct,
-       {_HLL_NUMER} // (greatest(s // 1048576, 1) * 10000) AS hll_estimate,
-       (1000 * abs({_HLL_NUMER} // (greatest(s // 1048576, 1) * 10000) - exact_distinct))
-         // exact_distinct AS abs_err_milli
-FROM sketch JOIN exact ON sketch.grp = exact.grp"""
-
-
-# ---------------------------------------------------------------------------
 # anchor-text aggregation
 # ---------------------------------------------------------------------------
 
@@ -520,67 +407,6 @@ def _cc_unroll_sql(verts_cte: str, edges_cte: str, stages=None) -> str:
     return "\n".join(parts)
 
 
-def q_dedup_components(spark: SparkSession, sf: str) -> DataFrame:
-    """Connected components over a duplicate-pair graph (the step AFTER
-    LSH dedup emits pairs: near-dup pairs must be closed into clusters so
-    each cluster keeps exactly one representative — pairwise keep-min
-    alone leaves chains like a~b, b~c splitting into two survivors).
-    Label propagation with alternating hook (one-hop neighbor min) and
-    jump (pointer doubling, lab <- lab(lab)) stages, the same schedule as
-    large-star/small-star (Kiveris et al., "Connected components in
-    MapReduce and beyond"). Deterministic edge fixture: chain edges
-    (i, i+1) within 8-blocks plus a chord (i, i+11) every 16 ids, so
-    components are 16-id runs with diameter 7 — deep enough that only
-    the alternating schedule converges in 6 stages. Integer labels, so
-    the unrolled-CTE DuckDB oracle hash-matches exactly.
-
-    Scale shape: hook is one hash join (edges x labels, both partitioned
-    on the key) + a map-side-combined min; jump is one self-join of the
-    label table. Stage count grows with log(diameter), not diameter.
-    Jump inputs are localCheckpointed (each jump consumes the table
-    twice — the logical plan would double per stage otherwise; see
-    _label_propagate)."""
-    docs = load(spark, sf, "documents")
-    n = docs.count()
-    ids = docs.select(F.col("doc_id").alias("v"))
-    fwd = docs.select(F.col("doc_id").alias("a"), (F.col("doc_id") + 1).alias("b")).filter(
-        (F.col("a") % 8 != 7) & (F.col("b") < n)
-    )
-    chord = docs.select(F.col("doc_id").alias("a"), (F.col("doc_id") + 11).alias("b")).filter(
-        (F.col("a") % 16 == 0) & (F.col("b") < n)
-    )
-    e0 = fwd.unionByName(chord)
-    edges = e0.select(F.col("a").alias("s"), F.col("b").alias("d")).unionByName(
-        e0.select(F.col("b").alias("s"), F.col("a").alias("d"))
-    )
-    lab = _barrier(_label_propagate(ids, edges))
-    sizes = lab.groupBy("lab").agg(F.count("*").alias("comp_size"))
-    return lab.join(sizes, "lab").select(
-        F.col("v").alias("doc_id"), F.col("lab").alias("component"), "comp_size"
-    )
-
-
-def _cc_sql() -> str:
-    """The alternating hook/jump schedule unrolled as chained CTEs."""
-    parts = [
-        "WITH nd AS (SELECT count(*) AS n FROM documents),",
-        "verts AS (SELECT doc_id AS v FROM documents),",
-        "e0 AS (SELECT doc_id AS a, doc_id + 1 AS b FROM documents"
-        " WHERE doc_id % 8 <> 7 AND doc_id + 1 < (SELECT n FROM nd)"
-        " UNION ALL SELECT doc_id, doc_id + 11 FROM documents"
-        " WHERE doc_id % 16 = 0 AND doc_id + 11 < (SELECT n FROM nd)),",
-        "edges AS (SELECT a AS s, b AS d FROM e0 UNION ALL SELECT b, a FROM e0),",
-        _cc_unroll_sql("verts", "edges"),
-    ]
-    k = len(_CC_STAGES)
-    parts.append(f"sizes AS (SELECT lab, count(*) AS comp_size FROM l{k} GROUP BY lab)")
-    parts.append(
-        f"SELECT l.v AS doc_id, l.lab AS component, sizes.comp_size"
-        f" FROM l{k} l JOIN sizes ON sizes.lab = l.lab"
-    )
-    return "\n".join(parts)
-
-
 # ---------------------------------------------------------------------------
 # dedup cluster closure (LSH pairs -> connected components -> representatives)
 # ---------------------------------------------------------------------------
@@ -616,9 +442,9 @@ def q_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     )
     # Truncate lineage BEFORE the propagation loop: each jump stage
     # references its input twice, doubling the LOGICAL plan per stage —
-    # harmless over a parquet scan (dedup_components) but catastrophic
-    # over the full LSH pipeline (the optimizer re-traverses a 2^stages
-    # copy of the band-join tree and OOMs before a single task runs).
+    # harmless over a parquet scan but catastrophic over the full LSH
+    # pipeline (the optimizer re-traverses a 2^stages copy of the
+    # band-join tree and OOMs before a single task runs).
     # localCheckpoint materializes the tiny vertex/edge tables once and
     # gives the CC stages a leaf to build on; production would write the
     # pair table to the state store between the two phases anyway.
@@ -697,79 +523,6 @@ FROM doc_lab JOIN csize ON doc_lab.cluster_rep = csize.cluster_rep"""
 
 
 # ---------------------------------------------------------------------------
-# mirror-site detection
-# ---------------------------------------------------------------------------
-
-
-def q_mirror_detect(spark: SparkSession, sf: str) -> DataFrame:
-    """Mirror-site detection (engine-new: at web scale whole HOSTS are
-    duplicates — ftp mirrors, CDN vanity domains, parked clones — and a
-    crawler that discovers a mirror should crawl ONE of them). A host's
-    content signature is md5 over its sorted distinct page fingerprints;
-    hosts with equal signatures serve exactly the same content set.
-    Deterministic fixture: host = doc_id % 40, page fingerprint =
-    md5('c' || doc_id % 60); host h serves the 3-content set
-    {h, h+20, h+40} mod 60, which is invariant under +20 — so host h
-    and host h+20 serve identical content sets: 20 planted mirror pairs,
-    each host with 3 distinct page fingerprints.
-
-    Scale shape: groupBy(host, fp) dedup with map-side combine, then one
-    groupBy(host) whose per-host state is the host's distinct-fp set
-    (bounded by host page count — the quantity a real crawler would cap
-    or sketch via a per-host minhash), then a groupBy(sig) over one row
-    per host. No pairwise host comparison anywhere — signature equality
-    replaces the quadratic host x host join."""
-    docs = load(spark, sf, "documents")
-    pages = docs.select(
-        F.concat(F.lit("h"), (F.col("doc_id") % 40).cast("string"), F.lit(".example.org")).alias(
-            "host"
-        ),
-        F.md5(F.concat(F.lit("c"), (F.col("doc_id") % 60).cast("string"))).alias("fp"),
-    )
-    per_host = (
-        pages.groupBy("host", "fp")
-        .agg(F.count("*").alias("n_pages"))
-        .groupBy("host")
-        .agg(
-            F.count("*").alias("n_contents"),
-            F.md5(F.array_join(F.sort_array(F.collect_list("fp")), ",")).alias("sig"),
-        )
-    )
-    per_host = _barrier(per_host)
-    groups = per_host.groupBy("sig").agg(
-        F.count("*").alias("group_size"), F.min("host").alias("canonical_host")
-    )
-    return per_host.join(groups, "sig").select(
-        "host",
-        F.col("n_contents").cast("long").alias("n_contents"),
-        "sig",
-        F.col("group_size").cast("long").alias("group_size"),
-        "canonical_host",
-        (F.col("group_size") > 1).alias("is_mirror"),
-    )
-
-
-_MIRROR_SQL = """
-WITH pages AS (
-  SELECT 'h' || CAST(doc_id % 40 AS VARCHAR) || '.example.org' AS host,
-         md5('c' || CAST(doc_id % 60 AS VARCHAR)) AS fp
-  FROM documents
-), dedup AS (
-  SELECT host, fp FROM pages GROUP BY host, fp
-), per_host AS (
-  SELECT host, CAST(count(*) AS BIGINT) AS n_contents,
-         md5(array_to_string(list_sort(list(fp)), ',')) AS sig
-  FROM dedup GROUP BY host
-), groups AS (
-  SELECT sig, CAST(count(*) AS BIGINT) AS group_size, min(host) AS canonical_host
-  FROM per_host GROUP BY sig
-)
-SELECT host, n_contents, per_host.sig AS sig, group_size, canonical_host,
-       group_size > 1 AS is_mirror
-FROM per_host JOIN groups ON per_host.sig = groups.sig"""
-
-
-# ---------------------------------------------------------------------------
 # tf-idf indexing signal (integer-surrogate idf)
 # ---------------------------------------------------------------------------
 
@@ -835,47 +588,32 @@ SELECT doc_id, term, tf, df, score, rk FROM ranked WHERE rk <= {_TFIDF_K}"""
 
 
 # ---------------------------------------------------------------------------
-# largest-remainder fetch-budget allocation
+# largest-remainder apportionment and exact integer sqrt (the curation
+# pipeline's domain-mix quotas)
 # ---------------------------------------------------------------------------
 
-_ALLOC_BUDGET = 250  # fetch slots per shard per scheduling round
-_ALLOC_HOSTS = 23
-_ALLOC_SHARDS = 4
 
-
-def _largest_remainder(
-    df: DataFrame, weight_col: str, tie_col: str, budget: int, group_cols: tuple = ()
-) -> DataFrame:
+def _largest_remainder(df: DataFrame, weight_col: str, tie_col: str, budget: int) -> DataFrame:
     """Hamilton (largest-remainder) apportionment of ``budget`` across
-    the rows of ``df``, independently per ``group_cols`` pool (empty =
-    one global pool): floor shares first, then one extra unit to the
+    the rows of ``df``: floor shares first, then one extra unit to the
     rows with the largest remainders (ties broken by ``tie_col``, so the
     result is deterministic). Adds columns _lr_base, _lr_rem, _lr_quota;
-    sum(_lr_quota) per pool == budget exactly. Shared by q_budget_alloc
-    (pool = shard) and q_sample_stratified (global pool) so the rounding
-    rule can never drift between them.
+    sum(_lr_quota) == budget exactly.
 
-    Scale shape: the totals/leftover side tables have pool cardinality
-    (broadcast), and the remainder-rank window is partitioned by the
-    pool columns — with a non-empty pool it never globally sorts; the
-    global-pool variant ranks only the df rows themselves (strata, not
-    corpus)."""
-    g = list(group_cols)
-    totals = (df.groupBy(*g) if g else df.groupBy()).agg(
-        F.sum(weight_col).alias("_lr_total")
-    )
-    j = df.join(F.broadcast(totals), g) if g else df.crossJoin(F.broadcast(totals))
+    Scale shape: the totals/leftover side tables are single rows
+    (broadcast), and the remainder rank sorts only the df rows
+    themselves (domains, not corpus)."""
+    totals = df.agg(F.sum(weight_col).alias("_lr_total"))
     based = _barrier(
-        j.withColumn("_lr_base", F.expr(f"({budget} * {weight_col}) DIV _lr_total"))
+        df.crossJoin(F.broadcast(totals))
+        .withColumn("_lr_base", F.expr(f"({budget} * {weight_col}) DIV _lr_total"))
         .withColumn("_lr_rem", F.expr(f"({budget} * {weight_col}) % _lr_total"))
     )
-    leftover = (based.groupBy(*g) if g else based.groupBy()).agg(
-        (F.lit(budget) - F.sum("_lr_base")).alias("_lr_leftover")
-    )
-    win = Window.partitionBy(*g).orderBy(F.desc("_lr_rem"), F.asc(tie_col))
-    withl = based.join(F.broadcast(leftover), g) if g else based.crossJoin(F.broadcast(leftover))
+    leftover = based.agg((F.lit(budget) - F.sum("_lr_base")).alias("_lr_leftover"))
+    win = Window.orderBy(F.desc("_lr_rem"), F.asc(tie_col))
     return (
-        withl.withColumn("_lr_rk", F.row_number().over(win))
+        based.crossJoin(F.broadcast(leftover))
+        .withColumn("_lr_rk", F.row_number().over(win))
         .withColumn(
             "_lr_quota",
             (
@@ -885,73 +623,6 @@ def _largest_remainder(
         )
         .drop("_lr_total", "_lr_rk", "_lr_leftover")
     )
-
-
-def q_budget_alloc(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-shard fetch-budget apportionment by the largest-remainder
-    (Hamilton) method: each scheduling round hands every fetcher shard
-    a fixed slot budget, split across its hosts proportionally to
-    pending-URL counts — floor shares first, then the leftover slots to
-    the hosts with the largest remainders (ties broken by host id, so
-    the result is deterministic and the oracle hash-matches). Exactness
-    invariant: sum(alloc) per shard == budget, pinned in pytest.
-
-    Scale shape: one groupBy(host) count with map-side combine, a
-    broadcastable per-shard totals join (shard cardinality == fleet
-    size, always tiny), and a remainder-rank window partitioned BY
-    SHARD — each window sees only that shard's hosts, never a global
-    sort of all hosts."""
-    docs = load(spark, sf, "documents")
-    hosts = (
-        docs.select((F.col("doc_id") % _ALLOC_HOSTS).alias("host"))
-        .groupBy("host")
-        .agg(F.count("*").cast("long").alias("pending"))
-        .withColumn("shard", (F.col("host") % _ALLOC_SHARDS).cast("long"))
-    )
-    alloc = _largest_remainder(
-        hosts, "pending", "host", _ALLOC_BUDGET, group_cols=("shard",)
-    )
-    return alloc.select(
-        "host",
-        "shard",
-        "pending",
-        F.col("_lr_base").alias("base_alloc"),
-        F.col("_lr_rem").alias("remainder"),
-        (F.col("_lr_quota") - F.col("_lr_base")).cast("long").alias("extra"),
-        F.col("_lr_quota").alias("alloc"),
-    )
-
-
-_ALLOC_SQL = f"""
-WITH hosts AS (
-  SELECT doc_id % {_ALLOC_HOSTS} AS host, CAST(count(*) AS BIGINT) AS pending,
-         CAST((doc_id % {_ALLOC_HOSTS}) % {_ALLOC_SHARDS} AS BIGINT) AS shard
-  FROM documents GROUP BY doc_id % {_ALLOC_HOSTS}
-), totals AS (
-  SELECT shard, sum(pending) AS total FROM hosts GROUP BY shard
-), based AS (
-  SELECT host, hosts.shard AS shard, pending,
-         ({_ALLOC_BUDGET} * pending) // total AS base_alloc,
-         ({_ALLOC_BUDGET} * pending) % total AS remainder
-  FROM hosts JOIN totals ON hosts.shard = totals.shard
-), leftovers AS (
-  SELECT shard, {_ALLOC_BUDGET} - sum(base_alloc) AS leftover FROM based GROUP BY shard
-), ranked AS (
-  SELECT based.*, leftover,
-         row_number() OVER (PARTITION BY based.shard ORDER BY remainder DESC, host ASC) AS rk
-  FROM based JOIN leftovers ON based.shard = leftovers.shard
-)
-SELECT host, shard, pending, base_alloc, remainder,
-       CAST(CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS BIGINT) AS extra,
-       base_alloc + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS alloc
-FROM ranked"""
-
-
-# ---------------------------------------------------------------------------
-# temperature-weighted domain mixture
-# ---------------------------------------------------------------------------
-
-_MIX_BUDGET = 1_000_000  # tokens drawn per training pass (ppm-friendly)
 
 
 def _isqrt_col(c: str):
@@ -966,96 +637,6 @@ def _isqrt_col(c: str):
         + F.when((s0 + 1) * (s0 + 1) <= F.col(c), 1).otherwise(0)
         - F.when(s0 * s0 > F.col(c), 1).otherwise(0)
     ).cast("long")
-
-
-def q_domain_mix(spark: SparkSession, sf: str) -> DataFrame:
-    """Temperature-weighted training-data mixture (the Gopher/PaLM
-    data-mix step: sample domains proportionally to tokens^alpha with
-    alpha = 0.5, upsampling low-resource domains relative to their
-    natural share): per-domain token mass -> isqrt weight (exact
-    integer tokens^0.5, see _isqrt_col) -> Hamilton largest-remainder
-    apportionment of a fixed token budget over the weights (the SAME
-    rounding rule as q_budget_alloc / q_sample_stratified, via
-    _largest_remainder, so mixture quotas always sum to the budget
-    exactly) -> per-domain upsample factor vs natural share in
-    fixed-point (guarded against a zero natural-ppm for trace domains).
-    q_budget_alloc apportions pending counts proportionally; the
-    temperature exponent is what makes this the LLM data-mix operator.
-
-    Scale shape: one combine-heavy groupBy(source) (domain-sized
-    output); everything after runs on the DOMAIN table — totals
-    broadcast, remainder rank over domains, never the corpus. At 10^10
-    docs the corpus is touched exactly once."""
-    docs = load(spark, sf, "documents")
-    domains = (
-        docs.groupBy("source")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum(F.greatest(F.expr("n_chars DIV 4"), F.lit(1)))
-            .cast("long")
-            .alias("tokens"),
-        )
-        .withColumn("weight", _isqrt_col("tokens"))
-    )
-    total = domains.agg(F.sum("tokens").cast("long").alias("tot_tokens"))
-    alloc = _largest_remainder(domains, "weight", "source", _MIX_BUDGET)
-    return (
-        alloc.crossJoin(F.broadcast(total))
-        .withColumn(
-            "natural_ppm",
-            F.expr(f"({_MIX_BUDGET} * tokens) DIV tot_tokens").cast("long"),
-        )
-        .select(
-            "source",
-            "n_docs",
-            "tokens",
-            "weight",
-            F.col("_lr_quota").alias("alloc"),
-            "natural_ppm",
-            F.expr("(1000 * _lr_quota) DIV greatest(natural_ppm, 1)")
-            .cast("long")
-            .alias("upsample_fp"),
-        )
-    )
-
-
-_MIX_SQL = f"""
-WITH domains AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(GREATEST(n_chars // 4, 1)) AS BIGINT) AS tokens
-  FROM documents GROUP BY source
-), weighted AS (
-  SELECT source, n_docs, tokens,
-         CAST(floor(sqrt(CAST(tokens AS DOUBLE))) AS BIGINT)
-           + CASE WHEN (CAST(floor(sqrt(CAST(tokens AS DOUBLE))) AS BIGINT) + 1)
-                       * (CAST(floor(sqrt(CAST(tokens AS DOUBLE))) AS BIGINT) + 1)
-                       <= tokens THEN 1 ELSE 0 END
-           - CASE WHEN CAST(floor(sqrt(CAST(tokens AS DOUBLE))) AS BIGINT)
-                       * CAST(floor(sqrt(CAST(tokens AS DOUBLE))) AS BIGINT)
-                       > tokens THEN 1 ELSE 0 END AS weight
-  FROM domains
-), totals AS (
-  SELECT CAST(sum(weight) AS BIGINT) AS w_total,
-         CAST(sum(tokens) AS BIGINT) AS tot_tokens
-  FROM weighted
-), based AS (
-  SELECT w.*, t.tot_tokens,
-         ({_MIX_BUDGET} * weight) // t.w_total AS base_alloc,
-         ({_MIX_BUDGET} * weight) % t.w_total AS rem
-  FROM weighted w, totals t
-), leftovers AS (
-  SELECT {_MIX_BUDGET} - sum(base_alloc) AS leftover FROM based
-), ranked AS (
-  SELECT based.*, leftover,
-         row_number() OVER (ORDER BY rem DESC, source ASC) AS rk
-  FROM based, leftovers
-)
-SELECT source, n_docs, tokens, weight,
-       CAST(base_alloc + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS BIGINT) AS alloc,
-       CAST(({_MIX_BUDGET} * tokens) // tot_tokens AS BIGINT) AS natural_ppm,
-       CAST((1000 * (base_alloc + CASE WHEN rk <= leftover THEN 1 ELSE 0 END))
-            // GREATEST(({_MIX_BUDGET} * tokens) // tot_tokens, 1) AS BIGINT) AS upsample_fp
-FROM ranked"""
 
 
 # ---------------------------------------------------------------------------
@@ -1150,69 +731,6 @@ WITH lat AS (
 SELECT host, CAST(count(*) AS BIGINT) AS n_fetches,
        {", ".join(f"max(CASE WHEN rn = (n * {q} + 99) // 100 THEN latency_ms END) AS p{q}" for q in _QUANTILES)}
 FROM ranked GROUP BY host"""
-
-
-# ---------------------------------------------------------------------------
-# deterministic stratified sampling
-# ---------------------------------------------------------------------------
-
-_SAMPLE_TOTAL = 100
-
-
-def q_sample_stratified(spark: SparkSession, sf: str) -> DataFrame:
-    """Deterministic stratified sample: draw exactly 100 documents with
-    per-language quotas proportional to corpus shares (largest-remainder
-    apportionment, the same exactness rule as budget_alloc — quota sums
-    to the sample size EXACTLY, no binomial wobble like df.sampleBy), and
-    within each stratum take the md5(doc_id)-ranked prefix so the draw
-    is a pure function of the data — re-running on the same corpus, at
-    any partitioning, returns byte-identical samples (the training-data
-    reproducibility requirement).
-
-    Scale shape: stratum counts are one map-side-combined groupBy (tiny
-    result, broadcast back); the remainder rank runs over that tiny
-    per-stratum table only (cardinality = #languages, never the corpus);
-    the md5 draw rank is a window partitioned BY STRATUM — no global
-    sort of documents; the quota filter prunes everything past the
-    prefix."""
-    docs = load(spark, sf, "documents")
-    counts = docs.groupBy("lang").agg(F.count("*").cast("long").alias("n"))
-    quotas = _largest_remainder(counts, "n", "lang", _SAMPLE_TOTAL).select(
-        "lang", F.col("_lr_quota").alias("quota")
-    )
-    wd = Window.partitionBy("lang").orderBy(F.md5(F.col("doc_id").cast("string")), "doc_id")
-    picked = (
-        docs.select("doc_id", "lang", F.row_number().over(wd).alias("draw_rank"))
-        .join(F.broadcast(quotas), "lang")
-        .filter(F.col("draw_rank") <= F.col("quota"))
-    )
-    return picked.select(
-        "doc_id", "lang", F.col("draw_rank").cast("long").alias("draw_rank"), "quota"
-    )
-
-
-_SAMPLE_SQL = f"""
-WITH counts AS (
-  SELECT lang, CAST(count(*) AS BIGINT) AS n FROM documents GROUP BY lang
-), tot AS (SELECT sum(n) AS total FROM counts),
-based AS (
-  SELECT lang, n, ({_SAMPLE_TOTAL} * n) // total AS base_q, ({_SAMPLE_TOTAL} * n) % total AS rem
-  FROM counts, tot
-), leftovers AS (SELECT {_SAMPLE_TOTAL} - sum(base_q) AS leftover FROM based),
-quotas AS (
-  SELECT lang,
-         base_q + CASE WHEN row_number() OVER (ORDER BY rem DESC, lang ASC) <= leftover
-                       THEN 1 ELSE 0 END AS quota
-  FROM based, leftovers
-), ranked AS (
-  SELECT doc_id, lang,
-         CAST(row_number() OVER (PARTITION BY lang
-              ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT) AS draw_rank
-  FROM documents
-)
-SELECT doc_id, ranked.lang AS lang, draw_rank, quota
-FROM ranked JOIN quotas ON ranked.lang = quotas.lang
-WHERE draw_rank <= quota"""
 
 
 # ---------------------------------------------------------------------------
@@ -1327,116 +845,29 @@ FROM est"""
 
 
 # ---------------------------------------------------------------------------
-# co-citation similarity (related pages)
-# ---------------------------------------------------------------------------
-
-_COCITE_K = 2
-
-
-def q_cocitation(spark: SparkSession, sf: str) -> DataFrame:
-    """Co-citation related-pages signal: two pages are related when the
-    SAME third page links to both (Small 1973; the "related:" operator's
-    classic backbone). Shares q_anchor_agg's deterministic edge set
-    (src -> (src*31+k) % n, k=1..3). In-bucket pair generation per
-    linking page: each src's out-list (3 links) yields 3 ordered pairs,
-    so pair volume is n * outdeg^2 — bounded by the out-degree cap a
-    real crawler enforces anyway, NEVER all-pairs of the corpus. Top-2
-    co-cited partners per page, ties by partner id.
-
-    Scale shape: pairs explode map-side from each src's grouped
-    out-list (no join to build candidates), one groupBy(a, b) with
-    map-side combine, and a window partitioned BY PAGE for the top-k —
-    the same bounded-key discipline as the LSH band joins."""
-    docs = load(spark, sf, "documents")
-    n = docs.count()
-    out_lists = docs.select(
-        F.expr(
-            f"transform(sequence(1, {_ANCHOR_OUT_DEG}),"
-            f" k -> CAST((doc_id * 31 + k) % {n} AS BIGINT))"
-        ).alias("dsts")
-    )
-    pairs = out_lists.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(dsts, a -> transform(filter(dsts, b -> b <> a),"
-                " b -> named_struct('a', a, 'b', b))))"
-            )
-        ).alias("p")
-    ).select(F.col("p.a").alias("page"), F.col("p.b").alias("partner"))
-    co = pairs.groupBy("page", "partner").agg(F.count("*").cast("long").alias("cocitations"))
-    win = Window.partitionBy("page").orderBy(F.desc("cocitations"), F.asc("partner"))
-    return (
-        co.withColumn("rk", F.row_number().over(win))
-        .filter(F.col("rk") <= _COCITE_K)
-        .select("page", "partner", "cocitations", F.col("rk").cast("int").alias("rk"))
-    )
-
-
-_COCITE_SQL = f"""
-WITH nd AS (SELECT count(*) AS n FROM documents),
-out_lists AS (
-  SELECT doc_id,
-         list_transform(range(1, {_ANCHOR_OUT_DEG} + 1),
-                        k -> (doc_id * 31 + k) % n) AS dsts
-  FROM documents, nd
-), pairs AS (
-  SELECT unnest(flatten(list_transform(dsts,
-           a -> list_transform(list_filter(dsts, b -> b <> a),
-                b -> {{'a': a, 'b': b}})))) AS p
-  FROM out_lists
-), co AS (
-  SELECT p.a AS page, p.b AS partner, CAST(count(*) AS BIGINT) AS cocitations
-  FROM pairs GROUP BY p.a, p.b
-), ranked AS (
-  SELECT page, partner, cocitations,
-         CAST(row_number() OVER (PARTITION BY page
-              ORDER BY cocitations DESC, partner ASC) AS INT) AS rk
-  FROM co
-)
-SELECT page, partner, cocitations, rk FROM ranked WHERE rk <= {_COCITE_K}"""
-
-
-# ---------------------------------------------------------------------------
 # training-sequence packing (concatenate-and-chunk)
 # ---------------------------------------------------------------------------
 
 _PACK_WINDOW = 512  # context-window length in tokens
 
 
-def q_token_pack(spark: SparkSession, sf: str) -> DataFrame:
-    """GPT-style sequence packing: documents are concatenated in a fixed
-    deterministic order and cut into fixed-length context windows (the
-    FineWeb/Pile tokenize-concatenate-chunk step that turns a cleaned
-    corpus into training sequences). Packing runs per language shard —
-    the unit a real pipeline packs independently anyway — ordered by
-    doc_id; token counts use the chars/4 estimate, floor 1. Per document:
-    its stream offset, the first/last window it lands in, and whether it
-    crosses a window boundary (the fraction a packing-aware loader must
-    handle).
+def token_pack_frame(toks: DataFrame) -> DataFrame:
+    """GPT-style sequence packing over a (doc_id, lang, tokens) frame:
+    documents are concatenated in doc_id order per language shard and
+    cut into _PACK_WINDOW-token context windows. Per document: its
+    stream offset, the first/last window it lands in, and whether it
+    crosses a window boundary. pipeline.curate_corpus chains it after
+    the mix.
 
     Scale shape: the prefix sum is a window partitioned BY SHARD with an
     explicit rows frame — never a global single-task cumsum; everything
-    else is map-only integer arithmetic. At 10^10 docs each shard's
-    prefix sum is the classic two-pass pattern Spark's partitioned
-    window already implements (per-partition partials + carry)."""
-    return token_pack_frame(
-        load(spark, sf, "documents").select(
-            "doc_id",
-            "lang",
-            F.greatest(F.expr("n_chars DIV 4"), F.lit(1)).cast("long").alias("tokens"),
-        )
-    )
-
-
-def token_pack_frame(toks: DataFrame, window_len: int = _PACK_WINDOW) -> DataFrame:
-    """q_token_pack over any (doc_id, lang, tokens) frame — the
-    composition form pipeline.curate_corpus chains after the mix."""
+    else is map-only integer arithmetic."""
     w = (
         Window.partitionBy("lang")
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    L = window_len
+    L = _PACK_WINDOW
     return (
         toks.withColumn("offset", F.sum("tokens").over(w) - F.col("tokens"))
         .withColumn("chunk_first", F.expr(f"offset DIV {L}"))
@@ -1451,25 +882,6 @@ def token_pack_frame(toks: DataFrame, window_len: int = _PACK_WINDOW) -> DataFra
             (F.col("chunk_last") > F.col("chunk_first")).alias("crosses_boundary"),
         )
     )
-
-
-_PACK_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, lang, CAST(greatest(n_chars // 4, 1) AS BIGINT) AS tokens
-  FROM documents
-), packed AS (
-  SELECT doc_id, lang, tokens,
-         sum(tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           - tokens AS "offset"
-  FROM toks
-)
-SELECT doc_id, lang, tokens, "offset",
-       "offset" // {_PACK_WINDOW} AS chunk_first,
-       ("offset" + tokens - 1) // {_PACK_WINDOW} AS chunk_last,
-       ("offset" + tokens - 1) // {_PACK_WINDOW} > "offset" // {_PACK_WINDOW}
-         AS crosses_boundary
-FROM packed"""
 
 
 # ---------------------------------------------------------------------------
@@ -1599,75 +1011,6 @@ FROM with_k"""
 
 
 # ---------------------------------------------------------------------------
-# adaptive politeness quota (latency x crawl-delay -> fetch slots)
-# ---------------------------------------------------------------------------
-
-_QUOTA_ROUND_MS = 10_000  # scheduling round length
-_QUOTA_MAX_SLOTS = 100
-
-
-def q_adaptive_quota(spark: SparkSession, sf: str) -> DataFrame:
-    """Adaptive per-host fetch quota: the slots a politeness scheduler
-    hands a host per round = round_length / max(observed p95 latency,
-    robots crawl-delay), clamped to [1, max]. Ties the two real
-    politeness signals together — a host that answers in 30 ms gets
-    many slots; one that takes 900 ms (or declares Crawl-delay) gets
-    few — which is how a production crawler keeps per-host concurrency
-    proportional to what the host can absorb. Latency fixture shared
-    with latency_quantiles (nearest-rank p95); crawl-delay stand-in:
-    (host % 5) * 300 ms, sized so the gate binds both ways in the
-    fixture (some hosts latency-bound, some delay-bound). All-integer,
-    so the oracle hash-matches.
-    The output plugs directly into schedule_batch(quotas=...) —
-    (host, quota) is exactly its contract.
-
-    Scale shape: one host-partitioned rank window for the p95 (same as
-    latency_quantiles) + map-only arithmetic; output cardinality =
-    hosts, always broadcastable back into the scheduler."""
-    p = q_latency_quantiles(spark, sf).select("host", "n_fetches", "p95")
-    r, mx = _QUOTA_ROUND_MS, _QUOTA_MAX_SLOTS
-    return (
-        p.withColumn("crawl_delay_ms", (F.col("host") % 5) * 300)
-        .withColumn("gate_ms", F.greatest("p95", "crawl_delay_ms", F.lit(1)))
-        .select(
-            "host",
-            "n_fetches",
-            "p95",
-            "crawl_delay_ms",
-            "gate_ms",
-            F.least(F.greatest(F.expr(f"{r} DIV gate_ms"), F.lit(1)), F.lit(mx))
-            .cast("long")
-            .alias("quota"),
-        )
-    )
-
-
-_ADAPTIVE_QUOTA_SQL = f"""
-WITH lat AS (
-  SELECT user_id % 50 AS host, (event_id * 37) % 1000 + 1 AS latency_ms, event_id
-  FROM events
-), ranked AS (
-  SELECT host, latency_ms,
-         row_number() OVER (PARTITION BY host ORDER BY latency_ms, event_id) AS rn,
-         count(*) OVER (PARTITION BY host) AS n
-  FROM lat
-), q AS (
-  SELECT host, CAST(count(*) AS BIGINT) AS n_fetches,
-         max(CASE WHEN rn = (n * 95 + 99) // 100 THEN latency_ms END) AS p95
-  FROM ranked GROUP BY host
-), gated AS (
-  SELECT host, n_fetches, p95,
-         (host % 5) * 300 AS crawl_delay_ms,
-         greatest(p95, (host % 5) * 300, 1) AS gate_ms
-  FROM q
-)
-SELECT host, n_fetches, p95, crawl_delay_ms, gate_ms,
-       CAST(least(greatest({_QUOTA_ROUND_MS} // gate_ms, 1), {_QUOTA_MAX_SLOTS}) AS BIGINT)
-         AS quota
-FROM gated"""
-
-
-# ---------------------------------------------------------------------------
 # incremental crawl diff (change detection between two crawl rounds)
 # ---------------------------------------------------------------------------
 
@@ -1733,97 +1076,6 @@ FROM prev p FULL OUTER JOIN cur c ON p.url_id = c.url_id"""
 
 
 # ---------------------------------------------------------------------------
-# domain-level quality aggregation (RefinedWeb-style domain blocklist)
-# ---------------------------------------------------------------------------
-
-_DQ_DOMAINS = 23
-_DQ_MIN_CHARS = 250  # doc is bad if shorter (documents: n_chars 48..553)
-_DQ_MIN_DISTINCT_MILLI = 350  # ...or lexically degenerate (min 276 in data)
-_DQ_BLOCK_MILLI = 600  # block the domain when >= 60% of its docs are bad
-_DQ_MIN_DOCS = 10  # ...and the verdict has support
-
-
-def q_domain_quality(spark: SparkSession, sf: str) -> DataFrame:
-    """Domain-level quality aggregation (RefinedWeb/C4 practice:
-    individual-document filters are noisy, so pipelines aggregate
-    per-document verdicts to the registrable domain and blocklist
-    domains whose bad fraction is high — spam farms fail wholesale,
-    and the blocklist then prunes the FRONTIER, saving the fetches
-    entirely). Deterministic domain key doc_id % 23; a doc is bad if
-    it is too short (n_chars < 250) or lexically degenerate
-    (distinct-token fraction < 0.35); a domain is blocked when >= 60%
-    of >= 10 docs are bad (thresholds chosen so both verdicts appear
-    at every test SF). Integer fixed-point throughout.
-
-    Scale shape: per-doc verdict is map-only (no UDF: split +
-    array_distinct + size), then ONE partial-agg groupBy(domain) —
-    count/sum all combine map-side, key cardinality = number of
-    domains (millions, not billions), no skew key. The blocklist
-    output is small enough to broadcast back against the frontier."""
-    docs = load(spark, sf, "documents")
-    toks = "filter(split(text, ' '), x -> x <> '')"
-    per = docs.select(
-        F.concat(
-            F.lit("d"), (F.col("doc_id") % _DQ_DOMAINS).cast("string"), F.lit(".example.org")
-        ).alias("domain"),
-        "n_chars",
-        F.expr(
-            f"(1000 * size(array_distinct({toks}))) DIV greatest(1, size({toks}))"
-        ).alias("distinct_milli"),
-    )
-    flagged = per.withColumn(
-        "bad",
-        (
-            (F.col("n_chars") < _DQ_MIN_CHARS)
-            | (F.col("distinct_milli") < _DQ_MIN_DISTINCT_MILLI)
-        ).cast("long"),
-    )
-    agg = flagged.groupBy("domain").agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("bad").cast("long").alias("n_bad"),
-        F.sum("n_chars").cast("long").alias("sum_chars"),
-    )
-    return (
-        agg.withColumn("bad_milli", F.expr("(1000 * n_bad) DIV n_docs"))
-        .withColumn("mean_chars", F.expr("sum_chars DIV n_docs"))
-        .select(
-            "domain",
-            "n_docs",
-            "n_bad",
-            "bad_milli",
-            "mean_chars",
-            (
-                (F.col("bad_milli") >= _DQ_BLOCK_MILLI) & (F.col("n_docs") >= _DQ_MIN_DOCS)
-            ).alias("blocked"),
-        )
-    )
-
-
-_DOMAIN_QUALITY_SQL = f"""
-WITH per AS (
-  SELECT 'd' || CAST(doc_id % {_DQ_DOMAINS} AS VARCHAR) || '.example.org' AS domain,
-         n_chars,
-         (1000 * len(list_distinct(list_filter(string_split(text, ' '), x -> x <> ''))))
-           // greatest(1, len(list_filter(string_split(text, ' '), x -> x <> ''))) AS distinct_milli
-  FROM documents
-), flagged AS (
-  SELECT domain, n_chars,
-         CASE WHEN n_chars < {_DQ_MIN_CHARS} OR distinct_milli < {_DQ_MIN_DISTINCT_MILLI}
-              THEN 1 ELSE 0 END AS bad
-  FROM per
-), agg AS (
-  SELECT domain, CAST(count(*) AS BIGINT) AS n_docs, CAST(sum(bad) AS BIGINT) AS n_bad,
-         CAST(sum(n_chars) AS BIGINT) AS sum_chars
-  FROM flagged GROUP BY domain
-)
-SELECT domain, n_docs, n_bad,
-       (1000 * n_bad) // n_docs AS bad_milli,
-       sum_chars // n_docs AS mean_chars,
-       ((1000 * n_bad) // n_docs >= {_DQ_BLOCK_MILLI} AND n_docs >= {_DQ_MIN_DOCS}) AS blocked
-FROM agg"""
-
-
-# ---------------------------------------------------------------------------
 # HITS hubs & authorities (second graph-ranking signal besides PageRank)
 # ---------------------------------------------------------------------------
 
@@ -1855,7 +1107,7 @@ def q_hits_scores(spark: SparkSession, sf: str) -> DataFrame:
     iteration 3; measured 93 s -> 3.5 s for the identical result).
     Edges are checkpointed once and rescanned. The remaining cost is
     O(iterations) stage-scheduling latency, not data — same analysis
-    as dedup_components."""
+    as _label_propagate."""
     docs = load(spark, sf, "documents")
     # Anchor the synthetic modular graph at min(doc_id): dst must land
     # on REAL node ids, which are dense from some base, not from 0 —
@@ -1958,333 +1210,6 @@ def _hits_sql() -> str:
 
 
 # ---------------------------------------------------------------------------
-# OPIC on-line page importance (adaptive frontier prioritization)
-# ---------------------------------------------------------------------------
-
-_OPIC_ROUNDS = 3
-_OPIC_CASH0 = 1_000_000  # micro units of cash per node at t=0
-
-
-def q_opic_importance(spark: SparkSession, sf: str) -> DataFrame:
-    """OPIC page importance (Abiteboul, Preda & Cobéna 2003, "Adaptive
-    On-Line Page Importance Computation") — the frontier-prioritization
-    algorithm built for CRAWLING: unlike batch PageRank/HITS
-    (q_link_rank / q_hits_scores), OPIC's importance estimate is valid
-    at every moment of an ongoing crawl, so the scheduler can rank
-    uncrawled URLs by accumulated cash without waiting for a
-    whole-graph iteration to converge. Synchronous batch variant over
-    the shared anchored modular graph (same shape as q_hits_scores):
-    every node starts with 1e6 micro-cash; each round a node
-    distributes ALL its cash equally over its 3 out-edges (integer
-    share = cash DIV 3; the remainder rides the k=1 edge so cash is
-    conserved EXACTLY — sum(cash) is invariant, the test pins it) and
-    banks the amount distributed into its history. Importance =
-    history + current cash after _OPIC_ROUNDS rounds.
-
-    Scale shape: per round, ONE hash join (cash x edges on src) + ONE
-    combine-heavy groupBy(dst) — identical to the PageRank/HITS step,
-    the canonical distributed graph iteration; cash tables are
-    localCheckpointed per round (lineage doubles otherwise, same
-    reasoning as q_hits_scores); edges checkpoint once."""
-    docs = load(spark, sf, "documents")
-    stats = docs.agg(F.count("*").alias("n"), F.min("doc_id").alias("base")).first()
-    n, base = stats["n"], stats["base"] or 0
-    edges = docs.select(
-        F.col("doc_id").alias("src"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        (F.lit(base) + ((F.col("doc_id") - base) * 17 + F.lit(k)) % n).alias("dst"),
-                        F.lit(k == 1).alias("is_first"),
-                    )
-                    for k in range(1, _HITS_OUT_DEG + 1)
-                ]
-            )
-        ).alias("e"),
-    ).select("src", "e.dst", "e.is_first").localCheckpoint()
-    nodes = docs.select(F.col("doc_id").alias("v"))
-    cash = nodes.select("v", F.lit(_OPIC_CASH0).cast("long").alias("cash"))
-    hist = nodes.select("v", F.lit(0).cast("long").alias("hist"))
-    deg = _HITS_OUT_DEG
-    for _ in range(_OPIC_ROUNDS):
-        hist = (
-            hist.join(cash, "v")
-            .select("v", (F.col("hist") + F.col("cash")).cast("long").alias("hist"))
-            .localCheckpoint()
-        )
-        incoming = (
-            edges.join(cash, edges.src == cash.v)
-            .select(
-                "dst",
-                (
-                    F.expr(f"cash DIV {deg}")
-                    + F.when(F.col("is_first"), F.expr(f"cash % {deg}")).otherwise(0)
-                ).alias("inflow"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("inflow").alias("got"))
-        )
-        cash = (
-            nodes.join(incoming, nodes.v == incoming.dst, "left")
-            .select("v", F.coalesce("got", F.lit(0)).cast("long").alias("cash"))
-            .localCheckpoint()
-        )
-    return (
-        cash.join(hist, "v")
-        .select(
-            F.col("v").alias("doc_id"),
-            F.col("cash").alias("cash_micro"),
-            F.col("hist").alias("hist_micro"),
-            (F.col("cash") + F.col("hist")).cast("long").alias("importance_micro"),
-        )
-    )
-
-
-def _opic_sql() -> str:
-    """The q_opic_importance recurrence unrolled as chained CTEs."""
-    deg = _HITS_OUT_DEG
-    ks = ", ".join(str(k) for k in range(1, deg + 1))
-    parts = [
-        "WITH nodes AS (SELECT doc_id AS v FROM documents),",
-        "n_docs AS (SELECT count(*) AS n, min(doc_id) AS base FROM documents),",
-        "edges AS (SELECT doc_id AS src, (SELECT base FROM n_docs)"
-        " + ((doc_id - (SELECT base FROM n_docs)) * 17 + k)"
-        " % (SELECT n FROM n_docs) AS dst, k = 1 AS is_first"
-        f" FROM documents, (SELECT unnest([{ks}]) AS k) ks),",
-        f"c0 AS (SELECT v, CAST({_OPIC_CASH0} AS BIGINT) AS cash FROM nodes),",
-        "h0 AS (SELECT v, CAST(0 AS BIGINT) AS hist FROM nodes),",
-    ]
-    for i in range(_OPIC_ROUNDS):
-        parts.append(
-            f"h{i + 1} AS (SELECT h.v, CAST(h.hist + c.cash AS BIGINT) AS hist"
-            f" FROM h{i} h JOIN c{i} c ON h.v = c.v),"
-        )
-        parts.append(
-            f"c{i + 1} AS (SELECT nodes.v, CAST(coalesce(s.got, 0) AS BIGINT) AS cash"
-            f" FROM nodes LEFT JOIN ("
-            f"SELECT e.dst AS v, SUM(c.cash // {deg}"
-            f" + CASE WHEN e.is_first THEN c.cash % {deg} ELSE 0 END) AS got"
-            f" FROM edges e JOIN c{i} c ON c.v = e.src GROUP BY e.dst"
-            f") s ON s.v = nodes.v),"
-        )
-    last = parts.pop()
-    parts.append(last.rstrip(","))
-    parts.append(
-        f"SELECT c{_OPIC_ROUNDS}.v AS doc_id, c{_OPIC_ROUNDS}.cash AS cash_micro,"
-        f" h{_OPIC_ROUNDS}.hist AS hist_micro,"
-        f" CAST(c{_OPIC_ROUNDS}.cash + h{_OPIC_ROUNDS}.hist AS BIGINT) AS importance_micro"
-        f" FROM c{_OPIC_ROUNDS} JOIN h{_OPIC_ROUNDS}"
-        f" ON c{_OPIC_ROUNDS}.v = h{_OPIC_ROUNDS}.v"
-    )
-    return "\n".join(parts)
-
-
-# ---------------------------------------------------------------------------
-# unigram LM rarity scoring (CCNet-style head/middle/tail binning)
-# ---------------------------------------------------------------------------
-
-
-def q_lm_rarity(spark: SparkSession, sf: str) -> DataFrame:
-    """Unigram-LM rarity scoring with head/middle/tail binning — the
-    integer-deterministic stand-in for CCNet's perplexity bucketing
-    (docs scored by how surprising their tokens are under a corpus
-    LM; training pipelines keep head+middle and resample tail).
-    Token surprisal uses the repo's integer idf surrogate
-    (1000 * total_tokens) DIV term_count instead of -log p, which
-    preserves ordering for a fixed corpus; a doc's rarity is the mean
-    surprisal over its token OCCURRENCES; docs are then binned into
-    per-language terciles by nearest-rank (3*r <= n rules), so every
-    language shard gets its own head/middle/tail split exactly as
-    CCNet bins per language.
-
-    Scale shape: tokenize is map-only explode; the term-count table is
-    ONE combine-heavy groupBy(term) (vocab-sized output) joined back
-    on term — a plain hash join, broadcastable when the vocab fits
-    (AQE decides; a forced broadcast hint would fail on a web-scale
-    vocabulary — same policy as q_tfidf_topk); per-doc mean is
-    groupBy(doc) with map-side partial sums; the tercile window is
-    partitioned BY LANGUAGE — bounded partitions, never a global
-    sort."""
-    docs = load(spark, sf, "documents")
-    words = _barrier(
-        docs.select(
-            "doc_id", "lang", F.explode(F.split(F.col("text"), " ")).alias("term")
-        ).filter(F.col("term") != "")
-    )
-    total = words.agg(F.count("*").alias("tot"))
-    surp = (
-        words.groupBy("term")
-        .agg(F.count("*").cast("long").alias("cnt"))
-        .crossJoin(F.broadcast(total))
-        .select("term", F.expr("(1000 * tot) DIV cnt").alias("surp"))
-    )
-    per_doc = (
-        words.join(surp, "term")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count("*").cast("long").alias("n_tokens"),
-            F.sum("surp").cast("long").alias("surp_sum"),
-        )
-        .withColumn("rarity_mean", F.expr("surp_sum DIV n_tokens"))
-    )
-    win = Window.partitionBy("lang").orderBy(F.asc("rarity_mean"), F.asc("doc_id"))
-    nwin = Window.partitionBy("lang")
-    return (
-        per_doc.withColumn("r", F.row_number().over(win))
-        .withColumn("n", F.count("*").over(nwin))
-        .select(
-            "doc_id",
-            "lang",
-            "n_tokens",
-            "rarity_mean",
-            F.when(3 * F.col("r") <= F.col("n"), F.lit("head"))
-            .when(3 * F.col("r") <= 2 * F.col("n"), F.lit("middle"))
-            .otherwise(F.lit("tail"))
-            .alias("bucket"),
-        )
-    )
-
-
-_LM_RARITY_SQL = """
-WITH words AS (
-  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS term FROM documents
-), w AS (
-  SELECT * FROM words WHERE term <> ''
-), total AS (SELECT count(*) AS tot FROM w),
-surp AS (
-  SELECT term, (1000 * (SELECT tot FROM total)) // CAST(count(*) AS BIGINT) AS surp
-  FROM w GROUP BY term
-), per_doc AS (
-  SELECT w.doc_id, w.lang, CAST(count(*) AS BIGINT) AS n_tokens,
-         CAST(sum(surp.surp) AS BIGINT) AS surp_sum
-  FROM w JOIN surp ON w.term = surp.term
-  GROUP BY w.doc_id, w.lang
-), ranked AS (
-  SELECT doc_id, lang, n_tokens, surp_sum // n_tokens AS rarity_mean,
-         row_number() OVER (PARTITION BY lang ORDER BY surp_sum // n_tokens ASC, doc_id ASC) AS r,
-         count(*) OVER (PARTITION BY lang) AS n
-  FROM per_doc
-)
-SELECT doc_id, lang, n_tokens, rarity_mean,
-       CASE WHEN 3 * r <= n THEN 'head'
-            WHEN 3 * r <= 2 * n THEN 'middle'
-            ELSE 'tail' END AS bucket
-FROM ranked"""
-
-
-# ---------------------------------------------------------------------------
-# canonical URL identity (redirect aliases + identical content -> one page)
-# ---------------------------------------------------------------------------
-
-# pointer-doubling schedule: two more rounds than _CC_STAGES because the
-# alias graph composes two star families (redirect-terminal stars and
-# fingerprint stars) whose overlap chains deeper than either alone; the
-# fixpoint test pins that one extra stage changes nothing
-_IDENTITY_STAGES = ("hook", "jump") * 4 + ("hook",)
-_IDENTITY_HOPS = 4  # same bound as queries.py::_REDIRECT_HOPS
-
-
-def q_url_identity(spark: SparkSession, sf: str) -> DataFrame:
-    """Canonical URL identity: the alias table a crawler maintains so
-    two frontier entries that are THE SAME PAGE count once — aliases
-    arise from redirect chains (301 to a terminal) and from byte-
-    identical content served at different URLs; both must be closed
-    TRANSITIVELY (A redirects to B, C carries B's bytes => {A,B,C} is
-    one identity). Composes three operators this repo already proves:
-    the 4-hop redirect resolution (terminal stars only — a redirect
-    CYCLE never yields content, so its members are parked as distinct,
-    not aliased), exact-fingerprint grouping (md5(text) star to the
-    group minimum), and hook/jump label propagation over the union.
-    Output: (doc_id, identity_rep = min doc id of the identity group,
-    group_size) for every doc — the downstream frontier-dedup filter
-    is identity_rep == doc_id.
-
-    Scale shape: redirect resolution is _IDENTITY_HOPS bounded hash
-    joins; fingerprint stars are one groupBy(md5) with map-side
-    combine; CC runs over the ALIAS edges only (orders of magnitude
-    smaller than the corpus) in O(log diameter) stages, lineage
-    truncated per stage by _label_propagate."""
-    docs = load(spark, sf, "documents")
-    n = docs.count()
-    redirects = _barrier(
-        docs.filter(F.col("doc_id") % 3 == 1).select(
-            F.col("doc_id").alias("src"), ((F.col("doc_id") * 7 + 1) % n).alias("dst")
-        )
-    )
-    cur = docs.select(
-        F.col("doc_id").alias("start_id"), F.col("doc_id").alias("cur")
-    )
-    for _ in range(_IDENTITY_HOPS):
-        cur = cur.join(redirects, cur.cur == redirects.src, "left").select(
-            "start_id", F.coalesce("dst", "cur").alias("cur")
-        )
-    resolved = cur.join(redirects, cur.cur == redirects.src, "left").select(
-        "start_id", F.col("cur").alias("final_id"), F.col("src").isNull().alias("terminal")
-    )
-    r_edges = resolved.filter(
-        F.col("terminal") & (F.col("start_id") != F.col("final_id"))
-    ).select(F.col("start_id").alias("a"), F.col("final_id").alias("b"))
-    fp = docs.select("doc_id", F.md5("text").alias("fp"))
-    fmin = fp.groupBy("fp").agg(F.min("doc_id").alias("fp_min"))
-    f_edges = (
-        fp.join(fmin, "fp")
-        .filter(F.col("doc_id") != F.col("fp_min"))
-        .select(F.col("doc_id").alias("a"), F.col("fp_min").alias("b"))
-    )
-    e0 = r_edges.unionByName(f_edges)
-    edges = e0.select(F.col("a").alias("s"), F.col("b").alias("d")).unionByName(
-        e0.select(F.col("b").alias("s"), F.col("a").alias("d"))
-    )
-    ids = docs.select(F.col("doc_id").alias("v"))
-    lab = _label_propagate(ids, edges, stages=_IDENTITY_STAGES)
-    sizes = lab.groupBy("lab").agg(F.count("*").cast("long").alias("group_size"))
-    return lab.join(sizes, "lab").select(
-        F.col("v").alias("doc_id"),
-        F.col("lab").alias("identity_rep"),
-        "group_size",
-    )
-
-
-def _url_identity_sql() -> str:
-    parts = [
-        "WITH n_docs AS (SELECT count(*) AS n FROM documents),",
-        "redirects AS (SELECT doc_id AS src, (doc_id * 7 + 1) % (SELECT n FROM n_docs) AS dst"
-        " FROM documents WHERE doc_id % 3 = 1),",
-        "c0 AS (SELECT doc_id AS start_id, doc_id AS cur FROM documents),",
-    ]
-    for i in range(_IDENTITY_HOPS):
-        parts.append(
-            f"c{i + 1} AS (SELECT start_id, COALESCE(r.dst, c.cur) AS cur"
-            f" FROM c{i} c LEFT JOIN redirects r ON r.src = c.cur),"
-        )
-    parts.append(
-        f"resolved AS (SELECT start_id, c.cur AS final_id, r.src IS NULL AS terminal"
-        f" FROM c{_IDENTITY_HOPS} c LEFT JOIN redirects r ON r.src = c.cur),"
-    )
-    parts.append("fp AS (SELECT doc_id, md5(text) AS f FROM documents),")
-    parts.append("fmin AS (SELECT f, min(doc_id) AS fp_min FROM fp GROUP BY f),")
-    parts.append(
-        "e0 AS (SELECT start_id AS a, final_id AS b FROM resolved"
-        " WHERE terminal AND start_id <> final_id"
-        " UNION ALL SELECT fp.doc_id, fmin.fp_min FROM fp JOIN fmin ON fp.f = fmin.f"
-        " WHERE fp.doc_id <> fmin.fp_min),"
-    )
-    parts.append("verts AS (SELECT doc_id AS v FROM documents),")
-    parts.append("edges AS (SELECT a AS s, b AS d FROM e0 UNION ALL SELECT b, a FROM e0),")
-    parts.append(_cc_unroll_sql("verts", "edges", stages=_IDENTITY_STAGES))
-    k = len(_IDENTITY_STAGES)
-    parts.append(
-        f"sizes AS (SELECT lab, CAST(count(*) AS BIGINT) AS group_size FROM l{k} GROUP BY lab)"
-    )
-    parts.append(
-        f"SELECT l.v AS doc_id, l.lab AS identity_rep, sizes.group_size"
-        f" FROM l{k} l JOIN sizes ON sizes.lab = l.lab"
-    )
-    return "\n".join(parts)
-
-
-# ---------------------------------------------------------------------------
 # sitemap coverage audit (discovery gap between sitemap and crawl log)
 # ---------------------------------------------------------------------------
 
@@ -2303,8 +1228,7 @@ def q_sitemap_gap(spark: SparkSession, sf: str) -> DataFrame:
 
     Scale shape: sitemap build/parse is one bounded groupBy(host) +
     narrow Arrow parse; the audit itself is ONE full-outer hash join on
-    the loc key, both sides co-partitioned — same snapshot-diff shape
-    as change_detect."""
+    the loc key, both sides co-partitioned."""
     from .sources.sitemap import docs_to_sitemaps, sitemaps_to_urls
 
     docs = load(spark, sf, "documents")
@@ -2450,8 +1374,8 @@ _BPE_T = 8  # merge rounds to induce (production trains 30-50k; same loop)
 
 def q_bpe_merges(spark: SparkSession, sf: str) -> DataFrame:
     """Distributed BPE merge induction (Sennrich et al. 2016) — the
-    tokenizer-TRAINING step of the pipeline (q_text_tokens_bpe applies a
-    fixed tokenization; this learns the merge table from the corpus).
+    tokenizer-TRAINING step of the pipeline (this learns the merge table
+    from the corpus rather than applying a fixed tokenization).
     Classic word-frequency formulation: one pass builds the (word,
     count) table, then every merge round runs over the VOCABULARY, not
     the corpus — the property that makes BPE trainable at 100 TB (vocab
@@ -2599,40 +1523,18 @@ _SHARD_SHUF_N = 8         # training shards (production: O(10^3-10^4) files)
 _SHARD_SHUF_SALT = "epoch0"  # new salt per epoch = a fresh permutation
 
 
-def q_shard_shuffle(spark: SparkSession, sf: str) -> DataFrame:
-    """Training-shard shuffle — the last step of the pipeline: deal the
-    cleaned corpus into S shard files in a deterministic pseudo-random
-    order (hash-of-id), so (a) every shard is an unbiased sample of the
-    corpus (no host/domain runs — parquet written in crawl order would
-    feed the model correlated batches), (b) the permutation is
-    reproducible from the salt alone (epoch N+1 = new salt, no state),
-    and (c) a loader can seek: pos is the record index within the shard
-    and shard_offset the token offset (per-shard prefix sum, the
-    token_pack window shape).
-
-    Scale shape: one hash shuffle on shard_id (S bounded keys, uniform
-    by construction — md5 has no hot key), per-shard window for
-    pos/offset; nothing global, no sort of the corpus. The doc->shard
-    map is exactly how a 1000-executor job writes partitioned training
-    data: partitionBy(shard_id) with the in-shard order carried by hv."""
-    return shard_shuffle_frame(
-        load(spark, sf, "documents").select(
-            "doc_id",
-            F.greatest(F.expr("n_chars DIV 4"), F.lit(1)).cast("long").alias("tokens"),
-        )
-    )
-
-
-def shard_shuffle_frame(
-    toks: DataFrame, n_shards: int = _SHARD_SHUF_N, salt: str = _SHARD_SHUF_SALT
-) -> DataFrame:
-    """q_shard_shuffle over any (doc_id, tokens) frame — the composition
-    form pipeline.curate_corpus ends with."""
+def shard_shuffle_frame(toks: DataFrame, n_shards: int = _SHARD_SHUF_N) -> DataFrame:
+    """Deterministic hash deal of a (doc_id, tokens) frame into
+    ``n_shards`` training shards: md5(salt#doc_id) picks the shard and
+    the order inside it, so the permutation is reproducible and a new
+    salt per epoch reshuffles. Per document: shard_id, 1-based pos, and
+    shard_offset, the running token prefix sum a loader seeks by.
+    pipeline.curate_corpus ends with it."""
     hashed = toks.withColumn(
         "hv",
         F.conv(
             F.substring(
-                F.md5(F.concat_ws("#", F.lit(salt), F.col("doc_id").cast("string"))),
+                F.md5(F.concat_ws("#", F.lit(_SHARD_SHUF_SALT), F.col("doc_id").cast("string"))),
                 1,
                 15,
             ),
@@ -2652,87 +1554,40 @@ def shard_shuffle_frame(
     )
 
 
-_SHARD_SHUF_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, CAST(greatest(n_chars // 4, 1) AS BIGINT) AS tokens FROM documents
-), hashed AS (
-  SELECT doc_id, tokens,
-         CAST(concat('0x', substring(md5('{_SHARD_SHUF_SALT}#' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS hv
-  FROM toks
-), sharded AS (
-  SELECT doc_id, tokens, hv, CAST(hv % {_SHARD_SHUF_N} AS BIGINT) AS shard_id FROM hashed
-)
-SELECT doc_id, shard_id,
-       CAST(row_number() OVER (PARTITION BY shard_id ORDER BY hv, doc_id) AS BIGINT) AS pos,
-       tokens,
-       CAST(sum(tokens) OVER (PARTITION BY shard_id ORDER BY hv, doc_id
-                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            - tokens AS BIGINT) AS shard_offset
-FROM sharded"""
-
-
 SCALE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "trap_detect": q_trap_detect,
     "recrawl_priority": q_recrawl_priority,
     "host_shards": q_host_shards,
-    "hll_distinct": q_hll_distinct,
     "anchor_agg": q_anchor_agg,
-    "dedup_components": q_dedup_components,
     "dedup_clusters": q_dedup_clusters,
-    "mirror_detect": q_mirror_detect,
     "tfidf_topk": q_tfidf_topk,
-    "budget_alloc": q_budget_alloc,
-    "domain_mix": q_domain_mix,
     "crawl_rollup": q_crawl_rollup,
     "latency_quantiles": q_latency_quantiles,
-    "sample_stratified": q_sample_stratified,
     "cms_heavy_hitters": q_cms_heavy_hitters,
-    "cocitation": q_cocitation,
-    "token_pack": q_token_pack,
     "registrable_domain": q_registrable_domain,
-    "adaptive_quota": q_adaptive_quota,
     "change_detect": q_change_detect,
-    "domain_quality": q_domain_quality,
     "hits_scores": q_hits_scores,
-    "opic_importance": q_opic_importance,
-    "lm_rarity": q_lm_rarity,
     "sitemap_gap": q_sitemap_gap,
     "host_graph": q_host_graph,
-    "url_identity": q_url_identity,
     "bpe_merges": q_bpe_merges,
-    "shard_shuffle": q_shard_shuffle,
 }
 
 SCALE_ORACLES: dict[str, str] = {
     "trap_detect": _TRAP_SQL,
     "recrawl_priority": _RECRAWL_SQL,
     "host_shards": _HRW_SQL,
-    "hll_distinct": _HLL_SQL,
     "anchor_agg": _ANCHOR_SQL,
-    "dedup_components": _cc_sql(),
     "dedup_clusters": _dedup_clusters_sql(),
-    "mirror_detect": _MIRROR_SQL,
     "tfidf_topk": _TFIDF_SQL,
-    "budget_alloc": _ALLOC_SQL,
-    "domain_mix": _MIX_SQL,
     "crawl_rollup": _ROLLUP_SQL,
     "latency_quantiles": _QUANTILE_SQL,
-    "sample_stratified": _SAMPLE_SQL,
     "cms_heavy_hitters": _CMS_SQL,
-    "cocitation": _COCITE_SQL,
-    "token_pack": _PACK_SQL,
     "registrable_domain": _registrable_sql(),
-    "adaptive_quota": _ADAPTIVE_QUOTA_SQL,
     "change_detect": _CHANGE_SQL,
-    "domain_quality": _DOMAIN_QUALITY_SQL,
     "hits_scores": _hits_sql(),
-    "opic_importance": _opic_sql(),
-    "lm_rarity": _LM_RARITY_SQL,
     "sitemap_gap": _SITEMAP_GAP_SQL,
     "host_graph": _HOST_GRAPH_SQL,
-    "url_identity": _url_identity_sql(),
     # bpe_merges is added by __spark_entry__.oracle_sql(): its oracle is a
     # pure-Python replay that reads parquet, which must not run at import
     # time (this module is shipped to and imported by executors)
-    "shard_shuffle": _SHARD_SHUF_SQL,
 }

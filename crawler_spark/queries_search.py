@@ -3,9 +3,7 @@ round 3b).
 
 What a production crawl feeds downstream once the frontier machinery
 works: the search-engine side (BM25 ranking over the posting lists the
-crawl built, seed-distance BFS for focused-crawl depth budgets, URL
-template mining that generalizes single-URL trap detection to whole URL
-*spaces*) and the training-data side (host-level near-mirror detection
+crawl built) and the training-data side (host-level near-mirror detection
 by MinHash signatures, fastText-shaped quality-classifier inference
 with broadcast weights, CCNet-style per-host boilerplate stripping).
 The reference (a sequential fetch loop, backend/tasks/config.py:29 caps
@@ -31,7 +29,6 @@ __all__ = [
     "SEARCH_QUERIES",
     "SEARCH_ORACLES",
     "strip_boilerplate",
-    "caption_pairs",
     "repeated_spans",
     "dsir_score",
     "phrase_match",
@@ -58,10 +55,9 @@ _BM25_QTERMS = 3      # terms per query
 
 def q_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     """BM25 top-k retrieval — the ranking function the search index
-    built from the crawl actually serves (tf-idf's production sibling;
-    q_tfidf_topk builds per-doc term weights, this scores DOCUMENTS
-    against QUERIES). Queries are derived deterministically from the
-    corpus vocabulary: rank terms by (df DESC, term ASC), terms
+    built from the crawl actually serves (tf-idf's production sibling:
+    it scores DOCUMENTS against QUERIES). Queries are derived
+    deterministically from the corpus vocabulary: rank terms by (df DESC, term ASC), terms
     3q+1..3q+3 form query q (mid/high-frequency terms, so every query
     matches many docs and the length normalization matters).
 
@@ -176,194 +172,6 @@ SELECT query_id, doc_id, n_hit_terms, score, rk FROM ranked WHERE rk <= {_BM25_K
 
 
 # ---------------------------------------------------------------------------
-# BFS crawl depth from seeds
-# ---------------------------------------------------------------------------
-
-_DEPTH_HOPS = 5
-_DEPTH_SEED_MOD = 41  # doc_id % 41 == 0 -> seed page
-_DEPTH_OUT_DEG = 3
-
-
-def q_crawl_depth(spark: SparkSession, sf: str) -> DataFrame:
-    """Seed-distance BFS over the link graph — the depth signal a
-    focused crawler budgets on (pages more than H hops from any curated
-    seed are skipped; the reference's max_pages budget counts PAGES,
-    this is the hop-distance analog it cannot express). Same derived
-    link graph as q_link_rank (doc_id -> (doc_id*31+k) % n, k=1..3),
-    seeds = doc_id % 41 == 0, depth = min over seeds of shortest-path
-    hops, capped at 5 iterations; unreached pages report depth -1.
-
-    Min-plus propagation: d'(v) = min(d(v), min over edges u->v of
-    d(u) + 1) — a different algebra from PageRank's sum and CC's label
-    min over undirected stars, so the iteration is NOT a rename of
-    either. Each step merges the frontier by UNION + groupBy(min),
-    which references the previous state twice — localCheckpoint per
-    iteration keeps the logical plan linear (same lesson as
-    _label_propagate: a persist barrier pins data but the analyzer cost
-    doubles per stage without truncation).
-
-    Scale shape: per hop, one hash join (reached x edges, both
-    partitioned on the key) + one map-side-combined groupBy(dst) min —
-    the canonical distributed BFS step; the reached set only grows, and
-    the hop count bounds the number of shuffles, not the data."""
-    docs = load(spark, sf, "documents")
-    n = docs.count()
-    edges = docs.select(
-        F.col("doc_id").alias("src"),
-        F.explode(
-            F.array(
-                *[((F.col("doc_id") * 31 + F.lit(k)) % n) for k in range(1, _DEPTH_OUT_DEG + 1)]
-            )
-        ).alias("dst"),
-    ).localCheckpoint()
-    nodes = docs.select(F.col("doc_id").alias("v"))
-    reached = nodes.filter(F.col("v") % _DEPTH_SEED_MOD == 0).select(
-        "v", F.lit(0).cast("long").alias("d")
-    )
-    for _ in range(_DEPTH_HOPS):
-        reached = reached.localCheckpoint()
-        expanded = edges.join(reached, edges.src == reached.v).select(
-            F.col("dst").alias("v"), (F.col("d") + 1).alias("d")
-        )
-        reached = (
-            reached.unionByName(expanded).groupBy("v").agg(F.min("d").cast("long").alias("d"))
-        )
-    return nodes.join(reached, "v", "left").select(
-        F.col("v").alias("doc_id"),
-        F.coalesce("d", F.lit(-1)).cast("long").alias("depth"),
-        F.col("d").isNotNull().alias("reached"),
-    )
-
-
-def _crawl_depth_sql() -> str:
-    """The q_crawl_depth BFS unrolled as chained CTEs (DuckDB)."""
-    parts = [
-        "WITH nodes AS (SELECT doc_id AS v FROM documents),",
-        "n_docs AS (SELECT count(*) AS n FROM documents),",
-        "edges AS (SELECT doc_id AS src, (doc_id * 31 + k) % (SELECT n FROM n_docs) AS dst"
-        f" FROM documents, (SELECT unnest([{', '.join(str(k) for k in range(1, _DEPTH_OUT_DEG + 1))}]) AS k) ks),",
-        f"d0 AS (SELECT v, CAST(0 AS BIGINT) AS d FROM nodes WHERE v % {_DEPTH_SEED_MOD} = 0),",
-    ]
-    for i in range(_DEPTH_HOPS):
-        parts.append(
-            f"d{i + 1} AS (SELECT v, CAST(min(d) AS BIGINT) AS d FROM ("
-            f"SELECT v, d FROM d{i}"
-            f" UNION ALL SELECT e.dst AS v, r.d + 1 AS d FROM edges e JOIN d{i} r ON r.v = e.src"
-            f") GROUP BY v),"
-        )
-    last = parts.pop()
-    parts.append(last.rstrip(","))
-    parts.append(
-        f"SELECT nodes.v AS doc_id, CAST(COALESCE(d.d, -1) AS BIGINT) AS depth,"
-        f" d.v IS NOT NULL AS reached"
-        f" FROM nodes LEFT JOIN d{_DEPTH_HOPS} d ON nodes.v = d.v"
-    )
-    return "\n".join(parts)
-
-
-# ---------------------------------------------------------------------------
-# URL template mining
-# ---------------------------------------------------------------------------
-
-_TPL_HOSTS = 20
-_TPL_MIN_URLS = 5       # a template below this is not a URL *space*
-_TPL_DUP_FP = 500       # >= 50% duplicate content -> explosive
-
-
-def q_url_templates(spark: SparkSession, sf: str) -> DataFrame:
-    """URL template mining — the generalization of per-URL trap
-    detection (q_trap_detect scores one URL's shape; this groups the
-    frontier by TEMPLATE — digit runs collapsed to {d} — and flags
-    whole URL spaces that serve duplicate content, the
-    calendar/session-id signature at the space level). Deterministic
-    URLs synthesized from documents: kind 0 = static page
-    (/about/team, no digits), kind 1 = article (/post/{id}, distinct
-    content per URL), kind 2 = calendar (/cal/{y}/{m}/{d}, the SAME
-    content per host — soft-dup). Per (host, template): URL count,
-    distinct content fingerprints, fixed-point duplicate-content rate
-    (1000 * (n_urls - n_distinct_fp)) DIV n_urls, and the explosive
-    flag (>= 5 URLs and >= 50% dup content) — the calendar template
-    trips it, the article template does not despite equal URL counts.
-
-    Scale shape: map-only synthesis + one regexp_replace (no UDF), one
-    groupBy(host, template) with exact distinct-fp count — a
-    bounded-key hash shuffle (template cardinality ~ site count, never
-    corpus); runs inside the same scan that canonicalizes URLs."""
-    docs = load(spark, sf, "documents")
-    built = docs.select(
-        "doc_id",
-        F.concat(F.lit("h"), (F.col("doc_id") % _TPL_HOSTS).cast("string")).alias("host"),
-        F.when(F.col("doc_id") % 3 == 0, F.lit("/about/team"))
-        .when(
-            F.col("doc_id") % 3 == 1,
-            F.concat(F.lit("/post/"), F.col("doc_id").cast("string")),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("/cal/20"),
-                (F.col("doc_id") % 10).cast("string"),
-                F.lit("/"),
-                (F.col("doc_id") % 12 + 1).cast("string"),
-                F.lit("/"),
-                (F.col("doc_id") % 28 + 1).cast("string"),
-            )
-        )
-        .alias("path"),
-    ).withColumn(
-        "fp",
-        F.when(
-            F.col("doc_id") % 3 == 2,
-            F.md5(F.concat(F.lit("calpage:"), F.col("host"))),
-        ).otherwise(F.md5(F.concat(F.lit("page:"), F.col("doc_id").cast("string")))),
-    )
-    templ = built.withColumn(
-        "template", F.regexp_replace(F.col("path"), "[0-9]+", "{d}")
-    )
-    stats = templ.groupBy("host", "template").agg(
-        F.count("*").cast("long").alias("n_urls"),
-        F.countDistinct("fp").cast("long").alias("n_distinct_fp"),
-    )
-    return stats.select(
-        "host",
-        "template",
-        "n_urls",
-        "n_distinct_fp",
-        F.expr("(1000 * (n_urls - n_distinct_fp)) DIV n_urls").cast("long").alias("dup_rate_fp"),
-        (
-            (F.col("n_urls") >= _TPL_MIN_URLS)
-            & (F.expr("(1000 * (n_urls - n_distinct_fp)) DIV n_urls") >= _TPL_DUP_FP)
-        ).alias("explosive"),
-    )
-
-
-_TPL_SQL = f"""
-WITH built AS (
-  SELECT doc_id,
-         'h' || CAST(doc_id % {_TPL_HOSTS} AS VARCHAR) AS host,
-         CASE WHEN doc_id % 3 = 0 THEN '/about/team'
-              WHEN doc_id % 3 = 1 THEN '/post/' || CAST(doc_id AS VARCHAR)
-              ELSE '/cal/20' || CAST(doc_id % 10 AS VARCHAR)
-                   || '/' || CAST(doc_id % 12 + 1 AS VARCHAR)
-                   || '/' || CAST(doc_id % 28 + 1 AS VARCHAR) END AS path,
-         CASE WHEN doc_id % 3 = 2
-              THEN md5('calpage:h' || CAST(doc_id % {_TPL_HOSTS} AS VARCHAR))
-              ELSE md5('page:' || CAST(doc_id AS VARCHAR)) END AS fp
-  FROM documents
-), templ AS (
-  SELECT host, regexp_replace(path, '[0-9]+', '{{d}}', 'g') AS template, fp FROM built
-), stats AS (
-  SELECT host, template, CAST(count(*) AS BIGINT) AS n_urls,
-         CAST(count(DISTINCT fp) AS BIGINT) AS n_distinct_fp
-  FROM templ GROUP BY host, template
-)
-SELECT host, template, n_urls, n_distinct_fp,
-       CAST((1000 * (n_urls - n_distinct_fp)) // n_urls AS BIGINT) AS dup_rate_fp,
-       (n_urls >= {_TPL_MIN_URLS}
-        AND (1000 * (n_urls - n_distinct_fp)) // n_urls >= {_TPL_DUP_FP}) AS explosive
-FROM stats"""
-
-
-# ---------------------------------------------------------------------------
 # host-level near-mirror detection via MinHash signatures
 # ---------------------------------------------------------------------------
 
@@ -378,11 +186,10 @@ _HSIM_COPY_SKIP = 5  # planted mirror keeps docs with (doc_id DIV 20) % 5 != 0
 
 
 def q_host_similarity(spark: SparkSession, sf: str) -> DataFrame:
-    """Host-level NEAR-mirror detection — q_mirror_detect's approximate
-    tier (exact signature equality only finds byte-identical mirrors;
-    real mirrors lag their origin, so their page SETS overlap at
-    J < 1). Per host, a 16-slot MinHash signature over the host's page
-    content fingerprints (slot i = min over pages of
+    """Host-level NEAR-mirror detection (exact signature equality only
+    finds byte-identical mirrors; real mirrors lag their origin, so
+    their page SETS overlap at J < 1). Per host, a 16-slot MinHash
+    signature over the host's page content fingerprints (slot i = min over pages of
     md5int('hs' || i || ':' || fp)); candidate host pairs share at
     least one LSH band (16 bands x 1 row); candidates are then verified
     EXACTLY — intersection / union of the two hosts' distinct
@@ -1311,199 +1118,6 @@ JOIN sizes zb ON zb.media_ref = c.media_b"""
 
 
 # ---------------------------------------------------------------------------
-# caption mining from interleaved spans
-# ---------------------------------------------------------------------------
-
-
-def caption_pairs(spans: DataFrame) -> DataFrame:
-    """LAION-style (media, caption) pair extraction over interleaved
-    span rows (doc_id, span_pos, kind, text, media_ref): each media
-    span is captioned by the nearest PRECEDING text span, falling back
-    to the nearest following one — the standard alt-text/context rule
-    multimodal training-pair pipelines apply to web documents.
-
-    Scale shape: two windows partitioned BY DOCUMENT (last/first with
-    ignorenulls over the span order — spans per doc are bounded), then
-    a filter to media rows. No join, no corpus-wide shuffle beyond the
-    doc partitioning the span table already has."""
-    w = Window.partitionBy("doc_id").orderBy("span_pos")
-    prev_w = w.rowsBetween(Window.unboundedPreceding, -1)
-    next_w = w.rowsBetween(1, Window.unboundedFollowing)
-    text_col = F.when(F.col("kind") == "text", F.col("text"))
-    enriched = spans.withColumn(
-        "prev_text", F.last(text_col, ignorenulls=True).over(prev_w)
-    ).withColumn("next_text", F.first(text_col, ignorenulls=True).over(next_w))
-    return enriched.filter(F.col("kind") == "media").select(
-        "doc_id",
-        "media_ref",
-        F.col("span_pos").cast("int").alias("span_pos"),
-        F.when(F.col("prev_text").isNotNull(), F.lit("before"))
-        .when(F.col("next_text").isNotNull(), F.lit("after"))
-        .otherwise(F.lit("none"))
-        .alias("caption_side"),
-        F.coalesce("prev_text", "next_text", F.lit("")).alias("caption"),
-    )
-
-
-def q_media_captions(spark: SparkSession, sf: str) -> DataFrame:
-    """Caption mining over the interleaved text+media span payload (the
-    graft's input_hint schema: ordered spans of kind text|media per
-    document) — how multimodal training pairs are actually harvested
-    from web crawls. Deterministic span synthesis from documents: three
-    text spans (token windows 1-10, 11-20, 21+ when non-empty)
-    interleaved with media spans after the first window (doc_id % 2 ==
-    0) and after the second (doc_id % 3 == 0); each media span pairs
-    with its nearest preceding text span, next-following as fallback.
-    See caption_pairs for the operator contract and scale shape."""
-    docs = load(spark, sf, "documents")
-    toked = docs.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
-
-    def text_span(pos: int, expr: str) -> DataFrame:
-        return toked.select(
-            "doc_id",
-            F.lit(pos).cast("long").alias("span_pos"),
-            F.lit("text").alias("kind"),
-            F.expr(expr).alias("text"),
-            F.lit("").alias("media_ref"),
-        ).filter(F.col("text") != "")
-
-    def media_span(pos: int, mod: int, idx: int) -> DataFrame:
-        return docs.filter(F.col("doc_id") % mod == 0).select(
-            "doc_id",
-            F.lit(pos).cast("long").alias("span_pos"),
-            F.lit("media").alias("kind"),
-            F.lit("").alias("text"),
-            F.concat(
-                F.lit("img://"), F.col("doc_id").cast("string"), F.lit(f"/{idx}")
-            ).alias("media_ref"),
-        )
-
-    spans = (
-        text_span(0, "concat_ws(' ', slice(toks, 1, 10))")
-        .unionByName(media_span(1, 2, 1))
-        .unionByName(text_span(2, "concat_ws(' ', slice(toks, 11, 10))"))
-        .unionByName(media_span(3, 3, 2))
-        .unionByName(text_span(4, "concat_ws(' ', slice(toks, 21, size(toks)))"))
-    )
-    return caption_pairs(spans)
-
-
-_CAPTION_SQL = """
-WITH toked AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), spans AS (
-  SELECT doc_id, CAST(0 AS BIGINT) AS span_pos, 'text' AS kind,
-         array_to_string(toks[1:10], ' ') AS text, '' AS media_ref
-  FROM toked WHERE array_to_string(toks[1:10], ' ') <> ''
-  UNION ALL
-  SELECT doc_id, 1, 'media', '', 'img://' || CAST(doc_id AS VARCHAR) || '/1'
-  FROM documents WHERE doc_id % 2 = 0
-  UNION ALL
-  SELECT doc_id, 2, 'text', array_to_string(toks[11:20], ' '), ''
-  FROM toked WHERE array_to_string(toks[11:20], ' ') <> ''
-  UNION ALL
-  SELECT doc_id, 3, 'media', '', 'img://' || CAST(doc_id AS VARCHAR) || '/2'
-  FROM documents WHERE doc_id % 3 = 0
-  UNION ALL
-  SELECT doc_id, 4, 'text', array_to_string(toks[21:], ' '), ''
-  FROM toked WHERE array_to_string(toks[21:], ' ') <> ''
-), enriched AS (
-  SELECT doc_id, span_pos, kind, media_ref,
-         last_value(CASE WHEN kind = 'text' THEN text END IGNORE NULLS)
-           OVER (PARTITION BY doc_id ORDER BY span_pos
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_text,
-         first_value(CASE WHEN kind = 'text' THEN text END IGNORE NULLS)
-           OVER (PARTITION BY doc_id ORDER BY span_pos
-                 ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS next_text
-  FROM spans
-)
-SELECT doc_id, media_ref, CAST(span_pos AS INT) AS span_pos,
-       CASE WHEN prev_text IS NOT NULL THEN 'before'
-            WHEN next_text IS NOT NULL THEN 'after'
-            ELSE 'none' END AS caption_side,
-       COALESCE(prev_text, next_text, '') AS caption
-FROM enriched WHERE kind = 'media'"""
-
-
-# ---------------------------------------------------------------------------
-# posting-list d-gap compression stats
-# ---------------------------------------------------------------------------
-
-
-def q_posting_gaps(spark: SparkSession, sf: str) -> DataFrame:
-    """Inverted-index size estimation by delta-gap + varint modeling —
-    the planning pass a search index runs before materializing postings
-    at 100 TB (is the term dictionary worth compressing, which terms
-    dominate the index bytes). Per term: the posting list (distinct doc
-    ids ascending), d-gaps (first id encoded as id+1, then successive
-    differences — the standard d-gap scheme), varint cost per gap
-    ((bits + 6) DIV 7 bytes with bits = length(bin(gap))), aggregated
-    to per-term index bytes vs the raw 8-byte-per-posting baseline,
-    ratio in fixed-point.
-
-    Scale shape: tokenize is a narrow explode; the (term, doc) distinct
-    is the index-build groupBy (map-side combine); the lag window is
-    partitioned BY TERM — the exact partitioning the posting-list build
-    shuffles on anyway, never a global sort; the final per-term rollup
-    is combine-heavy. bin()/length() are JVM-side (no UDF) and
-    hash-match DuckDB's bin() for the positive gaps d-gap encoding
-    guarantees."""
-    docs = load(spark, sf, "documents")
-    postings = (
-        docs.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("term"))
-        .filter(F.col("term") != "")
-        .select("term", "doc_id")
-        .distinct()
-    )
-    lag_win = Window.partitionBy("term").orderBy("doc_id")
-    gaps = postings.withColumn(
-        "gap",
-        F.coalesce(
-            F.col("doc_id") - F.lag("doc_id").over(lag_win), F.col("doc_id") + 1
-        ).cast("long"),
-    ).withColumn(
-        "vbytes", F.expr("(length(bin(gap)) + 6) DIV 7").cast("long")
-    )
-    return (
-        gaps.groupBy("term")
-        .agg(
-            F.count("*").cast("long").alias("df"),
-            F.sum("vbytes").cast("long").alias("vbyte_bytes"),
-            F.max("gap").cast("long").alias("max_gap"),
-        )
-        .select(
-            "term",
-            "df",
-            "vbyte_bytes",
-            (F.col("df") * 8).cast("long").alias("raw_bytes"),
-            F.expr("(1000 * vbyte_bytes) DIV (df * 8)").cast("long").alias("ratio_fp"),
-            "max_gap",
-        )
-    )
-
-
-_GAPS_SQL = """
-WITH words AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-), postings AS (
-  SELECT DISTINCT term, doc_id FROM words WHERE term <> ''
-), gaps AS (
-  SELECT term,
-         CAST(COALESCE(doc_id - lag(doc_id) OVER (PARTITION BY term ORDER BY doc_id),
-                       doc_id + 1) AS BIGINT) AS gap
-  FROM postings
-), costed AS (
-  SELECT term, gap, CAST((length(bin(gap)) + 6) // 7 AS BIGINT) AS vbytes FROM gaps
-)
-SELECT term, CAST(count(*) AS BIGINT) AS df,
-       CAST(sum(vbytes) AS BIGINT) AS vbyte_bytes,
-       CAST(count(*) * 8 AS BIGINT) AS raw_bytes,
-       CAST((1000 * sum(vbytes)) // (count(*) * 8) AS BIGINT) AS ratio_fp,
-       CAST(max(gap) AS BIGINT) AS max_gap
-FROM costed GROUP BY term"""
-
-
-# ---------------------------------------------------------------------------
 # composite curation pipeline (strip -> quality -> clean-text dedup)
 # ---------------------------------------------------------------------------
 
@@ -1997,9 +1611,8 @@ def q_dsir_weights(spark: SparkSession, sf: str) -> DataFrame:
     high-quality-domain stand-in); raw is the complement. Per-bucket
     log-probabilities use the repo's integer surrogate: surprisal =
     length(bin((1000 * (total + B)) DIV (cnt + 1))) — a floor-log2 of
-    the add-one-smoothed inverse probability, same bin() idiom as
-    q_posting_gaps, so the doc's log-weight is an exact integer both
-    engines agree on. selected = logw > 0 (doc looks more target- than
+    the add-one-smoothed inverse probability, so the doc's log-weight
+    is an exact integer both engines agree on. selected = logw > 0 (doc looks more target- than
     raw-like); a production pipeline would Gumbel-resample on these
     weights — randomness is out of the determinism budget here, the
     weights are the operator. See dsir_score for the operator contract
@@ -2132,6 +1745,29 @@ FROM toked t LEFT JOIN per_doc p ON t.doc_id = p.doc_id"""
 
 
 # ---------------------------------------------------------------------------
+# Corpus bigram construction (Good-Turing)
+# ---------------------------------------------------------------------------
+
+# ONE definition of "adjacent bigram" in both engines — a change to
+# tokenization or pair semantics lands in the query and its oracle at
+# once instead of silently diverging.
+_BIGRAM_TRANSFORM = (
+    "transform(sequence(1, size(toks) - 1),"
+    " i -> struct(toks[i - 1] AS a, toks[i] AS b))"
+)
+# DuckDB twin (1-based list indexing)
+_BIGRAM_SQL = "list_transform(range(1, len(toks)), i -> {'a': toks[i], 'b': toks[i + 1]})"
+
+
+def _bigram_pairs(toked: DataFrame) -> DataFrame:
+    """Adjacent (a, b) token pairs from a (.., toks array<string>) frame;
+    callers must pre-filter size(toks) >= 2."""
+    return toked.select(F.explode(F.expr(_BIGRAM_TRANSFORM)).alias("p")).select(
+        "p.a", "p.b"
+    )
+
+
+# ---------------------------------------------------------------------------
 # exact phrase search over positional postings
 # ---------------------------------------------------------------------------
 
@@ -2259,106 +1895,6 @@ FROM anchors WHERE nq = qlen GROUP BY query_id, phrase, doc_id"""
 
 
 # ---------------------------------------------------------------------------
-# PMI collocation mining
-# ---------------------------------------------------------------------------
-
-_COL_MIN_SUPPORT = 5   # bigram must occur this often to be scored
-_COL_MIN_PMI_LOG2 = 12  # collocation flag: length(bin(ratio_fp)) >= 12
-# i.e. ratio_fp >= 2048 = ~2.05x over independence (ratio_fp = 1000 at
-# exact independence; bin length 11 would fire at 1024 = only 1.02x)
-
-
-def q_collocations(spark: SparkSession, sf: str) -> DataFrame:
-    """PMI collocation mining — the association statistic that surfaces
-    multi-word expressions ("new york", "machine learning") as tokenizer
-    merge candidates and phrase-dictionary entries during corpus
-    analysis. PMI(a,b) = log p(ab) / (p(a) p(b)); in the repo's integer
-    discipline the ratio is computed staged to stay in BIGINT —
-    t1 = (1000 * U) DIV c_a, t2 = (t1 * U) DIV c_b,
-    ratio_fp = (t2 * c_ab) DIV N (U = unigram total, N = bigram total) —
-    then lifted to a floor-log2 via length(bin(...)), the same bin()
-    idiom as q_posting_gaps / q_dsir_weights. A pair is flagged a
-    collocation when its log2 ratio clears _COL_MIN_PMI_LOG2 (about 2x
-    over independence) with support >= _COL_MIN_SUPPORT (PMI is
-    notoriously noisy at low counts — the support floor is part of the
-    operator, not a test convenience). At web scale the staged form
-    bounds intermediates by 1000*U^2/max(c_a,c_b); a 10^12-token corpus
-    would hoist the log earlier (sum of per-factor floor-log2s) — noted
-    here because the fixed-point product is the exact-hash-friendly form
-    at test scale.
-
-    Scale shape: unigram and bigram counts are two combine-heavy
-    groupBys (vocab- and bigram-vocab-sized outputs); the unigram table
-    joins back to the bigram table twice on single-term keys — both
-    joins are vocabulary-sized, NOT corpus-sized, and broadcastable when
-    the vocab fits (AQE decides, same policy as q_tfidf_topk). Nothing
-    after tokenization touches the corpus again."""
-    docs = load(spark, sf, "documents")
-    toked = docs.select("doc_id", F.split(F.col("text"), " ").alias("toks")).filter(
-        F.size("toks") >= 2
-    )
-    uni = _barrier(
-        toked.select(F.explode("toks").alias("term"))
-        .filter(F.col("term") != "")
-        .groupBy("term")
-        .agg(F.count("*").cast("long").alias("c"))
-    )
-    u_total = uni.agg(F.sum("c")).first()[0] or 1
-    big_counts = _barrier(
-        _bigram_pairs(toked).groupBy("a", "b").agg(
-            F.count("*").cast("long").alias("c_ab")
-        )
-    )
-    n_total = big_counts.agg(F.sum("c_ab")).first()[0] or 1
-    ca = uni.select(F.col("term").alias("a"), F.col("c").alias("c_a"))
-    cb = uni.select(F.col("term").alias("b"), F.col("c").alias("c_b"))
-    return (
-        big_counts.filter(F.col("c_ab") >= _COL_MIN_SUPPORT)
-        .join(ca, "a")
-        .join(cb, "b")
-        .withColumn("t1", F.expr(f"(1000 * {u_total}) DIV c_a"))
-        .withColumn("t2", F.expr(f"(t1 * {u_total}) DIV c_b"))
-        .withColumn("ratio_fp", F.expr(f"(t2 * c_ab) DIV {n_total}").cast("long"))
-        .filter(F.col("ratio_fp") >= 1)
-        .select(
-            "a",
-            "b",
-            "c_ab",
-            "c_a",
-            "c_b",
-            "ratio_fp",
-            F.expr("length(bin(ratio_fp))").cast("long").alias("pmi_log2"),
-            (F.expr("length(bin(ratio_fp))") >= _COL_MIN_PMI_LOG2).alias(
-                "collocation"
-            ),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Shared corpus bigram construction (collocations / Good-Turing / diversity)
-# ---------------------------------------------------------------------------
-
-# ONE definition of "adjacent bigram" for every consumer, in both
-# engines — a change to tokenization or pair semantics lands everywhere
-# at once instead of silently diverging across six copies.
-_BIGRAM_TRANSFORM = (
-    "transform(sequence(1, size(toks) - 1),"
-    " i -> struct(toks[i - 1] AS a, toks[i] AS b))"
-)
-# DuckDB twin (1-based list indexing)
-_BIGRAM_SQL = "list_transform(range(1, len(toks)), i -> {'a': toks[i], 'b': toks[i + 1]})"
-
-
-def _bigram_pairs(toked: DataFrame) -> DataFrame:
-    """Adjacent (a, b) token pairs from a (.., toks array<string>) frame;
-    callers must pre-filter size(toks) >= 2."""
-    return toked.select(F.explode(F.expr(_BIGRAM_TRANSFORM)).alias("p")).select(
-        "p.a", "p.b"
-    )
-
-
-# ---------------------------------------------------------------------------
 # Good-Turing count-of-counts smoothing
 # ---------------------------------------------------------------------------
 
@@ -2387,8 +1923,7 @@ def q_ngram_goodturing(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: the bigram groupBy is the only corpus-sized shuffle
     (combine-heavy, bigram-vocab keys); count-of-counts is a groupBy
     over DISTINCT COUNT VALUES — at most ~log-many distinct r dominate
-    — so everything after the first aggregate is r-table-sized. The
-    bigram construction is shared verbatim with q_collocations."""
+    — so everything after the first aggregate is r-table-sized."""
     return goodturing_table(load(spark, sf, "documents"))
 
 
@@ -2482,309 +2017,34 @@ SELECT 0, 0, NULL,
               // (SELECT t FROM tot) AS BIGINT)"""
 
 
-_COLLOC_SQL = f"""
-WITH toked AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-  WHERE len(string_split(text, ' ')) >= 2
-), uni AS (
-  SELECT term, CAST(count(*) AS BIGINT) AS c
-  FROM (SELECT unnest(toks) AS term FROM toked) WHERE term <> ''
-  GROUP BY term
-), u_total AS (SELECT CAST(sum(c) AS BIGINT) AS u FROM uni),
-big AS (
-  SELECT z.a AS a, z.b AS b
-  FROM (SELECT unnest({_BIGRAM_SQL}) AS z FROM toked)
-), big_counts AS (
-  SELECT a, b, CAST(count(*) AS BIGINT) AS c_ab FROM big GROUP BY a, b
-), n_total AS (SELECT CAST(sum(c_ab) AS BIGINT) AS n FROM big_counts),
-scored AS (
-  SELECT bc.a, bc.b, bc.c_ab, ua.c AS c_a, ub.c AS c_b,
-         ((((1000 * (SELECT u FROM u_total)) // ua.c)
-           * (SELECT u FROM u_total)) // ub.c) * bc.c_ab
-           // (SELECT n FROM n_total) AS ratio_fp
-  FROM big_counts bc
-  JOIN uni ua ON bc.a = ua.term
-  JOIN uni ub ON bc.b = ub.term
-  WHERE bc.c_ab >= {_COL_MIN_SUPPORT}
-)
-SELECT a, b, c_ab, c_a, c_b, CAST(ratio_fp AS BIGINT) AS ratio_fp,
-       CAST(length(bin(ratio_fp)) AS BIGINT) AS pmi_log2,
-       length(bin(ratio_fp)) >= {_COL_MIN_PMI_LOG2} AS collocation
-FROM scored WHERE ratio_fp >= 1"""
-
-
-# ---------------------------------------------------------------------------
-# Heaps'-law vocabulary growth over hash-bucketed subsample prefixes
-# ---------------------------------------------------------------------------
-
-_VG_BUCKETS = 10
-
-
-def q_vocab_growth(spark: SparkSession, sf: str) -> DataFrame:
-    """Vocabulary-growth curve (Heaps' law V ~ K*N^beta) — the statistic
-    that tells a crawl-more-or-stop decision how fast new types still
-    arrive, and an LM tokenizer budget how vocabulary scales with corpus
-    size. Documents are assigned to _VG_BUCKETS deterministic
-    md5(doc_id) buckets; row k reports the cumulative prefix buckets
-    0..k: total tokens n_tokens_cum, vocabulary vocab_cum (types whose
-    FIRST bucket is <= k), the marginal new_types bucket k itself
-    contributed, and the type-token ratio in ppm. Hash buckets are
-    exchangeable random subsamples, so the 10-point curve is the Heaps
-    curve at 10 corpus sizes from one pass — no document ordering
-    needed, which is exactly what makes it computable at 10^10 docs.
-
-    Scale shape: the ONLY corpus-sized shuffle is the per-term groupBy
-    (combine-heavy, vocab-sized output: term -> min bucket); per-bucket
-    token counts map-side-combine to 10 rows. The cumulative window runs
-    over a 10-row frame — no global sort of anything corpus-sized ever
-    happens (contrast: a row_number()-ordered prefix curve would plan a
-    single-partition global window, the exact anti-pattern the top-k
-    queries were rewritten away from)."""
-    docs = load(spark, sf, "documents")
-    # barrier the scan+split+md5 pass: per-bucket counts and per-term
-    # first-buckets both consume it — the explode re-runs per consumer
-    # (cheap) but the corpus is read and tokenized ONCE
-    arrays = _barrier(
-        docs.select(
-            (_md5_int(F.col("doc_id").cast("string")) % _VG_BUCKETS).alias("k"),
-            F.split(F.col("text"), " ").alias("toks"),
-        )
-    )
-    toked = arrays.select("k", F.explode("toks").alias("term")).filter(
-        F.col("term") != ""
-    )
-    per_bucket = toked.groupBy("k").agg(F.count("*").cast("long").alias("n_tok"))
-    first_seen = (
-        toked.groupBy("term")
-        .agg(F.min("k").alias("k"))
-        .groupBy("k")
-        .agg(F.count("*").cast("long").alias("new_types"))
-    )
-    frame = (
-        per_bucket.join(first_seen, "k", "full")
-        .select(
-            F.col("k").cast("long").alias("k"),
-            F.coalesce("n_tok", F.lit(0)).alias("n_tok"),
-            F.coalesce("new_types", F.lit(0)).alias("new_types"),
-        )
-    )
-    w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
-    # 10-row frame: the unpartitioned window is deliberate and bounded.
-    return frame.select(
-        "k",
-        F.sum("n_tok").over(w).cast("long").alias("n_tokens_cum"),
-        F.sum("new_types").over(w).cast("long").alias("vocab_cum"),
-        "new_types",
-    ).withColumn(
-        "ttr_ppm",
-        F.expr("(1000000 * vocab_cum) DIV greatest(n_tokens_cum, 1)").cast("long"),
-    )
-
-
-_VG_SQL = f"""
-WITH toked AS (
-  SELECT CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 15))
-              AS BIGINT) % {_VG_BUCKETS} AS k,
-         unnest(string_split(text, ' ')) AS term
-  FROM documents
-), toks AS (SELECT * FROM toked WHERE term <> ''),
-per_bucket AS (
-  SELECT k, CAST(count(*) AS BIGINT) AS n_tok FROM toks GROUP BY k
-), first_seen AS (
-  SELECT k, CAST(count(*) AS BIGINT) AS new_types
-  FROM (SELECT term, min(k) AS k FROM toks GROUP BY term) GROUP BY k
-), frame AS (
-  SELECT CAST(coalesce(pb.k, fs.k) AS BIGINT) AS k,
-         coalesce(pb.n_tok, 0) AS n_tok,
-         coalesce(fs.new_types, 0) AS new_types
-  FROM per_bucket pb FULL JOIN first_seen fs ON pb.k = fs.k
-), cum AS (
-  SELECT k,
-         CAST(sum(n_tok) OVER (ORDER BY k) AS BIGINT) AS n_tokens_cum,
-         CAST(sum(new_types) OVER (ORDER BY k) AS BIGINT) AS vocab_cum,
-         new_types
-  FROM frame
-)
-SELECT k, n_tokens_cum, vocab_cum, new_types,
-       CAST((1000000 * vocab_cum) // greatest(n_tokens_cum, 1) AS BIGINT)
-         AS ttr_ppm
-FROM cum"""
-
-
-# ---------------------------------------------------------------------------
-# Corpus concentration: Simpson repeat probability + type-token ratio
-# ---------------------------------------------------------------------------
-
-
-def q_token_diversity(spark: SparkSession, sf: str) -> DataFrame:
-    """Corpus-concentration scalar row: Simpson repeat probability (the
-    chance two tokens drawn without replacement are the same type,
-    sum c*(c-1) / (T*(T-1)) in ppm) for unigrams and bigrams, plus
-    type-token ratio — the exact-integer stand-ins for entropy that a
-    curation pipeline thresholds on (a boilerplate-heavy or template
-    crawl shows up as a Simpson spike long before eyeballing does).
-    Each ppm stage is an exact SPLIT division ((x DIV d)*1000 +
-    ((x % d)*1000) DIV d == floor(1000*x/d)), so the staging itself
-    never overflows; what binds is the Simpson numerator S = sum
-    c*(c-1): the per-term product needs c < ~3*10^9 and the BIGINT sum
-    needs S < 2^63 — under a Zipf head (top token ~5% of mass) that is
-    exact to roughly 10^10-10^11 tokens. Past that, compute the
-    statistic on a deterministic hash-sample of token instances
-    (Simpson is a ratio; sampling preserves it) or hoist c*(c-1) into
-    10^6-scaled units — noted, not implemented, same discipline as
-    q_collocations' log-hoist note.
-
-    Scale shape: two combine-heavy groupBys (term, bigram) over ONE
-    barriered tokenize pass are the only corpus shuffles; everything
-    else is a scalar aggregate of the vocab table and a 1x1 cross join
-    of two single-row frames."""
-    docs = load(spark, sf, "documents")
-    # barrier: uni and big both consume toked — without it the plan
-    # forks and the corpus is scanned + split twice
-    toked = _barrier(
-        docs.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
-    )
-    uni = (
-        toked.select(F.explode("toks").alias("term"))
-        .filter(F.col("term") != "")
-        .groupBy("term")
-        .agg(F.count("*").cast("long").alias("c"))
-    )
-    u_row = uni.agg(
-        F.sum("c").alias("t"),
-        F.count("*").cast("long").alias("vocab"),
-        F.sum(F.expr("c * (c - 1)")).alias("s"),
-    )
-    big = (
-        _bigram_pairs(toked.filter(F.size("toks") >= 2))
-        .groupBy("a", "b")
-        .agg(F.count("*").cast("long").alias("c"))
-    )
-    b_row = big.agg(
-        F.sum("c").alias("t2"),
-        F.count("*").cast("long").alias("bigram_vocab"),
-        F.sum(F.expr("c * (c - 1)")).alias("s2"),
-    )
-    split_div = (
-        "(({x} DIV greatest({d}, 1)) * 1000"
-        " + (({x} % greatest({d}, 1)) * 1000) DIV greatest({d}, 1))"
-    )
-    simpson = split_div.format(
-        x=split_div.format(x="{s}", d="{t}"), d="{t} - 1"
-    )
-    return (
-        u_row.crossJoin(b_row)
-        .select(
-            F.col("t").cast("long").alias("n_tokens"),
-            "vocab",
-            F.expr(split_div.format(x="(1000 * vocab)", d="t"))
-            .cast("long")
-            .alias("ttr_ppm"),
-            F.expr(simpson.format(s="s", t="t")).cast("long").alias(
-                "simpson_uni_ppm"
-            ),
-            F.col("t2").cast("long").alias("n_bigrams"),
-            "bigram_vocab",
-            F.expr(simpson.format(s="s2", t="t2")).cast("long").alias(
-                "simpson_big_ppm"
-            ),
-        )
-    )
-
-
-_DIVERSITY_SQL = """
-WITH toked AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-), uni AS (
-  SELECT term, CAST(count(*) AS BIGINT) AS c
-  FROM (SELECT unnest(toks) AS term FROM toked) WHERE term <> ''
-  GROUP BY term
-), u_row AS (
-  SELECT CAST(sum(c) AS BIGINT) AS t, CAST(count(*) AS BIGINT) AS vocab,
-         CAST(sum(c * (c - 1)) AS BIGINT) AS s
-  FROM uni
-), big AS (
-  SELECT z.a AS a, z.b AS b, CAST(count(*) AS BIGINT) AS c
-  FROM (SELECT unnest(__BIGRAM__) AS z
-        FROM toked WHERE len(toks) >= 2)
-  GROUP BY z.a, z.b
-), b_row AS (
-  SELECT CAST(sum(c) AS BIGINT) AS t2,
-         CAST(count(*) AS BIGINT) AS bigram_vocab,
-         CAST(sum(c * (c - 1)) AS BIGINT) AS s2
-  FROM big
-)
-SELECT t AS n_tokens, vocab,
-       CAST(__SPLIT(1000 * vocab|t)__ AS BIGINT) AS ttr_ppm,
-       CAST(__SIMPSON(s|t)__ AS BIGINT) AS simpson_uni_ppm,
-       t2 AS n_bigrams, bigram_vocab,
-       CAST(__SIMPSON(s2|t2)__ AS BIGINT) AS simpson_big_ppm
-FROM u_row, b_row"""
-
-
-def _duck_split_div(x: str, d: str) -> str:
-    """Exact floor(1000*x/d) without an x*1000 intermediate — the DuckDB
-    twin of the Spark split_div staging in q_token_diversity."""
-    g = f"greatest({d}, 1)"
-    return f"((({x}) // {g}) * 1000 + ((({x}) % {g}) * 1000) // {g})"
-
-
-def _expand_diversity_sql(sql: str) -> str:
-    out = sql.replace("__BIGRAM__", _BIGRAM_SQL)
-    out = out.replace("__SPLIT(1000 * vocab|t)__", _duck_split_div("1000 * vocab", "t"))
-    for s, t in (("s", "t"), ("s2", "t2")):
-        out = out.replace(
-            f"__SIMPSON({s}|{t})__",
-            _duck_split_div(_duck_split_div(s, t), f"{t} - 1"),
-        )
-    return out
-
-
-_DIVERSITY_SQL = _expand_diversity_sql(_DIVERSITY_SQL)
-
-
 SEARCH_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "bm25_topk": q_bm25_topk,
-    "crawl_depth": q_crawl_depth,
-    "url_templates": q_url_templates,
     "host_similarity": q_host_similarity,
     "quality_classifier": q_quality_classifier,
     "boilerplate_strip": q_boilerplate_strip,
     "curation_pipeline": q_curation_pipeline,
     "curation_pipeline_full": q_curation_pipeline_full,
-    "posting_gaps": q_posting_gaps,
     "phash_neardup": q_phash_neardup,
-    "media_captions": q_media_captions,
     "video_neardup": q_video_neardup,
     "dup_spans": q_dup_spans,
     "dsir_weights": q_dsir_weights,
     "phrase_search": q_phrase_search,
-    "collocations": q_collocations,
     "audio_neardup": q_audio_neardup,
     "ngram_goodturing": q_ngram_goodturing,
-    "vocab_growth": q_vocab_growth,
-    "token_diversity": q_token_diversity,
 }
 
 SEARCH_ORACLES: dict[str, str] = {
     "bm25_topk": _BM25_SQL,
-    "crawl_depth": _crawl_depth_sql(),
-    "url_templates": _TPL_SQL,
     "host_similarity": _HSIM_SQL,
     "quality_classifier": _QC_SQL,
     "boilerplate_strip": _BP_SQL,
     "curation_pipeline": _CURATION_SQL,
     "curation_pipeline_full": _curation_full_sql(),
-    "posting_gaps": _GAPS_SQL,
     "phash_neardup": _phash_neardup_sql(),
-    "media_captions": _CAPTION_SQL,
     "video_neardup": _video_neardup_sql(),
     "dup_spans": _DUP_SPANS_SQL,
     "dsir_weights": _DSIR_SQL,
     "phrase_search": _PHRASE_SQL,
-    "collocations": _COLLOC_SQL,
     "audio_neardup": _audio_neardup_sql(),
     "ngram_goodturing": _GT_SQL,
-    "vocab_growth": _VG_SQL,
-    "token_diversity": _DIVERSITY_SQL,
 }

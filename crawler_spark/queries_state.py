@@ -623,8 +623,7 @@ def q_crawl_saturation(spark: SparkSession, sf_dir: str) -> DataFrame:
     min seq), the cumulative distinct-span count, and marginal novelty
     in ppm — the diminishing-returns dial that tells a budget allocator
     when deeper fetching of a host class stops paying (site chrome
-    repeats from depth 0; content thins with depth). The crawl-state
-    sibling of q_vocab_growth's corpus curve.
+    repeats from depth 0; content thins with depth).
 
     Scale shape: explode is map-only; the ONLY crawl-sized shuffle is
     the per-span-text groupBy(min seq) (distinct-span-sized output, and

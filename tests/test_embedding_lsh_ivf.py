@@ -1,5 +1,6 @@
-"""Embedding near-dup via LSH buckets + IVF-flat ANN — the two
-bucketed-not-all-pairs similarity shapes over the embeddings table."""
+"""Embedding near-dup via LSH buckets, IVF centroid assignment, IVF-PQ
+search and SemDeDup — the bucketed-not-all-pairs similarity shapes over
+the embeddings table."""
 
 from pyspark.sql import functions as F
 
@@ -8,9 +9,6 @@ from crawler_spark.queries import (
     _IVF_NLIST,
     _LSH_OFFSET,
     load,
-    q_ann_ivf_search,
-    q_ann_lsh_search,
-    q_cosine_topk,
     q_dedup_embedding_lsh,
 )
 
@@ -30,21 +28,6 @@ def test_embedding_lsh_recovers_all_planted_dups(spark):
         assert r.cos_milli >= _EMB_LSH_COS_MIN
     # and the verify gate keeps cosine honest for every emitted row
     assert all(r.cos_milli >= _EMB_LSH_COS_MIN for r in out.values())
-
-
-def test_ivf_probe_is_subset_of_bruteforce_order(spark):
-    ivf = q_ann_ivf_search(spark, SF).collect()
-    assert [r.rk for r in ivf] == list(range(1, len(ivf) + 1))
-    # all results come from ONE inverted list (nprobe=1)
-    assert len({r.cent_id for r in ivf}) == 1
-    # the query vector (vec_id 0, a centroid itself) must rank first with
-    # cosine 1000 against itself
-    assert ivf[0].vec_id == 0 and ivf[0].cos_milli == 1000
-    # every IVF hit's cosine matches the brute-force score for that vec
-    brute = {r.vec_id: r.cos_milli for r in q_cosine_topk(spark, SF).collect()}
-    for r in ivf:
-        if r.vec_id in brute:
-            assert brute[r.vec_id] == r.cos_milli
 
 
 def test_ivf_assignment_covers_corpus_once(spark):
@@ -147,25 +130,6 @@ def test_lsh_bucket_join_plan_is_broadcast_free_shuffle_on_bucket(spark):
     # the candidate join must hash-partition on the bucket key, never
     # build an all-pairs cartesian
     plan = q_dedup_embedding_lsh(spark, SF)._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-
-
-def test_ann_queries_agree_on_top1(spark):
-    # LSH probe and IVF probe disagree on candidate sets but both must
-    # return the query vector itself as rank 1
-    lsh = q_ann_lsh_search(spark, SF).collect()
-    ivf = q_ann_ivf_search(spark, SF).collect()
-    assert lsh[0].vec_id == ivf[0].vec_id == 0
-
-
-def test_ivf_plan_broadcasts_centroids_and_query(spark):
-    """The centroid-assignment join and the probe join must both be
-    broadcasts (small side = nlist centroids / 1 query row) — the
-    corpus-side scan is never shuffled for assignment."""
-    from crawler_spark.plans.inspect import formatted_plan
-
-    plan = formatted_plan(q_ann_ivf_search(spark, SF))
-    assert "Broadcast" in plan  # nested-loop broadcast for the free joins
     assert "CartesianProduct" not in plan
 
 

@@ -180,14 +180,14 @@ def test_quality_filter_cascade_every_branch(spark):
 
 def test_quality_filter_plan_is_shuffle_free(spark):
     """The cascade is a per-document decision, so its plan must be
-    map-only: one token split, signals via higher-order functions, the
-    top-bigram mass via the run-length scan — no Exchange, no Generate.
+    map-only: one Arrow-batched stat pass and a when-cascade — no
+    Exchange, no Generate.
     A shuffle here would move the whole corpus for a value computable
     inside the scan partition."""
     from crawler_spark.plans.inspect import formatted_plan
-    from crawler_spark.queries import q_quality_filter
+    from crawler_spark.queries import load, quality_filter
 
-    plan = formatted_plan(q_quality_filter(spark, SF))
+    plan = formatted_plan(quality_filter(load(spark, SF, "documents")))
     assert "Exchange" not in plan, plan
     assert "Generate" not in plan, plan
 

@@ -78,20 +78,15 @@ def test_schedule_topk_uses_group_limit_even_with_quotas(spark):
 
 
 def test_global_topk_uses_take_ordered(spark):
-    """The three global top-k queries (brute-force cosine, LSH bucket
-    probe, IVF list probe) must plan TakeOrderedAndProject — per-partition
-    top-k merged on the driver — NOT a global Window sort that funnels the
-    whole scored set (corpus / bucket / inverted list) through one task.
-    The only Window left in each plan runs AFTER the k-row limit."""
+    """The global top-k queries (brute-force cosine, IVF-PQ list probe)
+    must plan TakeOrderedAndProject — per-partition top-k merged on the
+    driver — NOT a global Window sort that funnels the whole scored set
+    (corpus / inverted list) through one task. The only Window left in
+    each plan runs AFTER the k-row limit."""
     from crawler_spark.plans.inspect import formatted_plan
-    from crawler_spark.queries import (
-        q_ann_ivf_search,
-        q_ann_ivfpq_search,
-        q_ann_lsh_search,
-        q_cosine_topk,
-    )
+    from crawler_spark.queries import q_ann_ivfpq_search, q_cosine_topk
 
-    for fn in (q_cosine_topk, q_ann_lsh_search, q_ann_ivf_search, q_ann_ivfpq_search):
+    for fn in (q_cosine_topk, q_ann_ivfpq_search):
         plan = formatted_plan(fn(spark, SF))
         assert "TakeOrderedAndProject" in plan, f"{fn.__name__}:\n{plan}"
 
@@ -110,15 +105,15 @@ def test_bm25_vocab_topk_uses_take_ordered(spark):
 
 
 def test_text_repetition_plan_is_shuffle_free(spark):
-    """q_text_repetition is a per-document statistic, so its plan must be
-    map-only: tokens split once, top-bigram mass via a run-length scan of
-    the sorted bigram array — no explode, no Exchange. A shuffle here
-    would move every bigram of a 100 TB corpus across the wire for a
-    value computable inside the scan partition."""
+    """repetition_stats is a per-document statistic, so its plan must be
+    map-only: one Arrow-batched pass counts tokens and bigrams inside the
+    scan partition — no explode, no Exchange. A shuffle here would move
+    every bigram of a 100 TB corpus across the wire for a value
+    computable inside the scan partition."""
     from crawler_spark.plans.inspect import formatted_plan
-    from crawler_spark.queries import q_text_repetition
+    from crawler_spark.queries import load, repetition_stats
 
-    plan = formatted_plan(q_text_repetition(spark, SF))
+    plan = formatted_plan(repetition_stats(load(spark, SF, "documents")))
     assert "Exchange" not in plan, plan
     assert "Generate" not in plan, plan  # no explode
 

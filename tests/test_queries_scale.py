@@ -3,8 +3,9 @@
 The driver gate (tools/selfcheck.py) already hash-checks every query
 against its DuckDB oracle; these tests pin the SEMANTIC invariants the
 hash can't express — rule precedence, the rendezvous minimal-movement
-property, HLL accuracy, dominant-anchor tie-breaking — plus the plan
-shapes the 100 TB design requires.
+property, dominant-anchor tie-breaking, label-propagation convergence,
+exact packing and apportionment arithmetic, longest-suffix matching —
+plus the plan shapes the 100 TB design requires.
 """
 
 import re
@@ -13,17 +14,10 @@ import pytest
 
 from crawler_spark.plans.inspect import formatted_plan
 from crawler_spark.queries_scale import (
-    _ALLOC_BUDGET,
-    _ALLOC_HOSTS,
-    _ALLOC_SHARDS,
     _HRW_SHARDS,
     _TFIDF_K,
     q_anchor_agg,
-    q_budget_alloc,
-    q_dedup_components,
-    q_hll_distinct,
     q_host_shards,
-    q_mirror_detect,
     q_recrawl_priority,
     q_tfidf_topk,
     q_trap_detect,
@@ -129,33 +123,6 @@ def test_host_shards_matches_pure_python_rendezvous(spark):
 
 
 # ---------------------------------------------------------------------------
-# deterministic HyperLogLog
-# ---------------------------------------------------------------------------
-
-
-def test_hll_distinct_accuracy(spark):
-    """Raw-estimator regime (n >> m=256): relative error must sit well
-    inside the ~1.04/sqrt(m) = 6.5% envelope. Deterministic, so this is
-    a behavior pin, not a flaky statistical assertion."""
-    rows = q_hll_distinct(spark, SF).collect()
-    assert len(rows) == 4
-    for r in rows:
-        assert r["exact_distinct"] > 256  # past the register count
-        assert r["abs_err_milli"] <= 150, r
-
-
-def test_hll_sketch_shrinks_before_shuffle(spark):
-    """The register aggregation must partial-aggregate map-side: the
-    plan carries a partial HashAggregate before each exchange, so at
-    most m rows per group cross the wire, whatever the input size."""
-    plan = formatted_plan(q_hll_distinct(spark, SF))
-    assert "HashAggregate" in plan
-    # the register max must run as a partial (map-side) aggregate so at
-    # most m register rows per group cross the wire, whatever the input
-    assert "partial_max(rho" in plan, plan
-
-
-# ---------------------------------------------------------------------------
 # anchor-text aggregation
 # ---------------------------------------------------------------------------
 
@@ -227,33 +194,44 @@ def _union_find(n, edges):
     return label
 
 
+def _cc_label_propagate(spark, n, stages=None):
+    """_label_propagate over the _cc_edges(n) graph, both directions."""
+    from pyspark.sql import functions as F
+
+    from crawler_spark.queries_scale import _label_propagate
+
+    ids = spark.range(n).select(F.col("id").alias("v"))
+    edges = spark.createDataFrame(
+        [(a, b) for a, b in _cc_edges(n)] + [(b, a) for a, b in _cc_edges(n)],
+        "s long, d long",
+    )
+    return _label_propagate(ids, edges, stages=stages)
+
+
 def test_dedup_components_matches_union_find(spark):
-    rows = {r["doc_id"]: r for r in q_dedup_components(spark, SF).collect()}
-    n = len(rows)
+    n = 160
     truth = _union_find(n, _cc_edges(n))
+    got = {r["v"]: r["lab"] for r in _cc_label_propagate(spark, n).collect()}
+    assert got == truth
+    # the fixture graph really exercises depth: 16-id components whose
+    # farthest vertex sits 7 hops from the component minimum
     sizes = {}
-    for v, lab in truth.items():
+    for lab in truth.values():
         sizes[lab] = sizes.get(lab, 0) + 1
-    for v, r in rows.items():
-        assert r["component"] == truth[v], (v, r)
-        assert r["comp_size"] == sizes[truth[v]]
-    # the fixture graph really exercises depth: diameter-7 components
-    assert max(sizes.values()) == 16
+    assert set(sizes.values()) == {16}
 
 
 def test_dedup_components_stage_schedule_is_a_fixpoint(spark):
-    """One extra hook stage must not move any label — proves the 6-stage
-    alternating schedule already converged (the oracle equality alone
-    would also pass on a prematurely-truncated but luckily-equal run)."""
-    import crawler_spark.queries_scale as qs
+    """One extra hook stage must not move any label — proves the default
+    alternating schedule already converged on the diameter-7 graph."""
+    from crawler_spark.queries_scale import _CC_STAGES
 
-    base = {r["doc_id"]: r["component"] for r in q_dedup_components(spark, SF).collect()}
-    orig = qs._CC_STAGES
-    qs._CC_STAGES = orig + ("hook",)
-    try:
-        extra = {r["doc_id"]: r["component"] for r in q_dedup_components(spark, SF).collect()}
-    finally:
-        qs._CC_STAGES = orig
+    n = 160
+    base = {r["v"]: r["lab"] for r in _cc_label_propagate(spark, n).collect()}
+    extra = {
+        r["v"]: r["lab"]
+        for r in _cc_label_propagate(spark, n, stages=_CC_STAGES + ("hook",)).collect()
+    }
     assert base == extra
 
 
@@ -261,36 +239,9 @@ def test_dedup_components_hook_combines_map_side(spark):
     """The hook's neighbor-min must partial-aggregate before its
     exchange: at 10^10 edges only one candidate label per (vertex,
     partition) crosses the wire."""
-    plan = formatted_plan(q_dedup_components(spark, SF))
+    plan = formatted_plan(_cc_label_propagate(spark, 160))
     assert "partial_min(lab" in plan, plan
     assert "CartesianProduct" not in plan
-
-
-# ---------------------------------------------------------------------------
-# mirror detection
-# ---------------------------------------------------------------------------
-
-
-def test_mirror_detect_finds_planted_pairs(spark):
-    rows = {r["host"]: r for r in q_mirror_detect(spark, SF).collect()}
-    assert len(rows) == 40
-    for host, r in rows.items():
-        h = int(host[1:].split(".")[0])
-        partner = f"h{(h + 20) % 40}.example.org"
-        assert r["n_contents"] == 3
-        assert r["is_mirror"] and r["group_size"] == 2
-        assert rows[partner]["sig"] == r["sig"]
-        assert r["canonical_host"] == min(host, partner)
-    # exactly 20 distinct mirror groups
-    assert len({r["sig"] for r in rows.values()}) == 20
-
-
-def test_mirror_detect_no_pairwise_host_join(spark):
-    """Signature grouping must replace the quadratic host x host
-    comparison: the only join is the final signature equi-join."""
-    plan = formatted_plan(q_mirror_detect(spark, SF))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
 
 
 # ---------------------------------------------------------------------------
@@ -340,41 +291,6 @@ def test_tfidf_topk_window_partitions_by_doc(spark):
 
 
 # ---------------------------------------------------------------------------
-# budget allocation
-# ---------------------------------------------------------------------------
-
-
-def test_budget_alloc_is_exact_hamilton(spark):
-    rows = q_budget_alloc(spark, SF).collect()
-    assert len(rows) == _ALLOC_HOSTS
-    by_shard = {}
-    for r in rows:
-        assert r["shard"] == r["host"] % _ALLOC_SHARDS
-        assert r["extra"] in (0, 1)
-        assert r["alloc"] == r["base_alloc"] + r["extra"]
-        by_shard.setdefault(r["shard"], []).append(r)
-    for shard, rs in by_shard.items():
-        total = sum(r["pending"] for r in rs)
-        # exactness: floor shares + largest remainders spend the budget fully
-        assert sum(r["alloc"] for r in rs) == _ALLOC_BUDGET
-        leftover = _ALLOC_BUDGET - sum((_ALLOC_BUDGET * r["pending"]) // total for r in rs)
-        winners = sorted(rs, key=lambda r: (-r["remainder"], r["host"]))[:leftover]
-        expect_extra = {r["host"] for r in winners}
-        for r in rs:
-            assert r["base_alloc"] == (_ALLOC_BUDGET * r["pending"]) // total
-            assert r["remainder"] == (_ALLOC_BUDGET * r["pending"]) % total
-            assert bool(r["extra"]) == (r["host"] in expect_extra)
-
-
-def test_budget_alloc_window_partitions_by_shard(spark):
-    """The remainder rank must never globally sort all hosts."""
-    plan = formatted_plan(q_budget_alloc(spark, SF))
-    import re as _re
-
-    assert _re.search(r"Window.*\[shard|partitionBy.*shard", plan, _re.S), plan
-
-
-# ---------------------------------------------------------------------------
 # crawl report rollup
 # ---------------------------------------------------------------------------
 
@@ -411,6 +327,27 @@ def test_crawl_rollup_is_one_expand_one_aggregate(spark):
 
 
 # ---------------------------------------------------------------------------
+# sequence packing
+# ---------------------------------------------------------------------------
+
+
+def _packed(spark):
+    """token_pack_frame over the SF corpus, chars/4 tokens (floor 1)."""
+    from pyspark.sql import functions as F
+
+    from crawler_spark.queries import load
+    from crawler_spark.queries_scale import token_pack_frame
+
+    return token_pack_frame(
+        load(spark, SF, "documents").select(
+            "doc_id",
+            "lang",
+            F.greatest(F.expr("n_chars DIV 4"), F.lit(1)).cast("long").alias("tokens"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
 # latency quantiles
 # ---------------------------------------------------------------------------
 
@@ -439,51 +376,6 @@ def test_latency_quantiles_window_partitions_by_host(spark):
 
     plan = formatted_plan(q_latency_quantiles(spark, SF))
     assert re.search(r"Window.*\[host", plan, re.S), plan
-
-
-# ---------------------------------------------------------------------------
-# stratified sampling
-# ---------------------------------------------------------------------------
-
-
-def test_sample_stratified_exact_quotas_and_determinism(spark):
-    import hashlib
-
-    from crawler_spark.queries_scale import _SAMPLE_TOTAL, q_sample_stratified
-
-    rows = q_sample_stratified(spark, SF).collect()
-    assert len(rows) == _SAMPLE_TOTAL
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "lang").collect()
-    counts = {}
-    for d in docs:
-        counts[d["lang"]] = counts.get(d["lang"], 0) + 1
-    total = sum(counts.values())
-    base = {lang: (_SAMPLE_TOTAL * n) // total for lang, n in counts.items()}
-    rem = {lang: (_SAMPLE_TOTAL * n) % total for lang, n in counts.items()}
-    leftover = _SAMPLE_TOTAL - sum(base.values())
-    winners = sorted(counts, key=lambda lang: (-rem[lang], lang))[:leftover]
-    quota = {lang: base[lang] + (1 if lang in winners else 0) for lang in counts}
-    got = {}
-    for r in rows:
-        got.setdefault(r["lang"], []).append(r)
-        assert r["quota"] == quota[r["lang"]]
-    assert {lang: len(rs) for lang, rs in got.items()} == {
-        lang: q for lang, q in quota.items() if q > 0
-    }
-    # the draw is the md5-ranked prefix of each stratum — pure function of data
-    for lang, rs in got.items():
-        ids = sorted(
-            (d["doc_id"] for d in docs if d["lang"] == lang),
-            key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i),
-        )
-        assert sorted(r["doc_id"] for r in rs) == sorted(ids[: quota[lang]])
-
-
-def test_sample_stratified_draw_window_partitions_by_stratum(spark):
-    from crawler_spark.queries_scale import q_sample_stratified
-
-    plan = formatted_plan(q_sample_stratified(spark, SF))
-    assert re.search(r"Window.*\[lang", plan, re.S), plan
 
 
 # ---------------------------------------------------------------------------
@@ -549,60 +441,10 @@ def test_cms_matches_pure_python_sketch(spark):
         assert r["cms_estimate"] == min(sketch[c] for c in cells(k))
 
 
-# ---------------------------------------------------------------------------
-# co-citation
-# ---------------------------------------------------------------------------
-
-
-def test_cocitation_matches_pure_python(spark):
-    from crawler_spark.queries_scale import _COCITE_K, q_cocitation
-
-    n_docs = spark.read.parquet(f"{SF}/documents.parquet").count()
-    co = {}
-    for d in range(n_docs):
-        dsts = [(d * 31 + k) % n_docs for k in (1, 2, 3)]
-        for a in dsts:
-            for b in dsts:
-                if a != b:
-                    co[(a, b)] = co.get((a, b), 0) + 1
-    expect = {}
-    by_page = {}
-    for (a, b), c in co.items():
-        by_page.setdefault(a, []).append((c, b))
-    for page, partners in by_page.items():
-        top = sorted(partners, key=lambda t: (-t[0], t[1]))[:_COCITE_K]
-        expect[page] = [(b, c) for c, b in top]
-    rows = {}
-    for r in q_cocitation(spark, SF).collect():
-        rows.setdefault(r["page"], []).append(r)
-    assert set(rows) == set(expect)
-    for page, rs in rows.items():
-        got = [(r["partner"], r["cocitations"]) for r in sorted(rs, key=lambda r: r["rk"])]
-        assert got == expect[page], (page, got, expect[page])
-
-
-def test_cocitation_pairs_are_generated_map_side(spark):
-    """Candidate pairs must come from each src's out-list (map-side
-    explode), not from a join — the plan has exactly the aggregation
-    and window shuffles, no self-join of the edge table."""
-    from crawler_spark.queries_scale import q_cocitation
-
-    plan = formatted_plan(q_cocitation(spark, SF))
-    assert "SortMergeJoin" not in plan, plan
-    import re as _re
-
-    assert _re.search(r"Window.*\[page", plan, _re.S), plan
-
-
-# ---------------------------------------------------------------------------
-# sequence packing
-# ---------------------------------------------------------------------------
-
-
 def test_token_pack_stream_is_contiguous_and_chunk_math_exact(spark):
-    from crawler_spark.queries_scale import _PACK_WINDOW, q_token_pack
+    from crawler_spark.queries_scale import _PACK_WINDOW
 
-    rows = q_token_pack(spark, SF).collect()
+    rows = _packed(spark).collect()
     by_lang = {}
     for r in rows:
         by_lang.setdefault(r["lang"], []).append(r)
@@ -632,10 +474,43 @@ def test_token_pack_stream_is_contiguous_and_chunk_math_exact(spark):
 
 
 def test_token_pack_window_partitions_by_shard(spark):
-    from crawler_spark.queries_scale import q_token_pack
-
-    plan = formatted_plan(q_token_pack(spark, SF))
+    plan = formatted_plan(_packed(spark))
     assert re.search(r"Window.*\[lang", plan, re.S), plan
+
+
+def test_shard_shuffle_is_a_seekable_permutation(spark):
+    """Every doc lands in exactly one shard; per-shard pos is contiguous
+    from 1; shard_offset is the running token prefix sum; and the
+    mapping is reproducible (same salt -> same permutation)."""
+    from collections import defaultdict
+
+    from pyspark.sql import functions as F
+
+    from crawler_spark.queries import load
+    from crawler_spark.queries_scale import _SHARD_SHUF_N, shard_shuffle_frame
+
+    def deal():
+        toks = load(spark, SF, "documents").select(
+            "doc_id",
+            F.greatest(F.expr("n_chars DIV 4"), F.lit(1)).cast("long").alias("tokens"),
+        )
+        return shard_shuffle_frame(toks).collect()
+
+    rows = deal()
+    assert len({r["doc_id"] for r in rows}) == len(rows)
+    by_shard = defaultdict(list)
+    for r in rows:
+        by_shard[r["shard_id"]].append(r)
+    assert set(by_shard) <= set(range(_SHARD_SHUF_N))
+    for rs in by_shard.values():
+        rs.sort(key=lambda r: r["pos"])
+        assert [r["pos"] for r in rs] == list(range(1, len(rs) + 1))
+        off = 0
+        for r in rs:
+            assert r["shard_offset"] == off
+            off += r["tokens"]
+    again = {r["doc_id"]: (r["shard_id"], r["pos"]) for r in deal()}
+    assert again == {r["doc_id"]: (r["shard_id"], r["pos"]) for r in rows}
 
 
 # ---------------------------------------------------------------------------
@@ -779,66 +654,6 @@ def test_registrable_domain_groups_politeness_correctly(spark):
 
 
 # ---------------------------------------------------------------------------
-# adaptive politeness quota
-# ---------------------------------------------------------------------------
-
-
-def test_adaptive_quota_gates_on_latency_and_crawl_delay(spark):
-    from crawler_spark.queries_scale import (
-        _QUOTA_MAX_SLOTS,
-        _QUOTA_ROUND_MS,
-        q_adaptive_quota,
-        q_latency_quantiles,
-    )
-
-    p95 = {r["host"]: r["p95"] for r in q_latency_quantiles(spark, SF).collect()}
-    rows = {r["host"]: r for r in q_adaptive_quota(spark, SF).collect()}
-    assert set(rows) == set(p95)
-    for h, r in rows.items():
-        assert r["p95"] == p95[h]
-        assert r["crawl_delay_ms"] == (h % 5) * 300
-        gate = max(r["p95"], r["crawl_delay_ms"], 1)
-        assert r["gate_ms"] == gate
-        assert r["quota"] == min(max(_QUOTA_ROUND_MS // gate, 1), _QUOTA_MAX_SLOTS)
-        assert 1 <= r["quota"] <= _QUOTA_MAX_SLOTS
-    # the gate binds both ways somewhere in the fixture: some host is
-    # latency-bound, some is crawl-delay-bound
-    assert any(r["p95"] > r["crawl_delay_ms"] for r in rows.values())
-    assert any(r["crawl_delay_ms"] > r["p95"] for r in rows.values())
-
-
-def test_adaptive_quota_plugs_into_schedule_batch(spark):
-    """The output (host, quota) must be consumable by the scheduler's
-    quotas parameter — the composition the docstring promises."""
-    from pyspark.sql import functions as F
-
-    from crawler_spark.operators.scheduler import schedule_batch
-    from crawler_spark.queries_scale import q_adaptive_quota
-
-    quotas = q_adaptive_quota(spark, SF).select(
-        F.concat(F.lit("h"), F.col("host")).alias("host"),
-        F.col("quota").cast("int").alias("quota"),
-    )
-    max_q = max(r["quota"] for r in quotas.collect())
-    rows = [
-        (f"https://h{h}.org/p/{i}", f"h{h}", 0, h * 1000 + i)
-        for h in range(3)
-        for i in range(150)
-    ]
-    frontier = spark.createDataFrame(
-        [(u, h, p, s, 0) for (u, h, p, s) in rows],
-        "url string, host string, priority int, seq long, url_hash long",
-    ).withColumn("url_hash", F.xxhash64("url"))
-    out = schedule_batch(frontier, quotas=quotas, default_k=5, max_quota=int(max_q))[0]
-    got = {}
-    for r in out.collect():
-        got[r["host"]] = got.get(r["host"], 0) + 1
-    qmap = {r["host"]: r["quota"] for r in quotas.collect()}
-    for h, n in got.items():
-        assert n == min(150, qmap.get(h, 5)), (h, n, qmap.get(h))
-
-
-# ---------------------------------------------------------------------------
 # incremental crawl diff
 # ---------------------------------------------------------------------------
 
@@ -888,42 +703,6 @@ def test_change_detect_is_one_join(spark):
 
 
 # ---------------------------------------------------------------------------
-# domain-level quality aggregation
-# ---------------------------------------------------------------------------
-
-
-def test_domain_quality_verdict_arithmetic_and_mix(spark):
-    from crawler_spark.queries_scale import (
-        _DQ_BLOCK_MILLI,
-        _DQ_MIN_DOCS,
-        q_domain_quality,
-    )
-
-    # sf0.01: n_docs >= 10 per domain, so the block rule is live and
-    # both verdicts appear (sf0.001 has ~2 docs/domain -> all pass)
-    rows = q_domain_quality(spark, "/root/testdata/sf0.01").collect()
-    assert rows
-    verdicts = {r["blocked"] for r in rows}
-    assert verdicts == {True, False}
-    for r in rows:
-        assert 0 <= r["n_bad"] <= r["n_docs"]
-        assert r["bad_milli"] == (1000 * r["n_bad"]) // r["n_docs"]
-        assert r["blocked"] == (
-            r["bad_milli"] >= _DQ_BLOCK_MILLI and r["n_docs"] >= _DQ_MIN_DOCS
-        )
-
-
-def test_domain_quality_aggregates_map_side(spark):
-    """One partial-agg groupBy(domain): the count/sum must combine
-    before the exchange (partial_count in the pre-shuffle aggregate)."""
-    from crawler_spark.queries_scale import q_domain_quality
-
-    plan = formatted_plan(q_domain_quality(spark, SF))
-    assert re.search(r"partial_count", plan), plan
-    assert len(re.findall(r"Exchange", plan)) <= 2, plan
-
-
-# ---------------------------------------------------------------------------
 # HITS hubs & authorities
 # ---------------------------------------------------------------------------
 
@@ -961,60 +740,6 @@ def test_hits_scores_match_pure_python(spark):
     # max-normalization: the top node of each score sits exactly at 1e6
     assert max(r["auth_micro"] for r in rows.values()) == 1_000_000
     assert max(r["hub_micro"] for r in rows.values()) == 1_000_000
-
-
-# ---------------------------------------------------------------------------
-# unigram LM rarity binning
-# ---------------------------------------------------------------------------
-
-
-def test_lm_rarity_matches_pure_python_and_bins_exact_terciles(spark):
-    from collections import Counter
-
-    from crawler_spark.queries import load
-    from crawler_spark.queries_scale import q_lm_rarity
-
-    docs = [
-        (r["doc_id"], r["lang"], [t for t in r["text"].split(" ") if t])
-        for r in load(spark, SF, "documents").collect()
-    ]
-    cnt = Counter(t for _, _, toks in docs for t in toks)
-    tot = sum(cnt.values())
-    surp = {t: (1000 * tot) // c for t, c in cnt.items()}
-    means = {
-        d: sum(surp[t] for t in toks) // len(toks) for d, _, toks in docs if toks
-    }
-    rows = q_lm_rarity(spark, SF).collect()
-    assert {r["doc_id"] for r in rows} == set(means)
-    for r in rows:
-        assert r["rarity_mean"] == means[r["doc_id"]]
-    # nearest-rank terciles, per language: bucket sizes are exact
-    from collections import defaultdict
-
-    bylang = defaultdict(list)
-    for r in rows:
-        bylang[r["lang"]].append(r)
-    for lang, rs in bylang.items():
-        n = len(rs)
-        by_bucket = Counter(r["bucket"] for r in rs)
-        assert by_bucket["head"] == n // 3
-        assert by_bucket["middle"] == (2 * n) // 3 - n // 3
-        assert by_bucket["tail"] == n - (2 * n) // 3
-        # head docs are the least rare within their language
-        head_max = max(
-            (r["rarity_mean"] for r in rs if r["bucket"] == "head"), default=0
-        )
-        tail_min = min(
-            (r["rarity_mean"] for r in rs if r["bucket"] == "tail"), default=1 << 60
-        )
-        assert head_max <= tail_min
-
-
-def test_lm_rarity_window_partitions_by_lang(spark):
-    from crawler_spark.queries_scale import q_lm_rarity
-
-    plan = formatted_plan(q_lm_rarity(spark, SF))
-    assert re.search(r"Window.*\[lang", plan, re.S), plan
 
 
 # ---------------------------------------------------------------------------
@@ -1134,142 +859,77 @@ def test_wet_refers_to_matches_warc_response_record_id(spark):
 
 
 # ---------------------------------------------------------------------------
-# personalized PageRank from seeds
+# label propagation over overlapping alias stars
 # ---------------------------------------------------------------------------
 
 
-def test_seed_ppr_matches_pure_python_and_concentrates_on_seeds(spark):
-    """4-iteration integer PPR replay; restart mass lands on seeds only,
-    so every seed scores >= the restart term and the mean seed score
-    exceeds the mean non-seed score (proximity-to-whitelist signal)."""
-    from crawler_spark.queries import (
-        _PPR_ITERS,
-        _PPR_SEED_MOD,
-        _RANK_OUT_DEG,
-        load,
-        q_seed_ppr,
-    )
-
-    ids = sorted(r["doc_id"] for r in load(spark, SF, "documents").collect())
-    n = len(ids)
-    out_edges = {v: [(v * 31 + k) % n for k in range(1, _RANK_OUT_DEG + 1)] for v in ids}
-    in_edges: dict[int, list[int]] = {v: [] for v in ids}
-    for s, ds in out_edges.items():
-        for d in ds:
-            in_edges[d].append(s)
-    seed = {v: 1 if v % _PPR_SEED_MOD == 0 else 0 for v in ids}
-    r = {v: seed[v] * 1_000_000 for v in ids}
-    for _ in range(_PPR_ITERS):
-        r = {
-            v: seed[v] * 150_000
-            + (85 * sum(r[s] // _RANK_OUT_DEG for s in in_edges[v])) // 100
-            for v in ids
-        }
-    rows = {x["doc_id"]: x["ppr_micro"] for x in q_seed_ppr(spark, SF).collect()}
-    assert rows == r
-    seeds = [v for v in ids if seed[v]]
-    non = [v for v in ids if not seed[v]]
-    assert all(rows[v] >= 150_000 for v in seeds)
-    assert sum(rows[v] for v in seeds) / len(seeds) > sum(rows[v] for v in non) / len(non)
-
-
-# ---------------------------------------------------------------------------
-# canonical URL identity
-# ---------------------------------------------------------------------------
-
-
-def _identity_expected(spark):
-    """Union-find replay of the alias construction at SF."""
+def _alias_edges(spark):
+    """Alias graph over the SF corpus (doc ids 0..n-1): each doc links to
+    the terminal its 4-hop redirect chain reaches (doc d % 3 == 1
+    redirects to (7d + 1) % n; a chain still redirecting after 4 hops
+    links nowhere), and to the minimum doc id carrying byte-identical
+    text. The two star families overlap, so closing them takes
+    transitive hops through both."""
     import hashlib
 
     from crawler_spark.queries import load
-    from crawler_spark.queries_scale import _IDENTITY_HOPS
 
     docs = {r["doc_id"]: r["text"] for r in load(spark, SF, "documents").collect()}
-    ids = sorted(docs)
-    n = len(ids)
-    redirect = {d: (d * 7 + 1) % n for d in ids if d % 3 == 1}
-    parent = {v: v for v in ids}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-
-    for d in ids:
+    n = len(docs)
+    assert sorted(docs) == list(range(n))
+    redirect = {d: (d * 7 + 1) % n for d in docs if d % 3 == 1}
+    edges = []
+    for d in docs:
         cur = d
-        for _ in range(_IDENTITY_HOPS):
+        for _ in range(4):
             cur = redirect.get(cur, cur)
         if cur not in redirect and cur != d:  # terminal, non-trivial
-            union(d, cur)
-    by_fp = {}
-    for d in ids:
-        by_fp.setdefault(hashlib.md5(docs[d].encode()).hexdigest(), []).append(d)
-    for group in by_fp.values():
-        for d in group[1:]:
-            union(d, group[0])
-    comp = {}
-    for v in ids:
-        comp.setdefault(find(v), []).append(v)
-    # canonical rep = min member (find() roots at the min by construction)
-    out = {}
-    for root, members in comp.items():
-        rep = min(members)
-        for v in members:
-            out[v] = (rep, len(members))
-    return out
+            edges.append((d, cur))
+    fp = {d: hashlib.md5(t.encode()).hexdigest() for d, t in docs.items()}
+    fp_min = {}
+    for d in sorted(docs):
+        fp_min.setdefault(fp[d], d)
+    edges += [(d, fp_min[fp[d]]) for d in docs if fp_min[fp[d]] != d]
+    return n, edges
+
+
+_IDENTITY_STAGES = ("hook", "jump") * 4 + ("hook",)
+
+
+def _alias_label_propagate(spark, stages=_IDENTITY_STAGES):
+    """_label_propagate over the _alias_edges graph, both directions."""
+    from pyspark.sql import functions as F
+
+    from crawler_spark.queries_scale import _label_propagate
+
+    n, edges = _alias_edges(spark)
+    ids = spark.range(n).select(F.col("id").alias("v"))
+    both = spark.createDataFrame(
+        edges + [(b, a) for a, b in edges], "s long, d long"
+    )
+    return {r["v"]: r["lab"] for r in _label_propagate(ids, both, stages).collect()}
 
 
 def test_url_identity_matches_union_find(spark):
-    from crawler_spark.queries_scale import q_url_identity
-
-    expect = _identity_expected(spark)
-    rows = {r["doc_id"]: r for r in q_url_identity(spark, SF).collect()}
-    assert set(rows) == set(expect)
-    for d, (rep, size) in expect.items():
-        assert rows[d]["identity_rep"] == rep, (d, rows[d], rep)
-        assert rows[d]["group_size"] == size
+    """Redirect-alias stars and identical-content stars close into one
+    identity per page: the 9-stage schedule equals union-find."""
+    n, edges = _alias_edges(spark)
+    expect = _union_find(n, edges)
     # the construction must actually exercise multi-member identities
-    assert any(size > 1 for _, size in expect.values())
+    assert len(set(expect.values())) < n
+    assert _alias_label_propagate(spark) == expect
 
 
 def test_url_identity_stage_schedule_is_a_fixpoint(spark):
-    """One extra hook/jump round must not change any label — the
+    """One extra jump/hook round must not change any label — the
     schedule covers the alias graph's diameter with margin."""
-    from crawler_spark.queries_scale import (
-        _IDENTITY_STAGES,
-        _label_propagate,
-        q_url_identity,
-    )
-    from pyspark.sql import functions as F
-
-    from crawler_spark.queries import load
-
-    base = {
-        r["doc_id"]: r["identity_rep"] for r in q_url_identity(spark, SF).collect()
-    }
-    # rebuild the same edges and run with two extra stages
-    import crawler_spark.queries_scale as qs
-
-    orig = qs._IDENTITY_STAGES
-    try:
-        qs._IDENTITY_STAGES = orig + ("jump", "hook")
-        more = {
-            r["doc_id"]: r["identity_rep"] for r in q_url_identity(spark, SF).collect()
-        }
-    finally:
-        qs._IDENTITY_STAGES = orig
+    base = _alias_label_propagate(spark)
+    more = _alias_label_propagate(spark, _IDENTITY_STAGES + ("jump", "hook"))
     assert base == more
 
 
 # ---------------------------------------------------------------------------
-# temperature-weighted domain mixture
+# exact integer sqrt (the curation pipeline's domain-mix weights)
 # ---------------------------------------------------------------------------
 
 
@@ -1291,53 +951,6 @@ def test_isqrt_col_is_exact_integer_sqrt(spark):
         for r in frame.select("v", _isqrt_col("v").alias("s")).collect()
     }
     assert got == {v: math.isqrt(v) for v in vals}
-
-
-def test_domain_mix_replay_and_temperature_direction(spark):
-    """Pure-Python replay of the whole mix (isqrt weights, Hamilton
-    apportionment, natural share, upsample factor) equals the Spark
-    output; and the temperature property holds — the smallest domain's
-    upsample factor is >= the largest domain's (alpha=0.5 flattens the
-    mixture toward low-resource domains)."""
-    import math
-    import duckdb
-
-    from crawler_spark.queries_scale import _MIX_BUDGET, q_domain_mix
-
-    con = duckdb.connect()
-    raw = con.execute(
-        f"SELECT source, count(*), sum(GREATEST(n_chars // 4, 1)) "
-        f"FROM '{SF}/documents.parquet' GROUP BY source"
-    ).fetchall()
-    doms = [(s, int(n), int(t)) for s, n, t in raw]
-    w = {s: math.isqrt(t) for s, _n, t in doms}
-    w_total = sum(w.values())
-    tot_tokens = sum(t for _s, _n, t in doms)
-    base = {s: (_MIX_BUDGET * w[s]) // w_total for s, _n, _t in doms}
-    rem = {s: (_MIX_BUDGET * w[s]) % w_total for s, _n, _t in doms}
-    leftover = _MIX_BUDGET - sum(base.values())
-    winners = {
-        s for s, _r in sorted(rem.items(), key=lambda kv: (-kv[1], kv[0]))[:leftover]
-    }
-    expect = {}
-    for s, n, t in doms:
-        alloc = base[s] + (1 if s in winners else 0)
-        nat = (_MIX_BUDGET * t) // tot_tokens
-        expect[s] = (n, t, w[s], alloc, nat, (1000 * alloc) // max(nat, 1))
-    rows = q_domain_mix(spark, SF).collect()
-    got = {
-        r["source"]: (
-            r["n_docs"], r["tokens"], r["weight"], r["alloc"],
-            r["natural_ppm"], r["upsample_fp"],
-        )
-        for r in rows
-    }
-    assert got == expect
-    assert sum(r["alloc"] for r in rows) == _MIX_BUDGET
-    lo = min(rows, key=lambda r: (r["tokens"], r["source"]))
-    hi = max(rows, key=lambda r: (r["tokens"], r["source"]))
-    if lo["tokens"] < hi["tokens"]:
-        assert lo["upsample_fp"] >= hi["upsample_fp"], (lo, hi)
 
 
 # ---------------------------------------------------------------------------
@@ -1390,39 +1003,6 @@ def test_bpe_merges_parity_with_replay_sf0001(spark):
     assert got == expect and len(got) > 0
 
 
-# ---------------------------------------------------------------------------
-# training-shard shuffle
-# ---------------------------------------------------------------------------
-
-
-def test_shard_shuffle_is_a_seekable_permutation(spark):
-    """Every doc lands in exactly one shard; per-shard pos is contiguous
-    from 1; shard_offset is the running token prefix sum; and the
-    mapping is reproducible (same salt -> same permutation)."""
-    from collections import defaultdict
-
-    from crawler_spark.queries_scale import _SHARD_SHUF_N, q_shard_shuffle
-
-    rows = q_shard_shuffle(spark, SF).collect()
-    assert len({r["doc_id"] for r in rows}) == len(rows)
-    by_shard = defaultdict(list)
-    for r in rows:
-        by_shard[r["shard_id"]].append(r)
-    assert set(by_shard) <= set(range(_SHARD_SHUF_N))
-    for rs in by_shard.values():
-        rs.sort(key=lambda r: r["pos"])
-        assert [r["pos"] for r in rs] == list(range(1, len(rs) + 1))
-        off = 0
-        for r in rs:
-            assert r["shard_offset"] == off
-            off += r["tokens"]
-    again = {
-        r["doc_id"]: (r["shard_id"], r["pos"])
-        for r in q_shard_shuffle(spark, SF).collect()
-    }
-    assert again == {r["doc_id"]: (r["shard_id"], r["pos"]) for r in rows}
-
-
 def test_hits_scores_survive_offset_id_blocks(spark):
     """Regression: ids need not start at 0. A corpus whose doc_ids live
     in a high block (e.g. 5e9+, the 10^10-scale layout) must produce
@@ -1449,62 +1029,3 @@ def test_hits_scores_survive_offset_id_blocks(spark):
     assert max(v[0] for v in base_rows.values()) == 1_000_000
 
 
-# ---------------------------------------------------------------------------
-# OPIC on-line page importance
-# ---------------------------------------------------------------------------
-
-
-def test_opic_matches_pure_python_and_conserves_cash(spark):
-    """3-round integer OPIC replay over the anchored modular graph:
-    exact per-node cash/history equality, exact cash conservation
-    (sum(cash) invariant = n * 1e6 — the property that makes OPIC's
-    importance estimate readable mid-crawl), and offset-id isomorphism
-    (same guarantee as hits_scores)."""
-    from unittest.mock import patch
-
-    import crawler_spark.queries_scale as qsc
-    from crawler_spark.queries_scale import (
-        _HITS_OUT_DEG,
-        _OPIC_CASH0,
-        _OPIC_ROUNDS,
-        q_opic_importance,
-    )
-
-    n = 24
-    ids = list(range(n))
-    out_edges = {
-        v: [(v * 17 + k) % n for k in range(1, _HITS_OUT_DEG + 1)] for v in ids
-    }
-    cash = {v: _OPIC_CASH0 for v in ids}
-    hist = {v: 0 for v in ids}
-    for _ in range(_OPIC_ROUNDS):
-        for v in ids:
-            hist[v] += cash[v]
-        nxt = {v: 0 for v in ids}
-        for v, dsts in out_edges.items():
-            share = cash[v] // _HITS_OUT_DEG
-            for j, d in enumerate(dsts):
-                nxt[d] += share + (cash[v] % _HITS_OUT_DEG if j == 0 else 0)
-        cash = nxt
-    assert sum(cash.values()) == n * _OPIC_CASH0  # replay conserves too
-
-    frame = spark.createDataFrame(
-        [(i, f"t{i}") for i in ids], "doc_id long, text string"
-    )
-    with patch.object(qsc, "load", lambda _s, _sf, _t: frame):
-        rows = {r["doc_id"]: r for r in q_opic_importance(spark, SF).collect()}
-    assert set(rows) == set(ids)
-    for v in ids:
-        assert rows[v]["cash_micro"] == cash[v]
-        assert rows[v]["hist_micro"] == hist[v]
-        assert rows[v]["importance_micro"] == cash[v] + hist[v]
-    assert sum(r["cash_micro"] for r in rows.values()) == n * _OPIC_CASH0
-
-    SHIFT = 5_000_000_000
-    hi = frame.selectExpr(f"doc_id + {SHIFT} AS doc_id", "text")
-    with patch.object(qsc, "load", lambda _s, _sf, _t: hi):
-        hi_rows = {
-            r["doc_id"] - SHIFT: (r["cash_micro"], r["hist_micro"])
-            for r in q_opic_importance(spark, SF).collect()
-        }
-    assert hi_rows == {v: (cash[v], hist[v]) for v in ids}

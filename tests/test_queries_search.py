@@ -3,15 +3,14 @@
 
 tools/selfcheck.py hash-checks every query against its DuckDB oracle;
 these pin the SEMANTIC invariants the hash can't express — BM25 replay
-against a pure-Python scorer, BFS depths against a dict-based BFS,
-planted near-mirror recall, the per-host boilerplate threshold — plus
-the plan shapes the 100 TB design requires (broadcast model weights,
+against a pure-Python scorer, planted near-mirror recall, the per-host
+boilerplate threshold — plus the plan shapes the 100 TB design requires (broadcast model weights,
 query-partitioned top-k, no corpus self-joins).
 """
 
 import hashlib
 import re
-from collections import Counter, defaultdict, deque
+from collections import Counter, defaultdict
 
 import duckdb
 import pytest
@@ -25,19 +24,14 @@ from crawler_spark.queries_search import (
     _BP_BLOCK,
     _BP_DEN,
     _BP_NUM,
-    _DEPTH_HOPS,
-    _DEPTH_OUT_DEG,
-    _DEPTH_SEED_MOD,
     _HSIM_MIRROR_FP,
     _HSIM_SLOTS,
     _QC_BUCKETS,
     _QC_W_RANGE,
     q_bm25_topk,
     q_boilerplate_strip,
-    q_crawl_depth,
     q_host_similarity,
     q_quality_classifier,
-    q_url_templates,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -147,78 +141,6 @@ def test_bm25_plan_broadcasts_queries_and_partitions_topk_by_query(spark):
     assert "BroadcastHashJoin" in plan, plan
     # the top-k window must be partitioned by query_id, never global
     assert re.search(r"Window.*partition.*query_id|Window.*\[query_id", plan, re.S), plan
-
-
-# ---------------------------------------------------------------------------
-# BFS crawl depth
-# ---------------------------------------------------------------------------
-
-
-def test_crawl_depth_matches_pure_python_bfs(spark):
-    docs = _docs()
-    n = len(docs)
-    adj = defaultdict(list)
-    for doc_id, _, _ in docs:
-        for k in range(1, _DEPTH_OUT_DEG + 1):
-            adj[doc_id].append((doc_id * 31 + k) % n)
-    dist = {d: 0 for d, _, _ in docs if d % _DEPTH_SEED_MOD == 0}
-    frontier = deque(dist)
-    while frontier:
-        u = frontier.popleft()
-        if dist[u] >= _DEPTH_HOPS:
-            continue
-        for v in adj[u]:
-            if v not in dist:
-                dist[v] = dist[u] + 1
-                frontier.append(v)
-    got = {r["doc_id"]: (r["depth"], r["reached"]) for r in q_crawl_depth(spark, SF).collect()}
-    assert len(got) == n
-    for d, _, _ in docs:
-        if d in dist:
-            assert got[d] == (dist[d], True), (d, got[d], dist[d])
-        else:
-            assert got[d] == (-1, False)
-
-
-def test_crawl_depth_seeds_are_zero_and_neighbors_bounded(spark):
-    rows = {r["doc_id"]: r["depth"] for r in q_crawl_depth(spark, SF).collect()}
-    n = len(rows)
-    for d, depth in rows.items():
-        if d % _DEPTH_SEED_MOD == 0:
-            assert depth == 0
-    # triangle inequality along every edge: reached node's successor is
-    # reached within depth+1 (or the hop cap)
-    for d, depth in rows.items():
-        if depth < 0 or depth >= _DEPTH_HOPS:
-            continue
-        for k in range(1, _DEPTH_OUT_DEG + 1):
-            v = (d * 31 + k) % n
-            assert rows[v] != -1 and rows[v] <= depth + 1, (d, v, depth, rows[v])
-
-
-# ---------------------------------------------------------------------------
-# URL template mining
-# ---------------------------------------------------------------------------
-
-
-def test_url_templates_flags_only_the_calendar_space(spark):
-    rows = q_url_templates(spark, SF).collect()
-    by_tpl = defaultdict(list)
-    for r in rows:
-        by_tpl[r["template"]].append(r)
-    assert set(by_tpl) == {"/about/team", "/post/{d}", "/cal/{d}/{d}/{d}"}
-    for r in rows:
-        if r["template"] == "/cal/{d}/{d}/{d}":
-            # same content per host -> one distinct fp -> explosive
-            assert r["n_distinct_fp"] == 1
-            assert r["explosive"] == (r["n_urls"] >= 5 and r["dup_rate_fp"] >= 500)
-            if r["n_urls"] >= 5:
-                assert r["explosive"], r
-        else:
-            # static page and articles carry distinct content
-            assert r["n_distinct_fp"] == r["n_urls"]
-            assert r["dup_rate_fp"] == 0
-            assert not r["explosive"]
 
 
 # ---------------------------------------------------------------------------
@@ -464,89 +386,6 @@ def test_video_neardup_flags_exactly_the_planted_cuts(spark):
     assert flagged == planted, flagged ^ planted
     for r in rows:
         assert r["near_dup"] == (r["containment_fp"] >= _VND_MIN_CONT)
-
-
-def test_caption_pairs_rule_before_after_none(spark):
-    """Nearest-preceding text wins; nearest-following is the fallback;
-    a doc with no text spans at all yields caption_side='none'."""
-    from crawler_spark.queries_search import caption_pairs
-
-    spans = spark.createDataFrame(
-        [
-            # doc 1: text, media, text -> media captioned by PRECEDING text
-            (1, 0, "text", "intro words", ""),
-            (1, 1, "media", "", "img://1/a"),
-            (1, 2, "text", "later words", ""),
-            # doc 2: media first, text after -> fallback to FOLLOWING
-            (2, 0, "media", "", "img://2/a"),
-            (2, 1, "text", "trailing caption", ""),
-            # doc 3: media only -> none
-            (3, 0, "media", "", "img://3/a"),
-            # doc 4: two media after one text -> both take the same preceding
-            (4, 0, "text", "shared context", ""),
-            (4, 1, "media", "", "img://4/a"),
-            (4, 2, "media", "", "img://4/b"),
-        ],
-        "doc_id long, span_pos long, kind string, text string, media_ref string",
-    )
-    got = {r["media_ref"]: r for r in caption_pairs(spans).collect()}
-    assert got["img://1/a"]["caption_side"] == "before"
-    assert got["img://1/a"]["caption"] == "intro words"
-    assert got["img://2/a"]["caption_side"] == "after"
-    assert got["img://2/a"]["caption"] == "trailing caption"
-    assert got["img://3/a"]["caption_side"] == "none"
-    assert got["img://3/a"]["caption"] == ""
-    assert got["img://4/a"]["caption"] == "shared context"
-    assert got["img://4/b"]["caption"] == "shared context"
-
-
-def test_media_captions_fixture_replay(spark):
-    """Fixture media spans sit after a guaranteed-nonempty first text
-    window, so every caption must be the doc's first 10 tokens."""
-    from crawler_spark.queries_search import q_media_captions
-
-    first10 = {
-        doc_id: " ".join([t for t in text.split(" ")][:10])
-        for doc_id, text, _ in _docs()
-    }
-    rows = q_media_captions(spark, SF).collect()
-    docs_with_media = {r["doc_id"] for r in rows}
-    assert docs_with_media == {
-        d for d in first10 if d % 2 == 0 or d % 3 == 0
-    }
-    for r in rows:
-        if r["span_pos"] == 1:
-            assert r["caption_side"] == "before"
-            assert r["caption"] == first10[r["doc_id"]], r
-
-
-def test_posting_gaps_match_pure_python_dgap_model(spark):
-    """d-gap + varint cost replay: per term, distinct ascending doc
-    ids, first id encoded as id+1, varint bytes = ceil(bits/7)."""
-    from crawler_spark.queries_search import q_posting_gaps
-
-    postings = defaultdict(list)
-    for doc_id, text, _ in _docs():
-        for t in set(x for x in text.split(" ") if x):
-            postings[t].append(doc_id)
-    expect = {}
-    for term, ids in postings.items():
-        ids.sort()
-        gaps = [ids[0] + 1] + [b - a for a, b in zip(ids, ids[1:])]
-        vb = sum((g.bit_length() + 6) // 7 for g in gaps)
-        expect[term] = (len(ids), vb, len(ids) * 8, (1000 * vb) // (len(ids) * 8), max(gaps))
-    got = {
-        r["term"]: (r["df"], r["vbyte_bytes"], r["raw_bytes"], r["ratio_fp"], r["max_gap"])
-        for r in q_posting_gaps(spark, SF).collect()
-    }
-    assert got == expect
-
-
-def test_posting_gaps_window_partitions_by_term(spark):
-    from crawler_spark.queries_search import q_posting_gaps
-
-    plan = formatted_plan(q_posting_gaps(spark, SF))
-    assert re.search(r"Window.*\[term", plan, re.S), plan
 
 
 def test_curation_pipeline_dispositions_match_replay(spark):
@@ -911,85 +750,6 @@ def test_phrase_search_plan_broadcasts_query_terms(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-# ---------------------------------------------------------------------------
-# PMI collocations
-# ---------------------------------------------------------------------------
-
-
-def test_collocations_replay_parity_sf0001(spark):
-    """Pure-Python replay of the staged fixed-point PMI (unigram/bigram
-    counts, t1/t2 staging, floor-log2, support + ratio floors) equals
-    the Spark output row-for-row."""
-    from crawler_spark.queries_search import (
-        _COL_MIN_PMI_LOG2,
-        _COL_MIN_SUPPORT,
-        q_collocations,
-    )
-
-    uni, big = Counter(), Counter()
-    for _d, text, _s in _docs():
-        toks = text.split(" ")
-        if len(toks) < 2:
-            continue
-        uni.update(t for t in toks if t)
-        big.update(zip(toks, toks[1:]))
-    u, n = sum(uni.values()), sum(big.values())
-    expect = {}
-    for (a, b), c_ab in big.items():
-        if c_ab < _COL_MIN_SUPPORT:
-            continue
-        ratio = (((1000 * u) // uni[a]) * u // uni[b]) * c_ab // n
-        if ratio < 1:
-            continue
-        expect[(a, b)] = (
-            c_ab,
-            uni[a],
-            uni[b],
-            ratio,
-            ratio.bit_length(),
-            ratio.bit_length() >= _COL_MIN_PMI_LOG2,
-        )
-    got = {
-        (r["a"], r["b"]): (
-            r["c_ab"], r["c_a"], r["c_b"], r["ratio_fp"], r["pmi_log2"], r["collocation"]
-        )
-        for r in q_collocations(spark, SF).collect()
-    }
-    assert got == expect
-    assert len(got) > 0
-
-
-def test_collocations_flags_bound_pair_not_independent_pair(spark):
-    """Direction property on a planted corpus: the chain of the 8
-    'foo bar x y' docs is perfectly bound (every adjacent pair always
-    co-occurs — all three are true collocations), while 'foo baz'
-    reaches the same support floor through heavy independent dilution
-    of both words and must score BELOW the PMI flag."""
-    from crawler_spark import queries_search as mod
-
-    texts = (
-        ["foo bar x y"] * 8
-        + ["foo z", "z foo", "baz q", "q baz"] * 20
-        + ["foo baz"] * 5
-    )
-    frame = spark.createDataFrame(
-        list(enumerate(texts)), "doc_id long, text string"
-    )
-    orig = mod.load
-    mod.load = lambda s, sf, t: frame
-    try:
-        rows = {(r["a"], r["b"]): r for r in mod.q_collocations(spark, SF).collect()}
-    finally:
-        mod.load = orig
-    # every always-together pair is flagged (incl. the filler bigrams —
-    # they too are perfectly bound); the diluted chance pair is not,
-    # despite clearing the same support floor
-    assert rows[("foo", "bar")]["collocation"]
-    assert not rows[("foo", "baz")]["collocation"], rows[("foo", "baz")]
-    assert rows[("foo", "baz")]["c_ab"] >= mod._COL_MIN_SUPPORT
-    assert rows[("foo", "baz")]["pmi_log2"] < rows[("foo", "bar")]["pmi_log2"]
-
-
 def test_phrase_match_empty_token_is_single_wildcard(spark):
     """A doubled space in the phrase yields an empty token: it keeps
     its position but imposes no term constraint (single-token wildcard)
@@ -1088,67 +848,6 @@ def test_goodturing_discounts_on_planted_counts(spark):
         2: (1, 3000, 500000),
         3: (1, 3000, 500000),
     }
-
-
-# ---------------------------------------------------------------------------
-# Vocabulary growth (Heaps) + token diversity (Simpson)
-# ---------------------------------------------------------------------------
-
-
-def test_vocab_growth_matches_python_replay(spark):
-    """The 10-point growth curve equals a pure-Python replay of the
-    same md5-bucketed prefixes over the sf0.001 corpus: cumulative
-    token counts, cumulative vocabulary (types by FIRST bucket), and
-    marginal new types, all monotone."""
-    from crawler_spark.queries_search import _VG_BUCKETS, q_vocab_growth
-
-    per_tok = {}  # bucket -> n_tokens
-    first = {}  # term -> min bucket
-    for doc_id, text, _src in _docs():
-        k = _md5_int(str(doc_id)) % _VG_BUCKETS
-        for t in text.split(" "):
-            if not t:
-                continue
-            per_tok[k] = per_tok.get(k, 0) + 1
-            first[t] = min(first.get(t, k), k)
-    new_types = Counter(first.values())
-    want, n_cum, v_cum = {}, 0, 0
-    for k in sorted(set(per_tok) | set(new_types)):
-        n_cum += per_tok.get(k, 0)
-        v_cum += new_types.get(k, 0)
-        want[k] = (n_cum, v_cum, new_types.get(k, 0), (1_000_000 * v_cum) // max(n_cum, 1))
-    got = {
-        r["k"]: (r["n_tokens_cum"], r["vocab_cum"], r["new_types"], r["ttr_ppm"])
-        for r in q_vocab_growth(spark, SF).collect()
-    }
-    assert got == want
-    curve = [got[k] for k in sorted(got)]
-    assert all(b[0] > a[0] and b[1] >= a[1] for a, b in zip(curve, curve[1:]))
-
-
-def test_token_diversity_on_planted_corpus(spark):
-    """Hand-computed Simpson/TTR: docs 'a a b' + 'a c' give unigram
-    counts {a:3, b:1, c:1} -> T=5, V=3, S=6, Simpson = 6/20 = 300000
-    ppm exactly under the staged division; the three bigrams are all
-    distinct so bigram Simpson is 0."""
-    from crawler_spark.queries_search import q_token_diversity
-    import crawler_spark.queries_search as qs_mod
-    from unittest.mock import patch
-
-    frame = spark.createDataFrame(
-        [(1, "a a b"), (2, "a c")], "doc_id long, text string"
-    )
-    with patch.object(qs_mod, "load", lambda _s, _sf, _t: frame):
-        row = q_token_diversity(spark, SF).first()
-    assert (
-        row["n_tokens"],
-        row["vocab"],
-        row["ttr_ppm"],
-        row["simpson_uni_ppm"],
-        row["n_bigrams"],
-        row["bigram_vocab"],
-        row["simpson_big_ppm"],
-    ) == (5, 3, 600000, 300000, 3, 3, 0)
 
 
 def test_strip_boilerplate_modes_agree(spark):

@@ -68,6 +68,51 @@ def audit_plan(plan: str) -> dict:
     return flags
 
 
+# Plan nodes that say nothing about an entry's operator shape: data
+# movement, the projections/filters/sorts nearly every plan carries, the
+# cache wrappers and the AQE stage wrappers.
+SHAPE_NEUTRAL = frozenset(
+    {
+        "Exchange",
+        "BroadcastExchange",
+        "ReusedExchange",
+        "Project",
+        "Filter",
+        "Sort",
+        "ColumnarToRow",
+        "InMemoryRelation",
+        "InMemoryTableScan",
+        "AdaptiveSparkPlan",
+        "ResultQueryStage",
+        "ShuffleQueryStage",
+        "BroadcastQueryStage",
+        "TableCacheQueryStage",
+        "AQEShuffleRead",
+    }
+)
+
+# a node line of a formatted plan tree: "   :  +- * HashAggregate (12)",
+# "+- BroadcastHashJoin LeftSemi BuildRight (7)", "Scan parquet  (1)"
+_TREE_NODE = re.compile(r"^[\s:+\-*]*([A-Za-z][\w ]*?)\s*\(\d+\)")
+
+
+def operator_set(plan: str) -> frozenset:
+    """The physical operators in a formatted plan's trees (subquery and
+    cached-relation trees included), each join tagged by its join type
+    ("SortMergeJoin LeftAnti"), without the SHAPE_NEUTRAL nodes. An
+    entry whose set is contained in another's runs no kind of operator
+    the other does not."""
+    ops = set()
+    for line in plan.splitlines():
+        m = _TREE_NODE.match(line)
+        if not m:
+            continue
+        words = [w for w in m.group(1).split() if not w.startswith("Build")]
+        if words[0] not in SHAPE_NEUTRAL:
+            ops.add(" ".join(words))
+    return frozenset(ops)
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 

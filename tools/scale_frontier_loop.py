@@ -57,27 +57,6 @@ import os
 import shutil
 import sys
 import time
-import urllib.request
-
-
-def _shuffle_metrics(spark) -> dict:
-    """Cumulative completed-stage shuffle bytes from the UI REST API
-    (same instrument as tools/pipeline_bench.py). Per-batch DELTAS of
-    this are the structural evidence the bucketed layout claims: a
-    flat anti-join's shuffle grows with the ACCUMULATED seen table,
-    the bucket-wise probe's only with the batch's maybe slice."""
-    try:
-        app_id = spark.sparkContext.applicationId
-        ui = spark.sparkContext.uiWebUrl
-        url = f"{ui}/api/v1/applications/{app_id}/stages?status=complete"
-        with urllib.request.urlopen(url, timeout=30) as r:
-            stages = json.load(r)
-        return {
-            "shuffle_read_b": sum(s.get("shuffleReadBytes", 0) for s in stages),
-            "shuffle_write_b": sum(s.get("shuffleWriteBytes", 0) for s in stages),
-        }
-    except Exception:
-        return {"shuffle_read_b": 0, "shuffle_write_b": 0}
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -191,7 +170,6 @@ def main() -> None:
         # drain_sec, same discipline as the single-shot bench
         t_gen = time.monotonic() - tg
 
-        sm0 = _shuffle_metrics(spark)
         t0 = time.monotonic()
         scheduled, _ = schedule_batch(
             frontier,
@@ -211,8 +189,8 @@ def main() -> None:
         t_drain = time.monotonic() - t0
 
         # frontier cache is dead weight once the batch is materialized;
-        # free it BEFORE state maintenance so the filter cogroup never
-        # competes with 10+ GB of spent cache
+        # free it BEFORE state maintenance so the commit never competes
+        # with 10+ GB of spent cache
         frontier.unpersist()
 
         # state maintenance — the incremental path whose cost must track
@@ -232,7 +210,6 @@ def main() -> None:
         t_state = time.monotonic() - t1
 
         drained.unpersist()
-        sm1 = _shuffle_metrics(spark)
         seen_total += n_sched
         row = {
             "batch": i,
@@ -243,9 +220,6 @@ def main() -> None:
             "state_sec": round(t_state, 2),
             "urls_per_sec": round(batch_rows / t_drain, 1),
             "filter_rebuilt": bool(info.get("rebuilt")),
-            "shuffle_write_gb": round(
-                (sm1["shuffle_write_b"] - sm0["shuffle_write_b"]) / 2**30, 2
-            ),
         }
         batches.append(row)
         print(json.dumps(row), flush=True)

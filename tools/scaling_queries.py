@@ -45,7 +45,7 @@ SCALED_DIR = "/tmp/scaling_query_sf"
 # the measurement would be dominated by the planted pathology, not by
 # how the operator scales on realistic input. dup_spans collapses the
 # same replication losslessly (one group row with n_occ = n_copies).
-# ... and sub-second queries (dedup_minhash, dsir_weights at any
+# ... and sub-second queries (dsir_weights at any
 # tested size) are excluded too: their runtime is dominated by fixed
 # per-query driver/scheduling cost, which no core count removes — they
 # would dilute the measurement without informing it.
@@ -125,7 +125,7 @@ def _cpu_s():
     return (int(p[13]) + int(p[14])) / _CLK
 qs = entry.queries()
 # warm-up: JIT + python worker pool, excluded from measurement
-qs["text_stats"](spark, {sf!r}).count()
+qs["text_quality"](spark, {sf!r}).count()
 release_query_barriers()
 times = {{}}
 c0, w0 = _cpu_s(), time.time()
