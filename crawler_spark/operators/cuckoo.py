@@ -39,7 +39,6 @@ __all__ = [
     "build_cuckoo",
     "cuckoo_prefilter",
     "insert_into_cuckoo",
-    "cuckoo_load",
     "delete_from_cuckoo",
     "BUCKET_SLOTS",
     "CuckooOverflowError",
@@ -52,11 +51,9 @@ LOAD_FACTOR = 0.8
 
 
 class CuckooOverflowError(ValueError):
-    """A partition's table is too small for its keys: a key found no free
-    slot within MAX_KICKS, or an insert found the table loaded past its
-    ``max_load``. Raised inside a Python worker, it reaches
-    the driver wrapped in Spark's ``PythonException``, whose text carries
-    this class's name."""
+    """A written filter has a row with ``overflow = true`` (a key found no
+    slot within MAX_KICKS). Raised on the driver by ``SeenState``'s commit
+    check, never inside a Python worker."""
 
 
 def cuckoo_hash_fp(url_col: str = "url"):
@@ -115,13 +112,14 @@ def _bulk_place(table: np.ndarray, occ: np.ndarray, idx: np.ndarray, fps: np.nda
 
 def _place_keys(
     table: np.ndarray, occ: np.ndarray, h: np.ndarray, fp: np.ndarray, n_buckets: int
-) -> None:
+) -> int:
     """Place keys into an existing table in vectorized rounds (first-choice
     pass, partner pass, residual kick walk). ``occ`` must be the current
     per-bucket occupancy AND rows must be left-packed (nonzero slots
     first) — _bulk_place writes at slot index occ+rank. Shared by the
     bulk build (zeroed table) and the incremental insert (compacted
-    existing table)."""
+    existing table). Returns how many kick walks ran out of MAX_KICKS;
+    each dropped a fingerprint, so a nonzero count means a lost key."""
     fp16 = fp.astype(np.uint16)
     i1 = _bucket1(h, n_buckets)
     placed = _bulk_place(table, occ, i1, fp16)
@@ -129,6 +127,7 @@ def _place_keys(
     i2 = i1[rest] ^ _alt_offset(fp16[rest], n_buckets)
     placed2 = _bulk_place(table, occ, i2, fp16[rest])
     # residual: classic displacement walk, deterministic slot choice
+    unplaced = 0
     for i0, f0 in zip(i2[~placed2], fp16[rest][~placed2]):
         i, f = int(i0), np.uint16(f0)
         for kick in range(MAX_KICKS):
@@ -141,17 +140,15 @@ def _place_keys(
             f, table[i, j] = row[j], f
             i = int(i ^ _alt_offset(np.array([f]), n_buckets)[0])
         else:
-            raise CuckooOverflowError(
-                "cuckoo partition over capacity — raise slots_per_part "
-                f"(n_buckets={n_buckets}, keys~{len(h)})"
-            )
+            unplaced += 1
+    return unplaced
 
 
-def _build_table(h: np.ndarray, fp: np.ndarray, n_buckets: int) -> np.ndarray:
+def _build_table(h: np.ndarray, fp: np.ndarray, n_buckets: int) -> tuple[np.ndarray, int]:
+    """A fresh table holding the keys, and ``_place_keys``' unplaced count."""
     table = np.zeros((n_buckets, BUCKET_SLOTS), dtype=np.uint16)
     occ = np.zeros(n_buckets, dtype=np.int64)
-    _place_keys(table, occ, h, fp, n_buckets)
-    return table
+    return table, _place_keys(table, occ, h, fp, n_buckets)
 
 
 def _compact_rows(table: np.ndarray) -> None:
@@ -199,22 +196,30 @@ def _size_buckets(n_keys: int, n_parts: int) -> int:
     return 1 << int(need - 1).bit_length()
 
 
-CUCKOO_SCHEMA = "cuckoo_part int, blob binary"
+CUCKOO_SCHEMA = "cuckoo_part int, blob binary, load double, overflow boolean"
+
+
+def _filter_row(part: int, table: np.ndarray, unplaced: int = 0) -> pd.DataFrame:
+    """One ``CUCKOO_SCHEMA`` row: the table, its slot load after the write,
+    and whether a key went unplaced. Every filter writer emits through here."""
+    load = float((table != 0).mean())
+    return pd.DataFrame(
+        [{"cuckoo_part": part, "blob": table.tobytes(), "load": load, "overflow": unplaced > 0}]
+    )
 
 
 def build_cuckoo(seen: DataFrame, n_parts: int = 64, n_buckets: int | None = None) -> DataFrame:
-    """Per-partition cuckoo tables from the seen table. Returns
-    (cuckoo_part:int, blob:binary); blob = uint16 table bytes, n_buckets
-    recoverable as len(blob) // 2 // BUCKET_SLOTS (power of two)."""
+    """Per-partition cuckoo tables from the seen table, one
+    ``CUCKOO_SCHEMA`` row each; blob = uint16 table bytes, n_buckets
+    recoverable as len(blob) // 2 // BUCKET_SLOTS (power of two). A
+    partition whose keys do not fit is written with ``overflow = true``."""
     if n_buckets is None:
         n_buckets = _size_buckets(seen.count(), n_parts)
     keyed = add_cuckoo_keys(seen, n_parts=n_parts)
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        table = _build_table(pdf["ch"].to_numpy(), pdf["cfp"].to_numpy(), n_buckets)
-        return pd.DataFrame(
-            {"cuckoo_part": [int(pdf["cuckoo_part"].iloc[0])], "blob": [table.tobytes()]}
-        )
+        table, unplaced = _build_table(pdf["ch"].to_numpy(), pdf["cfp"].to_numpy(), n_buckets)
+        return _filter_row(int(pdf["cuckoo_part"].iloc[0]), table, unplaced)
 
     return (
         keyed.select("cuckoo_part", "ch", "cfp")
@@ -254,11 +259,7 @@ def cuckoo_prefilter(candidates: DataFrame, cuckoo: DataFrame, n_parts: int = 64
 
 
 def insert_into_cuckoo(
-    cuckoo: DataFrame,
-    new_seen: DataFrame,
-    n_buckets: int,
-    n_parts: int = 64,
-    max_load: float = 1.0,
+    cuckoo: DataFrame, new_seen: DataFrame, n_buckets: int, n_parts: int = 64
 ) -> DataFrame:
     """Insert one batch's newly-seen URLs into an existing cuckoo filter —
     with delete_from_cuckoo the full add/remove lifecycle a mutable seen
@@ -267,12 +268,10 @@ def insert_into_cuckoo(
     ``n_buckets`` is the width of a partition that has no table yet; a
     partition that has one keeps its own width.
 
-    Capacity contract: tables are fixed-size, so the insert raises
-    ``CuckooOverflowError`` (deterministically) when a partition's
-    existing table is loaded past ``max_load`` before anything is placed,
-    or when a key finds no slot within MAX_KICKS. Both tell the caller to
-    rebuild wider from the seen table — once per doubling, amortized O(1)
-    per batch (``SeenState.commit_batch`` passes its ``rebuild_fill``)."""
+    Capacity contract: tables are fixed-size and the insert never raises;
+    each row records its ``load`` and ``overflow``. Past a load bound or
+    on overflow, the caller rebuilds wider from the seen table — once per
+    doubling, amortized O(1) per batch (``SeenState.commit_batch``)."""
     nb = int(n_buckets)
     keyed = add_cuckoo_keys(new_seen, n_parts=n_parts).select("cuckoo_part", "ch", "cfp")
 
@@ -284,21 +283,16 @@ def insert_into_cuckoo(
                 .reshape(-1, BUCKET_SLOTS)
                 .copy()
             )
-            load = float((table != 0).mean())
-            if load > max_load:
-                raise CuckooOverflowError(
-                    f"cuckoo partition {part} loaded past {max_load} "
-                    f"(load={load:.3f}, n_buckets={table.shape[0]})"
-                )
         else:
             table = np.zeros((nb, BUCKET_SLOTS), dtype=np.uint16)
+        unplaced = 0
         if len(keys):
             _compact_rows(table)
             occ = (table != 0).sum(axis=1).astype(np.int64)
-            _place_keys(
+            unplaced = _place_keys(
                 table, occ, keys["ch"].to_numpy(), keys["cfp"].to_numpy(), table.shape[0]
             )
-        return pd.DataFrame({"cuckoo_part": [part], "blob": [table.tobytes()]})
+        return _filter_row(part, table, unplaced)
 
     return (
         cuckoo.groupBy("cuckoo_part")
@@ -307,46 +301,23 @@ def insert_into_cuckoo(
     )
 
 
-def cuckoo_load(cuckoo: DataFrame) -> DataFrame:
-    """Per-partition occupancy report: (cuckoo_part, n_buckets, slots_used,
-    load). Past LOAD_FACTOR, inserts start failing their kick walks —
-    rebuild wider from the seen table (amortized doubling, as
-    ``SeenState.commit_batch`` does past its ``rebuild_fill``)."""
-
-    def _load(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for _, r in pdf.iterrows():
-            table = np.frombuffer(r["blob"], dtype=np.uint16).reshape(-1, BUCKET_SLOTS)
-            used = int((table != 0).sum())
-            out.append(
-                (int(r["cuckoo_part"]), table.shape[0], used, used / table.size)
-            )
-        return pd.DataFrame(out, columns=["cuckoo_part", "n_buckets", "slots_used", "load"])
-
-    return cuckoo.mapInPandas(
-        lambda it: (_load(pdf) for pdf in it),
-        "cuckoo_part int, n_buckets bigint, slots_used bigint, load double",
-    )
-
-
 def delete_from_cuckoo(cuckoo: DataFrame, deletions: DataFrame, n_parts: int = 64) -> DataFrame:
     """Evict deleted URLs' fingerprints from their partition blobs —
     cogrouped, so each task rewrites one blob. Partitions with no
-    deletions pass through untouched. This is the capability Bloom lacks
-    and what lets delete_source keep the seen prefilter truthful without
-    a full rebuild."""
+    deletions pass through with their table unchanged (``load`` recomputed,
+    so a filter written before that column comes out in ``CUCKOO_SCHEMA``).
+    This is the capability Bloom lacks and what lets delete_source keep
+    the seen prefilter truthful without a full rebuild."""
     keyed = add_cuckoo_keys(deletions, n_parts=n_parts).select("cuckoo_part", "ch", "cfp")
 
     def _delete(dels: pd.DataFrame, blobs: pd.DataFrame) -> pd.DataFrame:
         if not len(blobs):
-            return pd.DataFrame({"cuckoo_part": [], "blob": []})
-        blob = blobs["blob"].iloc[0]
-        part = int(blobs["cuckoo_part"].iloc[0])
-        if not len(dels):
-            return pd.DataFrame({"cuckoo_part": [part], "blob": [blob]})
-        table = np.frombuffer(blob, dtype=np.uint16).reshape(-1, BUCKET_SLOTS).copy()
-        _delete_from_table(table, dels["ch"].to_numpy(), dels["cfp"].to_numpy())
-        return pd.DataFrame({"cuckoo_part": [part], "blob": [table.tobytes()]})
+            return pd.DataFrame()
+        table = np.frombuffer(blobs["blob"].iloc[0], dtype=np.uint16).reshape(-1, BUCKET_SLOTS)
+        if len(dels):
+            table = table.copy()
+            _delete_from_table(table, dels["ch"].to_numpy(), dels["cfp"].to_numpy())
+        return _filter_row(int(blobs["cuckoo_part"].iloc[0]), table)
 
     return (
         keyed.groupBy("cuckoo_part")

@@ -12,9 +12,9 @@ One `SeenState` owns two tables in a SnapshotParquetStore:
   all candidates in one bucket-ordered pass: it probes each bucket's
   filter part and opens the bucket's files only for maybe-seen rows, so
   neither table is shuffled. Each batch's URLs are inserted
-  incrementally; an insert into a partition loaded past
-  ``rebuild_fill``, or one that overflows, fails and the commit rebuilds
-  the filter wider from the seen table (amortized O(1) per batch), and
+  incrementally; when HEAD's manifest shows the filter's ``load`` past
+  ``rebuild_fill``, or the written ``overflow`` column is set, the commit
+  rebuilds the filter wider from the seen table (amortized O(1)), and
   :meth:`delete_urls` evicts fingerprints, so a deleted source's URLs
   stop probing maybe-seen without a rebuild.
 
@@ -54,7 +54,6 @@ from __future__ import annotations
 import glob
 import os
 
-from pyspark.errors import PythonException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -66,12 +65,17 @@ from .cuckoo import (
     _probe_table,
     build_cuckoo,
     cuckoo_hash_fp,
-    cuckoo_load,
     delete_from_cuckoo,
     insert_into_cuckoo,
 )
 
 __all__ = ["SeenState", "SeenStateMismatch"]
+
+
+def _stat_max(entry: dict, col: str):
+    """A manifest table entry's zone-map max of ``col``, or None if absent."""
+    maxes = [s[col][1] for s in entry.get("stats", {}).values() if col in s]
+    return max(maxes) if maxes else None
 
 
 class SeenStateMismatch(ValueError):
@@ -103,9 +107,9 @@ class SeenState:
         """``n_parts`` is the number of cuckoo-filter partitions (one blob
         each). ``expected_keys`` sizes a fresh store's filter (slots for
         the expected seen URLs at ~LOAD_FACTOR occupancy with headroom);
-        undersizing is safe — an insert into a partition whose committed
-        slot load exceeds ``rebuild_fill``, or one that overflows, fails,
-        and ``commit_batch`` rebuilds the filter sized for seen + batch.
+        undersizing is safe — when the committed filter's slot load
+        exceeds ``rebuild_fill``, or an insert overflows,
+        ``commit_batch`` rebuilds the filter sized for seen + batch.
         On resume the width comes from HEAD's manifest, so
         ``expected_keys`` only matters for a fresh store. The url column
         is ``url``.
@@ -257,8 +261,18 @@ class SeenState:
     def fill(self) -> DataFrame:
         """Filter geometry and load per partition — columns
         (cuckoo_part, n_buckets, slots_used, fill), where ``fill`` is
-        the slot load that ``rebuild_fill`` is compared against."""
-        return cuckoo_load(self.blobs()).withColumnRenamed("load", "fill")
+        the written ``load`` column that ``rebuild_fill`` is compared
+        against (null for a filter written before that column existed).
+        A projection: no Python runs."""
+        blobs = self.blobs()
+        load = F.col("load") if "load" in blobs.columns else F.lit(None).cast("double")
+        slots = F.length("blob") / 2
+        return blobs.select(
+            "cuckoo_part",
+            (slots / BUCKET_SLOTS).cast("long").alias("n_buckets"),
+            F.round(load * slots).cast("long").alias("slots_used"),
+            load.alias("fill"),
+        )
 
     def bucket_files(self) -> dict[int, list[str]]:
         """bucket id -> absolute parquet paths across every committed
@@ -394,16 +408,14 @@ class SeenState:
         one commit. Returns (manifest, info) — info reports ``rebuilt``
         and the filter's ``n_buckets``.
 
-        No job runs before the write. The insert takes the width HEAD's
-        manifest records, and each insert task checks its partition's
-        committed load: past ``rebuild_fill``, or when a key fails its
-        kick walk (a cuckoo insert near LOAD_FACTOR fails outright instead
-        of degrading gracefully), it raises ``CuckooOverflowError``, and
-        the store discards the staged commit. The filter is then rebuilt
-        from seen + batch, sized by ``_wider``, and committed once with
-        the batch (one snapshot, ``event: "filter_rebuild"``). The one
-        rebuild path serves an undersized fresh filter and a saturating
-        one alike; a rebuild batch pays for one failed insert.
+        No job runs before the write: the width and the committed
+        filter's max ``load`` come from HEAD's manifest. Past
+        ``rebuild_fill`` there is no insert; otherwise the insert commits
+        under ``_check_filter``, which raises ``CuckooOverflowError`` on
+        the driver if a key failed its kick walk, and the store discards
+        the staged commit. Either way the filter is then rebuilt from
+        seen + batch, sized by ``_wider``, and committed once with the
+        batch under the same check (``event: "filter_rebuild"``).
 
         ``new_seen`` must carry a ``url`` column and be deduplicated
         against the current seen set (schedule_batch output already is —
@@ -429,24 +441,29 @@ class SeenState:
                 delta_tables={self.TABLE_SEEN: new_urls},
                 metrics=self._stamp(bid, {**(metrics or {}), **(extra or {})}, width),
                 partition_cols={self.TABLE_SEEN: [self.BUCKET_COL]},
+                check=self._check_filter,
             )
 
-        try:
-            filt = insert_into_cuckoo(
-                self.blobs(), new_keys, nb, n_parts=self.n_parts, max_load=self.rebuild_fill
-            )
-            return _commit(filt, nb), {"rebuilt": False, "n_buckets": nb}
-        except PythonException as e:
-            # the overflow raised in a Python worker reaches the driver as
-            # Spark's PythonException (the classic and the Connect client
-            # both subclass pyspark.errors.PythonException), whose text
-            # names the worker's exception class; any other error propagates
-            if CuckooOverflowError.__name__ not in str(e):
-                raise
+        # a filter committed before the load column has no load stat: it
+        # counts as not past rebuild_fill, and the overflow check guards it
+        load = _stat_max(head.tables.get(self.TABLE_CUCKOO, {}), "load") if head else None
+        if load is None or load <= self.rebuild_fill:
+            try:
+                filt = insert_into_cuckoo(self.blobs(), new_keys, nb, n_parts=self.n_parts)
+                return _commit(filt, nb), {"rebuilt": False, "n_buckets": nb}
+            except CuckooOverflowError:
+                pass
         all_keys = self.seen().select("url").unionByName(new_keys)
         nb = self._wider(nb, all_keys.count())
         filt = build_cuckoo(all_keys, n_parts=self.n_parts, n_buckets=nb)
         return _commit(filt, nb, {"event": "filter_rebuild"}), {"rebuilt": True, "n_buckets": nb}
+
+    def _check_filter(self, tables: dict) -> None:
+        """``store.commit``'s check: refuse a written filter with rows whose
+        ``overflow`` max is true or missing — it may have lost a key."""
+        entry = tables[self.TABLE_CUCKOO]
+        if entry["rows"] and _stat_max(entry, "overflow") is not False:
+            raise CuckooOverflowError(f"a {self.TABLE_CUCKOO} partition overflowed")
 
     def _clustered(self, urls: DataFrame) -> DataFrame:
         """``urls``' url column plus its bucket, clustered by bucket BEFORE

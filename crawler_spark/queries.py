@@ -23,7 +23,7 @@ from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -1648,8 +1648,8 @@ def q_text_langid(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # One Arrow-batched pass computes every per-document token statistic
-# repetition_stats and quality_filter need. This REPLACED the previous
-# pure-JVM higher-order-function form (transform/filter/aggregate over a
+# quality_filter needs. This REPLACED the previous pure-JVM
+# higher-order-function form (transform/filter/aggregate over a
 # sorted bigram array): Catalyst evaluates lambda higher-order functions
 # INTERPRETED, per element, outside whole-stage codegen — measured 2.85 s
 # vs 0.28 s (10x) for the identical statistics over 5,000 docs on one
@@ -1704,19 +1704,10 @@ def _text_stat_batches(it):
 
 def text_stat_frame(docs: DataFrame) -> DataFrame:
     """Per-document token statistics over any (doc_id, text) frame —
-    the shared map-only base of repetition_stats and quality_filter."""
+    the map-only base of quality_filter; its repetition signals are
+    property-tested against a Counter oracle in tests/test_unit_functions.py."""
     return docs.select("doc_id", "text").mapInPandas(
         _text_stat_batches, _TEXT_STAT_SCHEMA
-    )
-
-
-def repetition_stats(docs: DataFrame) -> DataFrame:
-    """Per-document repetition signals over any (doc_id, text) frame;
-    docs with fewer than two tokens drop (no bigram denominator).
-    Property-tested against a pure-Python Counter oracle in
-    tests/test_unit_functions.py."""
-    return text_stat_frame(docs).where(F.col("n_bigrams") > 0).select(
-        "doc_id", "n_tokens", "distinct_milli", "top_bigram_milli"
     )
 
 

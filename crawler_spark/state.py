@@ -45,6 +45,7 @@ import shutil
 import threading
 import uuid
 from dataclasses import dataclass, field
+from typing import Callable
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -247,6 +248,7 @@ class SnapshotParquetStore:
         delta_tables: dict[str, DataFrame] | None = None,
         metrics: dict | None = None,
         partition_cols: dict[str, list[str]] | None = None,
+        check: Callable[[dict], None] | None = None,
     ) -> Manifest:
         """Atomically commit one micro-batch.
 
@@ -279,6 +281,11 @@ class SnapshotParquetStore:
         failed it re-raises the first failing table's exception unchanged
         (in ``full_tables`` then ``delta_tables`` order) and removes the
         staging dir — atomicity is the same as for one write at a time.
+
+        ``check``, if given, gets the new manifest's table entries after
+        every write and before the manifest is written; whatever it raises
+        aborts the commit as a failed write does (staging removed, HEAD
+        unchanged) and propagates.
         """
         head = self.head()
         if head is not None and batch_id <= head.batch_id:
@@ -360,6 +367,8 @@ class SnapshotParquetStore:
                         carried = dict(entry)
                         carried.pop("delta_rows", None)
                         tables[tname] = carried
+            if check is not None:
+                check(tables)
             man = Manifest(snap_id, head.snapshot_id if head else None, batch_id, tables, metrics or {})
             with open(os.path.join(tmp, "manifest.json"), "w") as f:
                 f.write(man.to_json())

@@ -2,11 +2,9 @@
 the reason it exists next to Bloom — true deletion."""
 
 import numpy as np
-import pytest
 
 from crawler_spark.operators.cuckoo import (
     BUCKET_SLOTS,
-    CuckooOverflowError,
     _build_table,
     _delete_from_table,
     _probe_table,
@@ -34,35 +32,37 @@ def _keys(n, seed):
 
 def test_core_no_false_negatives_and_low_fpp():
     h, fp = _keys(3000, 1)
-    table = _build_table(h, fp, 1024)  # load ~0.73
+    table, unplaced = _build_table(h, fp, 1024)  # load ~0.73
+    assert unplaced == 0
     assert _probe_table(table, h, fp).all()
     h2, fp2 = _keys(20000, 2)
     fpp = _probe_table(table, h2, fp2).mean()
     assert fpp < 0.01, fpp
 
 
-def test_core_overflow_raises():
-    h, fp = _keys(3000, 3)
-    with pytest.raises(CuckooOverflowError):
-        _build_table(h, fp, 256)  # load ~2.9: must refuse, not corrupt
+def test_core_overflow_reports_unplaced_keys():
+    h, fp = _keys(1100, 3)
+    table, unplaced = _build_table(h, fp, 256)  # 1100 keys, 1024 slots
+    # each failed kick walk drops exactly one fingerprint, and is counted
+    assert unplaced >= 1100 - table.size
+    assert (table != 0).sum() + unplaced == 1100
 
 
-def test_place_keys_on_full_table_raises_overflow_error():
+def test_place_keys_on_full_table_reports_the_unplaced_key():
     """A full table cannot take one more key: the kick walk runs out and
-    raises the dedicated class the SeenState commit path recovers from."""
+    is counted, the count the filter's ``overflow`` column is set from."""
     from crawler_spark.operators.cuckoo import _place_keys
 
     nb = 64
     table = np.full((nb, BUCKET_SLOTS), 7, dtype=np.uint16)
     occ = np.full(nb, BUCKET_SLOTS, dtype=np.int64)
     h, fp = _keys(1, 13)
-    with pytest.raises(CuckooOverflowError):
-        _place_keys(table, occ, h, fp, nb)
+    assert _place_keys(table, occ, h, fp, nb) == 1
 
 
 def test_core_delete_removes_without_harming_others():
     h, fp = _keys(2000, 4)
-    table = _build_table(h, fp, 1024)
+    table, _ = _build_table(h, fp, 1024)
     removed = _delete_from_table(table, h[:500], fp[:500])
     assert removed == 500
     # remaining keys: still zero false negatives (a colliding twin's copy
@@ -150,7 +150,7 @@ def test_core_compact_then_place_handles_deletion_holes():
     from crawler_spark.operators.cuckoo import _compact_rows, _place_keys
 
     h, fp = _keys(600, 11)
-    table = _build_table(h, fp, 256)
+    table, _ = _build_table(h, fp, 256)
     # delete a third of the keys -> holes at arbitrary slot positions
     _delete_from_table(table, h[::3], fp[::3])
     _compact_rows(table)
@@ -159,7 +159,7 @@ def test_core_compact_then_place_handles_deletion_holes():
         assert len(nz) == 0 or nz[0] + len(nz) == BUCKET_SLOTS  # zeros only at the tail
     occ = (table != 0).astype(np.int64).sum(axis=1)
     h2, fp2 = _keys(400, 12)
-    _place_keys(table, occ, h2, fp2, table.shape[0])
+    assert _place_keys(table, occ, h2, fp2, table.shape[0]) == 0
     # every surviving old key and every new key still probes positive
     keep = np.ones(len(h), dtype=bool)
     keep[::3] = False
@@ -188,37 +188,45 @@ def test_insert_into_cuckoo_matches_full_build_membership(spark):
 def test_insert_after_delete_reuses_slots(spark):
     """delete_source then keep crawling: evicted slots are reusable, the
     re-inserted URLs probe positive, untouched keys unharmed."""
-    from crawler_spark.operators.cuckoo import cuckoo_load, insert_into_cuckoo
+    from crawler_spark.operators.cuckoo import insert_into_cuckoo
 
     keep = spark.createDataFrame(_urls(0, 1000), "url string")
     gone = spark.createDataFrame(_urls(1000, 2000), "url string")
     filt = build_cuckoo(keep.unionByName(gone), n_parts=N_PARTS, n_buckets=1024)
-    used0 = {r.cuckoo_part: r.slots_used for r in cuckoo_load(filt).collect()}
+    load0 = {r.cuckoo_part: r.load for r in filt.collect()}
     filt = delete_from_cuckoo(filt, gone, n_parts=N_PARTS)
-    used1 = {r.cuckoo_part: r.slots_used for r in cuckoo_load(filt).collect()}
-    assert sum(used1.values()) < sum(used0.values())
+    load1 = {r.cuckoo_part: r.load for r in filt.collect()}
+    assert load1.keys() == load0.keys()
+    assert all(load1[p] < load0[p] for p in load0)
     newer = spark.createDataFrame(_urls(3000, 4000), "url string")
     filt = insert_into_cuckoo(filt, newer, 1024, n_parts=N_PARTS)
     tagged = cuckoo_prefilter(keep.unionByName(newer), filt, n_parts=N_PARTS)
     assert all(r.maybe_seen for r in tagged.collect())
 
 
-def test_insert_past_max_load_raises_overflow_error(spark):
-    """A partition whose existing table is loaded past ``max_load`` refuses
-    the insert with the overflow class, before placing anything; below the
-    bound the same insert lands."""
-    from pyspark.errors import PythonException
-
+def test_insert_reports_its_tables_load(spark):
+    """Every row an insert writes records its table's slot load after the
+    insert and whether a key went unplaced; an insert into a table too
+    small for its keys reports ``overflow`` instead of raising."""
     from crawler_spark.operators.cuckoo import insert_into_cuckoo
 
     base = build_cuckoo(
         spark.createDataFrame(_urls(0, 3000), "url string"), n_parts=N_PARTS, n_buckets=256
     )  # ~375 keys per 1024-slot partition: load ~0.37
     b = spark.createDataFrame(_urls(3000, 3100), "url string")
-    with pytest.raises(PythonException, match=CuckooOverflowError.__name__):
-        insert_into_cuckoo(base, b, 256, n_parts=N_PARTS, max_load=0.3).collect()
-    filt = insert_into_cuckoo(base, b, 256, n_parts=N_PARTS, max_load=0.5)
+    filt = insert_into_cuckoo(base, b, 256, n_parts=N_PARTS)
+    rows = filt.collect()
+    assert len(rows) == N_PARTS and not any(r.overflow for r in rows)
+    assert sum(r.load for r in rows) * 256 * BUCKET_SLOTS == 3100
+    for r in rows:
+        table = np.frombuffer(r.blob, dtype=np.uint16)
+        assert r.load == (table != 0).mean()
     assert all(r.maybe_seen for r in cuckoo_prefilter(b, filt, n_parts=N_PARTS).collect())
+
+    # ~50 keys per 32-slot partition of a filter that has no tables yet
+    more = spark.createDataFrame(_urls(3100, 3500), "url string")
+    rows = insert_into_cuckoo(base.limit(0), more, 8, n_parts=N_PARTS).collect()
+    assert len(rows) == N_PARTS and all(r.overflow for r in rows)
 
 
 def test_insert_into_empty_cuckoo_requires_geometry(spark):

@@ -105,15 +105,16 @@ def test_bm25_vocab_topk_uses_take_ordered(spark):
 
 
 def test_text_repetition_plan_is_shuffle_free(spark):
-    """repetition_stats is a per-document statistic, so its plan must be
-    map-only: one Arrow-batched pass counts tokens and bigrams inside the
-    scan partition — no explode, no Exchange. A shuffle here would move
+    """text_stat_frame's repetition signals are per-document statistics,
+    so its plan must be map-only: one Arrow-batched pass counts tokens
+    and bigrams inside the scan partition — no explode, no Exchange. A shuffle here would move
     every bigram of a 100 TB corpus across the wire for a value
     computable inside the scan partition."""
     from crawler_spark.plans.inspect import formatted_plan
-    from crawler_spark.queries import load, repetition_stats
+    from crawler_spark.queries import load, text_stat_frame
 
-    plan = formatted_plan(repetition_stats(load(spark, SF, "documents")))
+    stats = text_stat_frame(load(spark, SF, "documents")).where(F.col("n_bigrams") > 0)
+    plan = formatted_plan(stats)
     assert "Exchange" not in plan, plan
     assert "Generate" not in plan, plan  # no explode
 

@@ -10,8 +10,6 @@ plus the plan shapes the 100 TB design requires.
 
 import re
 
-import pytest
-
 from crawler_spark.plans.inspect import formatted_plan
 from crawler_spark.queries_scale import (
     _HRW_SHARDS,

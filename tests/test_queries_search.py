@@ -13,7 +13,6 @@ import re
 from collections import Counter, defaultdict
 
 import duckdb
-import pytest
 from pyspark.sql import functions as F
 
 from crawler_spark.plans.inspect import formatted_plan

@@ -4,6 +4,8 @@ saturation rebuild, deletes. (The 10^9-scale behavior of the same
 discipline is recorded in BENCH/scale_1e9_loop.json.)"""
 
 import gc
+import glob
+import os
 import re
 import shutil
 from collections import Counter
@@ -14,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawler_spark.operators.bloom import build_bloom
-from crawler_spark.operators.cuckoo import cuckoo_prefilter
+from crawler_spark.operators.cuckoo import CuckooOverflowError, cuckoo_prefilter
 from crawler_spark.operators.scheduler import release_barrier, schedule_batch
 from crawler_spark.operators.seen_state import SeenState, SeenStateMismatch
 
@@ -525,9 +527,21 @@ def test_cuckoo_delete_of_unseen_or_duplicate_urls_is_safe(spark, root):
 def test_cuckoo_first_commit_overflow_recovers(spark, root):
     """Review r5 pass 2: a first commit larger than the fresh filter's
     capacity must rebuild-wider-and-retry inside commit_batch, not wedge
-    with an unrecoverable over-capacity error ('undersizing is safe')."""
+    with an unrecoverable over-capacity error ('undersizing is safe').
+    The failed kick walk reaches the driver only as the written
+    ``overflow`` column: no Spark job fails, and the rejected commit's
+    staging dir is gone."""
     st = _cuckoo(spark, root, expected_keys=100)
-    man, info = st.commit_batch(_urls(spark, 0, 5000), batch_id=1)
+    sc = spark.sparkContext
+    group = "test_seen_state.kick_walk_rebuild"
+    sc.setJobGroup(group, "commit_batch")
+    try:
+        man, info = st.commit_batch(_urls(spark, 0, 5000), batch_id=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert jobs and {sc.statusTracker().getJobInfo(j).status for j in jobs} == {"SUCCEEDED"}
+    assert not glob.glob(os.path.join(root, "snapshots", "_tmp_*"))
     assert st.seen().count() == 5000
     assert info["rebuilt"]
     assert _all_maybe_seen(st, _urls(spark, 0, 5000))
@@ -536,10 +550,62 @@ def test_cuckoo_first_commit_overflow_recovers(spark, root):
     assert info2.get("redelivered")
 
 
+def test_load_triggered_rebuild_runs_no_insert(spark, root, monkeypatch):
+    """HEAD's zone map already holds the committed filter's max load, so a
+    batch that finds it past ``rebuild_fill`` goes straight to the
+    rebuild: no insert is planned, written or discarded."""
+    import crawler_spark.operators.seen_state as seen_state_mod
+
+    st = _cuckoo(spark, root, expected_keys=10, rebuild_fill=0.5)
+    st.commit_batch(_urls(spark, 0, 3000), batch_id=1)  # load ~0.73
+
+    def no_insert(*a, **kw):
+        raise AssertionError("a load-triggered rebuild must not insert")
+
+    monkeypatch.setattr(seen_state_mod, "insert_into_cuckoo", no_insert)
+    _, info = st.commit_batch(_urls(spark, 3000, 3050), batch_id=2)
+    assert info["rebuilt"] and st.store.head().metrics["event"] == "filter_rebuild"
+    assert _all_maybe_seen(st, _urls(spark, 0, 3050))
+
+
+def test_rebuild_that_overflows_raises_and_leaves_head(spark, root, monkeypatch):
+    """The rebuild commit goes through the same check: a rebuild still too
+    narrow for its keys raises ``CuckooOverflowError`` on the driver and
+    commits nothing."""
+    st = _cuckoo(spark, root, expected_keys=100)  # 1024 slots per partition
+    monkeypatch.setattr(st, "_wider", lambda nb, n_keys: nb)
+    with pytest.raises(CuckooOverflowError):
+        st.commit_batch(_urls(spark, 0, 4400), batch_id=1)
+    assert st.store.head() is None
+    assert not glob.glob(os.path.join(root, "snapshots", "_tmp_*"))
+
+
+def test_head_filter_stats_carry_load_and_overflow(spark, root):
+    """Each commit's manifest carries the filter's load and overflow range
+    from the parquet footers, which is all the next commit reads; ``fill``
+    reports the same load through a plan with no Python node."""
+    st = _cuckoo(spark, root)
+    st.commit_batch(_urls(spark, 0, 400), batch_id=1)
+    entry = st.store.head().tables[SeenState.TABLE_CUCKOO]
+    (stats,) = entry["stats"].values()
+    assert stats["overflow"] == [False, False]
+    lo, hi = stats["load"]
+    assert 0 < lo <= hi < st.rebuild_fill
+
+    fill = st.fill()
+    plan = fill._jdf.queryExecution().executedPlan().toString()
+    assert not re.search("Python|Pandas|Arrow", plan), plan
+    rows = fill.collect()
+    assert [lo, hi] == [min(r.fill for r in rows), max(r.fill for r in rows)]
+    assert {r.n_buckets for r in rows} == {st._initial_buckets}
+    assert sum(r.slots_used for r in rows) == 400
+
+
 def test_commit_runs_no_job_before_its_write(spark, root, monkeypatch):
     """A commit that needs no rebuild goes straight to the store's write:
-    the width comes from HEAD's manifest and the load check runs inside
-    the insert task, so nothing reads the committed filter beforehand."""
+    the width and the filter's load come from HEAD's manifest and the
+    overflow check reads the written stats, so nothing reads the
+    committed filter beforehand."""
     st = _cuckoo(spark, root)
     st.commit_batch(_urls(spark, 0, 400), batch_id=1)
     sc = spark.sparkContext
@@ -597,6 +663,30 @@ def test_store_without_width_stamp_still_commits(spark, root):
     _, info = st2.commit_batch(_urls(spark, 200, 300), batch_id=2)
     assert not info["rebuilt"] and info["n_buckets"] == st2._initial_buckets == 256
     assert {r.n_buckets for r in st2.fill().collect()} == {st._initial_buckets} == {512}
+    assert _all_maybe_seen(st2, _urls(spark, 0, 300))
+
+
+def test_store_with_filter_written_before_load_columns_still_commits(spark, root):
+    """A filter committed before the ``load`` and ``overflow`` columns
+    has neither stat: the load pre-check reads that as not past
+    ``rebuild_fill``, the overflow check still guards the insert, and the
+    first insert writes both columns."""
+    st = _cuckoo(spark, root)
+    st.commit_batch(_urls(spark, 0, 200), batch_id=1)
+    st.store.commit(
+        st.batch_id() + 1,
+        full_tables={SeenState.TABLE_CUCKOO: st.blobs().select("cuckoo_part", "blob")},
+        metrics=st._stamp(st.last_logical()),
+    )
+    (old,) = st.store.head().tables[SeenState.TABLE_CUCKOO]["stats"].values()
+    assert "load" not in old and "overflow" not in old
+
+    st2 = _cuckoo(spark, root)
+    assert {r.fill for r in st2.fill().collect()} == {None}
+    _, info = st2.commit_batch(_urls(spark, 200, 300), batch_id=2)
+    assert not info["rebuilt"]
+    (new,) = st2.store.head().tables[SeenState.TABLE_CUCKOO]["stats"].values()
+    assert new["overflow"] == [False, False] and "load" in new
     assert _all_maybe_seen(st2, _urls(spark, 0, 300))
 
 

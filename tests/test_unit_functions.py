@@ -327,7 +327,9 @@ def test_repetition_stats_matches_counter_oracle(spark):
     import random
     from collections import Counter
 
-    from crawler_spark.queries import repetition_stats
+    from pyspark.sql import functions as F
+
+    from crawler_spark.queries import text_stat_frame
 
     rng = random.Random(42)
     vocab = ["a", "bb", "ccc", "a", ""]  # "" = consecutive-space token
@@ -349,5 +351,9 @@ def test_repetition_stats_matches_counter_oracle(spark):
 
     expected = sorted(r for r in (oracle(i, t) for i, t in enumerate(docs)) if r)
     df = spark.createDataFrame(list(enumerate(docs)), "doc_id long, text string")
-    got = sorted(tuple(r) for r in repetition_stats(df).collect())
+    stats = text_stat_frame(df).where(F.col("n_bigrams") > 0)
+    got = sorted(
+        tuple(r)
+        for r in stats.select("doc_id", "n_tokens", "distinct_milli", "top_bigram_milli").collect()
+    )
     assert got == expected
