@@ -237,9 +237,9 @@ def _crawl_e2e_oracle_sql() -> str:
 # past position 50 still has an oracle + pytest parity, and each is there
 # for a reason: no driver-checked row's physical-operator set contains its
 # own, or its kernel is library code, or it is the only check of a
-# SURVEY-§2 row, or its pytest pins semantics the oracle hash cannot
-# (tests/test_plan_audit.py enforces this, so a past-cap entry whose plan
-# shape a checked row already pins cannot come back without a reason).
+# SURVEY-§2 row (tests/test_plan_audit.py enforces this, so a past-cap
+# entry whose plan shape a checked row already pins cannot come back
+# without a reason).
 # tests/test_entry_contract.py pins first-50 == DRIVER_CHECK_ORDER.
 # Measured driver-check cost of this set: see BENCH/driver_check_costs.json.
 DRIVER_CHECK_ORDER: list[str] = [

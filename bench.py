@@ -49,14 +49,7 @@ HEADLINE = [
     "crawl_counters",
     "events_tumbling",
     "trap_detect",
-    "recrawl_priority",
-    "host_shards",
-    "anchor_agg",
-    "tfidf_topk",
     "crawl_rollup",
-    "latency_quantiles",
-    "cms_heavy_hitters",
-    "change_detect",
     "hits_scores",
     "wet_export",
     "sitemap_gap",
@@ -74,7 +67,6 @@ HEADLINE = [
     "video_neardup",
     "dup_spans",
     "dsir_weights",
-    "phrase_search",
     "audio_neardup",
     "ann_ivfpq_search",
     "bpe_merges",

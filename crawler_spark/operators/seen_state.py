@@ -61,6 +61,7 @@ from pyspark.sql import types as T
 from ..state import Manifest, SnapshotParquetStore, empty_frame
 from .cuckoo import (
     BUCKET_SLOTS,
+    CUCKOO_SCHEMA,
     CuckooOverflowError,
     _probe_table,
     build_cuckoo,
@@ -250,13 +251,14 @@ class SeenState:
         return df if df is not None else self._empty
 
     def blobs(self) -> DataFrame:
-        """Committed cuckoo-filter blobs (an empty frame before the first
-        commit — the prefilter treats a missing blob as maybe_seen=false,
+        """Committed cuckoo-filter blobs (a zero-partition JVM frame before
+        the first commit — the prefilter treats a missing blob as
+        maybe_seen=false, the insert builds a missing partition's table,
         and the exact side is equally empty, so batch 0 just works)."""
         df = self.store.read(self.TABLE_CUCKOO)
         if df is not None:
             return df
-        return build_cuckoo(self._empty, n_parts=self.n_parts, n_buckets=self._initial_buckets)
+        return empty_frame(self.spark, T.DataType.fromDDL(CUCKOO_SCHEMA))
 
     def fill(self) -> DataFrame:
         """Filter geometry and load per partition — columns

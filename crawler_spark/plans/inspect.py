@@ -1,9 +1,13 @@
 """Physical-plan inspection helpers — the engine's plan-quality contract.
 
-Used by tests/test_plans.py to assert, from the formatted explain output,
-that the plans Catalyst produces are the plans the 100 TB design needs:
-filters pushed into the parquet scan, scans column-pruned, small sides
-broadcast, whole-stage codegen covering the relational spine.
+Imported by the plan-shape tests (tests/test_embedding_lsh_ivf.py,
+test_pipeline_curate.py, test_pipeline_ops.py, test_plan_audit.py,
+test_plans_sources_streaming.py, test_queries_scale.py,
+test_queries_search.py and test_seen_state.py) to assert, from the
+formatted explain output, that the plans Catalyst produces are the plans
+the 100 TB design needs: filters pushed into the parquet scan, scans
+column-pruned, small sides broadcast, whole-stage codegen covering the
+relational spine.
 """
 
 from __future__ import annotations

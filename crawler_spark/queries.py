@@ -29,7 +29,7 @@ from pyspark.sql import types as T
 
 from .functions.linkextract import build_spans_html, extract_links
 
-__all__ = ["SPARK_QUERIES", "ORACLE_SQL", "load", "release_query_barriers"]
+__all__ = ["SPARK_QUERIES", "ORACLE_SQL", "load", "query_barrier", "release_query_barriers"]
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -46,7 +46,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _QUERY_BARRIERS: list[DataFrame] = []
 
 
-def _barrier(df: DataFrame) -> DataFrame:
+def query_barrier(df: DataFrame) -> DataFrame:
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _QUERY_BARRIERS.append(df)
     return df
@@ -497,7 +497,7 @@ def _minhash_rep_pairs(docs: DataFrame):
     per-pair groupBy disappears. Zero-intersection candidates now score
     jac_milli=0 instead of being absent — every consumer filters
     >= _LSH_JAC_MIN, so the verified pair set is unchanged."""
-    keyed = _barrier(docs.withColumn("ekey", F.md5("text")))
+    keyed = query_barrier(docs.withColumn("ekey", F.md5("text")))
     groups_full = keyed.groupBy("ekey").agg(
         F.min("doc_id").alias("rep_id"),
         F.count("*").alias("grp_n"),
@@ -508,7 +508,7 @@ def _minhash_rep_pairs(docs: DataFrame):
     reps = groups_full.select(
         F.col("rep_id").alias("doc_id"), F.col("rep_text").alias("text")
     )
-    shingled = _barrier(_with_shingles(reps))
+    shingled = query_barrier(_with_shingles(reps))
     bands = _bands_from_shingled(shingled)
     a, b = bands.alias("a"), bands.alias("b")
     pairs = (
@@ -526,7 +526,7 @@ def _minhash_rep_pairs(docs: DataFrame):
     # replicates each candidate's set, so 8-byte elements cut both ~5x.
     # A within-pair collision (P ~ |set|^2 / 2^64, ~1e-15 at 200
     # shingles) is the only way this diverges from the string oracle.
-    shd = _barrier(
+    shd = query_barrier(
         shingled.select(
             "doc_id",
             F.expr("array_distinct(transform(sh, s -> xxhash64(s)))").alias("shd"),
@@ -656,13 +656,13 @@ def incremental_dedup(index: DataFrame, batch: DataFrame) -> DataFrame:
         # rep text rides the groupBy (identical within an md5 group), so
         # no second full-side semi-join shuffle — same shuffle-budget
         # rework as _minhash_rep_pairs
-        keyed = _barrier(df.withColumn("ekey", F.md5("text")))
+        keyed = query_barrier(df.withColumn("ekey", F.md5("text")))
         groups = keyed.groupBy("ekey").agg(
             F.min("doc_id").alias("rep_id"), F.any_value("text").alias("rep_text")
         )
         members = keyed.join(groups.select("ekey", "rep_id"), "ekey").select("doc_id", "rep_id")
         reps = groups.select(F.col("rep_id").alias("doc_id"), F.col("rep_text").alias("text"))
-        return members, _barrier(_with_shingles(reps))
+        return members, query_barrier(_with_shingles(reps))
 
     idx_members, idx_sh = side(index)
     new_members, new_sh = side(batch)
@@ -841,14 +841,14 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf: str) -> DataFrame:
     # hot-bucket guard, same shape as _minhash_rep_pairs: identical
     # vectors collapse to one representative before the bucket self-join,
     # then _lsh_expand_groups restores member-level results losslessly
-    keyed = _barrier(corpus.withColumn("ekey", F.md5(F.col("embedding").cast("string"))))
+    keyed = query_barrier(corpus.withColumn("ekey", F.md5(F.col("embedding").cast("string"))))
     groups = keyed.groupBy("ekey").agg(
         F.min("vec_id").alias("rep_id"), F.count("*").alias("grp_n")
     )
     members = keyed.join(groups.select("ekey", "rep_id"), "ekey").select(
         F.col("vec_id").alias("doc_id"), "rep_id"
     )
-    reps = _barrier(
+    reps = query_barrier(
         keyed.withColumnRenamed("vec_id", "doc_id")
         .join(groups.select(F.col("rep_id").alias("doc_id")), "doc_id", "left_semi")
         .select("doc_id", "embedding")
@@ -948,7 +948,7 @@ def _ivf_assign(vectors: DataFrame, cents: DataFrame) -> DataFrame:
     are not comparable across the two queries. Returns (vec_id,
     embedding, cent_id, nv); nv is the vector's _NORM_SQ — free here,
     reused by pair-verify consumers via _cos_milli_pre."""
-    packed = _barrier(
+    packed = query_barrier(
         cents.select(
             F.struct(
                 F.col("cent_id").alias("cid"),
@@ -1040,7 +1040,7 @@ def q_ann_ivfpq_search(spark: SparkSession, sf: str) -> DataFrame:
         .limit(_IVF_NLIST)
         .select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce"))
     )
-    assigned = _barrier(_ivf_assign(emb, cents))
+    assigned = query_barrier(_ivf_assign(emb, cents))
 
     ms = F.explode(F.expr(f"sequence(0, {_PQ_M - 1})")).alias("m")
     codebook = (
@@ -1179,7 +1179,7 @@ def _semdedup_assign(corpus: DataFrame, cents: DataFrame):
     share their rep's embedding, hence provably its cluster and all its
     cosines) + broadcast centroid assignment of the reps.
     Returns (members, groups, assigned)."""
-    keyed = _barrier(corpus.withColumn("ekey", F.md5(F.col("embedding").cast("string"))))
+    keyed = query_barrier(corpus.withColumn("ekey", F.md5(F.col("embedding").cast("string"))))
     groups = keyed.groupBy("ekey").agg(
         F.min("vec_id").alias("rep_id"), F.count("*").alias("grp_n")
     )
@@ -1189,7 +1189,7 @@ def _semdedup_assign(corpus: DataFrame, cents: DataFrame):
     reps_vec = keyed.join(
         groups.select(F.col("rep_id").alias("vec_id")), "vec_id", "left_semi"
     ).select("vec_id", "embedding")
-    assigned = _barrier(_ivf_assign(reps_vec, cents))
+    assigned = query_barrier(_ivf_assign(reps_vec, cents))
     return members, groups, assigned
 
 
@@ -1647,70 +1647,6 @@ def q_text_langid(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-# One Arrow-batched pass computes every per-document token statistic
-# quality_filter needs. This REPLACED the previous pure-JVM
-# higher-order-function form (transform/filter/aggregate over a
-# sorted bigram array): Catalyst evaluates lambda higher-order functions
-# INTERPRETED, per element, outside whole-stage codegen — measured 2.85 s
-# vs 0.28 s (10x) for the identical statistics over 5,000 docs on one
-# core, a per-core factor that holds at any scale since both forms are
-# map-only. The "UDFs are the slow path" rule applies to row-at-a-time
-# Python, not to an Arrow-batched stage whose per-doc work is dict-hash
-# counting at C speed. Semantics are pinned by the pure-Python Counter
-# property test (tests/test_unit_functions.py), the cascade-branch test
-# (tests/test_pipeline_ops.py) and the curation_pipeline_full oracle.
-_TEXT_STAT_SCHEMA = (
-    "doc_id long, n_tokens int, distinct_milli long, n_bigrams int, "
-    "top_bigram_milli long, stop_cnt int, "
-    + ", ".join(f"{lang}_hits int" for lang in LANG_MARKERS)
-)
-
-
-def _text_stat_batches(it):
-    import math
-    from collections import Counter
-
-    import pandas as pd
-
-    langs = list(LANG_MARKERS)
-    int_cols = ["n_tokens", "n_bigrams", "stop_cnt"] + [f"{la}_hits" for la in langs]
-    for pdf in it:
-        out: dict[str, list] = {
-            name.split(" ")[0]: [] for name in _TEXT_STAT_SCHEMA.split(", ")
-        }
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            toks = text.split(" ")  # literal-space regex == str.split(" ")
-            n = len(toks)  # never 0: split("") == [""]
-            counts = Counter(toks)
-            n_bigrams = n - 1 if n >= 2 else 0
-            best = max(Counter(zip(toks, toks[1:])).values()) if n_bigrams else 0
-            out["doc_id"].append(doc_id)
-            out["n_tokens"].append(n)
-            out["distinct_milli"].append(math.floor(1000.0 * len(counts) / n))
-            out["n_bigrams"].append(n_bigrams)
-            out["top_bigram_milli"].append(
-                math.floor(1000.0 * best / n_bigrams) if n_bigrams else 0
-            )
-            out["stop_cnt"].append(sum(counts[w] for w in STOPWORDS))
-            for lang in langs:
-                out[f"{lang}_hits"].append(sum(counts[w] for w in LANG_MARKERS[lang]))
-        yield pd.DataFrame(
-            {
-                k: pd.Series(v, dtype="int32" if k in int_cols else "int64")
-                for k, v in out.items()
-            }
-        )
-
-
-def text_stat_frame(docs: DataFrame) -> DataFrame:
-    """Per-document token statistics over any (doc_id, text) frame —
-    the map-only base of quality_filter; its repetition signals are
-    property-tested against a Counter oracle in tests/test_unit_functions.py."""
-    return docs.select("doc_id", "text").mapInPandas(
-        _text_stat_batches, _TEXT_STAT_SCHEMA
-    )
-
-
 _RANK_ITERS = 5
 _RANK_OUT_DEG = 3  # every node emits exactly 3 edges by construction
 
@@ -1733,7 +1669,7 @@ def q_link_rank(spark: SparkSession, sf: str) -> DataFrame:
     scanned from the persisted barrier, not recomputed per iteration."""
     docs = load(spark, sf, "documents")
     n = docs.count()
-    edges = _barrier(
+    edges = query_barrier(
         docs.select(
             F.col("doc_id").alias("src"),
             F.explode(
@@ -1803,7 +1739,7 @@ def q_redirect_resolve(spark: SparkSession, sf: str) -> DataFrame:
     twice."""
     docs = load(spark, sf, "documents")
     n = docs.count()
-    redirects = _barrier(
+    redirects = query_barrier(
         docs.filter(F.col("doc_id") % 3 == 1).select(
             F.col("doc_id").alias("src"), ((F.col("doc_id") * 7 + 1) % n).alias("dst")
         )
@@ -1911,46 +1847,6 @@ def q_warc_cdx(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = load(spark, sf, "documents")
     return warc_cdx(docs_to_warc_segments(docs, docs_per_segment=100))
-
-
-# Composite quality-filter thresholds (Gopher/C4-style cascade), chosen
-# to split the synthetic corpus non-trivially (sf0.01: n_tok 10-99,
-# diversity p10 ~321 milli, stop_cnt p10 = 1, 218/500 docs en).
-_QF_MIN_TOKENS = 20
-_QF_MIN_STOP = 2
-_QF_MIN_DISTINCT_MILLI = 350
-_QF_MAX_TOP_BIGRAM_MILLI = 200
-
-
-def quality_filter(docs: DataFrame) -> DataFrame:
-    """Composite training-data quality filter over any (doc_id, text)
-    frame: the accept/reject decision a C4/Gopher-style pipeline makes
-    per document, as ONE deterministic rule cascade (first failing rule
-    names the reject_reason): too_short -> non_english (marker-stopword
-    langid) -> low_stopword -> low_diversity (distinct-token fraction)
-    -> repetitive (top-bigram mass) -> accept. One Arrow-batched stat
-    pass (text_stat_frame) + a JVM when-cascade — map-only, zero
-    shuffles, embarrassingly parallel at 100 TB."""
-    scored = text_stat_frame(docs).withColumn(
-        "is_en",
-        (F.col("en_hits") >= F.col("de_hits"))
-        & (F.col("en_hits") >= F.col("fr_hits"))
-        & (F.col("en_hits") >= F.col("es_hits")),
-    )
-    reason = (
-        F.when(F.col("n_tokens") < _QF_MIN_TOKENS, "too_short")
-        .when(~F.col("is_en"), "non_english")
-        .when(F.col("stop_cnt") < _QF_MIN_STOP, "low_stopword")
-        .when(F.col("distinct_milli") < _QF_MIN_DISTINCT_MILLI, "low_diversity")
-        .when(F.col("top_bigram_milli") > _QF_MAX_TOP_BIGRAM_MILLI, "repetitive")
-        .otherwise("accept")
-    )
-    return scored.select(
-        "doc_id",
-        F.col("n_tokens").cast("int").alias("n_tokens"),
-        reason.alias("reject_reason"),
-        (reason == "accept").alias("accepted"),
-    )
 
 
 # Block size for span-level dedup: a "paragraph" in the space-tokenized

@@ -7,23 +7,10 @@ URL in flight) has no analog for:
 - crawl-trap detection: URL-shape heuristics (depth, repeated path
   segments, query-param explosion) that keep calendar/loop traps from
   eating the frontier;
-- adaptive recrawl priority: Cho & Garcia-Molina-style change-rate
-  estimation from fetch history -> staleness-weighted priority;
-- rendezvous (HRW) host sharding: coordination-free assignment of hosts
-  to fetcher shards with provably minimal movement when a shard is added;
-- anchor-text aggregation: per-target in-degree + dominant anchor text,
-  the classic indexing signal extracted from the link graph;
 - connected components: hook/jump label propagation closing near-dup
   pairs into clusters (one survivor per cluster, not per pair);
-- tf-idf top-k terms: the posting-list build + term weighting with an
-  integer-surrogate idf;
-- exact nearest-rank latency quantiles, a deterministic count-min
-  sketch and the two-round crawl diff;
 - HITS, host-graph collapse, sitemap coverage audit, registrable-domain
-  extraction, ROLLUP crawl reports and BPE merge induction;
-- the curation pipeline's exact-arithmetic helpers: largest-remainder
-  apportionment (sum == budget, deterministic), integer sqrt, sequence
-  packing and the training-shard deal.
+  extraction, ROLLUP crawl reports and BPE merge induction.
 
 Same determinism rules as queries.py: integer fixed-point only (no raw
 doubles), md5 as the only cross-engine hash, every column aliased
@@ -34,10 +21,10 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries import _barrier, load
+from .queries import load, query_barrier
 
 __all__ = ["SCALE_QUERIES", "SCALE_ORACLES"]
 
@@ -135,197 +122,6 @@ SELECT doc_id, url, depth, max_repeat, n_params,
             WHEN n_params >= {_TRAP_MAX_PARAMS} THEN TRUE
             ELSE FALSE END AS is_trap
 FROM scored"""
-
-
-# ---------------------------------------------------------------------------
-# adaptive recrawl priority
-# ---------------------------------------------------------------------------
-
-
-def q_recrawl_priority(spark: SparkSession, sf: str) -> DataFrame:
-    """Adaptive recrawl scheduling (Cho & Garcia-Molina, "Effective page
-    refresh policies": refresh frequency proportional to observed change
-    rate x staleness). The events table stands in for fetch history:
-    page_id = user_id % 997, one row per past fetch, changed iff
-    event_id % 3 = 0 (deterministic stand-in for a content-hash diff).
-    change_rate_milli = 1000 * n_changed / n_fetches (integer),
-    staleness_sec = now - last fetch (now = max ts over the table),
-    priority = staleness_sec * change_rate_milli / 1000 — all integer
-    fixed-point so the oracle hash-matches exactly.
-
-    Scale shape: ONE groupBy(page_id) with map-side partial aggregation
-    (count/sum/max all combine) + a broadcast single-row join for `now`;
-    at 10^10 fetch records this is the canonical partial-agg shuffle,
-    no skew key (page_id is near-uniform)."""
-    ev = load(spark, sf, "events")
-    hist = ev.select(
-        (F.col("user_id") % 997).alias("page_id"),
-        F.col("ts").cast("timestamp").cast("long").alias("ts_sec"),
-        F.when(F.col("event_id") % 3 == 0, F.lit(1)).otherwise(F.lit(0)).alias("chg"),
-    )
-    agg = hist.groupBy("page_id").agg(
-        F.count("*").alias("n_fetches"),
-        F.sum("chg").cast("long").alias("n_changed"),
-        F.max("ts_sec").alias("last_sec"),
-    )
-    now = hist.agg(F.max("ts_sec").alias("now_sec"))
-    return (
-        agg.crossJoin(F.broadcast(now))
-        .withColumn("change_rate_milli", F.expr("(1000 * n_changed) DIV n_fetches"))
-        .withColumn("staleness_sec", F.expr("now_sec - last_sec"))
-        .select(
-            "page_id",
-            "n_fetches",
-            "n_changed",
-            "change_rate_milli",
-            "staleness_sec",
-            F.expr("(staleness_sec * change_rate_milli) DIV 1000").alias("priority"),
-        )
-    )
-
-
-_RECRAWL_SQL = """
-WITH hist AS (
-  SELECT user_id % 997 AS page_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_sec,
-         CASE WHEN event_id % 3 = 0 THEN 1 ELSE 0 END AS chg
-  FROM events
-), agg AS (
-  SELECT page_id, count(*) AS n_fetches, CAST(sum(chg) AS BIGINT) AS n_changed,
-         max(ts_sec) AS last_sec
-  FROM hist GROUP BY page_id
-), now_row AS (SELECT max(ts_sec) AS now_sec FROM hist)
-SELECT page_id, n_fetches, n_changed,
-       (1000 * n_changed) // n_fetches AS change_rate_milli,
-       now_sec - last_sec AS staleness_sec,
-       ((now_sec - last_sec) * ((1000 * n_changed) // n_fetches)) // 1000 AS priority
-FROM agg, now_row"""
-
-
-# ---------------------------------------------------------------------------
-# rendezvous (highest-random-weight) host sharding
-# ---------------------------------------------------------------------------
-
-_HRW_SHARDS = 8  # base shard count; the query also assigns at 9 to show movement
-
-
-def q_host_shards(spark: SparkSession, sf: str) -> DataFrame:
-    """Rendezvous/HRW sharding of hosts to fetcher shards (engine-new:
-    the scale path for running MANY politeness schedulers — each host is
-    owned by exactly one shard, chosen coordination-free as
-    argmax_w md5(host || '#' || w)). The query assigns every host at
-    W=8 and W=9 shards; HRW's minimal-movement property means a host
-    may move ONLY to the newly added shard 8, which the pytest asserts
-    and the `moved` column exposes (expected fraction ~1/9).
-
-    Scale shape: hosts x W is a map-side explode (W is a constant), one
-    groupBy(host) max — no join, no skew; at 10^8 hosts this is a single
-    partial-agg shuffle."""
-    docs = load(spark, sf, "documents")
-    hosts = docs.select(
-        F.concat(F.lit("h"), (F.col("doc_id") % 50).cast("string"), F.lit(".example.org")).alias(
-            "host"
-        )
-    ).distinct()
-    w = _HRW_SHARDS
-    weighted = hosts.select(
-        "host",
-        F.explode(F.expr(f"sequence(0, {w})")).alias("shard"),
-    ).withColumn("weight", F.md5(F.concat_ws("#", "host", "shard")))
-    agg = weighted.groupBy("host").agg(
-        F.max(
-            F.struct(
-                F.when(F.col("shard") < w, F.col("weight")).otherwise(F.lit("")).alias("wt"),
-                F.col("shard").cast("int").alias("s"),
-            )
-        )["s"].alias("shard8"),
-        F.max(F.struct(F.col("weight").alias("wt"), F.col("shard").cast("int").alias("s")))[
-            "s"
-        ].alias("shard9"),
-    )
-    return agg.select("host", "shard8", "shard9", (F.col("shard8") != F.col("shard9")).alias("moved"))
-
-
-_HRW_SQL = f"""
-WITH hosts AS (
-  SELECT DISTINCT 'h' || CAST(doc_id % 50 AS VARCHAR) || '.example.org' AS host
-  FROM documents
-), weighted AS (
-  SELECT host, shard, md5(host || '#' || CAST(shard AS VARCHAR)) AS weight
-  FROM hosts, (SELECT unnest(generate_series(0, {_HRW_SHARDS})) AS shard) ws
-), agg AS (
-  SELECT host,
-         CAST(arg_max(shard, CASE WHEN shard < {_HRW_SHARDS} THEN weight ELSE '' END) AS INT) AS shard8,
-         CAST(arg_max(shard, weight) AS INT) AS shard9
-  FROM weighted GROUP BY host
-)
-SELECT host, shard8, shard9, shard8 <> shard9 AS moved FROM agg"""
-
-
-# ---------------------------------------------------------------------------
-# anchor-text aggregation
-# ---------------------------------------------------------------------------
-
-_ANCHOR_OUT_DEG = 3
-
-
-def q_anchor_agg(spark: SparkSession, sf: str) -> DataFrame:
-    """Anchor-text aggregation over the link graph (the classic indexing
-    signal: what do OTHER pages call this page?). Deterministic edge set
-    shared with q_link_rank (dst = (src*31+k) % n, k=1..3) carrying an
-    anchor label 'a'||((src+k)%20). Per target: in-degree, distinct
-    anchor count, and the DOMINANT anchor (highest count, ties broken by
-    anchor string — deterministic).
-
-    Scale shape: one groupBy(dst, anchor) with map-side combine collapses
-    the edge list to at most 20 rows per target BEFORE the per-target
-    window; the window then partitions by dst (no global sort). The
-    (dst, anchor) aggregate is persisted once and feeds both the window
-    and the per-target rollup."""
-    docs = load(spark, sf, "documents")
-    n = docs.count()
-    edges = docs.select(
-        F.col("doc_id").alias("src"),
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, {_ANCHOR_OUT_DEG}),"
-                f" k -> named_struct('dst', CAST((doc_id * 31 + k) % {n} AS BIGINT),"
-                f" 'anchor', concat('a', CAST((doc_id + k) % 20 AS STRING))))"
-            )
-        ).alias("e"),
-    ).select(F.col("e.dst").alias("dst"), F.col("e.anchor").alias("anchor"))
-    per_anchor = _barrier(edges.groupBy("dst", "anchor").agg(F.count("*").alias("cnt")))
-    win = Window.partitionBy("dst").orderBy(F.desc("cnt"), F.asc("anchor"))
-    top = (
-        per_anchor.withColumn("rk", F.row_number().over(win))
-        .filter(F.col("rk") == 1)
-        .select("dst", F.col("anchor").alias("top_anchor"), F.col("cnt").alias("top_anchor_cnt"))
-    )
-    roll = per_anchor.groupBy("dst").agg(
-        F.sum("cnt").alias("in_degree"), F.count("*").alias("n_anchors")
-    )
-    return roll.join(top, "dst").select(
-        F.col("dst").alias("doc_id"), "in_degree", "n_anchors", "top_anchor", "top_anchor_cnt"
-    )
-
-
-_ANCHOR_SQL = f"""
-WITH n_docs AS (SELECT count(*) AS n FROM documents),
-edges AS (
-  SELECT (doc_id * 31 + k) % (SELECT n FROM n_docs) AS dst,
-         'a' || CAST((doc_id + k) % 20 AS VARCHAR) AS anchor
-  FROM documents, (SELECT unnest([1, 2, 3]) AS k) ks
-), per_anchor AS (
-  SELECT dst, anchor, count(*) AS cnt FROM edges GROUP BY dst, anchor
-), top AS (
-  SELECT dst, anchor AS top_anchor, cnt AS top_anchor_cnt,
-         row_number() OVER (PARTITION BY dst ORDER BY cnt DESC, anchor ASC) AS rk
-  FROM per_anchor QUALIFY rk = 1
-), roll AS (
-  SELECT dst, CAST(sum(cnt) AS BIGINT) AS in_degree, count(*) AS n_anchors
-  FROM per_anchor GROUP BY dst
-)
-SELECT roll.dst AS doc_id, in_degree, n_anchors, top_anchor, top_anchor_cnt
-FROM roll JOIN top ON roll.dst = top.dst"""
 
 
 # ---------------------------------------------------------------------------
@@ -450,11 +246,11 @@ def q_dedup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     # pair table to the state store between the two phases anyway.
     verts = verts.localCheckpoint()
     edges = edges.localCheckpoint()
-    lab = _barrier(_label_propagate(verts, edges))
+    lab = query_barrier(_label_propagate(verts, edges))
     sized_reps = sizes.select(F.col("doc_id").alias("rep_id"))
     with_sh = members.join(sized_reps, "rep_id", "left_semi")
     no_sh = members.join(sized_reps, "rep_id", "left_anti")
-    doc_lab = _barrier(
+    doc_lab = query_barrier(
         with_sh.join(lab, with_sh.rep_id == lab.v)
         .select("doc_id", F.col("lab").alias("cluster_rep"))
         .unionByName(no_sh.select("doc_id", F.col("doc_id").alias("cluster_rep")))
@@ -523,123 +319,6 @@ FROM doc_lab JOIN csize ON doc_lab.cluster_rep = csize.cluster_rep"""
 
 
 # ---------------------------------------------------------------------------
-# tf-idf indexing signal (integer-surrogate idf)
-# ---------------------------------------------------------------------------
-
-_TFIDF_K = 3
-
-
-def q_tfidf_topk(spark: SparkSession, sf: str) -> DataFrame:
-    """Top-k terms per document by tf-idf (the posting-list build + term
-    weighting a search index runs over the crawl corpus). idf uses the
-    integer surrogate (1000 * N) DIV df instead of a float log — same
-    ordering for fixed N, and integer fixed-point is the repo-wide rule
-    that makes the DuckDB oracle hash-match bit-for-bit (a float ln()
-    could differ in the last ulp between engines).
-
-    Scale shape: tokenize is map-only explode; tf is groupBy(doc, term)
-    with map-side combine (the classic indexing shuffle, key cardinality
-    = corpus postings); df aggregates the tf table by term (vocab-sized,
-    Zipf-skewed but combine-heavy); the df join back is hash on term
-    (broadcastable when the vocab fits); top-k per doc is a window
-    partitioned BY DOCUMENT — never a global sort."""
-    docs = load(spark, sf, "documents")
-    n = docs.count()
-    words = docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("term")
-    ).filter(F.col("term") != "")
-    tf = _barrier(
-        words.groupBy("doc_id", "term").agg(F.count("*").cast("long").alias("tf"))
-    )
-    df_tbl = tf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-    scored = tf.join(df_tbl, "term").select(
-        "doc_id",
-        "term",
-        "tf",
-        "df",
-        (F.col("tf") * F.expr(f"(1000 * {n}) DIV df")).cast("long").alias("score"),
-    )
-    win = Window.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
-    return (
-        scored.withColumn("rk", F.row_number().over(win))
-        .filter(F.col("rk") <= _TFIDF_K)
-        .select("doc_id", "term", "tf", "df", "score", F.col("rk").cast("int").alias("rk"))
-    )
-
-
-_TFIDF_SQL = f"""
-WITH words AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-), tf AS (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-  FROM words WHERE term <> '' GROUP BY doc_id, term
-), df AS (
-  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-), scored AS (
-  SELECT t.doc_id, t.term, t.tf, df.df,
-         CAST(t.tf * ((1000 * (SELECT count(*) FROM documents)) // df.df) AS BIGINT) AS score
-  FROM tf t JOIN df ON t.term = df.term
-), ranked AS (
-  SELECT doc_id, term, tf, df, score,
-         CAST(row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term ASC) AS INT) AS rk
-  FROM scored
-)
-SELECT doc_id, term, tf, df, score, rk FROM ranked WHERE rk <= {_TFIDF_K}"""
-
-
-# ---------------------------------------------------------------------------
-# largest-remainder apportionment and exact integer sqrt (the curation
-# pipeline's domain-mix quotas)
-# ---------------------------------------------------------------------------
-
-
-def _largest_remainder(df: DataFrame, weight_col: str, tie_col: str, budget: int) -> DataFrame:
-    """Hamilton (largest-remainder) apportionment of ``budget`` across
-    the rows of ``df``: floor shares first, then one extra unit to the
-    rows with the largest remainders (ties broken by ``tie_col``, so the
-    result is deterministic). Adds columns _lr_base, _lr_rem, _lr_quota;
-    sum(_lr_quota) == budget exactly.
-
-    Scale shape: the totals/leftover side tables are single rows
-    (broadcast), and the remainder rank sorts only the df rows
-    themselves (domains, not corpus)."""
-    totals = df.agg(F.sum(weight_col).alias("_lr_total"))
-    based = _barrier(
-        df.crossJoin(F.broadcast(totals))
-        .withColumn("_lr_base", F.expr(f"({budget} * {weight_col}) DIV _lr_total"))
-        .withColumn("_lr_rem", F.expr(f"({budget} * {weight_col}) % _lr_total"))
-    )
-    leftover = based.agg((F.lit(budget) - F.sum("_lr_base")).alias("_lr_leftover"))
-    win = Window.orderBy(F.desc("_lr_rem"), F.asc(tie_col))
-    return (
-        based.crossJoin(F.broadcast(leftover))
-        .withColumn("_lr_rk", F.row_number().over(win))
-        .withColumn(
-            "_lr_quota",
-            (
-                F.col("_lr_base")
-                + F.when(F.col("_lr_rk") <= F.col("_lr_leftover"), 1).otherwise(0)
-            ).cast("long"),
-        )
-        .drop("_lr_total", "_lr_rk", "_lr_leftover")
-    )
-
-
-def _isqrt_col(c: str):
-    """Exact integer sqrt of a non-negative BIGINT column, cross-engine:
-    floor of the double sqrt, then a +/-1 correction against the exact
-    integer squares. Double sqrt is within 1 ulp below 2^52, so the
-    correction makes Spark and DuckDB agree bit-for-bit even where their
-    float rounding differs."""
-    s0 = F.expr(f"CAST(floor(sqrt(CAST({c} AS DOUBLE))) AS BIGINT)")
-    return (
-        s0
-        + F.when((s0 + 1) * (s0 + 1) <= F.col(c), 1).otherwise(0)
-        - F.when(s0 * s0 > F.col(c), 1).otherwise(0)
-    ).cast("long")
-
-
-# ---------------------------------------------------------------------------
 # crawl report rollup (grouping sets)
 # ---------------------------------------------------------------------------
 
@@ -675,213 +354,6 @@ SELECT lang, source,
        CAST(sum(n_chars) AS BIGINT) AS total_chars
 FROM documents
 GROUP BY ROLLUP(lang, source)"""
-
-
-# ---------------------------------------------------------------------------
-# exact fetch-latency quantiles (nearest-rank)
-# ---------------------------------------------------------------------------
-
-_QUANTILES = (50, 95, 99)
-
-
-def q_latency_quantiles(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-host fetch-latency p50/p95/p99 by the NEAREST-RANK method
-    (value at row ceil(q*n/100) of the sorted sample) — exact and
-    integer, so the oracle hash-matches; percentile_approx or
-    interpolated percentile would be engine-dependent. Latency fixture:
-    (event_id * 37) % 1000 + 1 ms, host = user_id % 50.
-
-    Scale shape: one window partitioned BY HOST (rank within host, never
-    a global sort) + one conditional aggregation per host. The rank
-    arithmetic needs only n per host, which rides the same window
-    (count over the partition) — a single shuffle on host total. At
-    10^10 fetch records per day production would swap the exact window
-    for a t-digest; this operator is the exact-verification twin."""
-    ev = load(spark, sf, "events")
-    lat = ev.select(
-        (F.col("user_id") % 50).alias("host"),
-        ((F.col("event_id") * 37) % 1000 + 1).alias("latency_ms"),
-        "event_id",
-    )
-    w = Window.partitionBy("host").orderBy("latency_ms", "event_id")
-    ranked = lat.select(
-        "host",
-        "latency_ms",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(Window.partitionBy("host")).alias("n"),
-    )
-    # nearest-rank with integer ceil: rn == (n*q + 99) DIV 100
-    aggs = [F.count("*").cast("long").alias("n_fetches")] + [
-        F.max(F.when(F.expr(f"rn = (n * {q} + 99) DIV 100"), F.col("latency_ms"))).alias(f"p{q}")
-        for q in _QUANTILES
-    ]
-    return ranked.groupBy("host").agg(*aggs)
-
-
-_QUANTILE_SQL = f"""
-WITH lat AS (
-  SELECT user_id % 50 AS host, (event_id * 37) % 1000 + 1 AS latency_ms, event_id
-  FROM events
-), ranked AS (
-  SELECT host, latency_ms,
-         row_number() OVER (PARTITION BY host ORDER BY latency_ms, event_id) AS rn,
-         count(*) OVER (PARTITION BY host) AS n
-  FROM lat
-)
-SELECT host, CAST(count(*) AS BIGINT) AS n_fetches,
-       {", ".join(f"max(CASE WHEN rn = (n * {q} + 99) // 100 THEN latency_ms END) AS p{q}" for q in _QUANTILES)}
-FROM ranked GROUP BY host"""
-
-
-# ---------------------------------------------------------------------------
-# deterministic count-min sketch (heavy hitters)
-# ---------------------------------------------------------------------------
-
-_CMS_D = 4  # hash rows
-_CMS_W = 256  # counters per row
-
-
-def q_cms_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
-    """Heavy-hitter host detection via a DETERMINISTIC count-min sketch
-    (Cormode & Muthukrishnan 2005) — the fixed-size summary a 100 TB
-    frontier uses to spot hot hosts without a full groupBy of the raw
-    URL stream. d=4 hash rows x w=256 counters; row hashes are
-    independent md5 slices (hex chars [1+4r, 4+4r) of md5(key), mod w),
-    so the DuckDB oracle reproduces every counter bit-for-bit and even
-    the APPROXIMATE estimates hash-match. Keys: 40 URLs per document
-    spread over 997 hosts, plus a planted hot host (key 'k0') hit once
-    per document — ~25x the background rate. Output per probed key:
-    exact count, CMS estimate (min over the d rows), and the
-    overestimate in milli — CMS never underestimates (pinned in pytest)
-    and the planted heavy hitter's estimate is near-exact.
-
-    Scale shape: the sketch build is groupBy(row, bucket) with map-side
-    combine — at most d*w = 1024 rows cross the wire regardless of input
-    size; probes join the d*w table broadcast-style. The exact counts
-    alongside are the small-scale cross-check only."""
-    docs = load(spark, sf, "documents")
-    keys = docs.select(
-        F.explode(F.expr("sequence(1, 40)")).alias("j"), "doc_id"
-    ).select(
-        F.concat(
-            F.lit("k"),
-            F.when(F.col("j") == 1, F.lit(0)).otherwise(
-                (F.col("doc_id") * 7919 + F.col("j") * 104729) % 997
-            ).cast("string"),
-        ).alias("key")
-    )
-    rows_exp = keys.select(
-        "key", F.explode(F.expr(f"sequence(0, {_CMS_D - 1})")).alias("r")
-    ).select(
-        "key",
-        "r",
-        (
-            F.conv(F.expr("substring(md5(key), 2 + 4 * r, 4)"), 16, 10).cast("long")
-            % _CMS_W
-        ).alias("bucket"),
-    )
-    sketch = _barrier(
-        rows_exp.groupBy("r", "bucket").agg(F.count("*").cast("long").alias("cnt"))
-    )
-    exact = keys.groupBy("key").agg(F.count("*").cast("long").alias("exact_cnt"))
-    # probe the planted hot key plus a deterministic background slice
-    probes = exact.filter(
-        (F.col("key") == "k0") | (F.expr("CAST(substring(key, 2, 10) AS BIGINT) % 25 = 1"))
-    )
-    probe_cells = probes.select(
-        "key",
-        "exact_cnt",
-        F.explode(F.expr(f"sequence(0, {_CMS_D - 1})")).alias("r"),
-    ).select(
-        "key",
-        "exact_cnt",
-        "r",
-        (
-            F.conv(F.expr("substring(md5(key), 2 + 4 * r, 4)"), 16, 10).cast("long")
-            % _CMS_W
-        ).alias("bucket"),
-    )
-    est = (
-        probe_cells.join(F.broadcast(sketch), ["r", "bucket"])
-        .groupBy("key", "exact_cnt")
-        .agg(F.min("cnt").alias("cms_estimate"))
-    )
-    return est.select(
-        "key",
-        "exact_cnt",
-        "cms_estimate",
-        F.expr("(1000 * (cms_estimate - exact_cnt)) DIV exact_cnt").alias("over_milli"),
-    )
-
-
-_CMS_SQL = f"""
-WITH keys AS (
-  SELECT 'k' || CAST(CASE WHEN j = 1 THEN 0
-                          ELSE (doc_id * 7919 + j * 104729) % 997 END AS VARCHAR) AS key
-  FROM documents, (SELECT unnest(generate_series(1, 40)) AS j) js
-), cells AS (
-  SELECT key, r,
-         CAST(concat('0x', substring(md5(key), 2 + 4 * r, 4)) AS BIGINT) % {_CMS_W} AS bucket
-  FROM keys, (SELECT unnest(generate_series(0, {_CMS_D - 1})) AS r) rs
-), sketch AS (
-  SELECT r, bucket, CAST(count(*) AS BIGINT) AS cnt FROM cells GROUP BY r, bucket
-), exact AS (
-  SELECT key, CAST(count(*) AS BIGINT) AS exact_cnt FROM keys GROUP BY key
-), probes AS (
-  SELECT key, exact_cnt FROM exact
-  WHERE key = 'k0' OR CAST(substring(key, 2, 10) AS BIGINT) % 25 = 1
-), probe_cells AS (
-  SELECT key, exact_cnt, r,
-         CAST(concat('0x', substring(md5(key), 2 + 4 * r, 4)) AS BIGINT) % {_CMS_W} AS bucket
-  FROM probes, (SELECT unnest(generate_series(0, {_CMS_D - 1})) AS r) rs
-), est AS (
-  SELECT key, exact_cnt, min(cnt) AS cms_estimate
-  FROM probe_cells JOIN sketch USING (r, bucket)
-  GROUP BY key, exact_cnt
-)
-SELECT key, exact_cnt, cms_estimate,
-       (1000 * (cms_estimate - exact_cnt)) // exact_cnt AS over_milli
-FROM est"""
-
-
-# ---------------------------------------------------------------------------
-# training-sequence packing (concatenate-and-chunk)
-# ---------------------------------------------------------------------------
-
-_PACK_WINDOW = 512  # context-window length in tokens
-
-
-def token_pack_frame(toks: DataFrame) -> DataFrame:
-    """GPT-style sequence packing over a (doc_id, lang, tokens) frame:
-    documents are concatenated in doc_id order per language shard and
-    cut into _PACK_WINDOW-token context windows. Per document: its
-    stream offset, the first/last window it lands in, and whether it
-    crosses a window boundary. pipeline.curate_corpus chains it after
-    the mix.
-
-    Scale shape: the prefix sum is a window partitioned BY SHARD with an
-    explicit rows frame — never a global single-task cumsum; everything
-    else is map-only integer arithmetic."""
-    w = (
-        Window.partitionBy("lang")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    L = _PACK_WINDOW
-    return (
-        toks.withColumn("offset", F.sum("tokens").over(w) - F.col("tokens"))
-        .withColumn("chunk_first", F.expr(f"offset DIV {L}"))
-        .withColumn("chunk_last", F.expr(f"(offset + tokens - 1) DIV {L}"))
-        .select(
-            "doc_id",
-            "lang",
-            "tokens",
-            "offset",
-            "chunk_first",
-            "chunk_last",
-            (F.col("chunk_last") > F.col("chunk_first")).alias("crosses_boundary"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1008,71 +480,6 @@ SELECT host, n_labels,
        array_to_string(string_split(host, '.')[n_labels - suf_k + 1:], '.') AS public_suffix,
        array_to_string(string_split(host, '.')[n_labels - suf_k:], '.') AS registrable
 FROM with_k"""
-
-
-# ---------------------------------------------------------------------------
-# incremental crawl diff (change detection between two crawl rounds)
-# ---------------------------------------------------------------------------
-
-
-def q_change_detect(spark: SparkSession, sf: str) -> DataFrame:
-    """Incremental crawl diff: classify every URL across two crawl
-    rounds as added / deleted / changed / unchanged by content
-    fingerprint (the input to recrawl scheduling and index
-    invalidation; the reference has no second-crawl concept at all —
-    engine-new). Two deterministic rounds derived from documents:
-    round A (previous) omits doc_id % 10 == 7 (those become "added"),
-    round B (current) omits doc_id % 10 == 3 ("deleted"), and
-    doc_id % 5 == 0 pages changed content in B (disjoint from both
-    omission classes, so every status appears at every SF). The
-    fingerprint is md5(text) — the repo-wide cross-engine hash.
-
-    Scale shape: ONE full-outer hash join co-partitioned on the url
-    key; both sides hash-partition on url_id so at 10^10 URLs this is
-    the canonical snapshot-diff shuffle, no skew key (url_id is
-    unique per side), everything else map-only."""
-    docs = load(spark, sf, "documents")
-    prev = docs.filter((F.col("doc_id") % 10) != 7).select(
-        F.col("doc_id").alias("url_id"), F.md5("text").alias("fp_prev")
-    )
-    cur = docs.filter((F.col("doc_id") % 10) != 3).select(
-        F.col("doc_id").alias("url_id"),
-        F.md5(
-            F.when(
-                (F.col("doc_id") % 5) == 0, F.concat(F.col("text"), F.lit(" v2"))
-            ).otherwise(F.col("text"))
-        ).alias("fp_cur"),
-    )
-    j = prev.alias("p").join(
-        cur.alias("c"), F.col("p.url_id") == F.col("c.url_id"), "full_outer"
-    )
-    return j.select(
-        F.coalesce(F.col("p.url_id"), F.col("c.url_id")).alias("url_id"),
-        "fp_prev",
-        "fp_cur",
-        F.when(F.col("p.url_id").isNull(), F.lit("added"))
-        .when(F.col("c.url_id").isNull(), F.lit("deleted"))
-        .when(F.col("fp_prev") != F.col("fp_cur"), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-        .alias("status"),
-    )
-
-
-_CHANGE_SQL = """
-WITH prev AS (
-  SELECT doc_id AS url_id, md5(text) AS fp_prev
-  FROM documents WHERE doc_id % 10 <> 7
-), cur AS (
-  SELECT doc_id AS url_id,
-         md5(CASE WHEN doc_id % 5 = 0 THEN text || ' v2' ELSE text END) AS fp_cur
-  FROM documents WHERE doc_id % 10 <> 3
-)
-SELECT coalesce(p.url_id, c.url_id) AS url_id, fp_prev, fp_cur,
-       CASE WHEN p.url_id IS NULL THEN 'added'
-            WHEN c.url_id IS NULL THEN 'deleted'
-            WHEN fp_prev <> fp_cur THEN 'changed'
-            ELSE 'unchanged' END AS status
-FROM prev p FULL OUTER JOIN cur c ON p.url_id = c.url_id"""
 
 
 # ---------------------------------------------------------------------------
@@ -1322,7 +729,7 @@ def q_host_graph(spark: SparkSession, sf: str) -> DataFrame:
             F.array(*[((F.col("doc_id") * 31 + F.lit(k)) % n) for k in range(1, 4)])
         ).alias("dst"),
     ).select("src_host", (F.col("dst") % 50).alias("dst_host"))
-    hg = _barrier(
+    hg = query_barrier(
         edges.groupBy("src_host", "dst_host").agg(F.count("*").cast("long").alias("weight"))
     )
     # hg is unique on the pair (it is the groupBy output), so the
@@ -1515,57 +922,11 @@ def _bpe_oracle_sql(sf_dir: str = "/root/testdata/sf0.01") -> str:
     )
 
 
-# ---------------------------------------------------------------------------
-# training-shard shuffle (pack -> shuffle -> shard)
-# ---------------------------------------------------------------------------
-
-_SHARD_SHUF_N = 8         # training shards (production: O(10^3-10^4) files)
-_SHARD_SHUF_SALT = "epoch0"  # new salt per epoch = a fresh permutation
-
-
-def shard_shuffle_frame(toks: DataFrame, n_shards: int = _SHARD_SHUF_N) -> DataFrame:
-    """Deterministic hash deal of a (doc_id, tokens) frame into
-    ``n_shards`` training shards: md5(salt#doc_id) picks the shard and
-    the order inside it, so the permutation is reproducible and a new
-    salt per epoch reshuffles. Per document: shard_id, 1-based pos, and
-    shard_offset, the running token prefix sum a loader seeks by.
-    pipeline.curate_corpus ends with it."""
-    hashed = toks.withColumn(
-        "hv",
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws("#", F.lit(_SHARD_SHUF_SALT), F.col("doc_id").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long"),
-    ).withColumn("shard_id", (F.col("hv") % n_shards).cast("long"))
-    w = Window.partitionBy("shard_id").orderBy("hv", "doc_id")
-    wsum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return (
-        hashed.withColumn("pos", F.row_number().over(w).cast("long"))
-        .withColumn(
-            "shard_offset",
-            (F.sum("tokens").over(wsum) - F.col("tokens")).cast("long"),
-        )
-        .select("doc_id", "shard_id", "pos", "tokens", "shard_offset")
-    )
-
-
 SCALE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "trap_detect": q_trap_detect,
-    "recrawl_priority": q_recrawl_priority,
-    "host_shards": q_host_shards,
-    "anchor_agg": q_anchor_agg,
     "dedup_clusters": q_dedup_clusters,
-    "tfidf_topk": q_tfidf_topk,
     "crawl_rollup": q_crawl_rollup,
-    "latency_quantiles": q_latency_quantiles,
-    "cms_heavy_hitters": q_cms_heavy_hitters,
     "registrable_domain": q_registrable_domain,
-    "change_detect": q_change_detect,
     "hits_scores": q_hits_scores,
     "sitemap_gap": q_sitemap_gap,
     "host_graph": q_host_graph,
@@ -1574,16 +935,9 @@ SCALE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 
 SCALE_ORACLES: dict[str, str] = {
     "trap_detect": _TRAP_SQL,
-    "recrawl_priority": _RECRAWL_SQL,
-    "host_shards": _HRW_SQL,
-    "anchor_agg": _ANCHOR_SQL,
     "dedup_clusters": _dedup_clusters_sql(),
-    "tfidf_topk": _TFIDF_SQL,
     "crawl_rollup": _ROLLUP_SQL,
-    "latency_quantiles": _QUANTILE_SQL,
-    "cms_heavy_hitters": _CMS_SQL,
     "registrable_domain": _registrable_sql(),
-    "change_detect": _CHANGE_SQL,
     "hits_scores": _hits_sql(),
     "sitemap_gap": _SITEMAP_GAP_SQL,
     "host_graph": _HOST_GRAPH_SQL,

@@ -23,7 +23,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries import _barrier, load
+from .queries import load, query_barrier
 
 __all__ = [
     "SEARCH_QUERIES",
@@ -31,7 +31,6 @@ __all__ = [
     "strip_boilerplate",
     "repeated_spans",
     "dsir_score",
-    "phrase_match",
 ]
 
 
@@ -82,7 +81,7 @@ def q_bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     words = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("term")
     ).filter(F.col("term") != "")
-    tf = _barrier(
+    tf = query_barrier(
         words.groupBy("doc_id", "term").agg(F.count("*").cast("long").alias("tf"))
     )
     # avgdl from the barriered tf table — a words.count() here would
@@ -215,7 +214,7 @@ def q_host_similarity(spark: SparkSession, sf: str) -> DataFrame:
             F.md5(F.col("text")).alias("fp"),
         )
     )
-    pages = _barrier(pages.distinct())
+    pages = query_barrier(pages.distinct())
     slots = pages.select(
         "host",
         F.explode(F.expr(f"sequence(0, {_HSIM_SLOTS - 1})")).alias("slot"),
@@ -227,7 +226,7 @@ def q_host_similarity(spark: SparkSession, sf: str) -> DataFrame:
             F.concat(F.lit("hs"), F.col("slot").cast("string"), F.lit(":"), F.col("fp"))
         ).alias("hv"),
     )
-    sig = _barrier(
+    sig = query_barrier(
         slots.groupBy("host", "slot").agg(F.min("hv").cast("long").alias("sig"))
     )
     bands = sig.withColumn("band", F.expr(f"slot DIV {_HSIM_BAND_ROWS}")).groupBy(
@@ -261,7 +260,7 @@ def q_host_similarity(spark: SparkSession, sf: str) -> DataFrame:
     )
     # est forks into the inter join AND the final select — barrier it so
     # the band self-join + slot-match pipeline runs once, not per branch
-    est = _barrier(
+    est = query_barrier(
         cand.join(sig, cand.host_a == sig.host)
         .join(s2, (F.col("sh") == cand.host_b) & (F.col("ss") == F.col("slot")))
         .groupBy("host_a", "host_b", "n_common_bands")
@@ -540,7 +539,7 @@ def _bp_marked(corpus: DataFrame, carry_cols: tuple = ()) -> DataFrame:
             )
         ).alias("pos", "block"),
     )
-    blocks = _barrier(blocks)
+    blocks = query_barrier(blocks)
     host_docs = corpus.groupBy("host").agg(F.count("*").cast("long").alias("n_docs"))
     block_df = blocks.groupBy("host", "block").agg(
         F.countDistinct("doc_id").cast("long").alias("bdf")
@@ -650,7 +649,7 @@ def strip_boilerplate_text(
     and no document text crosses a shuffle; past the cap it falls back to
     the explode -> mark-join -> reassemble path. Outputs are identical in
     both modes (pinned in tests/test_queries_search.py)."""
-    if _bp_use_mapside(boiler := _barrier(_bp_boiler(corpus)), mode):
+    if _bp_use_mapside(boiler := query_barrier(_bp_boiler(corpus)), mode):
         return _bp_mapside(corpus, boiler, carry_cols).select(
             "doc_id",
             "host",
@@ -681,7 +680,7 @@ def strip_boilerplate(corpus: DataFrame, mode: str = "auto") -> DataFrame:
     """Per-host boilerplate stripping over any (doc_id, host, text)
     frame; see q_boilerplate_strip for the operator contract and
     strip_boilerplate_text for the delivery auto-mode (shared)."""
-    if _bp_use_mapside(boiler := _barrier(_bp_boiler(corpus)), mode):
+    if _bp_use_mapside(boiler := query_barrier(_bp_boiler(corpus)), mode):
         return _bp_mapside(corpus, boiler, ()).select(
             "doc_id",
             "host",
@@ -799,7 +798,7 @@ def q_phash_neardup(spark: SparkSession, sf: str) -> DataFrame:
             F.expr(f"phash ^ {_PHN_CLONE_XOR}").cast("long").alias("phash"),
         )
     )
-    corpus = _barrier(corpus)
+    corpus = query_barrier(corpus)
     bands = corpus.select(
         "media_ref",
         "phash",
@@ -921,7 +920,7 @@ def q_video_neardup(spark: SparkSession, sf: str) -> DataFrame:
             "sig",
         )
     )
-    sigs = _barrier(corpus.select("media_ref", "sig").distinct())
+    sigs = query_barrier(corpus.select("media_ref", "sig").distinct())
     sizes = sigs.groupBy("media_ref").agg(F.count("*").cast("long").alias("sz"))
     s2 = sigs.select(F.col("media_ref").alias("ref_b"), F.col("sig").alias("sig_b"))
     cand = (
@@ -1043,7 +1042,7 @@ def q_audio_neardup(spark: SparkSession, sf: str) -> DataFrame:
             "sig",
         )
     )
-    sigs = _barrier(corpus.select("media_ref", "sig").distinct())
+    sigs = query_barrier(corpus.select("media_ref", "sig").distinct())
     sizes = sigs.groupBy("media_ref").agg(F.count("*").cast("long").alias("sz"))
     s2 = sigs.select(F.col("media_ref").alias("ref_b"), F.col("sig").alias("sig_b"))
     cand = (
@@ -1143,7 +1142,7 @@ def q_curation_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     shuffle an exact-dedup groupBy needs). The stripped table forks
     into the rank and the verdict join, so it sits behind a barrier."""
     corpus = _bp_corpus(load(spark, sf, "documents"))
-    stripped = _barrier(strip_boilerplate(corpus))
+    stripped = query_barrier(strip_boilerplate(corpus))
     quality = stripped.withColumn("quality_ok", F.col("n_kept_toks") >= _CUR_MIN_TOKS)
     dup_win = Window.partitionBy("kept_fp").orderBy("doc_id")
     ranked = (
@@ -1541,7 +1540,7 @@ def dup_span_exposure(docs: DataFrame, w: int = _SPAN_W) -> DataFrame:
         F.xxhash64(F.lit(1), F.col("span")).alias("fp_lo"),
         "doc_id",
     )
-    fps = _barrier(fps)
+    fps = query_barrier(fps)
     winners = (
         fps.groupBy("fp_hi", "fp_lo")
         .agg(F.countDistinct("doc_id").alias("nd"))
@@ -1656,7 +1655,7 @@ def dsir_score(docs: DataFrame) -> DataFrame:
             )
         ).alias("bigram"),
     )
-    occ = _barrier(
+    occ = query_barrier(
         grams.withColumn(
             "bucket",
             F.conv(F.substring(F.md5("bigram"), 1, 4), 16, 10).cast("long") % _DSIR_B,
@@ -1768,133 +1767,6 @@ def _bigram_pairs(toked: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# exact phrase search over positional postings
-# ---------------------------------------------------------------------------
-
-_PS_QUERIES = 4   # deterministic phrase-query count
-_PS_LEN = 3       # tokens per phrase
-_PS_MOD = 29      # query q's source doc: min doc_id with doc_id % 29 == q
-
-
-def q_phrase_search(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact phrase search over positional postings — the query class
-    BM25's bag-of-words scoring cannot answer ("spark sql engine" as a
-    contiguous phrase, not three independent terms). Positional
-    postings are (doc_id, pos, term); a phrase of L terms matches doc d
-    at anchor a iff for every phrase offset i the posting
-    (d, a + i, term_i) exists — evaluated with the classic anchor
-    intersection: join postings to the phrase terms, derive
-    anchor = pos - qpos, and a group (query, doc, anchor) covering all
-    L DISTINCT qpos values is a hit (count-distinct, so a phrase with a
-    repeated term cannot double-count one posting). Queries are derived
-    deterministically from the corpus: query q's phrase = the first L
-    tokens of the lowest-doc_id document with doc_id % 29 == q, so every
-    query is guaranteed at least its own source-doc match.
-
-    Scale shape: the posting build is the tokenize explode every text
-    query pays; the phrase-term table is TINY and BROADCAST, so the
-    corpus-sized posting stream is filtered to the queried terms
-    map-side — only postings of phrase terms reach the
-    (query, doc, anchor) combine, which is the posting-list
-    intersection cost a search engine pays by design, never a
-    corpus-wide shuffle. The query-derivation window partitions by
-    residue over the tiny candidate slice."""
-    docs = load(spark, sf, "documents")
-    toked = docs.select("doc_id", F.split(F.col("text"), " ").alias("toks")).filter(
-        F.size("toks") >= _PS_LEN
-    )
-    rsd = toked.withColumn("rsd", (F.col("doc_id") % _PS_MOD).cast("long")).filter(
-        F.col("rsd") < _PS_QUERIES
-    )
-    qwin = Window.partitionBy("rsd").orderBy("doc_id")
-    phrases = (
-        rsd.withColumn("rn", F.row_number().over(qwin))
-        .filter(F.col("rn") == 1)
-        .select(
-            F.col("rsd").alias("query_id"),
-            F.expr(f"concat_ws(' ', slice(toks, 1, {_PS_LEN}))").alias("phrase"),
-        )
-    )
-    return phrase_match(docs, phrases)
-
-
-def phrase_match(docs: DataFrame, phrases: DataFrame) -> DataFrame:
-    """Anchor-intersection phrase matching of a (query_id, phrase)
-    frame against a (doc_id, text) corpus; see q_phrase_search for the
-    operator contract and scale shape. Each phrase's NON-EMPTY token
-    count is its own match requirement, so phrases of different lengths
-    co-exist in one call; an empty phrase token (doubled space) keeps
-    its position but imposes no term constraint — a single-token
-    wildcard, matching the postings side's empty-token filter instead
-    of silently making the phrase unmatchable."""
-    qterms = phrases.select(
-        "query_id",
-        "phrase",
-        F.expr("size(filter(split(phrase, ' '), t -> t != ''))").alias("qlen"),
-        F.posexplode(F.split("phrase", " ")).alias("qpos", "term"),
-    ).filter(F.col("term") != "")
-    postings = (
-        docs.select("doc_id", F.posexplode(F.split("text", " ")).alias("pos", "term"))
-        .filter(F.col("term") != "")
-    )
-    cand = postings.join(F.broadcast(qterms), "term").select(
-        "query_id",
-        "phrase",
-        "qlen",
-        "doc_id",
-        (F.col("pos") - F.col("qpos")).cast("long").alias("anchor"),
-        "qpos",
-    )
-    anchors = (
-        cand.groupBy("query_id", "phrase", "qlen", "doc_id", "anchor")
-        .agg(F.countDistinct("qpos").alias("nq"))
-        .filter(F.col("nq") == F.col("qlen"))
-    )
-    return anchors.groupBy("query_id", "phrase", "doc_id").agg(
-        F.count("*").cast("long").alias("n_hits"),
-        F.min("anchor").cast("long").alias("first_pos"),
-    )
-
-
-_PHRASE_SQL = f"""
-WITH toked AS (
-  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-  WHERE len(string_split(text, ' ')) >= {_PS_LEN}
-), qdocs AS (
-  SELECT doc_id % {_PS_MOD} AS query_id, toks,
-         row_number() OVER (PARTITION BY doc_id % {_PS_MOD} ORDER BY doc_id) AS rn
-  FROM toked WHERE doc_id % {_PS_MOD} < {_PS_QUERIES}
-), qx AS (
-  SELECT query_id, array_to_string(toks[1:{_PS_LEN}], ' ') AS phrase,
-         len(list_filter(toks[1:{_PS_LEN}], t -> t <> '')) AS qlen,
-         unnest(list_transform(range(1, {_PS_LEN} + 1),
-           i -> {{'qpos': i - 1, 'term': toks[i]}})) AS z
-  FROM qdocs WHERE rn = 1
-), qterms AS (
-  SELECT CAST(query_id AS BIGINT) AS query_id, phrase, qlen,
-         CAST(z.qpos AS BIGINT) AS qpos, z.term AS term
-  FROM qx WHERE z.term <> ''
-), px AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(toks) + 1),
-           i -> {{'pos': i - 1, 'term': toks[i]}})) AS z
-  FROM toked
-), postings AS (
-  SELECT doc_id, CAST(z.pos AS BIGINT) AS pos, z.term AS term
-  FROM px WHERE z.term <> ''
-), cand AS (
-  SELECT q.query_id, q.phrase, q.qlen, p.doc_id, p.pos - q.qpos AS anchor, q.qpos
-  FROM postings p JOIN qterms q ON p.term = q.term
-), anchors AS (
-  SELECT query_id, phrase, qlen, doc_id, anchor, count(DISTINCT qpos) AS nq
-  FROM cand GROUP BY query_id, phrase, qlen, doc_id, anchor
-)
-SELECT query_id, phrase, doc_id, CAST(count(*) AS BIGINT) AS n_hits,
-       CAST(min(anchor) AS BIGINT) AS first_pos
-FROM anchors WHERE nq = qlen GROUP BY query_id, phrase, doc_id"""
-
-
-# ---------------------------------------------------------------------------
 # Good-Turing count-of-counts smoothing
 # ---------------------------------------------------------------------------
 
@@ -1937,7 +1809,7 @@ def goodturing_table(docs: DataFrame) -> DataFrame:
     counts = _bigram_pairs(toked).groupBy("a", "b").agg(
         F.count("*").cast("long").alias("r")
     )
-    cofc = _barrier(
+    cofc = query_barrier(
         counts.groupBy("r").agg(F.count("*").cast("long").alias("n_r"))
     )
     scalars = cofc.agg(
@@ -2028,7 +1900,6 @@ SEARCH_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "video_neardup": q_video_neardup,
     "dup_spans": q_dup_spans,
     "dsir_weights": q_dsir_weights,
-    "phrase_search": q_phrase_search,
     "audio_neardup": q_audio_neardup,
     "ngram_goodturing": q_ngram_goodturing,
 }
@@ -2044,7 +1915,6 @@ SEARCH_ORACLES: dict[str, str] = {
     "video_neardup": _video_neardup_sql(),
     "dup_spans": _DUP_SPANS_SQL,
     "dsir_weights": _DSIR_SQL,
-    "phrase_search": _PHRASE_SQL,
     "audio_neardup": _audio_neardup_sql(),
     "ngram_goodturing": _GT_SQL,
 }

@@ -632,12 +632,12 @@ def q_crawl_saturation(spark: SparkSession, sf_dir: str) -> DataFrame:
     that max_pages-row frame — never over spans."""
     from pyspark.sql import Window
 
-    from .queries import _barrier
+    from .queries import query_barrier
 
     eng = fixture_engine(spark)
     # barrier: per-depth counts and per-span first-buckets both consume
     # the exploded spans — one state-store scan, not two
-    spans = _barrier(
+    spans = query_barrier(
         eng.docs()
         .select("seq", F.explode("spans").alias("s"))
         .filter(F.col("s.kind") == "text")

@@ -54,7 +54,7 @@ def test_load_bearing_queries_inside_cap():
 def test_every_query_registered_and_oracled():
     q = entry.queries()
     o = entry.oracle_sql()
-    assert len(q) >= 79
+    assert len(q) >= 71
     missing_oracles = [n for n in q if n not in o]
     assert not missing_oracles, missing_oracles
     dangling = [n for n in o if n not in q]

@@ -4,15 +4,21 @@ strip before dedup can catch anything, a near-dup that survives quality,
 a span-mosaic that only the exposure filter catches, a token budget that
 forces the mix to drop docs — and every boundary is checked against
 pure-Python recomputation (md5/hash order included), so the glue between
-the individually-proven operators is what this file pins."""
+the individually-proven operators is what this file pins. The pipeline's
+own arithmetic helpers (integer sqrt, sequence packing, the shard deal)
+are also checked here on their own, over the sf0.001 fixture corpus."""
 
 import hashlib
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from crawler_spark.pipeline import PIPELINE_STAGES, curate_corpus
+from crawler_spark.plans.inspect import formatted_plan
+
+SF = "/root/testdata/sf0.001"
 
 CHROME = "nav home about contact hosta"
 
@@ -182,3 +188,140 @@ def test_shard_shuffle_is_a_complete_deterministic_deal(stages):
             assert r["pos"] == pos0 + 1
             assert r["shard_offset"] == off
             off += r["tokens"]
+
+
+# ---------------------------------------------------------------------------
+# the pipeline's own helpers, over the sf0.001 fixture corpus
+# ---------------------------------------------------------------------------
+
+
+def _packed(spark):
+    """token_pack_frame over the SF corpus, chars/4 tokens (floor 1)."""
+    from crawler_spark.pipeline import token_pack_frame
+    from crawler_spark.queries import load
+
+    return token_pack_frame(
+        load(spark, SF, "documents").select(
+            "doc_id",
+            "lang",
+            F.greatest(F.expr("n_chars DIV 4"), F.lit(1)).cast("long").alias("tokens"),
+        )
+    )
+
+
+def test_token_pack_stream_is_contiguous_and_chunk_math_exact(spark):
+    from crawler_spark.pipeline import _PACK_WINDOW
+
+    rows = _packed(spark).collect()
+    by_lang = {}
+    for r in rows:
+        by_lang.setdefault(r["lang"], []).append(r)
+    docs = spark.read.parquet(f"{SF}/documents.parquet").collect()
+    assert len(rows) == len(docs)
+    chars = {d["doc_id"]: d["n_chars"] for d in docs}
+    for lang, rs in by_lang.items():
+        rs.sort(key=lambda r: r["doc_id"])
+        # contiguous concatenation: each doc starts where the previous ended
+        off = 0
+        for r in rs:
+            assert r["tokens"] == max(chars[r["doc_id"]] // 4, 1)
+            assert r["offset"] == off
+            off += r["tokens"]
+            assert r["chunk_first"] == r["offset"] // _PACK_WINDOW
+            assert r["chunk_last"] == (r["offset"] + r["tokens"] - 1) // _PACK_WINDOW
+            assert r["crosses_boundary"] == (r["chunk_last"] > r["chunk_first"])
+        # every window boundary inside the stream is crossed by exactly
+        # the docs that straddle it: total crossings = windows touched
+        # minus docs (each doc adds chunk_last-chunk_first extra windows)
+        crossings = sum(r["chunk_last"] - r["chunk_first"] for r in rs)
+        last = rs[-1]
+        n_windows = last["chunk_last"] + 1
+        total_tokens = sum(r["tokens"] for r in rs)
+        assert n_windows == (total_tokens + _PACK_WINDOW - 1) // _PACK_WINDOW
+        assert crossings <= n_windows - 1  # a boundary is crossed at most once
+
+
+def test_token_pack_window_partitions_by_shard(spark):
+    plan = formatted_plan(_packed(spark))
+    assert re.search(r"Window.*\[lang", plan, re.S), plan
+
+
+def test_shard_shuffle_is_a_seekable_permutation(spark):
+    """Every doc lands in exactly one shard; per-shard pos is contiguous
+    from 1; shard_offset is the running token prefix sum; and the
+    mapping is reproducible (same salt -> same permutation)."""
+    from collections import defaultdict
+
+    from crawler_spark.pipeline import _SHARD_SHUF_N, shard_shuffle_frame
+    from crawler_spark.queries import load
+
+    def deal():
+        toks = load(spark, SF, "documents").select(
+            "doc_id",
+            F.greatest(F.expr("n_chars DIV 4"), F.lit(1)).cast("long").alias("tokens"),
+        )
+        return shard_shuffle_frame(toks).collect()
+
+    rows = deal()
+    assert len({r["doc_id"] for r in rows}) == len(rows)
+    by_shard = defaultdict(list)
+    for r in rows:
+        by_shard[r["shard_id"]].append(r)
+    assert set(by_shard) <= set(range(_SHARD_SHUF_N))
+    for rs in by_shard.values():
+        rs.sort(key=lambda r: r["pos"])
+        assert [r["pos"] for r in rs] == list(range(1, len(rs) + 1))
+        off = 0
+        for r in rs:
+            assert r["shard_offset"] == off
+            off += r["tokens"]
+    again = {r["doc_id"]: (r["shard_id"], r["pos"]) for r in deal()}
+    assert again == {r["doc_id"]: (r["shard_id"], r["pos"]) for r in rows}
+
+
+# ---------------------------------------------------------------------------
+# exact integer sqrt (the curation pipeline's domain-mix weights)
+# ---------------------------------------------------------------------------
+
+
+def test_isqrt_col_is_exact_integer_sqrt(spark):
+    """The +/-1-corrected double sqrt must equal math.isqrt on perfect
+    squares, their neighbours, and big values near the double-precision
+    edge — the exactness the cross-engine hash depends on."""
+    from crawler_spark.pipeline import _isqrt_col
+
+    vals = [0, 1, 2, 3, 4, 8, 9, 10, 15, 16, 17, 24, 25, 26]
+    vals += [k * k + d for k in (10**3, 10**6, 2**26 - 1) for d in (-1, 0, 1)]
+    vals += [2**52 - 1, 10**15, 10**15 + 7]
+    frame = spark.createDataFrame([(v,) for v in vals], "v long")
+    got = {
+        r["v"]: r["s"]
+        for r in frame.select("v", _isqrt_col("v").alias("s")).collect()
+    }
+    assert got == {v: math.isqrt(v) for v in vals}
+
+
+# ---------------------------------------------------------------------------
+# module boundary
+# ---------------------------------------------------------------------------
+
+
+def test_pipeline_imports_no_private_names():
+    """The pipeline reaches the other crawler_spark modules only through
+    their public names; a `_`-prefixed import would tie it to a query
+    module's internals again."""
+    import ast
+
+    import crawler_spark.pipeline as pipeline
+
+    with open(pipeline.__file__) as fh:
+        tree = ast.parse(fh.read())
+    private = [
+        f"{node.module}.{alias.name}"
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom)
+        and (node.level > 0 or (node.module or "").startswith("crawler_spark"))
+        for alias in node.names
+        if alias.name.startswith("_")
+    ]
+    assert not private, private

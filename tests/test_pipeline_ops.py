@@ -152,7 +152,7 @@ def test_quality_filter_cascade_every_branch(spark):
     """One constructed doc per cascade outcome, including the two
     branches the synthetic corpus never triggers (non_english,
     repetitive), and first-failing-rule precedence."""
-    from crawler_spark.queries import quality_filter
+    from crawler_spark.pipeline import quality_filter
 
     accept = "the data is on a table and the rows are in a file for the scan with " + _words("v", 10)
     rows = [
@@ -185,7 +185,8 @@ def test_quality_filter_plan_is_shuffle_free(spark):
     A shuffle here would move the whole corpus for a value computable
     inside the scan partition."""
     from crawler_spark.plans.inspect import formatted_plan
-    from crawler_spark.queries import load, quality_filter
+    from crawler_spark.pipeline import quality_filter
+    from crawler_spark.queries import load
 
     plan = formatted_plan(quality_filter(load(spark, SF, "documents")))
     assert "Exchange" not in plan, plan

@@ -33,7 +33,6 @@ BNLJ_ALLOWED = {
     "cosine_topk",
     "dsir_weights",
     "hits_scores",
-    "recrawl_priority",
     "semdedup",
 }
 
@@ -48,14 +47,6 @@ PINNED_ON_PURPOSE = {
     "sitemap_roundtrip": "kernel is the sources.sitemap writer and reader",
     "video_frames": "kernel is operators.multimodal.video_frame_sample",
     "audio_stats": "kernel is operators.multimodal.audio_feature_stats",
-    "recrawl_priority": "tests pin the change-rate priority order and the broadcast now-row",
-    "host_shards": "tests pin rendezvous hashing's minimal movement when a shard is added",
-    "anchor_agg": "tests pin the dominant-anchor tie-break and the per-target window",
-    "tfidf_topk": "tests pin the integer-surrogate idf ranking against a pure-Python scorer",
-    "latency_quantiles": "tests pin exact nearest-rank quantiles in a per-host window",
-    "cms_heavy_hitters": "tests pin count-min's never-underestimate bound and its map-side sketch",
-    "change_detect": "tests pin the two-round diff statuses and its single join",
-    "phrase_search": "tests pin phrase_match's contiguity, repeated-term and empty-token rules",
 }
 
 

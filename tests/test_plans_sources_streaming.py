@@ -111,7 +111,8 @@ def test_text_repetition_plan_is_shuffle_free(spark):
     every bigram of a 100 TB corpus across the wire for a value
     computable inside the scan partition."""
     from crawler_spark.plans.inspect import formatted_plan
-    from crawler_spark.queries import load, text_stat_frame
+    from crawler_spark.pipeline import text_stat_frame
+    from crawler_spark.queries import load
 
     stats = text_stat_frame(load(spark, SF, "documents")).where(F.col("n_bigrams") > 0)
     plan = formatted_plan(stats)

@@ -2,24 +2,15 @@
 
 The driver gate (tools/selfcheck.py) already hash-checks every query
 against its DuckDB oracle; these tests pin the SEMANTIC invariants the
-hash can't express — rule precedence, the rendezvous minimal-movement
-property, dominant-anchor tie-breaking, label-propagation convergence,
-exact packing and apportionment arithmetic, longest-suffix matching —
-plus the plan shapes the 100 TB design requires.
+hash can't express — rule precedence, label-propagation convergence,
+longest-suffix matching — plus the plan shapes the 100 TB design
+requires.
 """
 
 import re
 
 from crawler_spark.plans.inspect import formatted_plan
-from crawler_spark.queries_scale import (
-    _HRW_SHARDS,
-    _TFIDF_K,
-    q_anchor_agg,
-    q_host_shards,
-    q_recrawl_priority,
-    q_tfidf_topk,
-    q_trap_detect,
-)
+from crawler_spark.queries_scale import q_trap_detect
 
 SF = "/root/testdata/sf0.001"
 
@@ -55,105 +46,6 @@ def test_trap_detect_plan_is_map_only(spark):
     """Per-URL decision — must not shuffle the frontier."""
     plan = formatted_plan(q_trap_detect(spark, SF))
     assert "Exchange" not in plan, plan
-
-
-# ---------------------------------------------------------------------------
-# adaptive recrawl priority
-# ---------------------------------------------------------------------------
-
-
-def test_recrawl_priority_semantics(spark):
-    rows = q_recrawl_priority(spark, SF).collect()
-    assert rows
-    for r in rows:
-        assert 0 <= r["n_changed"] <= r["n_fetches"]
-        assert r["change_rate_milli"] == (1000 * r["n_changed"]) // r["n_fetches"]
-        assert r["staleness_sec"] >= 0
-        assert r["priority"] == (r["staleness_sec"] * r["change_rate_milli"]) // 1000
-    # the most recently fetched page has zero staleness -> zero priority
-    freshest = min(rows, key=lambda r: r["staleness_sec"])
-    assert freshest["staleness_sec"] == 0 and freshest["priority"] == 0
-
-
-def test_recrawl_priority_broadcasts_now(spark):
-    """The single-row `now` side must broadcast, not shuffle the agg.
-    A broadcast-hinted crossJoin plans as BroadcastNestedLoopJoin over a
-    BroadcastExchange — assert the exchange and that no SortMergeJoin
-    sneaks in."""
-    plan = formatted_plan(q_recrawl_priority(spark, SF))
-    assert "BroadcastExchange" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-
-
-# ---------------------------------------------------------------------------
-# rendezvous sharding
-# ---------------------------------------------------------------------------
-
-
-def test_host_shards_minimal_movement(spark):
-    """HRW's defining property: when shard W is added, a host either
-    keeps its shard or moves TO the new shard — never between old
-    shards. Movement fraction concentrates around 1/(W+1)."""
-    rows = q_host_shards(spark, SF).collect()
-    assert len(rows) == 50
-    moved = [r for r in rows if r["moved"]]
-    for r in rows:
-        assert 0 <= r["shard8"] < _HRW_SHARDS
-        assert 0 <= r["shard9"] <= _HRW_SHARDS
-        if r["moved"]:
-            assert r["shard9"] == _HRW_SHARDS  # only ever to the new shard
-        else:
-            assert r["shard9"] == r["shard8"]
-    # E[moved] = 50/9 ~ 5.6; deterministic md5 weights, generous bound
-    assert 0 < len(moved) <= 20
-
-
-def test_host_shards_matches_pure_python_rendezvous(spark):
-    import hashlib
-
-    rows = {r["host"]: r for r in q_host_shards(spark, SF).collect()}
-    for host, r in rows.items():
-        weights = {
-            w: hashlib.md5(f"{host}#{w}".encode()).hexdigest() for w in range(_HRW_SHARDS + 1)
-        }
-        assert r["shard9"] == max(weights, key=weights.get)
-        assert r["shard8"] == max((w for w in weights if w < _HRW_SHARDS), key=weights.get)
-
-
-# ---------------------------------------------------------------------------
-# anchor-text aggregation
-# ---------------------------------------------------------------------------
-
-
-def test_anchor_agg_totals_and_tiebreak(spark):
-    rows = q_anchor_agg(spark, SF).collect()
-    n_docs = spark.read.parquet(f"{SF}/documents.parquet").count()
-    assert sum(r["in_degree"] for r in rows) == 3 * n_docs
-    for r in rows:
-        assert 1 <= r["top_anchor_cnt"] <= r["in_degree"]
-        assert r["n_anchors"] <= r["in_degree"]
-    # recompute dominant anchor per target in pure python
-    edges = {}
-    for d in range(n_docs):
-        for k in (1, 2, 3):
-            dst = (d * 31 + k) % n_docs
-            edges.setdefault(dst, []).append(f"a{(d + k) % 20}")
-    for r in rows:
-        anchors = edges[r["doc_id"]]
-        counts = {a: anchors.count(a) for a in set(anchors)}
-        best = min(
-            (a for a in counts if counts[a] == max(counts.values()))
-        )  # max count, min anchor string
-        assert r["top_anchor"] == best, (r, counts)
-        assert r["top_anchor_cnt"] == counts[best]
-
-
-def test_anchor_agg_window_partitions_by_target(spark):
-    """The dominant-anchor window must partition by dst — a global
-    window here would funnel the whole link graph through one task."""
-    plan = formatted_plan(q_anchor_agg(spark, SF))
-    assert "Window" in plan
-    assert re.search(r"Window.*\[dst", plan) or "partitionBy" not in plan, plan
 
 
 # ---------------------------------------------------------------------------
@@ -243,52 +135,6 @@ def test_dedup_components_hook_combines_map_side(spark):
 
 
 # ---------------------------------------------------------------------------
-# tf-idf top-k
-# ---------------------------------------------------------------------------
-
-
-def test_tfidf_topk_matches_pure_python(spark):
-    rows = q_tfidf_topk(spark, SF).collect()
-    docs = {
-        r["doc_id"]: r["text"]
-        for r in spark.read.parquet(f"{SF}/documents.parquet").collect()
-    }
-    n = len(docs)
-    # recompute df over the whole corpus
-    df = {}
-    tfs = {}
-    for d, text in docs.items():
-        counts = {}
-        for w in text.split(" "):
-            if w:
-                counts[w] = counts.get(w, 0) + 1
-        tfs[d] = counts
-        for w in counts:
-            df[w] = df.get(w, 0) + 1
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    assert set(by_doc) == set(docs)
-    for d, rs in by_doc.items():
-        scored = sorted(
-            ((tf * ((1000 * n) // df[w]), w) for w, tf in tfs[d].items()),
-            key=lambda x: (-x[0], x[1]),
-        )[:_TFIDF_K]
-        got = sorted(rs, key=lambda r: r["rk"])
-        assert [(r["score"], r["term"]) for r in got] == scored
-        for r in got:
-            assert r["tf"] == tfs[d][r["term"]] and r["df"] == df[r["term"]]
-
-
-def test_tfidf_topk_window_partitions_by_doc(spark):
-    plan = formatted_plan(q_tfidf_topk(spark, SF))
-    assert "Window" in plan
-    import re as _re
-
-    assert _re.search(r"row_number\(\).*partitionBy.*doc_id|Window.*\[doc_id", plan, _re.S), plan
-
-
-# ---------------------------------------------------------------------------
 # crawl report rollup
 # ---------------------------------------------------------------------------
 
@@ -322,193 +168,6 @@ def test_crawl_rollup_is_one_expand_one_aggregate(spark):
     assert "HashAggregate" in plan
     # exactly one shuffle (plus AQE wrappers): count exchanges
     assert plan.count("Exchange") <= 2, plan
-
-
-# ---------------------------------------------------------------------------
-# sequence packing
-# ---------------------------------------------------------------------------
-
-
-def _packed(spark):
-    """token_pack_frame over the SF corpus, chars/4 tokens (floor 1)."""
-    from pyspark.sql import functions as F
-
-    from crawler_spark.queries import load
-    from crawler_spark.queries_scale import token_pack_frame
-
-    return token_pack_frame(
-        load(spark, SF, "documents").select(
-            "doc_id",
-            "lang",
-            F.greatest(F.expr("n_chars DIV 4"), F.lit(1)).cast("long").alias("tokens"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# latency quantiles
-# ---------------------------------------------------------------------------
-
-
-def test_latency_quantiles_nearest_rank_exact(spark):
-    from crawler_spark.queries_scale import q_latency_quantiles
-
-    rows = {r["host"]: r for r in q_latency_quantiles(spark, SF).collect()}
-    ev = spark.read.parquet(f"{SF}/events.parquet").collect()
-    by_host = {}
-    for e in ev:
-        by_host.setdefault(e["user_id"] % 50, []).append((e["event_id"] * 37) % 1000 + 1)
-    assert set(rows) == set(by_host)
-    for h, lats in by_host.items():
-        lats.sort()
-        n = len(lats)
-        r = rows[h]
-        assert r["n_fetches"] == n
-        for q in (50, 95, 99):
-            assert r[f"p{q}"] == lats[(n * q + 99) // 100 - 1], (h, q)
-        assert r["p50"] <= r["p95"] <= r["p99"]
-
-
-def test_latency_quantiles_window_partitions_by_host(spark):
-    from crawler_spark.queries_scale import q_latency_quantiles
-
-    plan = formatted_plan(q_latency_quantiles(spark, SF))
-    assert re.search(r"Window.*\[host", plan, re.S), plan
-
-
-# ---------------------------------------------------------------------------
-# count-min sketch
-# ---------------------------------------------------------------------------
-
-
-def test_cms_never_underestimates_and_nails_the_hot_key(spark):
-    from crawler_spark.queries_scale import q_cms_heavy_hitters
-
-    rows = {r["key"]: r for r in q_cms_heavy_hitters(spark, SF).collect()}
-    assert "k0" in rows
-    n_docs = spark.read.parquet(f"{SF}/documents.parquet").count()
-    hot = rows["k0"]
-    # planted: one hit per doc (j=1) plus background collisions
-    assert hot["exact_cnt"] >= n_docs
-    for r in rows.values():
-        # the CMS structural guarantee
-        assert r["cms_estimate"] >= r["exact_cnt"]
-        assert r["over_milli"] == (1000 * (r["cms_estimate"] - r["exact_cnt"])) // r["exact_cnt"]
-    # the heavy hitter dominates the background noise floor, so its
-    # relative overestimate is small even at w=256
-    assert hot["over_milli"] <= 300, hot
-    # and it stands clear of every probed background key
-    background = [r for k, r in rows.items() if k != "k0"]
-    assert background
-    assert all(hot["cms_estimate"] > r["cms_estimate"] * 5 for r in background)
-
-
-def test_cms_sketch_is_bounded_before_shuffle(spark):
-    """The sketch build must partial-aggregate map-side: at most d*w
-    cells per partition cross the wire regardless of input size."""
-    from crawler_spark.queries_scale import q_cms_heavy_hitters
-
-    plan = formatted_plan(q_cms_heavy_hitters(spark, SF))
-    assert "partial_count" in plan, plan
-
-
-def test_cms_matches_pure_python_sketch(spark):
-    import hashlib
-
-    from crawler_spark.queries_scale import _CMS_D, _CMS_W, q_cms_heavy_hitters
-
-    n_docs = spark.read.parquet(f"{SF}/documents.parquet").count()
-    keys = []
-    for d in range(n_docs):
-        for j in range(1, 41):
-            keys.append("k0" if j == 1 else f"k{(d * 7919 + j * 104729) % 997}")
-
-    def cells(key):
-        h = hashlib.md5(key.encode()).hexdigest()
-        return [(r, int(h[1 + 4 * r : 5 + 4 * r], 16) % _CMS_W) for r in range(_CMS_D)]
-
-    sketch = {}
-    exact = {}
-    for k in keys:
-        exact[k] = exact.get(k, 0) + 1
-        for cell in cells(k):
-            sketch[cell] = sketch.get(cell, 0) + 1
-    rows = {r["key"]: r for r in q_cms_heavy_hitters(spark, SF).collect()}
-    for k, r in rows.items():
-        assert r["exact_cnt"] == exact[k]
-        assert r["cms_estimate"] == min(sketch[c] for c in cells(k))
-
-
-def test_token_pack_stream_is_contiguous_and_chunk_math_exact(spark):
-    from crawler_spark.queries_scale import _PACK_WINDOW
-
-    rows = _packed(spark).collect()
-    by_lang = {}
-    for r in rows:
-        by_lang.setdefault(r["lang"], []).append(r)
-    docs = spark.read.parquet(f"{SF}/documents.parquet").collect()
-    assert len(rows) == len(docs)
-    chars = {d["doc_id"]: d["n_chars"] for d in docs}
-    for lang, rs in by_lang.items():
-        rs.sort(key=lambda r: r["doc_id"])
-        # contiguous concatenation: each doc starts where the previous ended
-        off = 0
-        for r in rs:
-            assert r["tokens"] == max(chars[r["doc_id"]] // 4, 1)
-            assert r["offset"] == off
-            off += r["tokens"]
-            assert r["chunk_first"] == r["offset"] // _PACK_WINDOW
-            assert r["chunk_last"] == (r["offset"] + r["tokens"] - 1) // _PACK_WINDOW
-            assert r["crosses_boundary"] == (r["chunk_last"] > r["chunk_first"])
-        # every window boundary inside the stream is crossed by exactly
-        # the docs that straddle it: total crossings = windows touched
-        # minus docs (each doc adds chunk_last-chunk_first extra windows)
-        crossings = sum(r["chunk_last"] - r["chunk_first"] for r in rs)
-        last = rs[-1]
-        n_windows = last["chunk_last"] + 1
-        total_tokens = sum(r["tokens"] for r in rs)
-        assert n_windows == (total_tokens + _PACK_WINDOW - 1) // _PACK_WINDOW
-        assert crossings <= n_windows - 1  # a boundary is crossed at most once
-
-
-def test_token_pack_window_partitions_by_shard(spark):
-    plan = formatted_plan(_packed(spark))
-    assert re.search(r"Window.*\[lang", plan, re.S), plan
-
-
-def test_shard_shuffle_is_a_seekable_permutation(spark):
-    """Every doc lands in exactly one shard; per-shard pos is contiguous
-    from 1; shard_offset is the running token prefix sum; and the
-    mapping is reproducible (same salt -> same permutation)."""
-    from collections import defaultdict
-
-    from pyspark.sql import functions as F
-
-    from crawler_spark.queries import load
-    from crawler_spark.queries_scale import _SHARD_SHUF_N, shard_shuffle_frame
-
-    def deal():
-        toks = load(spark, SF, "documents").select(
-            "doc_id",
-            F.greatest(F.expr("n_chars DIV 4"), F.lit(1)).cast("long").alias("tokens"),
-        )
-        return shard_shuffle_frame(toks).collect()
-
-    rows = deal()
-    assert len({r["doc_id"] for r in rows}) == len(rows)
-    by_shard = defaultdict(list)
-    for r in rows:
-        by_shard[r["shard_id"]].append(r)
-    assert set(by_shard) <= set(range(_SHARD_SHUF_N))
-    for rs in by_shard.values():
-        rs.sort(key=lambda r: r["pos"])
-        assert [r["pos"] for r in rs] == list(range(1, len(rs) + 1))
-        off = 0
-        for r in rs:
-            assert r["shard_offset"] == off
-            off += r["tokens"]
-    again = {r["doc_id"]: (r["shard_id"], r["pos"]) for r in deal()}
-    assert again == {r["doc_id"]: (r["shard_id"], r["pos"]) for r in rows}
 
 
 # ---------------------------------------------------------------------------
@@ -649,55 +308,6 @@ def test_registrable_domain_groups_politeness_correctly(spark):
     # github.io hosts never collapse
     gh_groups = [hs for reg, hs in groups.items() if reg.endswith("github.io")]
     assert gh_groups and all(len(hs) == 1 for hs in gh_groups)
-
-
-# ---------------------------------------------------------------------------
-# incremental crawl diff
-# ---------------------------------------------------------------------------
-
-
-def test_change_detect_statuses_match_replay(spark):
-    """Every status appears, and each row's status equals a pure-Python
-    replay of the two-round construction from the same parquet."""
-    from crawler_spark.queries import load
-    from crawler_spark.queries_scale import q_change_detect
-
-    docs = {r["doc_id"]: r["text"] for r in load(spark, SF, "documents").collect()}
-    expect = {}
-    for d, text in docs.items():
-        in_prev = d % 10 != 7
-        in_cur = d % 10 != 3
-        changed = d % 5 == 0
-        if in_prev and not in_cur:
-            expect[d] = "deleted"
-        elif in_cur and not in_prev:
-            expect[d] = "added"
-        elif in_prev and in_cur:
-            expect[d] = "changed" if changed else "unchanged"
-    rows = {r["url_id"]: r for r in q_change_detect(spark, SF).collect()}
-    assert set(rows) == set(expect)
-    for d, r in rows.items():
-        assert r["status"] == expect[d], (d, r["status"], expect[d])
-    assert {r["status"] for r in rows.values()} == {
-        "added",
-        "deleted",
-        "changed",
-        "unchanged",
-    }
-
-
-def test_change_detect_is_one_join(spark):
-    """Snapshot diff must be a single co-partitioned join — one
-    SortMergeJoin/ShuffledHashJoin over the url key, nothing else."""
-    from crawler_spark.queries_scale import q_change_detect
-
-    plan = formatted_plan(q_change_detect(spark, SF))
-    # count detail nodes only — the formatted output also repeats each
-    # operator in the tree header
-    joins = len(
-        re.findall(r"\(\d+\)\s+(?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin)", plan)
-    )
-    assert joins == 1, plan
 
 
 # ---------------------------------------------------------------------------
@@ -924,31 +534,6 @@ def test_url_identity_stage_schedule_is_a_fixpoint(spark):
     base = _alias_label_propagate(spark)
     more = _alias_label_propagate(spark, _IDENTITY_STAGES + ("jump", "hook"))
     assert base == more
-
-
-# ---------------------------------------------------------------------------
-# exact integer sqrt (the curation pipeline's domain-mix weights)
-# ---------------------------------------------------------------------------
-
-
-def test_isqrt_col_is_exact_integer_sqrt(spark):
-    """The +/-1-corrected double sqrt must equal math.isqrt on perfect
-    squares, their neighbours, and big values near the double-precision
-    edge — the exactness the cross-engine hash depends on."""
-    import math
-
-    from pyspark.sql import functions as F
-    from crawler_spark.queries_scale import _isqrt_col
-
-    vals = [0, 1, 2, 3, 4, 8, 9, 10, 15, 16, 17, 24, 25, 26]
-    vals += [k * k + d for k in (10**3, 10**6, 2**26 - 1) for d in (-1, 0, 1)]
-    vals += [2**52 - 1, 10**15, 10**15 + 7]
-    frame = spark.createDataFrame([(v,) for v in vals], "v long")
-    got = {
-        r["v"]: r["s"]
-        for r in frame.select("v", _isqrt_col("v").alias("s")).collect()
-    }
-    assert got == {v: math.isqrt(v) for v in vals}
 
 
 # ---------------------------------------------------------------------------

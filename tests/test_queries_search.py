@@ -13,7 +13,6 @@ import re
 from collections import Counter, defaultdict
 
 import duckdb
-from pyspark.sql import functions as F
 
 from crawler_spark.plans.inspect import formatted_plan
 from crawler_spark.queries_search import (
@@ -671,102 +670,6 @@ def test_dsir_plan_broadcasts_bucket_lm(spark):
     plan = formatted_plan(q_dsir_weights(spark, SF))
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
-
-
-# ---------------------------------------------------------------------------
-# exact phrase search
-# ---------------------------------------------------------------------------
-
-
-def test_phrase_match_contiguity_and_repeated_terms(spark):
-    """The anchor-intersection semantics, pinned exactly: contiguity
-    (terms present but non-adjacent do NOT match), multiple anchors per
-    doc, and a phrase with a REPEATED term (count-distinct qpos means
-    one posting cannot satisfy two phrase offsets)."""
-    from crawler_spark.queries_search import phrase_match
-
-    docs = spark.createDataFrame(
-        [
-            (1, "a b c a b"),
-            (2, "a c b"),
-            (3, "b a b a b"),
-            (4, "a a a"),
-        ],
-        "doc_id long, text string",
-    )
-    phrases = spark.createDataFrame(
-        [(0, "a b"), (1, "b a b"), (2, "a a")],
-        "query_id long, phrase string",
-    )
-    got = {
-        (r["query_id"], r["doc_id"]): (r["n_hits"], r["first_pos"])
-        for r in phrase_match(docs, phrases).collect()
-    }
-    assert got == {
-        (0, 1): (2, 0),  # "a b" at anchors 0 and 3
-        (0, 3): (2, 1),  # "b a b a b": "a b" at anchors 1 and 3
-        (1, 3): (2, 0),  # "b a b" at anchors 0 and 2 (overlapping)
-        (2, 4): (2, 0),  # "a a a": "a a" at anchors 0 and 1; doc 1 has
-        # non-adjacent a's only — correctly absent
-    }
-
-
-def test_phrase_search_self_match_guarantee(spark):
-    """Every derived query must match its own source document at
-    anchor 0 — the derivation rule replayed in pure Python."""
-    from crawler_spark.queries_search import (
-        _PS_LEN,
-        _PS_MOD,
-        _PS_QUERIES,
-        q_phrase_search,
-    )
-
-    src = {}
-    for doc_id, text, _s in _docs():
-        toks = text.split(" ")
-        if len(toks) < _PS_LEN:
-            continue
-        q = doc_id % _PS_MOD
-        if q < _PS_QUERIES and q not in src:
-            src[q] = (doc_id, " ".join(toks[:_PS_LEN]))
-    rows = q_phrase_search(spark, SF).collect()
-    by_q = defaultdict(dict)
-    for r in rows:
-        by_q[r["query_id"]][r["doc_id"]] = r
-    for q, (doc_id, phrase) in src.items():
-        hit = by_q[q][doc_id]
-        assert hit["phrase"] == phrase
-        assert hit["first_pos"] == 0 and hit["n_hits"] >= 1
-
-
-def test_phrase_search_plan_broadcasts_query_terms(spark):
-    """The phrase-term table must broadcast — the posting stream is
-    filtered map-side, never shuffled corpus-wide for the match."""
-    from crawler_spark.queries_search import q_phrase_search
-
-    plan = formatted_plan(q_phrase_search(spark, SF))
-    assert "BroadcastHashJoin" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-
-
-def test_phrase_match_empty_token_is_single_wildcard(spark):
-    """A doubled space in the phrase yields an empty token: it keeps
-    its position but imposes no term constraint (single-token wildcard)
-    instead of making the phrase unmatchable."""
-    from crawler_spark.queries_search import phrase_match
-
-    docs = spark.createDataFrame(
-        [(1, "a x b"), (2, "a b"), (3, "a y b z a q b")],
-        "doc_id long, text string",
-    )
-    phrases = spark.createDataFrame([(0, "a  b")], "query_id long, phrase string")
-    got = {
-        r["doc_id"]: (r["n_hits"], r["first_pos"])
-        for r in phrase_match(docs, phrases).collect()
-    }
-    # doc 1: a ? b at anchor 0; doc 2: no token at offset 2; doc 3:
-    # anchors 0 (a y b) and 4 (a q b)
-    assert got == {1: (1, 0), 3: (2, 0)}
 
 
 def test_dsir_short_docs_get_explicit_negative_decision(spark):

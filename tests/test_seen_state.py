@@ -19,6 +19,7 @@ from crawler_spark.operators.bloom import build_bloom
 from crawler_spark.operators.cuckoo import CuckooOverflowError, cuckoo_prefilter
 from crawler_spark.operators.scheduler import release_barrier, schedule_batch
 from crawler_spark.operators.seen_state import SeenState, SeenStateMismatch
+from crawler_spark.plans.inspect import formatted_plan
 
 
 def _urls(spark, lo, hi):
@@ -225,6 +226,12 @@ def test_empty_seen_state_reads_are_zero_partition(spark, root):
     df = st.seen()
     assert df.schema.fieldNames() == ["url"]
     assert df.rdd.getNumPartitions() == 0
+    # the filter reads before the first commit are JVM-only too: no
+    # Python node for fill() or for the first insert's cogroup input
+    for df in (st.blobs(), st.fill()):
+        assert df.rdd.getNumPartitions() == 0
+        plan = formatted_plan(df)
+        assert not re.search(r"Python|Pandas|Arrow", plan), plan
 
 
 def test_bucketed_schedule_batch_equals_flat_schedule(spark, root):

@@ -315,11 +315,11 @@ def test_robots_trie():
     assert RobotsTrie(["/"]).disallowed("/anything")
 
 
-# --- repetition stats vs pure-Python Counter oracle ---
+# --- text_stat_frame repetition stats vs pure-Python Counter oracle ---
 
 
-def test_repetition_stats_matches_counter_oracle(spark):
-    """The map-only run-length-over-sorted-bigrams form must equal the
+def test_text_stat_frame_repetition_matches_counter_oracle(spark):
+    """text_stat_frame's Arrow-batched repetition statistics must equal the
     naive Counter definition on adversarial token streams: empty text,
     single token, all-identical tokens, empty tokens from double spaces,
     and 200 seeded random docs over a tiny vocabulary (dense repeats)."""
@@ -329,7 +329,7 @@ def test_repetition_stats_matches_counter_oracle(spark):
 
     from pyspark.sql import functions as F
 
-    from crawler_spark.queries import text_stat_frame
+    from crawler_spark.pipeline import text_stat_frame
 
     rng = random.Random(42)
     vocab = ["a", "bb", "ccc", "a", ""]  # "" = consecutive-space token
