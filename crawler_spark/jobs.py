@@ -533,7 +533,9 @@ def delete_source(engine, source_url: str) -> None:
         .withColumn("deleted", F.lit(True))
     )
     batch = _next_batch(engine)
-    dels = spark.createDataFrame([(source_url, batch)], schemas.DELETED_SOURCES)
+    dels = spark.createDataFrame(
+        pd.DataFrame({"source_url": [source_url], "batch_id": [batch]}), schemas.DELETED_SOURCES
+    )
     engine.store.commit(
         batch_id=batch,
         full_tables={"frontier": frontier, "source_state": source_state},

@@ -711,20 +711,23 @@ class CrawlEngine:
 
     def metrics(self) -> DataFrame:
         """Per-batch fetch/dedup metrics from the snapshot lineage (T6:
-        the reference's polled job-state view becomes a queryable table)."""
+        the reference's polled job-state view becomes a queryable table),
+        as an Arrow ``LocalRelation``: scanning it starts no Python worker."""
         rows = [
-            {
-                "snapshot_id": m.snapshot_id,
-                "batch_id": m.batch_id,
-                "popped": int(m.metrics.get("popped", 0)),
-                "fetched_ok": int(m.tables.get("docs", {}).get("delta_rows", 0)),
-                "new_candidates": int(m.tables.get("candidates", {}).get("delta_rows", 0)),
-                "batch_sec": float(m.metrics.get("batch_sec", 0.0)),
-            }
+            (
+                m.snapshot_id,
+                m.batch_id,
+                int(m.metrics.get("popped", 0)),
+                int(m.tables.get("docs", {}).get("delta_rows", 0)),
+                int(m.tables.get("candidates", {}).get("delta_rows", 0)),
+                float(m.metrics.get("batch_sec", 0.0)),
+            )
             for m in self.store.history()
         ]
-        return self.spark.createDataFrame(
-            rows,
+        schema = T.StructType.fromDDL(
             "snapshot_id long, batch_id long, popped long, fetched_ok long, "
-            "new_candidates long, batch_sec double",
+            "new_candidates long, batch_sec double"
         )
+        if not rows:
+            return empty_frame(self.spark, schema)
+        return self.spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)

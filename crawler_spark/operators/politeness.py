@@ -335,7 +335,8 @@ def host_quotas(
     """Per-host fetch quota for one micro-batch window: hosts with a
     crawl-delay get floor(window/delay) capped at default_k, min 1.
     With a broadcast handle the table is built from the driver dict
-    (tiny, broadcast-joined onto the frontier). With a join-mode
+    as an Arrow ``LocalRelation`` (tiny, broadcast-joined onto the
+    frontier; scanning it starts no Python worker). With a join-mode
     RobotsIndex the quotas are a map-only projection of the distributed
     rules table — the driver never sees the host set; join it onto the
     frontier with a plain (non-broadcast) join on host."""
@@ -358,12 +359,20 @@ def host_quotas(
                 .alias("quota"),
             )
         robots_bcast = robots_bcast.bcast
-    delay = robots_bcast.value["delay_ms"]
-    rows = [
-        (h, max(1, min(default_k, batch_window_ms // d)) if d > 0 else default_k)
-        for h, d in delay.items()
-    ]
-    return spark.createDataFrame(rows or [("__none__", default_k)], "host string, quota int")
+    delay = robots_bcast.value["delay_ms"] or {"__none__": 0}
+    pdf = pd.DataFrame(
+        {
+            "host": list(delay),
+            "quota": pd.array(
+                [
+                    max(1, min(default_k, batch_window_ms // d)) if d > 0 else default_k
+                    for d in delay.values()
+                ],
+                dtype="int32",
+            ),
+        }
+    )
+    return spark.createDataFrame(pdf, "host string, quota int")
 
 
 # ---------------------------------------------------------------------------

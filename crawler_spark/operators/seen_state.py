@@ -54,6 +54,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -118,9 +119,11 @@ class SeenState:
         ``bucketed_parts`` (B, default ``n_parts``) is the number of
         url_seen bucket directories: rows land under
         ``seen_bucket=<pmod(xxhash64(url,2),B)>`` and :meth:`anti_join`
-        resolves a candidate slice bucket-wise — each task opens its
-        bucket's parquet files directly (pyarrow), so the accumulated seen
-        table is never shuffled; only the candidate slice is. B must be a
+        resolves a candidate slice bucket-wise in one wave of
+        T = min(B, default parallelism) tasks, task t holding exactly the
+        buckets b with b mod T == t — each task opens its buckets'
+        parquet files directly (pyarrow), so the accumulated seen table
+        is never shuffled; only the candidate slice is. B must be a
         multiple of ``n_parts``, and the bucket hash is the filter's
         partition hash (seed 2), so bucket % n_parts == filter part:
         bucket dirs refine the filter partitioning. ``write_tasks`` caps
@@ -161,6 +164,7 @@ class SeenState:
         nb_need = max(256, expected_keys // max(n_parts, 1) // (BUCKET_SLOTS * 2) * 3)
         self._initial_buckets = 1 << (nb_need - 1).bit_length()
         self._empty = empty_frame(spark, T.StructType([T.StructField("url", T.StringType())]))
+        self._task_keys: dict[int, dict[int, int]] = {}  # T -> {t: key hashed to task t}
         self._layout = {
             "n_parts": n_parts,
             "bucketed_parts": bucketed_parts,
@@ -300,9 +304,13 @@ class SeenState:
 
         Each candidate's bucket (``_part_expr``) and filter hash and
         fingerprint (``cuckoo_hash_fp``) are computed once on the JVM.
-        Candidates are hash-clustered by bucket and sorted by (filter
-        part, bucket) within each task. Per bucket run, the task probes
-        its part's filter table, read from the committed ``seen_cuckoo``
+        Candidates go to T = min(B, default parallelism) tasks, task t
+        holding exactly the buckets b with b mod T == t (``_task_map``),
+        so the resolve is one balanced wave: no task starts Python for an
+        empty partition. Within a task they are sorted by (filter part,
+        bucket). Placement moves only load, never the result: a task
+        walks whatever bucket runs it is given. Per bucket run, the task
+        probes its part's filter table, read from the committed ``seen_cuckoo``
         files; only maybe-seen rows open the bucket's seen files
         (pyarrow, ~|seen|/B rows) for one exact ``is_in`` on full
         URLs. A task holds one filter table and one bucket at a time;
@@ -337,11 +345,15 @@ class SeenState:
         names = [f.name for f in out_schema.fields]
         n_parts = self.n_parts
         ch, fp = cuckoo_hash_fp(url_col)
+        n_tasks = min(self.bucketed_parts, self.spark.sparkContext.defaultParallelism)
         keyed = (
             candidates.withColumn("_sb", self._part_expr(url_col, self.bucketed_parts))
             .withColumn("_ch", ch)
             .withColumn("_fp", fp)
-            .repartition(self.bucketed_parts, F.col("_sb"))
+            .repartition(
+                n_tasks,
+                F.element_at(self._task_map(n_tasks), F.pmod("_sb", F.lit(n_tasks))),
+            )
             .sortWithinPartitions(F.pmod("_sb", F.lit(n_parts)), "_sb")
         )
 
@@ -397,6 +409,28 @@ class SeenState:
 
         return keyed.mapInArrow(_aj, out_schema)
 
+    def _task_map(self, n_tasks: int):
+        """A literal map t -> k_t with ``pmod(hash(k_t), n_tasks) == t``:
+        ``repartition(n_tasks, element_at(map, t))`` then sends every row
+        keyed t to task t, because ``HashPartitioning`` places a row by the
+        same Murmur3 (seed 42) that ``F.hash`` computes. The keys are found
+        once per ``n_tasks`` by hashing a small int32 ``LocalRelation`` —
+        the optimizer folds the projection on the driver, so no Spark job
+        runs — and cached."""
+        keys = self._task_keys.get(n_tasks)
+        if keys is None:
+            cands = pd.DataFrame({"k": pd.array(range(64 * n_tasks), dtype="int32")})
+            rows = (
+                self.spark.createDataFrame(cands)
+                .select("k", F.pmod(F.hash("k"), F.lit(n_tasks)).alias("t"))
+                .collect()
+            )
+            keys = {}
+            for r in rows:  # 64 candidates per task: every t gets a key
+                keys.setdefault(r.t, r.k)
+            self._task_keys[n_tasks] = keys
+        return F.create_map(*[F.lit(x) for t in range(n_tasks) for x in (t, keys[t])])
+
     # -- writes ---------------------------------------------------------------
 
     def commit_batch(
@@ -433,7 +467,9 @@ class SeenState:
         if head is not None and bid <= last:
             return head, {"redelivered": True}
         new_urls = self._clustered(new_seen)
-        new_keys = new_urls.select("url")
+        # the insert reads the unclustered keys: new_urls' bucket shuffle
+        # serves only the url_seen write
+        new_keys = new_seen.select("url")
         nb = self._width()
 
         def _commit(filt: DataFrame, width: int, extra: dict | None = None) -> Manifest:

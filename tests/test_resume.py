@@ -80,6 +80,12 @@ def test_time_travel_reads_parent_snapshot(spark, tmp_path):
     # tail snapshot is the end-of-crawl finalize_jobs commit
     assert all("popped" in m.metrics for m in hist[1:-1])
     assert hist[-1].metrics.get("event") == "finalize_jobs"
+    # metrics() is the same lineage as an Arrow LocalRelation (no Python scan)
+    met = eng.metrics()
+    assert met._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == "LocalRelation"
+    assert [(r.snapshot_id, r.popped) for r in met.collect()] == [
+        (m.snapshot_id, int(m.metrics.get("popped", 0))) for m in hist
+    ]
 
 
 def _failing(web_df, tag):

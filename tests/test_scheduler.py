@@ -108,6 +108,25 @@ def test_robots_filter_and_quota(spark):
     assert q["h0.org"] == 10 and q["h1.org"] == 10  # delay 0 => default
 
 
+def test_broadcast_host_quotas_is_a_local_relation(spark):
+    """The broadcast handle's quota table is an Arrow ``LocalRelation``,
+    so the per-batch broadcast of it starts no Python worker; with no
+    rules it is the one ``__none__`` row at the default quota."""
+    robots = spark.createDataFrame(
+        [("h0.org", [], 0), ("h2.org", [], 30_000)],
+        "host string, disallow_prefixes array<string>, crawl_delay_ms int",
+    )
+    no_rules = spark.createDataFrame(
+        [], "host string, disallow_prefixes array<string>, crawl_delay_ms int"
+    )
+    for rules, want in ((robots, {("h0.org", 10), ("h2.org", 2)}), (no_rules, {("__none__", 10)})):
+        q = host_quotas(spark, broadcast_robots(spark, rules), default_k=10)
+        plan = q._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation", plan.toString()
+        assert q.schema.simpleString() == "struct<host:string,quota:int>"
+        assert {(r.host, r.quota) for r in q.collect()} == want
+
+
 def test_quota_respected_in_schedule(spark):
     rows = [(f"https://hq.org/p/{i}", "hq.org", 0, i) for i in range(50)]
     frontier = _frontier_df(spark, rows)

@@ -197,8 +197,18 @@ def test_bucketed_layout_writes_bucket_dirs_and_reads_back(spark, root):
     assert bad == 0
 
 
-def test_bucketed_anti_join_matches_flat_anti_join(spark, root):
-    st = _bucketed(spark, root)
+# (n_parts, B) on the 8-core test session, where T = min(B, 8): T < B
+# with several buckets per task, and T == B with one bucket per task
+LAYOUTS = pytest.mark.parametrize(
+    "n_parts,buckets",
+    [(8, 32), (4, 16), (8, 8)],
+    ids=["8parts_32buckets", "4parts_16buckets", "8parts_8buckets"],
+)
+
+
+@LAYOUTS
+def test_bucketed_anti_join_matches_flat_anti_join(spark, root, n_parts, buckets):
+    st = _bucketed(spark, root, n_parts=n_parts, bucketed_parts=buckets)
     st.commit_batch(_urls(spark, 0, 700))
     cands = _frontier_of(_urls(spark, 500, 1200))  # 200 seen, 500 new
     got = {r.url for r in st.anti_join(cands).collect()}
@@ -370,11 +380,55 @@ def test_anti_join_plan_sorts_candidates_by_bucket(spark, root):
     st = _bucketed(spark, root)
     st.commit_batch(_urls(spark, 0, 100))
     plan = st.anti_join(_frontier_of(_urls(spark, 0, 10)))._jdf.queryExecution().executedPlan()
-    # hash-clustered by bucket (no range-sample job), then sorted by
-    # (filter part, bucket) so a task meets each part and bucket once
+    # hash-partitioned on the task map's key for bucket mod T (no
+    # range-sample job), then sorted by (filter part, bucket) so a task
+    # meets each part and bucket once
     plan = plan.toString()
     assert re.search(r"Sort \[pmod\(_sb#\d+, 8\) ASC NULLS FIRST, _sb#\d+ ASC", plan), plan
-    assert "hashpartitioning(_sb" in plan and "rangepartitioning" not in plan
+    n_tasks = min(32, spark.sparkContext.defaultParallelism)
+    keys = ",".join(map(str, range(n_tasks)))
+    assert re.search(
+        rf"hashpartitioning\(element_at\(map\(keys: \[{keys}\], values: \[[\d,]+\]\), "
+        rf"pmod\(_sb#\d+, {n_tasks}\)",
+        plan,
+    ), plan
+    assert "rangepartitioning" not in plan
+
+
+@LAYOUTS
+def test_anti_join_puts_each_bucket_on_task_bucket_mod_t(spark, root, n_parts, buckets):
+    """The resolve runs T = min(B, default parallelism) tasks and task t
+    holds exactly the buckets b with b mod T == t, so every task gets
+    rows: one wave, no task started for an empty partition."""
+    st = _bucketed(spark, root, n_parts=n_parts, bucketed_parts=buckets)
+    st.commit_batch(_urls(spark, 0, 700))
+    n_tasks = min(buckets, spark.sparkContext.defaultParallelism)
+    out = st.anti_join(_frontier_of(_urls(spark, 500, 3000)))
+    assert out.rdd.getNumPartitions() == n_tasks
+    placed = out.select(
+        F.spark_partition_id().alias("task"),
+        (F.pmod(F.xxhash64("url", F.lit(2)), F.lit(buckets)) % n_tasks).alias("want"),
+    ).collect()
+    assert len(placed) == 2300
+    assert all(r.task == r.want for r in placed)
+    assert {r.task for r in placed} == set(range(n_tasks))
+
+
+def test_anti_join_task_map_runs_no_job(spark, root):
+    """The task map's keys are hashed in a projection the optimizer folds
+    on the driver: building the resolve's plan starts no Spark job."""
+    st = _bucketed(spark, root, bucketed_parts=16)
+    st.commit_batch(_urls(spark, 0, 100))
+    cands = _frontier_of(_urls(spark, 0, 10))
+    sc = spark.sparkContext
+    group = "test_seen_state.task_map_no_job"
+    sc.setJobGroup(group, "anti_join plan")
+    try:
+        st.anti_join(cands)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(st._task_keys) == [min(16, sc.defaultParallelism)]
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 # -- deletes, rebuilds, overflow -------------------------------------------------
