@@ -217,6 +217,17 @@ def release_barrier(barrier: DataFrame | None) -> None:
 _DRAIN_SUFFIX = ", fetch_order int, content_hash long"
 
 
+def _drain_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    """``drain_ordered``'s per-group body. Module level, so the worker
+    unpickles it by reference and imports the package (see
+    ``crawler_spark/__init__.py``) instead of receiving it by value."""
+    pdf = pdf.sort_values(["host", "priority", "seq"], kind="mergesort").reset_index(drop=True)
+    pdf["fetch_order"] = pdf.groupby("host", sort=False).cumcount().astype("int32")
+    # cheap deterministic stand-in for fetch+parse (vectorized)
+    pdf["content_hash"] = pd.util.hash_array(pdf["url"].to_numpy(dtype=object)).astype("int64")
+    return pdf
+
+
 def drain_ordered(scheduled: DataFrame, n_buckets: int | None = None) -> DataFrame:
     """Per-host ordered fetch stage via applyInPandas.
 
@@ -245,14 +256,6 @@ def drain_ordered(scheduled: DataFrame, n_buckets: int | None = None) -> DataFra
     bounds; hash needs none and balances Zipf hosts just as well once
     salted).
     """
-
-    def _drain(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["host", "priority", "seq"], kind="mergesort").reset_index(drop=True)
-        pdf["fetch_order"] = pdf.groupby("host", sort=False).cumcount().astype("int32")
-        # cheap deterministic stand-in for fetch+parse (vectorized)
-        pdf["content_hash"] = pd.util.hash_array(pdf["url"].to_numpy(dtype=object)).astype("int64")
-        return pdf
-
     schema = (
         ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in scheduled.schema.fields)
         + _DRAIN_SUFFIX
@@ -263,10 +266,10 @@ def drain_ordered(scheduled: DataFrame, n_buckets: int | None = None) -> DataFra
         )
         return (
             keyed.groupBy("fetch_group", "salt")
-            .applyInPandas(_drain, schema + ", fetch_group int")
+            .applyInPandas(_drain_group, schema + ", fetch_group int")
             .drop("fetch_group")
         )
-    return scheduled.groupBy("host", "salt").applyInPandas(_drain, schema)
+    return scheduled.groupBy("host", "salt").applyInPandas(_drain_group, schema)
 
 
 def route_retries(

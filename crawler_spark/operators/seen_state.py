@@ -127,8 +127,8 @@ class SeenState:
         multiple of ``n_parts``, and the bucket hash is the filter's
         partition hash (seed 2), so bucket % n_parts == filter part:
         bucket dirs refine the filter partitioning. ``write_tasks`` caps
-        the writer fan-out: new rows are hash-clustered so each bucket's
-        files come from one task (~B files per commit, not tasks*B).
+        the writer fan-out: new rows go to min(``write_tasks``, B) tasks,
+        each bucket's to one task (~B files per commit, not tasks*B).
 
         ``filter_kind`` accepts only ``"cuckoo"``; it stays a parameter so
         the layout record names the filter. Cuckoo supports deletion:
@@ -505,13 +505,22 @@ class SeenState:
 
     def _clustered(self, urls: DataFrame) -> DataFrame:
         """``urls``' url column plus its bucket, clustered by bucket BEFORE
-        a partitioned write of url_seen: each bucket's files then come
-        from exactly one of ``write_tasks`` tasks (~B files per commit
-        instead of tasks*B splinters)."""
+        a partitioned write of url_seen: W = min(``write_tasks``, B)
+        writers, writer w holding exactly the buckets b with b mod W == w
+        (``_task_map``, as in ``anti_join``), so each bucket's files come
+        from one task (~B files per commit instead of tasks*B splinters)
+        and no writer is left empty while another carries several
+        buckets."""
+        n_tasks = min(self.write_tasks, self.bucketed_parts)
         return (
             urls.select("url")
             .withColumn(self.BUCKET_COL, self._bucket_expr())
-            .repartition(self.write_tasks, F.col(self.BUCKET_COL))
+            .repartition(
+                n_tasks,
+                F.element_at(
+                    self._task_map(n_tasks), F.pmod(self.BUCKET_COL, F.lit(n_tasks))
+                ),
+            )
         )
 
     def _wider(self, nb: int, n_keys: int) -> int:

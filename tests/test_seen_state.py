@@ -420,6 +420,7 @@ def test_anti_join_task_map_runs_no_job(spark, root):
     st = _bucketed(spark, root, bucketed_parts=16)
     st.commit_batch(_urls(spark, 0, 100))
     cands = _frontier_of(_urls(spark, 0, 10))
+    st._task_keys.clear()  # the commit's writer placement cached its own map
     sc = spark.sparkContext
     group = "test_seen_state.task_map_no_job"
     sc.setJobGroup(group, "anti_join plan")
@@ -429,6 +430,40 @@ def test_anti_join_task_map_runs_no_job(spark, root):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(st._task_keys) == [min(16, sc.defaultParallelism)]
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize("buckets, write_tasks", [(8, 16), (16, 4)])
+def test_clustered_puts_each_bucket_on_writer_bucket_mod_w(spark, root, buckets, write_tasks):
+    """url_seen writers: W = min(write_tasks, B) tasks, writer w holding
+    exactly the buckets b with b mod W == w, every writer non-empty; so a
+    commit and a delete's rewrite each leave one file per bucket dir."""
+    st = _bucketed(spark, root, n_parts=4, bucketed_parts=buckets, write_tasks=write_tasks)
+    n_tasks = min(write_tasks, buckets)
+    placed = st._clustered(_urls(spark, 0, 2000)).select(
+        F.spark_partition_id().alias("task"),
+        F.pmod("seen_bucket", F.lit(n_tasks)).alias("want"),
+    )
+    assert placed.rdd.getNumPartitions() == n_tasks
+    rows = placed.collect()
+    assert len(rows) == 2000 and all(r.task == r.want for r in rows)
+    assert {r.task for r in rows} == set(range(n_tasks))
+
+    def files_per_bucket_dir():
+        head = st.store.head()
+        return [
+            len(glob.glob(os.path.join(d, "*.parquet")))
+            for rel in head.tables["url_seen"]["files"]
+            for d in glob.glob(os.path.join(root, "snapshots", rel, "seen_bucket=*"))
+        ]
+
+    st.commit_batch(_urls(spark, 0, 2000))
+    st.commit_batch(_urls(spark, 2000, 3000))
+    counts = files_per_bucket_dir()
+    assert len(counts) == 2 * buckets and set(counts) == {1}
+    st.delete_urls(_urls(spark, 0, 100))
+    counts = files_per_bucket_dir()
+    assert len(counts) == buckets and set(counts) == {1}
+    assert st.seen().count() == 2900
 
 
 # -- deletes, rebuilds, overflow -------------------------------------------------
