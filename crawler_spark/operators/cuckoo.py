@@ -7,10 +7,12 @@ Per-partition blobs keyed by ``pmod(xxhash64(url, 2), P)`` are stored as a
 state table; ``SeenState.anti_join`` probes them bucket-wise, one blob per
 task at a time (``cuckoo_prefilter`` is the cogrouped probe).
 ``insert_into_cuckoo`` adds a batch's keys in place, and
-``delete_from_cuckoo`` evicts a key's fingerprint, so ``delete_source``
-(jobs.py) can remove a source's URLs from the seen prefilter instead of
-rebuilding it — what the static Bloom filter in operators/bloom.py cannot
-do: a Bloom bit is shared by unknown other keys and can never be unset.
+``_delete_from_table`` evicts a key's fingerprint from one partition's
+table — ``SeenState.delete_urls`` calls it inside its one url_seen
+rewrite pass, so a deleted source's URLs leave the seen prefilter
+without a rebuild — what the static Bloom filter in operators/bloom.py
+cannot do: a Bloom bit is shared by unknown other keys and can never be
+unset.
 
 Layout per partition: ``n_buckets x 4`` slots of 16-bit fingerprints
 (uint16, 0 = empty; fp in [1, 65535] so empty is unambiguous). Lookup
@@ -39,7 +41,6 @@ __all__ = [
     "build_cuckoo",
     "cuckoo_prefilter",
     "insert_into_cuckoo",
-    "delete_from_cuckoo",
     "BUCKET_SLOTS",
     "CuckooOverflowError",
 ]
@@ -262,9 +263,10 @@ def insert_into_cuckoo(
     cuckoo: DataFrame, new_seen: DataFrame, n_buckets: int, n_parts: int = 64
 ) -> DataFrame:
     """Insert one batch's newly-seen URLs into an existing cuckoo filter —
-    with delete_from_cuckoo the full add/remove lifecycle a mutable seen
-    prefilter needs. Cogrouped: each task compacts + places into ONE
-    partition's table; partitions with no new keys pass through untouched.
+    with ``SeenState.delete_urls``' eviction the full add/remove lifecycle
+    a mutable seen prefilter needs. Cogrouped: each task compacts + places
+    into ONE partition's table; partitions with no new keys pass through
+    untouched.
     ``n_buckets`` is the width of a partition that has no table yet; a
     partition that has one keeps its own width.
 
@@ -298,29 +300,4 @@ def insert_into_cuckoo(
         cuckoo.groupBy("cuckoo_part")
         .cogroup(keyed.groupBy("cuckoo_part"))
         .applyInPandas(_ins, CUCKOO_SCHEMA)
-    )
-
-
-def delete_from_cuckoo(cuckoo: DataFrame, deletions: DataFrame, n_parts: int = 64) -> DataFrame:
-    """Evict deleted URLs' fingerprints from their partition blobs —
-    cogrouped, so each task rewrites one blob. Partitions with no
-    deletions pass through with their table unchanged (``load`` recomputed,
-    so a filter written before that column comes out in ``CUCKOO_SCHEMA``).
-    This is the capability Bloom lacks and what lets delete_source keep
-    the seen prefilter truthful without a full rebuild."""
-    keyed = add_cuckoo_keys(deletions, n_parts=n_parts).select("cuckoo_part", "ch", "cfp")
-
-    def _delete(dels: pd.DataFrame, blobs: pd.DataFrame) -> pd.DataFrame:
-        if not len(blobs):
-            return pd.DataFrame()
-        table = np.frombuffer(blobs["blob"].iloc[0], dtype=np.uint16).reshape(-1, BUCKET_SLOTS)
-        if len(dels):
-            table = table.copy()
-            _delete_from_table(table, dels["ch"].to_numpy(), dels["cfp"].to_numpy())
-        return _filter_row(int(blobs["cuckoo_part"].iloc[0]), table)
-
-    return (
-        keyed.groupBy("cuckoo_part")
-        .cogroup(cuckoo.groupBy("cuckoo_part"))
-        .applyInPandas(_delete, CUCKOO_SCHEMA)
     )

@@ -20,7 +20,9 @@ One `SeenState` owns two tables in a SnapshotParquetStore:
 
 A delete changes both tables in the one commit, so no committed state
 has a URL evicted from the filter but still in ``url_seen``, or the
-reverse.
+reverse. Both come from one Arrow pass placed by filter part: only the
+deletion candidates are shuffled, each bucket's files are read once,
+and the seen table is never shuffled.
 
 Committing through the store (rather than chaining ``persist()`` handles
 or ad-hoc parquet dirs) buys the drain loop what the crawl engine's
@@ -54,20 +56,23 @@ from __future__ import annotations
 import glob
 import os
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..state import Manifest, SnapshotParquetStore, empty_frame
 from .cuckoo import (
     BUCKET_SLOTS,
     CUCKOO_SCHEMA,
     CuckooOverflowError,
+    _delete_from_table,
+    _filter_row,
     _probe_table,
     build_cuckoo,
     cuckoo_hash_fp,
-    delete_from_cuckoo,
     insert_into_cuckoo,
 )
 
@@ -78,6 +83,20 @@ def _stat_max(entry: dict, col: str):
     """A manifest table entry's zone-map max of ``col``, or None if absent."""
     maxes = [s[col][1] for s in entry.get("stats", {}).values() if col in s]
     return max(maxes) if maxes else None
+
+
+def _filter_table(cdir: str | None, p: int):
+    """Filter part ``p``'s committed table, read from the ``seen_cuckoo``
+    dir ``cdir`` on an executor, as a read-only (buckets, slots) uint16
+    array; None when the part has no blob (or there is no filter)."""
+    import pyarrow.parquet as pq
+
+    if cdir is None:
+        return None
+    blob = pq.read_table(cdir, columns=["blob"], filters=[("cuckoo_part", "=", p)])
+    if not blob.num_rows:
+        return None
+    return np.frombuffer(blob.column(0)[0].as_py(), np.uint16).reshape(-1, BUCKET_SLOTS)
 
 
 class SeenStateMismatch(ValueError):
@@ -127,8 +146,10 @@ class SeenState:
         multiple of ``n_parts``, and the bucket hash is the filter's
         partition hash (seed 2), so bucket % n_parts == filter part:
         bucket dirs refine the filter partitioning. ``write_tasks`` caps
-        the writer fan-out: new rows go to min(``write_tasks``, B) tasks,
-        each bucket's to one task (~B files per commit, not tasks*B).
+        ``commit_batch``'s writer fan-out: new rows go to
+        min(``write_tasks``, B) tasks, each bucket's to one task (~B files
+        per commit, not tasks*B). A delete's rewrite is placed by filter
+        part instead (see :meth:`delete_urls`).
 
         ``filter_kind`` accepts only ``"cuckoo"``; it stays a parameter so
         the layout record names the filter. Cuckoo supports deletion:
@@ -165,6 +186,7 @@ class SeenState:
         self._initial_buckets = 1 << (nb_need - 1).bit_length()
         self._empty = empty_frame(spark, T.StructType([T.StructField("url", T.StringType())]))
         self._task_keys: dict[int, dict[int, int]] = {}  # T -> {t: key hashed to task t}
+        self._paths = None  # (snapshot id, broadcast of its paths), see _paths_bcast
         self._layout = {
             "n_parts": n_parts,
             "bucketed_parts": bucketed_parts,
@@ -297,6 +319,33 @@ class SeenState:
                 out.setdefault(b, []).extend(glob.glob(os.path.join(d, "*.parquet")))
         return out
 
+    def _paths_bcast(self):
+        """HEAD's ``(bucket_files(), seen_cuckoo dir)`` as a broadcast, the
+        dir None when the filter has no rows — what ``anti_join`` and
+        ``delete_urls``' tasks open with pyarrow. One live broadcast per
+        snapshot epoch: a drain loop calls both every batch, and an
+        un-released broadcast per call pins the path lists in every JVM of
+        the application for the run's lifetime."""
+        head = self.store.head()
+        snap = head.snapshot_id if head else None
+        cached = self._paths
+        if cached is None or cached[0] != snap:
+            if cached is not None:
+                # unpersist (not destroy): a not-yet-evaluated plan from
+                # the previous epoch can still fetch the value again
+                try:
+                    cached[1].unpersist()
+                except Exception:
+                    pass
+            entry = head.tables.get(self.TABLE_CUCKOO) if head else None
+            cdir = None
+            if entry and entry["rows"]:
+                (crel,) = entry["files"]  # a full table: one dir
+                cdir = os.path.join(self.store.root, "snapshots", crel)
+            paths = (self.bucket_files(), cdir)
+            cached = self._paths = (snap, self.spark.sparkContext.broadcast(paths))
+        return cached[1]
+
     def anti_join(self, candidates: DataFrame, url_col: str = "url") -> DataFrame:
         """Exact ``candidates LEFT ANTI JOIN url_seen ON url`` in one Arrow
         pass that owns its cuckoo prefilter: only the candidates are
@@ -320,27 +369,9 @@ class SeenState:
         cluster swaps this for an Iceberg bucket-partitioned
         storage-partitioned join, same layout contract. ``url_col`` names
         the candidates' url column."""
-        fmap = self.bucket_files()
-        if not fmap:
+        bc = self._paths_bcast()
+        if not bc.value[0]:
             return candidates
-        # one live broadcast per snapshot epoch: a drain loop calls this
-        # every batch, and an un-released broadcast per batch pins the
-        # path lists in every JVM of the application for the run's lifetime
-        head = self.store.head()
-        cached = getattr(self, "_aj_bcast", None)
-        if cached is None or cached[0] != head.snapshot_id:
-            if cached is not None:
-                # unpersist (not destroy): a not-yet-evaluated plan from
-                # the previous epoch can still fetch the value again
-                try:
-                    cached[1].unpersist()
-                except Exception:
-                    pass
-            (crel,) = head.tables[self.TABLE_CUCKOO]["files"]  # a full table: one dir
-            cdir = os.path.join(self.store.root, "snapshots", crel)
-            paths = (fmap, cdir)
-            cached = self._aj_bcast = (head.snapshot_id, self.spark.sparkContext.broadcast(paths))
-        bc = cached[1]
         out_schema = candidates.schema
         names = [f.name for f in out_schema.fields]
         n_parts = self.n_parts
@@ -370,12 +401,6 @@ class SeenState:
             table: tuple = (-1, None)  # (filter part, its table; None = no blob, all new)
             held: tuple = (-1, None)  # (bucket, its live urls)
 
-            def _filter_table(p: int):
-                blob = pq.read_table(cdir, columns=["blob"], filters=[("cuckoo_part", "=", p)])
-                if not blob.num_rows:
-                    return None
-                return np.frombuffer(blob.column(0)[0].as_py(), np.uint16).reshape(-1, BUCKET_SLOTS)
-
             def _bucket_set(b: int):
                 urls = pq.read_table(seen_files[b], columns=["url"]).column("url")
                 return urls.combine_chunks()
@@ -391,7 +416,7 @@ class SeenState:
                         continue  # nothing committed in this bucket
                     if table[0] != b % n_parts:
                         table = None  # release the previous table before reading
-                        table = (b % n_parts, _filter_table(b % n_parts))
+                        table = (b % n_parts, _filter_table(cdir, b % n_parts))
                     if table[1] is None:
                         continue
                     maybe = lo + np.flatnonzero(_probe_table(table[1], hs[lo:hi], fps[lo:hi]))
@@ -504,13 +529,14 @@ class SeenState:
             raise CuckooOverflowError(f"a {self.TABLE_CUCKOO} partition overflowed")
 
     def _clustered(self, urls: DataFrame) -> DataFrame:
-        """``urls``' url column plus its bucket, clustered by bucket BEFORE
-        a partitioned write of url_seen: W = min(``write_tasks``, B)
-        writers, writer w holding exactly the buckets b with b mod W == w
-        (``_task_map``, as in ``anti_join``), so each bucket's files come
-        from one task (~B files per commit instead of tasks*B splinters)
-        and no writer is left empty while another carries several
-        buckets."""
+        """``commit_batch``'s new urls plus their bucket, clustered by bucket
+        BEFORE the partitioned append to url_seen: W = min(``write_tasks``,
+        B) writers, writer w holding exactly the buckets b with
+        b mod W == w (``_task_map``, as in ``anti_join``), so each bucket's
+        files come from one task (~B files per commit instead of tasks*B
+        splinters) and no writer is left empty while another carries
+        several buckets. ``delete_urls`` does not come here: its pass
+        already holds each bucket on one task."""
         n_tasks = min(self.write_tasks, self.bucketed_parts)
         return (
             urls.select("url")
@@ -539,45 +565,160 @@ class SeenState:
         and evict their fingerprints from the cuckoo blobs, so the maybe
         slice stays truthful WITHOUT a rebuild.
 
-        Eviction safety: deletions are first deduplicated and
-        restricted to CURRENTLY-SEEN urls. A cuckoo filter's deletion
-        is only safe for keys that were actually inserted — evicting a
-        key that is absent (never committed, deleted already, or a
-        duplicate row in ``urls``) can remove a colliding fingerprint
-        belonging to a DIFFERENT live url, and a prefilter false
-        negative is the one error class the two-tier design cannot
-        absorb (a definitely-new candidate skips the exact anti-join
-        entirely and would be double-crawled). With the semi-join
-        guard, two live urls sharing a (bucket, fingerprint) each own
-        one inserted copy, so deleting one leaves the other's copy in
-        place — the standard counting argument.
+        One pass does both. The JVM keys each candidate (``url`` of
+        ``urls``; nulls dropped) with its bucket and filter hash and
+        fingerprint, adds one marker row per bucket, and sends the rows
+        to T = min(``n_parts``, default parallelism) tasks: task t owns
+        the filter parts p with p mod T == t and every bucket of those
+        parts (b mod ``n_parts`` == p), sorted by (part, bucket). Per
+        owned part, the task reads the part's committed filter table;
+        per owned bucket, it reads the bucket's live urls once (pyarrow,
+        as ``anti_join`` does), emits the live rows not among the
+        candidates, and evicts one fingerprint for each distinct
+        candidate found live; then it emits the part's filter row. The
+        markers make every task visit all its buckets and parts, with or
+        without candidates. The pass output is persisted, so it runs
+        once, and both tables of the commit are projections of it; each
+        bucket is written by one task (one file per bucket dir).
 
-        Cost: every call rewrites url_seen (O(|seen|), clustered by
-        bucket over ``write_tasks`` tasks, as a batch commit is). A
-        caller that deletes several times between batches pays that
-        rewrite per call; it should gather the URLs into one call. This
-        is an internal commit: it advances the store counter but NOT the
-        logical batch id."""
+        Eviction safety: only distinct, CURRENTLY-SEEN urls are evicted.
+        A cuckoo filter's deletion is only safe for keys that were
+        actually inserted — evicting a key that is absent (never
+        committed, deleted already, or a duplicate row in ``urls``) can
+        remove a colliding fingerprint belonging to a DIFFERENT live
+        url, and a prefilter false negative is the one error class the
+        two-tier design cannot absorb (a definitely-new candidate skips
+        the exact anti-join entirely and would be double-crawled). Two
+        live urls sharing a (bucket, fingerprint) each own one inserted
+        copy, so deleting one leaves the other's copy in place — the
+        standard counting argument. Which copy goes does not depend on
+        the order of evictions, so the blobs are the same whatever order
+        the candidates arrive in.
+
+        Cost: one shuffle of the candidates and one read of every bucket;
+        the seen table is never shuffled, but it is rewritten whole
+        (O(|seen|)) and held in the persisted pass output until the
+        commit ends. A caller that deletes several times between batches
+        pays that per call; it should gather the URLs into one call. If
+        ``urls`` is itself derived from ``seen()``, computing it scans
+        url_seen as well. This is an internal commit: it advances the
+        store counter but NOT the logical batch id."""
         head = self.store.head()
         if head is None:
             raise ValueError("delete_urls: nothing committed yet")
-        live = self.seen().select("url")
-        dels = urls.select("url").dropDuplicates(["url"]).join(live, "url", "left_semi")
-        kept = live.join(dels, "url", "left_anti")
-        full_tables = {self.TABLE_SEEN: self._clustered(kept)}
-        if head.tables.get(self.TABLE_CUCKOO, {}).get("rows", 0):
-            full_tables[self.TABLE_CUCKOO] = delete_from_cuckoo(
-                self.blobs(), dels, n_parts=self.n_parts
-            )
-        man = self.store.commit(
-            head.batch_id + 1,
-            full_tables=full_tables,
-            metrics=self._stamp(
-                self.last_logical(), {**(metrics or {}), "event": "delete_urls"}
-            ),
-            partition_cols={self.TABLE_SEEN: [self.BUCKET_COL]},
+        bc = self._paths_bcast()
+        evict = bc.value[1] is not None
+        n_parts, bucket_col = self.n_parts, self.BUCKET_COL
+        n_tasks = min(n_parts, self.spark.sparkContext.defaultParallelism)
+        ch, fp = cuckoo_hash_fp("url")
+        cands = (
+            urls.select("url")
+            .where(F.col("url").isNotNull())
+            .select("url", self._bucket_expr().alias("_sb"), ch.alias("_ch"), fp.alias("_fp"))
         )
-        return man, {"filter_evicted": self.TABLE_CUCKOO in full_tables}
+        bucket_ids = pd.DataFrame({"_sb": pd.array(range(self.bucketed_parts), dtype="int32")})
+        markers = self.spark.createDataFrame(bucket_ids).select(
+            F.lit(None).cast("string").alias("url"),
+            "_sb",
+            F.lit(None).cast("long").alias("_ch"),
+            F.lit(None).cast("int").alias("_fp"),
+        )
+        part = F.pmod("_sb", F.lit(n_parts))
+        keyed = (
+            cands.unionByName(markers)
+            .repartition(
+                n_tasks, F.element_at(self._task_map(n_tasks), F.pmod(part, F.lit(n_tasks)))
+            )
+            .sortWithinPartitions(part, "_sb")
+        )
+        # kept url rows (cuckoo columns null) and filter rows (url and
+        # bucket null) share the pass's output
+        out_type = T.DataType.fromDDL(f"url string, {bucket_col} int, {CUCKOO_SCHEMA}")
+        schema = to_arrow_schema(out_type)
+
+        def _del(batches):
+            import pyarrow as pa
+            import pyarrow.compute as pc
+            import pyarrow.parquet as pq
+
+            seen_files, cdir = bc.value
+            held = [-1, None]  # (filter part, its writable table; None = no blob)
+            filt_fields = list(schema)[2:]
+
+            def _rows(url, bucket, filt=None):
+                if filt is None:
+                    filt = [pa.nulls(len(url), f.type) for f in filt_fields]
+                return pa.RecordBatch.from_arrays([url, bucket, *filt], schema=schema)
+
+            def _part_done():
+                p, table = held
+                if table is not None:
+                    row = pa.RecordBatch.from_pandas(
+                        _filter_row(p, table), schema=pa.schema(filt_fields), preserve_index=False
+                    )
+                    yield _rows(pa.nulls(1, pa.string()), pa.nulls(1, pa.int32()), row.columns)
+
+            def _bucket(b: int, run: list):
+                if b % n_parts != held[0]:
+                    yield from _part_done()
+                    table = _filter_table(cdir, b % n_parts)
+                    held[:] = [b % n_parts, None if table is None else table.copy()]
+                files = seen_files.get(b)
+                if not files:
+                    return  # nothing live: nothing to keep or evict
+                live = pq.read_table(files, columns=["url"]).column("url")
+                dels = pa.Table.from_batches(run)
+                dels = dels.filter(pc.is_valid(dels.column("url")))  # drop the marker
+                if dels.num_rows:
+                    cu = dels.column("url")
+                    uniq = pc.unique(cu)
+                    if held[1] is not None:
+                        first = pc.index_in(uniq, value_set=cu)  # one row per distinct url
+                        at = first.filter(pc.is_in(uniq, value_set=live))
+                        _delete_from_table(
+                            held[1],
+                            dels.column("_ch").take(at).to_numpy(),
+                            dels.column("_fp").take(at).to_numpy(),
+                        )
+                    live = live.filter(pc.invert(pc.is_in(live, value_set=uniq)))
+                for chunk in live.chunks:
+                    if len(chunk):
+                        yield _rows(chunk, pa.array(np.full(len(chunk), b, np.int32)))
+
+            run_b, run = -1, []
+            for rb in batches:
+                sb = rb.column("_sb").to_numpy()
+                starts = np.flatnonzero(np.diff(sb, prepend=-1))  # bucket runs
+                for lo, hi in zip(starts, np.r_[starts[1:], len(sb)]):
+                    if int(sb[lo]) != run_b:
+                        if run:
+                            yield from _bucket(run_b, run)
+                        run_b, run = int(sb[lo]), []
+                    run.append(rb.slice(lo, hi - lo))
+            if run:
+                yield from _bucket(run_b, run)
+            yield from _part_done()
+
+        out = keyed.mapInArrow(_del, out_type).persist()
+        full_tables = {
+            self.TABLE_SEEN: out.where(F.col(bucket_col).isNotNull()).select("url", bucket_col)
+        }
+        if evict:
+            full_tables[self.TABLE_CUCKOO] = out.where(F.col("cuckoo_part").isNotNull()).select(
+                "cuckoo_part", "blob", "load", "overflow"
+            )
+        try:
+            man = self.store.commit(
+                head.batch_id + 1,
+                full_tables=full_tables,
+                metrics=self._stamp(
+                    self.last_logical(), {**(metrics or {}), "event": "delete_urls"}
+                ),
+                partition_cols={self.TABLE_SEEN: [bucket_col]},
+            )
+        finally:
+            out.unpersist()
+        return man, {"filter_evicted": evict}
 
     def apply_deletes(self) -> Manifest | None:
         """A no-op that returns HEAD: ``delete_urls`` already purges the

@@ -1,7 +1,9 @@
 """Cuckoo-filter URL-seen prefilter: no false negatives, low fpp, and —
-the reason it exists next to Bloom — true deletion."""
+the reason it exists next to Bloom — true deletion (through
+``SeenState.delete_urls``, the filter's one eviction path)."""
 
 import numpy as np
+import pytest
 
 from crawler_spark.operators.cuckoo import (
     BUCKET_SLOTS,
@@ -10,10 +12,17 @@ from crawler_spark.operators.cuckoo import (
     _probe_table,
     build_cuckoo,
     cuckoo_prefilter,
-    delete_from_cuckoo,
 )
+from crawler_spark.operators.seen_state import SeenState
 
 N_PARTS = 8
+
+
+@pytest.fixture()
+def state(spark, tmp_path):
+    """A fresh SeenState with N_PARTS filter parts; its initial filter
+    width is 1024 buckets per part."""
+    return SeenState(spark, str(tmp_path / "seen"), n_parts=N_PARTS, expected_keys=20_000)
 
 
 def _urls(lo, hi):
@@ -89,11 +98,11 @@ def test_prefilter_tags_seen_and_unseen(spark):
     assert fpp < 0.01, fpp
 
 
-def test_delete_from_cuckoo_evicts_a_sources_urls(spark):
-    seen = spark.createDataFrame(_urls(0, 2000), "url string")
-    blobs = build_cuckoo(seen, n_parts=N_PARTS)
+def test_delete_from_cuckoo_evicts_a_sources_urls(spark, state):
+    state.commit_batch(spark.createDataFrame(_urls(0, 2000), "url string"))
     victims = spark.createDataFrame(_urls(0, 300), "url string")
-    updated = delete_from_cuckoo(blobs, victims, n_parts=N_PARTS)
+    state.delete_urls(victims)
+    updated = state.blobs()
     assert updated.count() == N_PARTS  # untouched partitions pass through
 
     probe = spark.createDataFrame(_urls(0, 2000), "url string")
@@ -104,7 +113,7 @@ def test_delete_from_cuckoo_evicts_a_sources_urls(spark):
     assert evicted < 0.05, evicted
 
 
-def test_deleted_source_urls_become_schedulable_again(spark):
+def test_deleted_source_urls_become_schedulable_again(spark, state):
     """The operational story behind cuckoo deletion: delete_source evicts
     a source's URLs from the seen prefilter AND the exact seen table, and
     the next schedule_batch offers them again — no prefilter rebuild."""
@@ -113,8 +122,8 @@ def test_deleted_source_urls_become_schedulable_again(spark):
     from crawler_spark.operators.scheduler import schedule_batch
 
     all_urls = _urls(0, 400)
-    seen = spark.createDataFrame(all_urls, "url string")
-    blobs = build_cuckoo(seen, n_parts=N_PARTS)
+    state.commit_batch(spark.createDataFrame(all_urls, "url string"))
+    seen, blobs = state.seen().select("url"), state.blobs()
     frontier = (
         spark.createDataFrame(
             [(u, u.split("/")[2], 0, i) for i, (u,) in enumerate(all_urls)],
@@ -130,8 +139,8 @@ def test_deleted_source_urls_become_schedulable_again(spark):
 
     # delete_source semantics: drop source's URLs from seen + evict blobs
     victims = spark.createDataFrame(_urls(0, 100), "url string")
-    seen_after = seen.join(victims, "url", "left_anti")
-    blobs_after = delete_from_cuckoo(blobs, victims, n_parts=N_PARTS)
+    state.delete_urls(victims)
+    seen_after, blobs_after = state.seen().select("url"), state.blobs()
     again, _ = schedule_batch(
         frontier, seen=seen_after, bloom=blobs_after, default_k=100,
         n_bloom_parts=N_PARTS, seen_filter="cuckoo",
@@ -185,21 +194,21 @@ def test_insert_into_cuckoo_matches_full_build_membership(spark):
     assert fp / 3000 < 0.01
 
 
-def test_insert_after_delete_reuses_slots(spark):
+def test_insert_after_delete_reuses_slots(spark, state):
     """delete_source then keep crawling: evicted slots are reusable, the
     re-inserted URLs probe positive, untouched keys unharmed."""
-    from crawler_spark.operators.cuckoo import insert_into_cuckoo
-
     keep = spark.createDataFrame(_urls(0, 1000), "url string")
     gone = spark.createDataFrame(_urls(1000, 2000), "url string")
-    filt = build_cuckoo(keep.unionByName(gone), n_parts=N_PARTS, n_buckets=1024)
-    load0 = {r.cuckoo_part: r.load for r in filt.collect()}
-    filt = delete_from_cuckoo(filt, gone, n_parts=N_PARTS)
-    load1 = {r.cuckoo_part: r.load for r in filt.collect()}
+    state.commit_batch(keep.unionByName(gone))
+    assert {r.n_buckets for r in state.fill().collect()} == {1024}
+    load0 = {r.cuckoo_part: r.load for r in state.blobs().collect()}
+    state.delete_urls(gone)
+    load1 = {r.cuckoo_part: r.load for r in state.blobs().collect()}
     assert load1.keys() == load0.keys()
     assert all(load1[p] < load0[p] for p in load0)
     newer = spark.createDataFrame(_urls(3000, 4000), "url string")
-    filt = insert_into_cuckoo(filt, newer, 1024, n_parts=N_PARTS)
+    state.commit_batch(newer)
+    filt = state.blobs()
     tagged = cuckoo_prefilter(keep.unionByName(newer), filt, n_parts=N_PARTS)
     assert all(r.maybe_seen for r in tagged.collect())
 

@@ -11,12 +11,19 @@ import shutil
 from collections import Counter
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from crawler_spark.operators.bloom import build_bloom
-from crawler_spark.operators.cuckoo import CuckooOverflowError, cuckoo_prefilter
+from crawler_spark.operators.cuckoo import (
+    CuckooOverflowError,
+    _delete_from_table,
+    cuckoo_hash_fp,
+    cuckoo_prefilter,
+)
 from crawler_spark.operators.scheduler import release_barrier, schedule_batch
 from crawler_spark.operators.seen_state import SeenState, SeenStateMismatch
 from crawler_spark.plans.inspect import formatted_plan
@@ -436,7 +443,8 @@ def test_anti_join_task_map_runs_no_job(spark, root):
 def test_clustered_puts_each_bucket_on_writer_bucket_mod_w(spark, root, buckets, write_tasks):
     """url_seen writers: W = min(write_tasks, B) tasks, writer w holding
     exactly the buckets b with b mod W == w, every writer non-empty; so a
-    commit and a delete's rewrite each leave one file per bucket dir."""
+    commit leaves one file per bucket dir (as does a delete's rewrite,
+    which is placed by filter part, not by W)."""
     st = _bucketed(spark, root, n_parts=4, bucketed_parts=buckets, write_tasks=write_tasks)
     n_tasks = min(write_tasks, buckets)
     placed = st._clustered(_urls(spark, 0, 2000)).select(
@@ -585,6 +593,170 @@ def test_delete_urls_purges_in_one_commit(spark, root):
     # apply_deletes has nothing left to do: HEAD is returned unchanged
     assert st.apply_deletes().snapshot_id == head.snapshot_id
     assert st.store.head().snapshot_id == head.snapshot_id
+
+
+def _local_urls(spark, lo, hi):
+    """Candidate urls as an Arrow ``LocalRelation`` (no Spark scan)."""
+    return spark.createDataFrame(
+        pd.DataFrame({"url": [f"https://s{i % 9}.example.org/p/{i}" for i in range(lo, hi)]})
+    )
+
+
+@pytest.mark.parametrize(
+    "n_parts, buckets", [(4, 8), (8, 16), (12, 24)], ids=["parts_lt_8", "parts_eq_8", "parts_gt_8"]
+)
+def test_delete_is_one_pass_placed_by_filter_part(spark, root, n_parts, buckets, monkeypatch):
+    """delete_urls runs T = min(n_parts, default parallelism) tasks; task t
+    owns the filter parts p with p mod T == t and their buckets, so each
+    bucket's kept rows and each part's filter row come from task
+    pmod(part, T), every bucket dir gets one file, and the plans hold one
+    MapInArrow, no cogroup and no Spark scan of url_seen. With 12 parts on
+    8 tasks, pmod(part, T) and pmod(bucket, T) differ: the part, not the
+    bucket, must decide the task, or two tasks would write one part's
+    filter row."""
+    st = _bucketed(spark, root, n_parts=n_parts, bucketed_parts=buckets)
+    st.commit_batch(_urls(spark, 0, 1500))
+    st.commit_batch(_urls(spark, 1500, 3000))
+    sc = spark.sparkContext
+    n_tasks = min(n_parts, sc.defaultParallelism)
+    placed, plans = {}, {}
+    commit = st.store.commit
+
+    def spy(batch_id, full_tables, **kw):
+        # every plan before any action: an executed adaptive plan prints
+        # its initial plan after its final one
+        for name, df in full_tables.items():
+            plans[name] = df._jdf.queryExecution().executedPlan().toString()
+        for name, df in full_tables.items():
+            part = F.col("seen_bucket") % n_parts if name == "url_seen" else F.col("cuckoo_part")
+            placed[name] = df.select(
+                F.spark_partition_id().alias("task"), F.pmod(part, F.lit(n_tasks)).alias("want")
+            ).collect()
+        return commit(batch_id, full_tables, **kw)
+
+    monkeypatch.setattr(st.store, "commit", spy)
+    persisted = sc._jsc.getPersistentRDDs().size()
+    st.delete_urls(_local_urls(spark, 0, 300))
+    assert sc._jsc.getPersistentRDDs().size() == persisted  # released after the commit
+    assert set(placed) == {"url_seen", "seen_cuckoo"}
+    assert len(placed["url_seen"]) == 2700 and len(placed["seen_cuckoo"]) == n_parts
+    for rows in placed.values():
+        assert all(r.task == r.want for r in rows)
+        assert {r.task for r in rows} == set(range(n_tasks))
+    for name, plan in plans.items():
+        assert plan.count("MapInArrow") == 1, plan
+        assert "InMemoryTableScan" in plan, plan  # both tables read the one persisted pass
+        assert "FlatMapCoGroupsInPandas" not in plan, plan
+        assert "LocalTableScan" in plan and "FileScan" not in plan, plan
+        assert "url_seen" not in plan, plan
+
+    head = st.store.head()
+    (rel,) = head.tables["url_seen"]["files"]
+    dirs = glob.glob(os.path.join(root, "snapshots", rel, "seen_bucket=*"))
+    assert len(dirs) == buckets
+    for d in dirs:
+        (f,) = glob.glob(os.path.join(d, "*.parquet"))  # one writer per bucket
+        b = int(d.rsplit("=", 1)[1])
+        assert os.path.basename(f).startswith(f"part-{(b % n_parts) % n_tasks:05d}-")
+    (crel,) = head.tables["seen_cuckoo"]["files"]
+    for f in glob.glob(os.path.join(root, "snapshots", crel, "*.parquet")):
+        t = int(os.path.basename(f).split("-")[1])
+        parts = pq.read_table(f, columns=["cuckoo_part"]).column(0).to_pylist()
+        assert all(p % n_tasks == t for p in parts)
+
+    # unspied, the delete runs fewer jobs than the dedup/semi/anti-join
+    # plus cogroup form's 10
+    monkeypatch.setattr(st.store, "commit", commit)
+    group = f"test_seen_state.delete_jobs_{n_parts}"
+    sc.setJobGroup(group, "delete_urls")
+    try:
+        st.delete_urls(_local_urls(spark, 300, 600))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 6, len(jobs)
+    assert st.seen().count() == 2400
+
+
+def _blob_bytes(st) -> dict:
+    return {r.cuckoo_part: bytes(r.blob) for r in st.blobs().collect()}
+
+
+def _evicted_on_driver(spark, st, blobs: dict, urls) -> dict:
+    """The one-fingerprint-per-distinct-live-url eviction, done on the
+    driver with ``_delete_from_table`` over ``blobs``: what the cogrouped
+    ``delete_from_cuckoo`` of earlier versions wrote."""
+    ch, fp = cuckoo_hash_fp("url")
+    keys = (
+        spark.createDataFrame([(u,) for u in sorted(urls)], "url string")
+        .select(F.pmod(F.xxhash64("url", F.lit(2)), F.lit(st.n_parts)).alias("p"), ch, fp)
+        .collect()
+    )
+    out = {}
+    for p, blob in blobs.items():
+        table = np.frombuffer(blob, np.uint16).reshape(-1, 4).copy()
+        mine = [k for k in keys if k[0] == p]
+        _delete_from_table(
+            table, np.array([k[1] for k in mine], np.int64), np.array([k[2] for k in mine], np.int64)
+        )
+        out[p] = table.tobytes()
+    return out
+
+
+@pytest.mark.parametrize("n_parts, buckets", [(4, 8), (16, 16)], ids=["T_eq_parts", "T_lt_parts"])
+def test_delete_matches_a_set_and_driver_side_eviction(spark, root, n_parts, buckets):
+    """Against a Python set and a driver-side ``_delete_from_table``:
+    duplicate, never-seen and null candidates, live urls stored twice,
+    deleting every url, and deleting from a url_seen with no files. The
+    filter rows are the driver's tables byte for byte, with their load
+    recomputed and no overflow."""
+    st = _bucketed(spark, root, n_parts=n_parts, bucketed_parts=buckets)
+    st.commit_batch(_urls(spark, 0, 600), batch_id=1)
+    # 0..29 appended again: stored twice, inserted into the filter twice
+    st.commit_batch(_urls(spark, 600, 800).unionAll(_urls(spark, 0, 30)), batch_id=2)
+    model = {r.url for r in _urls(spark, 0, 800).collect()}
+    null = spark.createDataFrame([(None,)], "url string")
+
+    def delete_and_check(cands):
+        urls = {r.url for r in cands.collect()} - {None}
+        blobs = _blob_bytes(st)
+        want = _evicted_on_driver(spark, st, blobs, urls & model)
+        snap = st.store.head().snapshot_id
+        _, info = st.delete_urls(cands)
+        assert info == {"filter_evicted": True}
+        head = st.store.head()
+        assert head.snapshot_id == snap + 1  # one commit
+        model.difference_update(urls)
+        got = {r.url for r in st.seen().collect()}
+        assert got == model
+        filt = st.blobs().collect()
+        assert {r.cuckoo_part: bytes(r.blob) for r in filt} == want
+        for r in filt:
+            assert r.load == (np.frombuffer(r.blob, np.uint16) != 0).mean() and r.overflow is False
+        return head.tables["url_seen"]["rows"]
+
+    # 0..99 listed twice (0..29 of them stored twice), 50 never seen, a null
+    cands = (
+        _urls(spark, 0, 100)
+        .unionAll(_urls(spark, 0, 100))
+        .unionAll(_urls(spark, 10_000, 10_050))
+        .unionAll(null)
+    )
+    assert delete_and_check(cands) == 700
+    # the same delete again: nothing live is listed, nothing is evicted
+    assert delete_and_check(cands) == 700
+    # every url, and a null
+    assert delete_and_check(_urls(spark, 0, 800).unionAll(null)) == 0
+    assert st.store.head().tables["url_seen"]["files"] == []
+    assert not st.bucket_files()
+    # a url_seen with no files: the filter rows are rewritten unchanged
+    assert delete_and_check(_urls(spark, 0, 50)) == 0
+    # and the store keeps working
+    st.commit_batch(_urls(spark, 0, 40), batch_id=3)
+    model.update(r.url for r in _urls(spark, 0, 40).collect())
+    assert {r.url for r in st.seen().collect()} == model
+    assert st.anti_join(_frontier_of(_urls(spark, 0, 80))).count() == 40
+    assert _all_maybe_seen(st, _urls(spark, 0, 40))
 
 
 def test_cuckoo_rebuilds_wider_before_saturating_insert(spark, root):
